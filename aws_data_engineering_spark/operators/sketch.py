@@ -158,10 +158,11 @@ def qdigest_nodes_from_leaves(
         # only ever hold a DOMAIN-bounded census. A caller feeding an
         # unclamped column would ship a corpus-sized table to one task —
         # fail loudly here instead of OOMing the worker.
-        assert len(pdf) <= (1 << levels), (
-            f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
-            "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
-        )
+        if len(pdf) > (1 << levels):
+            raise ValueError(
+                f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
+                "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
+            )
         v = pdf["v"].to_numpy(np.int64)
         c = pdf["cnt"].to_numpy(np.int64)
         lvl, nid, cn, n, _t = kernel(v, c)
@@ -213,10 +214,11 @@ def qdigest_report_from_leaves(
 
         # Same single-task contract guard as the compress stage (VERDICT
         # r11 #5): the census must be domain-bounded, never corpus-sized.
-        assert len(pdf) <= (1 << levels), (
-            f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
-            "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
-        )
+        if len(pdf) > (1 << levels):
+            raise ValueError(
+                f"q-digest census has {len(pdf)} rows > 2^{levels} — the value "
+                "column fed to qdigest_leaves must be clamped to [0, 2^levels)"
+            )
         v = pdf["v"].to_numpy(np.int64)
         c = pdf["cnt"].to_numpy(np.int64)
         lvl, nid, cn, n, t = kernel(v, c)

@@ -51,17 +51,7 @@ def _load_all() -> None:
         pipeline_queries,
         relational_queries,
         streaming_queries,
-    )
-    # extra_queries registers LAST so its (round-3) additions sort after
-    # earlier rounds' not-yet-driver-checked queries in the sample prefix.
-    from aws_data_engineering_spark.plans import extra_queries  # noqa: F401
-
-    # breadth_queries registers after extra_queries for the same reason:
-    # its (round-3 second-batch) additions sort at the very tail. Round 9
-    # split it into family modules (VERDICT r08 #7) — mechanical move, no
-    # semantic change; registration order only breaks ties between queries
-    # whose latest driver evidence is the same round.
-    from aws_data_engineering_spark.plans import (  # noqa: F401
+        extra_queries,
         breadth_queries,
         codec_queries,
         graphdedup_queries,
@@ -72,368 +62,11 @@ def _load_all() -> None:
     )
 
 
-# --- Driver-sample ordering: stalest evidence first -------------------------
-#
-# The driver samples a 50-name PREFIX of the registry each round, so the
-# ordering below decides which queries earn fresh CORRECTNESS rows. Three
-# tiers (round 7 generalizes the r01-cohort hand lists to evidence age
-# computed from the committed CORRECTNESS_r*.json files themselves):
-#
-#   0. never driver-checked, or registered form CHANGED since its last
-#      green (_FORM_CHANGED below) — must (re-)earn first evidence;
-#   1..N. last driver-green in round N — stalest first, so every round's
-#      sample re-validates the oldest evidence in its current form.
-#
-# All queries are oracle-checked locally every pytest session by
-# tests/test_queries_oracle.py regardless of this ordering; the rotation
-# only controls the redundant-but-harder driver evidence.
-
-# Queries whose REGISTERED FORM changed (guard/plan/oracle edits), voiding
-# prior driver evidence — mapped to the ROUND the form changed. An entry
-# SELF-EXPIRES: once the query's latest driver-green round is >= the round
-# recorded here, the new form has re-earned evidence and the name drops out
-# of tier 0 automatically (VERDICT r07 #2 — no per-round manual clearing).
-# Keep expired entries as history; they are inert.
-#
-# Round-7 changes (all re-earned green in CORRECTNESS_r07, so expired):
-# d04/d13/d19 grew the default bucket-census guard, d18/g08/g09 switched to
-# data-sized LSH plane counts, c16 to (month × hash-bucket) sub-partitioned
-# layout, d11/st16 consume the rewritten single-pass bloom_probe, dq04 the
-# zero-variance guard, q22/q47/q59 the malformed-JSON tolerance.
-_FORM_CHANGED: dict[str, int] = {
-    "d04_minhash_candidate_pairs": 7,
-    "d11_bloom_contamination": 7,
-    "d13_minhash_estimate_accuracy": 7,
-    "d19_lsh_scurve_audit": 7,
-    "d18_canonical_doc_selection": 7,
-    "g08_star_components": 7,
-    "g09_dup_cluster_census": 7,
-    "c16_parquet_zonemap_audit": 7,
-    "st16_stream_bloom_filter": 7,
-    "dq04_partition_volume_anomaly": 7,
-    "q22_events_json_extract": 7,
-    "q47_json_struct_parse": 7,
-    "q59_variant_semistructured": 7,
-    # Round-8 changes: st17 retuned state-exchange (Arrow batch size /
-    # shuffle partitions) per VERDICT r07 #3 — plan changed, re-earn.
-    "st17_stream_stateful_sessions": 8,
-    # Round-9 changes (ADVICE r08): c20 plan now localCheckpoints the tiny
-    # result and removes its /tmp scratch layout (plus an empty-prune
-    # guard); m24's oracle grp window gained the tie-breaking c column.
-    "c20_hidden_partition_pruning": 9,
-    "m24_vtt_cue_alignment": 9,
-    # Round-10 change: t20's ROUND(AVG(w), 3) final op hit the documented
-    # .5-boundary class at sf0.1 (found by the round-10 full sf0.1 drive:
-    # src7's true mean ≈ -0.0005, DuckDB's parallel sum lands on either
-    # side run-to-run). Rewritten to integer micro-nat quantization (the
-    # e21 exact-mean pattern) — values changed in the 4th decimal, form
-    # must re-earn evidence. (The t20: 10 entry is superseded by the
-    # round-11 re-quantization below — one dict key, latest round wins.)
-    # Round-11 changes (ADVICE r10): t20 re-quantized micro→MILLI-nats with
-    # an epsilon-snapped floor (values changed in the 3rd decimal); c23's
-    # per-month publish became two atomic renames (crash-recoverable swap —
-    # same result, different file mechanics); s04 graduated from rows-only
-    # to the exhaustive-probe identity (n_probe = n_lists ⇒ exactly brute
-    # force) with the s01 exact-cosine oracle.
-    "t20_dsir_importance": 11,
-    "c23_delete_vector_compaction": 11,
-    "s04_ann_ivf_topk": 11,
-    # Round-11 optimization: the q-digest report collapsed from the
-    # 19-level unrolled groupBy chain + window walk into ONE Arrow stage
-    # over the domain-bounded census (bit-identical results — pinned by
-    # tests/test_opt_r11.py — but the plan form is new); q104 gained a
-    # coalesce(1) on its scoped-conf materialization write. (The q100/
-    # st14/q104: 11 entries are superseded by the round-12 ones below —
-    # one dict key, latest round wins, the t20 precedent.)
-    # Round-12 optimization (results bit-identical, plan/execution form
-    # changed — see OPTIMIZATION_r12.md):
-    # - minhash signature table pinned to one RDD via lazy localCheckpoint
-    #   (d04 + every consumer of minhash_candidate_pairs/probe_pairs);
-    # - connected-components/star/pagerank pair lineage computed once;
-    # - c04 rollup: repartition-by-bucket write, metadata-only hwm,
-    #   direct-FS marker;
-    # - q104: eager localCheckpoint of the 5-row result + scratch cleanup;
-    # - q100/st14: census-bound guard + rank clamp inside the Arrow kernel;
-    # - st*: data-derived shuffle/state partition count scoped to the
-    #   stream's lifetime (scaled_stream_shuffle).
-    "d04_minhash_candidate_pairs": 12,
-    "d10_neardup_clusters": 12,
-    "d13_minhash_estimate_accuracy": 12,
-    "d17_capped_minhash_pairs": 12,
-    "d19_lsh_scurve_audit": 12,
-    "d21_incremental_minhash_probe": 12,
-    "pp02_incremental_curation": 12,
-    "d18_canonical_doc_selection": 12,
-    "g01_pagerank_neardup_graph": 12,
-    "g08_star_components": 12,
-    "g09_dup_cluster_census": 12,
-    "c04_incremental_rollup": 12,
-    "q104_aqe_skew_join": 12,
-    "q100_qdigest_quantiles": 12,
-    "st14_stream_qdigest_quantiles": 12,
-    "st01_stream_tumbling_counts": 12,
-    "st02_stream_attribution_join": 12,
-    "st03_stream_exactly_once_dedup": 12,
-    "st04_stream_static_enrichment": 12,
-    "st05_stream_sliding_counts": 12,
-    "st06_stream_session_window": 12,
-    "st08_stream_cdc_upsert": 12,
-    "st09_stream_outer_attribution": 12,
-    "st11_stream_partial_rollup": 12,
-    "st12_stream_minhash_dedup": 12,
-    "st15_stream_count_min_sketch": 12,
-    "st16_stream_bloom_filter": 12,
-    "st19_stream_ann_ingest": 12,
-    # Round-12 session 2: micro-batch feeds built in ONE source scan
-    # (write_bucketed_feed — composition/order identical, execution form
-    # new) for st12/st14/st15/st16/st19 above plus st17; st16's
-    # foreachBatch sink writes one unified partial table per batch.
-    "st17_stream_stateful_sessions": 12,
-}
-
-
-_EVIDENCE_CACHE: dict[str, int] | None = None
-
-
-def _evidence_rounds() -> dict[str, int]:
-    """name -> latest round with a green driver row, parsed from the
-    committed CORRECTNESS_r*.json files at the repo root. Missing files
-    (e.g. a stripped deployment) degrade to {} = everything tier 0.
-    Memoized: the artifacts are immutable within a process, and
-    queries()/oracle_sql() are called repeatedly."""
-    global _EVIDENCE_CACHE
-    if _EVIDENCE_CACHE is not None:
-        return _EVIDENCE_CACHE
-    import json
-    import re as _re
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2]
-    latest: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                # rows-only by design: the driver records spark_rows and
-                # no comparison — a completed run (spark_rows recorded)
-                # IS the check
-                green = row.get("spark_rows") is not None
-            elif row.get("err") is not None:
-                green = False
-            else:
-                green = bool(row.get("hash_match")) or (
-                    row.get("hash_match") is None and bool(row.get("rows_match"))
-                )
-            if green and rnd > latest.get(name, 0):
-                latest[name] = rnd
-    _EVIDENCE_CACHE = latest
-    return latest
-
-
-# Legacy hand-curated set from rounds 1-6 — kept only as the fallback when
-# no CORRECTNESS files are present (fresh clone without round artifacts).
-_DRIVER_CHECKED: frozenset[str] = frozenset(
-    {
-        # Cumulative driver-green names as of round 6 (CORRECTNESS_r01-r05).
-        # Round-6 rotation (stale-first re-verification): the 49 round-5
-        # greens are listed; the round-1 cohort (checked before four rounds
-        # of shared-operator refactors) is deliberately UN-listed — minus
-        # q20-q24, which re-earned green in round 5, and s04 (rows-only by
-        # design, re-sampling it adds no evidence) — so CORRECTNESS_r06
-        # re-validates the oldest evidence in its current form, alongside
-        # the round-6 additions (s10/p13/m14/g07/d17/m15/c15). q71 is now
-        # LISTED: it is rows-only by design (no_oracle), has three
-        # rows-only driver rows already (r03-r05), and its substantive
-        # evidence is the local HLL error-bound + repartition-mergeability
-        # tests (both SFs, test_etl_core) — re-sampling it would only burn
-        # the 50th sample slot c15 needs. t01 is likewise listed to make
-        # room for e17: it is the most trivial scan-agg in the registry and
-        # every operator it touches is exercised by driver-green t02/t03/
-        # t05; it re-earns direct evidence in round 7.
-        #
-        # Round-6d additions (q101/t32/t33/t34/m19/st15/st16/e20/g09/dq17)
-        # are tier-0 like the earlier round-6 batch: 39 never-checked names
-        # fill the sample prefix first, leaving 11 slots for the stale
-        # round-1 cohort this round; the remainder re-verifies in round 7+.
-        "q71_hll_partial_union", "t01_text_stats",
-        "c01_python_datasource_scan", "c02_xml_roundtrip",
-        "c03_managed_table_roundtrip", "c04_incremental_rollup",
-        "c05_binaryfile_scan", "c06_python_datasource_sink",
-        "c07_mergeschema_evolution", "c08_csv_corrupt_quarantine",
-        "c09_bucketed_colocated_join", "c10_small_file_compaction",
-        "c11_incremental_view_maintenance", "c12_partition_pruned_read",
-        "c13_csv_quoting_roundtrip", "c14_json_corrupt_quarantine",
-        "d05_ngram_jaccard_pairs", "d11_bloom_contamination",
-        "d12_duplicate_shingle_fraction", "d13_minhash_estimate_accuracy",
-        "d14_duplicate_span_merge", "d15_cdc_chunk_dedup",
-        "d16_containment_pairs", "dq01_data_quality_checks",
-        "dq02_table_profile", "dq03_outlier_detection",
-        "dq04_partition_volume_anomaly", "dq05_freshness_gaps",
-        "dq06_order_reconciliation", "dq07_winsorized_stats",
-        "dq08_uniqueness_profile", "dq09_benford_audit",
-        "dq11_psi_drift", "dq12_functional_dependency_audit",
-        "dq13_mad_outliers", "dq14_table_checksum",
-        "dq15_chi2_independence", "e03_centroid_assignment",
-        "e04_int8_quantization", "e05_matryoshka_overlap",
-        "e06_semdedup", "e07_kmeans_lloyd",
-        "e08_power_iteration_pca", "e09_silhouette_by_label",
-        "e11_embedding_health", "e12_pq_recall_audit",
-        "e13_binary_hamming_topk", "e14_centroid_separation",
-        "e15_jl_projection_audit", "e16_mahalanobis_ood",
-        "g01_pagerank_neardup_graph", "g02_triangle_count",
-        "g03_label_propagation", "g04_kcore_peeling",
-        "g05_bfs_copurchase_hops", "g06_clustering_coefficient",
-        "m05_png_decode_features", "m06_wav_decode_features",
-        "m07_jpeg_decode_features", "m08_mp4_container_metadata",
-        "m09_audio_spectral_peak", "m10_scene_change_detection",
-        "m11_png_text_metadata", "m12_png_pixel_histogram",
-        "m13_phash_dedup_census", "p06_token_budget_sample",
-        "p07_stratified_sample", "p08_temperature_mixture",
-        "p09_weighted_priority_sample", "p10_kfold_assignment",
-        "p11_padding_waste_audit", "p12_epoch_shuffle",
-        "q01_pricing_summary", "q02_revenue_by_nation",
-        "q03_top_orders", "q04_top_customers_per_nation",
-        "q05_customers_with_open_orders", "q06_customers_without_orders",
-        "q07_forecast_revenue", "q08_rollup_region_nation",
-        "q09_set_ops", "q10_distinct_counts",
-        "q11_scalar_functions", "q12_priority_shipping",
-        "q13_cube_status_priority", "q14_parts_by_volume",
-        "q15_above_avg_customers", "q16_asof_join",
-        "q17_price_percentiles", "q18_grouping_sets",
-        "q19_range_join", "q20_events_hourly_tumbling",
-        "q21_events_sliding_window", "q22_events_json_extract",
-        "q23_events_user_gaps", "q24_events_running_total",
-        "q26_approx_distinct", "q27_pivot_status",
-        "q28_balance_quartiles", "q29_monthly_revenue",
-        "q30_small_quantity_revenue", "q31_excess_volume_suppliers",
-        "q32_sole_returning_suppliers", "q33_inactive_rich_customers",
-        "q34_profit_by_nation_year", "q35_yoy_revenue",
-        "q36_segment_revenue_share", "q37_unpivot_measures",
-        "q38_segments_per_nation", "q39_approx_percentiles",
-        "q40_null_semantics", "q42_price_histogram",
-        "q43_salted_skew_join", "q44_two_phase_agg",
-        "q45_multiset_ops", "q46_date_string_functions",
-        "q48_sql_api_parity", "q49_month_spine_gapfill",
-        "q50_trailing_window_revenue", "q51_row_udf_dim",
-        "q52_stat_aggregates", "q53_priority_count_map",
-        "q54_array_hof", "q55_order_count_distribution",
-        "q56_big_order_customers", "q57_argmax_customers",
-        "q58_na_functions", "q60_schema_evolution_union",
-        "q62_ansi_safe_arithmetic", "q63_crosstab",
-        "q64_zorder_values", "q65_window_navigation",
-        "q66_decimal_exact_totals", "q67_cdc_apply",
-        "q68_snapshot_reconciliation", "q69_recursive_month_spine",
-        "q70_lateral_topk_per_nation", "q72_parameterized_sql",
-        "q73_scd2_historization", "q74_map_hof_pipeline",
-        "q75_promo_revenue_share", "q76_volume_shipping",
-        "q77_market_share", "q78_top_supplier",
-        "q79_disjunctive_bands", "q80_important_parts",
-        "q81_min_cost_supplier", "q82_returned_item_revenue",
-        "q83_late_order_priority", "q84_supplier_diversity_naaj",
-        "q85_forward_fill", "q86_interval_bucket_join",
-        "q87_local_supplier_volume", "q88_event_transition_matrix",
-        "q89_rfm_segmentation", "q90_event_path_mining",
-        "q91_cohort_retention", "q92_association_rules",
-        "q93_cumulative_users", "q94_trailing_distinct_users",
-        "q95_decile_lift", "q96_activity_bitmap",
-        "q97_ordered_funnel", "q98_wow_revenue_delta",
-        "s04_ann_ivf_topk", "s06_ann_ivf_fixed_topk",
-        "s07_ann_pq_topk", "s08_ann_ivfpq_topk",
-        "s09_mmr_diversified_topk", "st01_stream_tumbling_counts",
-        "st02_stream_attribution_join", "st03_stream_exactly_once_dedup",
-        "st04_stream_static_enrichment", "st05_stream_sliding_counts",
-        "st06_stream_session_window", "st07_stream_python_datasource",
-        "st08_stream_cdc_upsert", "st09_stream_outer_attribution",
-        "st10_stream_file_sink", "st11_stream_partial_rollup",
-        "t14_pii_scrub_audit", "t15_unigram_logprob",
-        "t16_tfidf_top_terms", "t17_gopher_quality_rules",
-        "t18_bigram_logprob", "t19_lexical_diversity",
-        "t20_dsir_importance", "t21_doc_chunking",
-        "t22_bpe_merge_segment", "t23_pmi_collocations",
-        "t24_kwic_concordance", "t25_zipf_fit",
-        "t26_readability_by_lang", "t27_charclass_entropy",
-        "t28_count_min_sketch", "t29_bpe_merge_learning",
-    }
-)
-
-
-# Names with PRIOR driver evidence that are deliberately un-listed from
-# _DRIVER_CHECKED for stale-first re-verification (round-6: the r01 cohort,
-# checked before four rounds of shared-operator refactors). They sort AFTER
-# never-driver-checked queries: a brand-new query must earn its first
-# CORRECTNESS row before a stale one re-earns its n-th, so adding a query
-# never silently drops it out of the 50-name sample prefix.
-_STALE_REVERIFY: frozenset[str] = frozenset(
-    {
-        "d01_exact_dedup_groups", "d02_latest_event_per_user",
-        "d03_fingerprint_dedup", "d04_minhash_candidate_pairs",
-        "d06_simhash", "d07_simhash_neardup_pairs",
-        "d08_winnowing_overlap_pairs", "d09_benchmark_contamination",
-        "d10_neardup_clusters", "e01_embedding_neardup_exact",
-        "e02_embedding_neardup_lsh", "m01_media_metadata",
-        "m02_image_decode_features", "m03_video_frame_sample",
-        "m04_audio_decode_features", "p01_train_val_test_split",
-        "p02_dataset_mixture", "p03_grouped_map_rank",
-        "p04_grouped_agg_udf", "p05_sequence_packing",
-        "pp01_training_data_pipeline", "q25_events_sessionization",
-        "q41_conversion_funnel", "q47_json_struct_parse",
-        "q59_variant_semistructured", "q61_builtin_session_window",
-        "s01_ann_bruteforce_topk", "s02_ann_lsh_topk",
-        "s03_embedding_stats_by_label", "s05_knn_graph",
-        "t02_quality_scores", "t03_token_counts_by_source",
-        "t04_lang_distribution", "t05_token_length_stats",
-        "t06_winnowing_fingerprints", "t07_repetition_signals",
-        "t08_pandas_udf_tokens", "t09_udtf_tokenize",
-        "t10_top_tokens", "t11_arrow_native_stats",
-        "t12_collapse_repeated_tokens", "t13_vocab_coverage",
-    }
-)
-
-
-def _ordered() -> list[tuple[str, Query]]:
-    # Stable sort by evidence age (ties keep registration order):
-    # tier 0 (never checked / form changed) < last-green round 1 < 2 < ...
-    evidence = _evidence_rounds()
-    if not evidence:
-        # fallback without round artifacts: the legacy three-tier sets
-        # (no evidence files → every _FORM_CHANGED entry is unexpired)
-        def tier(name: str) -> int:
-            if name in _FORM_CHANGED:
-                return 0
-            if name in _DRIVER_CHECKED:
-                return 2
-            if name in _STALE_REVERIFY:
-                return 1
-            return 0
-
-        return sorted(QUERIES.items(), key=lambda kv: tier(kv[0]))
-
-    def age(name: str) -> int:
-        last_green = evidence.get(name, 0)
-        # unexpired form change: evidence predates the new form → tier 0
-        if last_green < _FORM_CHANGED.get(name, 0):
-            return 0
-        return last_green
-
-    return sorted(QUERIES.items(), key=lambda kv: age(kv[0]))
-
-
 def queries() -> dict[str, SparkFn]:
     _load_all()
-    return {name: q.spark for name, q in _ordered()}
+    return {name: q.spark for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return {name: q.oracle for name, q in _ordered() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}

@@ -30,6 +30,16 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """Driver heap size: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else half of
+    the host's physical RAM (local mode runs every executor in this JVM)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{ram // 2 // 2**20}m"
+
+
 def build_session_builder(
     app_name: str = "aws-data-engineering-spark",
     master: str | None = None,
@@ -61,7 +71,7 @@ def build_session_builder(
         # dt is a string date everywhere, e.g. FInal/load_script.py:212);
         # inference would silently retype them to DateType.
         .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if master:

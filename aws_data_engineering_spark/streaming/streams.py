@@ -1191,12 +1191,18 @@ def write_bucketed_feed(
     Buckets short of their file count at tiny SFs get the schema-only pad
     files the old loop produced, so the batch count stays
     corpus-independent. Raises if a bucket ever yields more files than
-    expected (fail loud rather than silently change the batch
-    decomposition some oracles pin)."""
+    expected or the pad write emits no file (fail loud rather than
+    silently change the batch decomposition some oracles pin), and
+    ``ValueError`` if ``files_per_bucket > 1`` comes without ``sub_expr``."""
     import glob as _glob
     import os as _os
     import shutil as _shutil
 
+    if files_per_bucket > 1 and sub_expr is None:
+        raise ValueError(
+            f"files_per_bucket={files_per_bucket} needs a deterministic "
+            "sub_expr to split each bucket into files"
+        )
     scratch = in_dir.rstrip("/") + "__build"
     staged = df.withColumn("__feed_b", bucket_expr.cast("bigint")).filter(
         F.col("__feed_b").isNotNull()
@@ -1217,11 +1223,18 @@ def write_bucketed_feed(
         < files_per_bucket
         for b in range(n_batches)
     )
+    pad = None
     if short:
         # one extra job only in the (corpus-dependent) short-bucket case
-        df.limit(0).coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(scratch, "__empty")
-        )
+        empty_dir = _os.path.join(scratch, "__empty")
+        df.limit(0).coalesce(1).write.mode("overwrite").parquet(empty_dir)
+        pads = sorted(_glob.glob(_os.path.join(empty_dir, "*.parquet")))
+        if not pads:
+            raise RuntimeError(
+                f"bucketed feed pad write to {empty_dir} emitted no parquet "
+                "file — cannot fill buckets short of their file count"
+            )
+        pad = pads[0]
     for b in range(n_batches):
         files = sorted(
             _glob.glob(_os.path.join(scratch, f"__feed_b={b}", "*.parquet"))
@@ -1238,14 +1251,7 @@ def write_bucketed_feed(
             if j < len(files):
                 _os.rename(files[j], dst)
             else:
-                _shutil.copy(
-                    sorted(
-                        _glob.glob(
-                            _os.path.join(scratch, "__empty", "*.parquet")
-                        )
-                    )[0],
-                    dst,
-                )
+                _shutil.copy(pad, dst)
         seen = stamp_feed_mtimes(in_dir, seen, b)
     _shutil.rmtree(scratch, ignore_errors=True)
 

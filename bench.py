@@ -1,14 +1,23 @@
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}, then the same record in chunked lines.
 
-Each query is forced through full evaluation with the noop sink (collect()
-would add driver-transfer cost; count() lets Catalyst prune the plan).
+Given query names, it times just those instead, N samples each, and prints
+{"cal": sec, "sf_dir": ..., "timings": {name: [sec, ...]}}; --plans DIR
+also writes each query's formatted physical plan to DIR/<name>.txt:
+
+    python bench.py [--sf SF_DIR] [--n N] [--plans DIR] name ...
+
+Both modes run on the shared session builder (session.build_session_builder)
+with the same warm-up and calibration probe. Each query is forced through
+full evaluation with the noop sink (collect() would add driver-transfer
+cost; count() lets Catalyst prune the plan).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -16,8 +25,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import SparkSession
 
 # Representative mix: scan-agg, star join, top-k, pushdown agg, join-agg,
 # window/sessionization, time windows, dedup (exact + fuzzy), ANN, text.
@@ -221,25 +228,21 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    ap = argparse.ArgumentParser(description="Time registry queries with the noop sink.")
+    ap.add_argument("names", nargs="*", help="queries to time (default: the headline set)")
+    ap.add_argument("--sf", default=sf_dir, help="scale-factor directory")
+    ap.add_argument("--n", type=int, default=2, help="samples per named query")
+    ap.add_argument("--plans", help="write each named query's formatted plan here")
+    args = ap.parse_args()
+    sf_dir = args.sf
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from aws_data_engineering_spark.plans.registry import queries
+    from aws_data_engineering_spark.session import build_session_builder
+
+    spark = build_session_builder(app_name="spark-graft-bench").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
 
     qs = queries()
     # warmup: JVM + parquet footer caches
@@ -254,6 +257,7 @@ def main() -> None:
     ).format("noop").save()
 
     def run_once(name: str) -> float:
+        spark.sparkContext.setJobDescription(f"bench:{name}")
         t0 = time.time()
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         elapsed = time.time() - t0
@@ -261,6 +265,33 @@ def main() -> None:
         # residue can't distort the next measurement
         spark.catalog.clearCache()
         return elapsed
+
+    def _probe_spark() -> float:
+        t0 = time.time()
+        spark.range(0, 400_000_000).selectExpr("sum(id * 2 + 1)").write.mode(
+            "overwrite"
+        ).format("noop").save()
+        return time.time() - t0
+
+    if args.names:
+        # constant-work probe so cross-run comparisons can see host throttle
+        cal = round(_probe_spark(), 3)
+        out: dict[str, list[float]] = {}
+        if args.plans:
+            os.makedirs(args.plans, exist_ok=True)
+        for name in args.names:
+            if args.plans:
+                df = qs[name](spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                    f.write(plan)
+                spark.catalog.clearCache()
+            out[name] = [round(run_once(name), 3) for _ in range(args.n)]
+        print(json.dumps({"cal": cal, "sf_dir": sf_dir, "timings": out}), flush=True)
+        spark.stop()
+        return
 
     def best_of_samples(fn) -> list[float]:
         # best-of-2 with a third sample if the two disagree >2x (the host
@@ -299,13 +330,6 @@ def main() -> None:
         for _ in range(3):
             a = a @ a
             a /= np.abs(a).max()
-        return time.time() - t0
-
-    def _probe_spark() -> float:
-        t0 = time.time()
-        spark.range(0, 400_000_000).selectExpr("sum(id * 2 + 1)").write.mode(
-            "overwrite"
-        ).format("noop").save()
         return time.time() - t0
 
     calibration = {

@@ -150,3 +150,30 @@ def snapshot_parquet_files(root):
                 st = os.stat(p)
                 out[p] = (st.st_size, st.st_mtime_ns)
     return out
+
+
+def executed_plan(df) -> str:
+    """The executed physical plan of ``df`` as Spark prints it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def write_docs(tmp_path, rows) -> str:
+    """Write ``documents.parquet`` into ``tmp_path`` from (doc_id, text,
+    lang, source, _) rows — n_chars is len(text), NULL for a NULL text —
+    and return the directory for use as an sf_dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+            "lang": pa.array([r[2] for r in rows], pa.string()),
+            "source": pa.array([r[3] for r in rows], pa.string()),
+            "n_chars": pa.array(
+                [len(r[1]) if r[1] is not None else None for r in rows], pa.int64()
+            ),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
+    return str(tmp_path)

@@ -9,6 +9,7 @@ idempotence (upsert re-runs are idempotent; append re-runs duplicate).
 from __future__ import annotations
 
 import gzip
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -993,7 +994,7 @@ def test_ivf_recall_sf01(spark):
     assert len(part & exact) >= len(exact) * 0.5
 
 
-def test_session_builder_catalog_contract():
+def test_session_builder_catalog_contract(monkeypatch):
     """E2 (Iceberg-on-Glue catalog, bootstrap.sh:60-64 analog) is env-gated:
     the catalog jars only exist on EMR, and Spark instantiates catalog impls
     lazily on first use — so the testable surface without a cluster is the
@@ -1031,6 +1032,12 @@ def test_session_builder_catalog_contract():
     # no catalog/endpoint args -> none of the gated keys leak in
     plain = build_session_builder()._options
     assert not any("catalog.glue" in k or "s3a" in k for k in plain)
+    # driver heap: half of physical RAM unless SPARK_GRAFT_DRIVER_MEM is set
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    assert build_session_builder()._options["spark.driver.memory"] == f"{ram_mb // 2}m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert build_session_builder()._options["spark.driver.memory"] == "3g"
 
 
 # ---------------------------------------------------------------------------

@@ -6,11 +6,10 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 def test_stream_shuffle_partitions_derivation(spark):
@@ -54,7 +53,7 @@ def test_d04_signature_pass_single_materialization(spark, sf_dir):
     from aws_data_engineering_spark.plans.registry import queries
 
     df = queries()["d04_minhash_candidate_pairs"](spark, sf_dir)
-    plan = _plan(df)
+    plan = executed_plan(df)
     assert "ExistingRDD" in plan, plan[:2000]
     assert "MapInPandas" not in plan and "ArrowEval" not in plan, plan[:2000]
 
@@ -123,6 +122,12 @@ def test_full_drive_fn_source_extraction():
     assert mod._fn_source(a, "q") == mod._fn_source(b, "q")  # unrelated hunks
     assert mod._fn_source(a, "q") != mod._fn_source(c, "q")  # body change
     assert mod._fn_source(a, "missing") is None
+    # the tripwire also diffs the engine modules the query module imports:
+    # d04's minhash kernel lives in operators/dedup.py, not its plan module
+    from aws_data_engineering_spark.plans.registry import queries
+
+    deps = mod._engine_modules(queries()["d04_minhash_candidate_pairs"])
+    assert os.path.join("aws_data_engineering_spark", "operators", "dedup.py") in deps
 
 
 def test_write_bucketed_feed_matches_loop_form(spark, tmp_path):
@@ -171,3 +176,9 @@ def test_write_bucketed_feed_pads_empty_bucket(spark, tmp_path):
     counts = [spark.read.parquet(f).count() for f in files]
     assert counts == [2, 0, 0]
     assert spark.read.parquet(files[1]).columns == ["doc_id", "text"]
+    # a multi-file split without its deterministic split key is refused
+    with pytest.raises(ValueError, match="sub_expr"):
+        write_bucketed_feed(
+            df, F.pmod(F.col("doc_id"), F.lit(3)), str(tmp_path / "in2"), 3,
+            files_per_bucket=2,
+        )

@@ -12,10 +12,7 @@ from __future__ import annotations
 import pytest
 
 from aws_data_engineering_spark.plans.registry import queries
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from tests.oracle_utils import executed_plan
 
 
 @pytest.fixture(scope="module")
@@ -32,33 +29,33 @@ def registry_dfs(spark, sf_dir) -> dict:
 
 
 def test_q02_star_join_broadcasts_all_dims(spark, sf_dir):
-    plan = _plan(queries()["q02_revenue_by_nation"](spark, sf_dir))
+    plan = executed_plan(queries()["q02_revenue_by_nation"](spark, sf_dir))
     # every dim join is broadcast; the fact table must never sort-merge
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_q34_profit_join_broadcasts_dims(spark, sf_dir):
-    plan = _plan(queries()["q34_profit_by_nation_year"](spark, sf_dir))
+    plan = executed_plan(queries()["q34_profit_by_nation_year"](spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2  # part and supplier⨝nation
     assert "SortMergeJoin" not in plan
 
 
 def test_q01_filter_pushed_to_scan(spark, sf_dir):
-    plan = _plan(queries()["q01_pricing_summary"](spark, sf_dir))
+    plan = executed_plan(queries()["q01_pricing_summary"](spark, sf_dir))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
 def test_q01_partial_aggregation(spark, sf_dir):
     # map-side partial agg before the exchange: two HashAggregate levels
-    plan = _plan(queries()["q01_pricing_summary"](spark, sf_dir))
+    plan = executed_plan(queries()["q01_pricing_summary"](spark, sf_dir))
     assert plan.count("HashAggregate") >= 2
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):
     # q14 projects 2 of lineitem's 11 columns (+1 filter col); the parquet
     # ReadSchema must not contain unprojected wide columns
-    plan = _plan(queries()["q14_parts_by_volume"](spark, sf_dir))
+    plan = executed_plan(queries()["q14_parts_by_volume"](spark, sf_dir))
     scan_lines = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_lines, plan
     assert not any("l_comment" in ln or "l_shipinstruct" in ln for ln in scan_lines)
@@ -69,19 +66,19 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 
 
 def test_q03_topk_avoids_global_sort(spark, sf_dir):
-    plan = _plan(queries()["q03_top_orders"](spark, sf_dir))
+    plan = executed_plan(queries()["q03_top_orders"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_d09_contamination_broadcasts_benchmark(spark, sf_dir):
-    plan = _plan(queries()["d09_benchmark_contamination"](spark, sf_dir))
+    plan = executed_plan(queries()["d09_benchmark_contamination"](spark, sf_dir))
     # the benchmark gram set joins via broadcast; candidate grams never shuffle
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_q57_argmax_single_pass_no_window(spark, sf_dir):
-    plan = _plan(queries()["q57_argmax_customers"](spark, sf_dir))
+    plan = executed_plan(queries()["q57_argmax_customers"](spark, sf_dir))
     # argmax runs as a partial-aggregable agg (two HashAggregate/ObjectHash
     # levels), never a per-group window sort
     assert "Window" not in plan
@@ -90,7 +87,7 @@ def test_q57_argmax_single_pass_no_window(spark, sf_dir):
 
 
 def test_t10_topk_is_take_ordered(spark, sf_dir):
-    plan = _plan(queries()["t10_top_tokens"](spark, sf_dir))
+    plan = executed_plan(queries()["t10_top_tokens"](spark, sf_dir))
     # global top-20 must be TakeOrderedAndProject (per-partition heap),
     # not a full Sort of all distinct tokens
     assert "TakeOrderedAndProject" in plan
@@ -98,7 +95,7 @@ def test_t10_topk_is_take_ordered(spark, sf_dir):
 
 
 def test_q56_exchange_reuse_on_group_key_join(spark, sf_dir):
-    plan = _plan(queries()["q56_big_order_customers"](spark, sf_dir))
+    plan = executed_plan(queries()["q56_big_order_customers"](spark, sf_dir))
     # customer dim joins via broadcast; the orders join may shuffle, but the
     # lineitem groupBy(l_orderkey) partitioning must serve the downstream
     # join without a second fact-side exchange
@@ -106,7 +103,7 @@ def test_q56_exchange_reuse_on_group_key_join(spark, sf_dir):
 
 
 def test_p05_packing_windows_partition_by_group(spark, sf_dir):
-    plan = _plan(queries()["p05_sequence_packing"](spark, sf_dir))
+    plan = executed_plan(queries()["p05_sequence_packing"](spark, sf_dir))
     # the prefix-sum window must partition by source (parallel per corpus),
     # not run single-partition
     assert "Window" in plan
@@ -115,7 +112,7 @@ def test_p05_packing_windows_partition_by_group(spark, sf_dir):
 
 
 def test_dq01_orphan_checks_use_anti_joins(spark, sf_dir):
-    plan = _plan(queries()["dq01_data_quality_checks"](spark, sf_dir))
+    plan = executed_plan(queries()["dq01_data_quality_checks"](spark, sf_dir))
     # referential-integrity rules must run as anti-joins (broadcast for the
     # dim-sized parents), never as correlated per-row subqueries
     assert "LeftAnti" in plan
@@ -123,20 +120,20 @@ def test_dq01_orphan_checks_use_anti_joins(spark, sf_dir):
 
 
 def test_q68_reconciliation_single_join(spark, sf_dir):
-    plan = _plan(queries()["q68_snapshot_reconciliation"](spark, sf_dir))
+    plan = executed_plan(queries()["q68_snapshot_reconciliation"](spark, sf_dir))
     # one full-outer join of the two snapshots; both sides scan orders once
     assert plan.count("SortMergeJoin FullOuter") + plan.count("FullOuter") >= 1
 
 
 def test_q61_session_window_partial_agg(spark, sf_dir):
-    plan = _plan(queries()["q61_builtin_session_window"](spark, sf_dir))
+    plan = executed_plan(queries()["q61_builtin_session_window"](spark, sf_dir))
     # session windows merge map-side before the shuffle (partial agg)
     assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") >= 1
     assert "Exchange" in plan
 
 
 def test_pp01_pipeline_fuses_scalar_stages(spark, sf_dir):
-    plan = _plan(queries()["pp01_training_data_pipeline"](spark, sf_dir))
+    plan = executed_plan(queries()["pp01_training_data_pipeline"](spark, sf_dir))
     # quality/lang/fingerprint/split are all scalar expressions: exactly
     # one scan of documents, and only the dedup window + final agg shuffle
     assert plan.count("documents") >= 1
@@ -144,7 +141,7 @@ def test_pp01_pipeline_fuses_scalar_stages(spark, sf_dir):
 
 
 def test_s06_ivf_fixed_no_cartesian(spark, sf_dir):
-    plan = _plan(queries()["s06_ann_ivf_fixed_topk"](spark, sf_dir))
+    plan = executed_plan(queries()["s06_ann_ivf_fixed_topk"](spark, sf_dir))
     # inverted-list search: scoring is list-local (one hash-partition
     # exchange on list_id feeding the per-list kernel), never a global
     # query×candidate product
@@ -155,7 +152,7 @@ def test_s06_ivf_fixed_no_cartesian(spark, sf_dir):
 
 
 def test_t15_vocab_rejoin_no_driver_vocab(spark, sf_dir):
-    plan = _plan(queries()["t15_unigram_logprob"](spark, sf_dir))
+    plan = executed_plan(queries()["t15_unigram_logprob"](spark, sf_dir))
     # the unigram-LM score re-joins tokens with corpus counts as a JOIN on
     # token (shuffle or broadcast — both distributed); the corpus-total is
     # the only broadcast-able singleton
@@ -163,49 +160,8 @@ def test_t15_vocab_rejoin_no_driver_vocab(spark, sf_dir):
     assert "CartesianProduct" not in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_registry_orders_stalest_evidence_first():
-    """The driver oracle-checks a prefix of the registry; ordering is a
-    stable sort by driver-evidence age computed from the committed
-    CORRECTNESS_r*.json files — never-checked / form-changed queries
-    first (age 0), then last-green round ascending — so a brand-new or
-    just-edited query always makes the 50-name sample prefix and the
-    stalest green evidence re-validates next."""
-    from aws_data_engineering_spark.plans import registry as R
-
-    names = list(R.queries())
-    ev = R._evidence_rounds()
-    assert ev, "CORRECTNESS_r*.json artifacts missing at the repo root"
-
-    def age(n: str) -> int:
-        # _FORM_CHANGED entries self-expire: tier 0 only while the latest
-        # driver-green round predates the round the form changed
-        return 0 if ev.get(n, 0) < R._FORM_CHANGED.get(n, 0) else ev.get(n, 0)
-
-    ages = [age(n) for n in names]
-    assert ages == sorted(ages), "registry not ordered by evidence age"
-    # form-changed names must reference registered queries; UNEXPIRED ones
-    # lead the prefix (they re-earn driver evidence before anything else)
-    assert set(R._FORM_CHANGED) <= set(names)
-    unexpired = {n for n, rnd in R._FORM_CHANGED.items() if ev.get(n, 0) < rnd}
-    assert all(age(n) == 0 for n in names[: len(unexpired)])
-    # expired entries are inert history: r07 re-greened the 13 round-7
-    # names, so none of them may still claim a tier-0 slot (d11 is the
-    # canary — the former d04 canary is form-changed again at round 12
-    # and correctly back at tier 0 until the driver re-greens it)
-    assert ev.get("d11_bloom_contamination", 0) >= 7
-    assert age("d11_bloom_contamination") >= 7
-    if ev.get("d04_minhash_candidate_pairs", 0) < 12:
-        assert age("d04_minhash_candidate_pairs") == 0
-    # rows-only queries (err == no_oracle) count as evidence: they must
-    # not permanently occupy the prefix (q71 has r03-r05 rows)
-    assert ev.get("q71_hll_partial_union", 0) >= 3
-    # every green r06 name is at age >= 6 unless its form changed
-    assert ev.get("t30_bm25_topk", 0) >= 6
-    assert set(R.oracle_sql()) <= set(names)
-
-
 def test_q76_both_geo_roles_broadcast(spark, sf_dir):
-    plan = _plan(queries()["q76_volume_shipping"](spark, sf_dir))
+    plan = executed_plan(queries()["q76_volume_shipping"](spark, sf_dir))
     # supplier-geo and customer-geo both broadcast: the fact side shuffles
     # only for the lineitem⨝orders join
     assert plan.count("BroadcastHashJoin") >= 2
@@ -213,18 +169,18 @@ def test_q76_both_geo_roles_broadcast(spark, sf_dir):
 
 
 def test_q77_all_dims_broadcast_no_fact_sortmerge(spark, sf_dir):
-    plan = _plan(queries()["q77_market_share"](spark, sf_dir))
+    plan = executed_plan(queries()["q77_market_share"](spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 3  # part, cust-asia, supp-geo
     assert "CartesianProduct" not in plan
 
 
 def test_q75_date_filter_pushed(spark, sf_dir):
-    plan = _plan(queries()["q75_promo_revenue_share"](spark, sf_dir))
+    plan = executed_plan(queries()["q75_promo_revenue_share"](spark, sf_dir))
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
 
 
 def test_q81_argmin_single_pass_no_window(spark, sf_dir):
-    plan = _plan(queries()["q81_min_cost_supplier"](spark, sf_dir))
+    plan = executed_plan(queries()["q81_min_cost_supplier"](spark, sf_dir))
     # per-part argmin is MIN(struct) — partial-aggregable, no window sort
     assert "Window" not in plan
     assert plan.count("HashAggregate") + plan.count("ObjectHashAggregate") >= 2
@@ -232,19 +188,19 @@ def test_q81_argmin_single_pass_no_window(spark, sf_dir):
 
 
 def test_q81_part_size_filter_pushed(spark, sf_dir):
-    plan = _plan(queries()["q81_min_cost_supplier"](spark, sf_dir))
+    plan = executed_plan(queries()["q81_min_cost_supplier"](spark, sf_dir))
     assert "PushedFilters: [IsNotNull(p_size), EqualTo(p_size,25)" in plan
 
 
 def test_dq04_stats_broadcast_single_scan(spark, sf_dir):
-    plan = _plan(queries()["dq04_partition_volume_anomaly"](spark, sf_dir))
+    plan = executed_plan(queries()["dq04_partition_volume_anomaly"](spark, sf_dir))
     # the 1-row moment aggregate joins back via broadcast nested loop (a
     # true scalar), never a shuffle
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 def test_e03_centroids_broadcast_argmax_no_window(spark, sf_dir):
-    plan = _plan(queries()["e03_centroid_assignment"](spark, sf_dir))
+    plan = executed_plan(queries()["e03_centroid_assignment"](spark, sf_dir))
     # 10 centroids broadcast against the fact side; per-vector argmax is
     # MAX_BY (partial-aggregable), not a row_number window
     assert "BroadcastNestedLoopJoin" in plan
@@ -253,12 +209,12 @@ def test_e03_centroids_broadcast_argmax_no_window(spark, sf_dir):
 
 def test_t17_gopher_audit_shuffle_free(spark, sf_dir):
     # the whole quality audit is per-row HOFs: no Exchange anywhere
-    plan = _plan(queries()["t17_gopher_quality_rules"](spark, sf_dir))
+    plan = executed_plan(queries()["t17_gopher_quality_rules"](spark, sf_dir))
     assert "Exchange" not in plan, plan
 
 
 def test_q82_takeordered_and_broadcast_geo(spark, sf_dir):
-    plan = _plan(queries()["q82_returned_item_revenue"](spark, sf_dir))
+    plan = executed_plan(queries()["q82_returned_item_revenue"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan  # top-20, never a global sort
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -267,32 +223,32 @@ def test_q82_takeordered_and_broadcast_geo(spark, sf_dir):
 
 
 def test_q83_exists_is_left_semi_join(spark, sf_dir):
-    plan = _plan(queries()["q83_late_order_priority"](spark, sf_dir))
+    plan = executed_plan(queries()["q83_late_order_priority"](spark, sf_dir))
     assert "LeftSemi" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_e04_quantization_shuffle_free(spark, sf_dir):
-    plan = _plan(queries()["e04_int8_quantization"](spark, sf_dir))
+    plan = executed_plan(queries()["e04_int8_quantization"](spark, sf_dir))
     assert "Exchange" not in plan, plan
 
 
 def test_p08_threshold_probe_broadcast(spark, sf_dir):
     # thresholds table joins back broadcast; only agg exchanges remain
-    plan = _plan(queries()["p08_temperature_mixture"](spark, sf_dir))
+    plan = executed_plan(queries()["p08_temperature_mixture"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_t21_chunking_shuffle_free(spark, sf_dir):
     # chunk expansion is a per-row Generate; nothing may shuffle
-    plan = _plan(queries()["t21_doc_chunking"](spark, sf_dir))
+    plan = executed_plan(queries()["t21_doc_chunking"](spark, sf_dir))
     assert "Exchange" not in plan, plan
 
 
 def test_d14_span_merge_no_cartesian(spark, sf_dir):
     # inverted-index dedup: gram equi-join only, never a cross product
-    plan = _plan(queries()["d14_duplicate_span_merge"](spark, sf_dir))
+    plan = executed_plan(queries()["d14_duplicate_span_merge"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -300,32 +256,32 @@ def test_d14_span_merge_no_cartesian(spark, sf_dir):
 def test_e08_power_iteration_broadcasts_v(spark, sf_dir):
     # the 64-row v vector joins back broadcast; the exploded relation must
     # never sort-merge against it
-    plan = _plan(queries()["e08_power_iteration_pca"](spark, sf_dir))
+    plan = executed_plan(queries()["e08_power_iteration_pca"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
 def test_dq07_winsorize_broadcasts_quantiles(spark, sf_dir):
-    plan = _plan(queries()["dq07_winsorized_stats"](spark, sf_dir))
+    plan = executed_plan(queries()["dq07_winsorized_stats"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_c11_delta_filter_pushed(spark, sf_dir):
     # the IVM delta branch's cutoff predicate must reach the orders scan
-    plan = _plan(queries()["c11_incremental_view_maintenance"](spark, sf_dir))
+    plan = executed_plan(queries()["c11_incremental_view_maintenance"](spark, sf_dir))
     assert "PushedFilters: [IsNotNull(o_orderdate), GreaterThanOrEqual(o_orderdate" in plan
 
 
 def test_c12_partition_filters_prune_scan(spark, sf_dir):
     # the date predicate must be a partition filter (listing-time pruning),
     # not a data filter evaluated per row
-    plan = _plan(queries()["c12_partition_pruned_read"](spark, sf_dir))
+    plan = executed_plan(queries()["c12_partition_pruned_read"](spark, sf_dir))
     assert "PartitionFilters: [" in plan
     assert "event_date" in plan.split("PartitionFilters:")[1].split("]")[0]
 
 
 def test_e11_centroids_broadcast(spark, sf_dir):
-    plan = _plan(queries()["e11_embedding_health"](spark, sf_dir))
+    plan = executed_plan(queries()["e11_embedding_health"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -445,7 +401,7 @@ def test_whole_registry_no_cartesian_products(spark, sf_dir, registry_dfs):
     query ever decays into an accidental all-pairs join."""
     bad = []
     for name, df in registry_dfs.items():
-        plan = _plan(df)
+        plan = executed_plan(df)
         if "CartesianProduct" in plan:
             bad.append((name, "CartesianProduct"))
         if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_ALLOW:
@@ -500,7 +456,7 @@ def test_s10_corpus_stays_map_side(spark, sf_dir):
     repartition → one Python map stage, with the ONLY post-kernel exchange
     being the k·A-row per-anchor window — never an N×A score matrix. One
     MapInPandas, and every Exchange in the plan sits above it."""
-    plan = _plan(queries()["s10_hard_negative_topk"](spark, sf_dir))
+    plan = executed_plan(queries()["s10_hard_negative_topk"](spark, sf_dir))
     assert plan.count("MapInPandas") == 1
     kernel_pos = plan.index("MapInPandas")
     # exchanges above the kernel (window + initial fan-out repartition) are
@@ -522,7 +478,7 @@ def test_m14_m15_codec_chain_shuffle_free(spark, sf_dir):
         "m16_jpeg_progressive_decode",
         "m17_mjpeg_frame_decode",
     ):
-        plan = _plan(queries()[name](spark, sf_dir))
+        plan = executed_plan(queries()[name](spark, sf_dir))
         assert "Exchange" not in plan, (name, plan)
         assert plan.count("MapInPandas") >= 2, name
 
@@ -531,7 +487,7 @@ def test_t30_bm25_no_corpus_shuffle(spark, sf_dir):
     """Fixed-query BM25 is scan-local: per-term tf/dl are HOF expressions,
     corpus stats one 1-row broadcast aggregate, the top-k a
     TakeOrderedAndProject — corpus rows must never hash-shuffle."""
-    plan = _plan(queries()["t30_bm25_topk"](spark, sf_dir))
+    plan = executed_plan(queries()["t30_bm25_topk"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "hashpartitioning" not in plan
@@ -540,7 +496,7 @@ def test_t30_bm25_no_corpus_shuffle(spark, sf_dir):
 def test_p14_curriculum_single_shuffle(spark, sf_dir):
     """Phase assignment + epoch fan-out are scan-stage expressions; the only
     exchange in the census is the final (epoch, phase) groupBy."""
-    plan = _plan(queries()["p14_curriculum_schedule"](spark, sf_dir))
+    plan = executed_plan(queries()["p14_curriculum_schedule"](spark, sf_dir))
     assert "Generate" in plan  # posexplode fan-out, in the scan stage
     assert plan.count("Exchange") == 1
 
@@ -550,7 +506,7 @@ def test_c17_dynamic_partition_pruning(spark, sf_dir):
     pruning subquery (dynamicpruning / SubqueryAdaptiveBroadcast in the
     fact FileScan's PartitionFilters) — the star-schema optimization the
     100 TB lake layout exists for."""
-    plan = _plan(queries()["c17_dynamic_partition_pruned_join"](spark, sf_dir))
+    plan = executed_plan(queries()["c17_dynamic_partition_pruned_join"](spark, sf_dir))
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 

@@ -1,11 +1,9 @@
 """Oracle-differential tests: every registered query with an oracle must
 hash-match DuckDB at the test scale factor — mirrors the driver's gate.
 
-Marked `slow` (deselected by default, see pytest.ini): this 322-test replay
-is the bulk of the suite's ~46 min and duplicates the committed
-full-registry drives (tools/full_drive.py -> FULLDRIVE_r*.json) and the
-round-driver's own DuckDB gate. Run it explicitly with  pytest tests/ -m ""
-or  pytest tests/test_queries_oracle.py -m slow.
+Marked `slow` but part of the default run: `pytest tests/` replays every
+oracle. Run the replay alone with  pytest tests/test_queries_oracle.py -m slow
+or  pytest tests/ -m slow.
 """
 
 from __future__ import annotations

@@ -3,29 +3,14 @@
 
 from __future__ import annotations
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import web as W
 from aws_data_engineering_spark.plans.registry import QUERIES, queries
+from tests.oracle_utils import write_docs
 
 queries()  # force registration
-
-
-def _write_docs(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    return str(tmp_path)
 
 
 # --------------------------------------------------------------------------
@@ -38,7 +23,7 @@ def test_t39_extraction_drops_boilerplate_paragraphs(spark, tmp_path):
     ingest them. doc_id=2 picks nav variant 2 (which has a <p>), is even
     (aside present, two <p>s) and gets the footer (two <p>s) — yet only
     the two content paragraphs survive."""
-    sf = _write_docs(tmp_path, [(2, "alpha beta gamma", "en", "web", 0)])
+    sf = write_docs(tmp_path, [(2, "alpha beta gamma", "en", "web", 0)])
     row = QUERIES["t39_html_boilerplate_extract"].spark(spark, sf).collect()[0]
     assert row["n_paras"] == 2  # content + appendix, no boilerplate <p>s
     expected = "alpha beta gamma appendix for doc 2"
@@ -52,7 +37,7 @@ def test_t39_extraction_drops_boilerplate_paragraphs(spark, tmp_path):
 def test_t39_frame_guard_strips_angle_brackets(spark, tmp_path):
     """A document containing literal < > cannot forge tags: the wrapper
     strips them before embedding (the t22 bracket-guard precedent)."""
-    sf = _write_docs(
+    sf = write_docs(
         tmp_path, [(1, "evil <nav>fake</nav> <p>inject</p> text", "en", "web", 0)]
     )
     row = QUERIES["t39_html_boilerplate_extract"].spark(spark, sf).collect()[0]
@@ -63,7 +48,7 @@ def test_t39_frame_guard_strips_angle_brackets(spark, tmp_path):
 def test_t39_boilerplate_fraction_varies_with_blocks(spark, tmp_path):
     """Even docs carry the aside block -> strictly larger boilerplate ppm
     than the same-text odd doc (same nav variant: ids 1 and 4 differ)."""
-    sf = _write_docs(
+    sf = write_docs(
         tmp_path,
         [(3, "same words here", "en", "web", 0), (6, "same words here", "en", "web", 0)],
     )
@@ -276,7 +261,7 @@ def test_c24_framing_immune_to_payload_content(spark, tmp_path):
     """A payload containing the record marker and fake header text must not
     confuse the byte-driven parser (a marker-split reader would break)."""
     evil = "see WARC/1.0 WARC-Record-ID: urn:doc:999 Content-Length: 3 done"
-    sf = _write_docs(
+    sf = write_docs(
         tmp_path,
         [(7, evil, "en", "web", 0), (15, "plain text here", "en", "web", 0)],
     )
@@ -295,7 +280,7 @@ def test_c24_framing_immune_to_payload_content(spark, tmp_path):
 def test_c24_crlf_guard_normalizes_payload(spark, tmp_path):
     """Embedded CR/LF would break line-based header parsing; the writer
     normalizes them on both engines (fixture text has none)."""
-    sf = _write_docs(tmp_path, [(3, "line one\r\nline two\nend", "en", "web", 0)])
+    sf = write_docs(tmp_path, [(3, "line one\r\nline two\nend", "en", "web", 0)])
     row = QUERIES["c24_warc_container_ingest"].spark(spark, sf).collect()[0]
     clean = "line oneline twoend"
     assert row["content_length"] == len(clean)
@@ -323,7 +308,7 @@ def test_pp03_first_match_wins_and_keeper_skips_boiler(spark, tmp_path):
     boilerplate-heavy (tiny text) so it must count as 'boiler', NOT claim
     the canonical slot — 420 is kept. Docs 1/421 both survive extraction:
     1 keeps the slot, 421 drops as 'urldup'."""
-    sf = _write_docs(
+    sf = write_docs(
         tmp_path,
         [
             (0, "tiny", "en", "web", 0),  # high boiler ppm
@@ -382,7 +367,7 @@ def test_pp03_long_document_no_int32_overflow(spark, tmp_path):
     page carries >2147 space/boiler chars, overflowing an int32 product
     (ANSI throws; non-ANSI wraps) — code-review round 10."""
     long_doc = " ".join(["word"] * 2500)
-    sf = _write_docs(
+    sf = write_docs(
         tmp_path, [(0, long_doc, "en", "web", 0), (1, _LONG, "en", "web", 0)]
     )
     census = QUERIES["pp03_web_curation_pipeline"].spark(spark, sf)

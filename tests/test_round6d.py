@@ -10,21 +10,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from aws_data_engineering_spark.plans.registry import QUERIES, queries
+from tests.oracle_utils import write_docs
 
 queries()  # force registration
-
-
-def _write_docs(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
 
 
 def test_q101_median_even_and_odd_counts(spark, tmp_path):
@@ -61,7 +49,7 @@ def test_t32_langid_separable_profiles(spark, tmp_path):
         rows.append((i, "aaa bbb aab aba bba abb " * 5, "aa", "s", 0))
     for i in range(4, 8):
         rows.append((i, "xxx yyy xxy xyx yyx xyy " * 5, "xx", "s", 0))
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     df = QUERIES["t32_langid_ngram_profile"].spark(spark, str(tmp_path))
     got = {(r["actual_lang"], r["predicted_lang"]): r["n_docs"] for r in df.collect()}
     assert got == {("aa", "aa"): 4, ("xx", "xx"): 4}
@@ -76,7 +64,7 @@ def test_t33_heaps_totals_and_two_phase(spark, tmp_path):
         (2, "b c", "en", "s", 0),
         (3, "a d d d", "en", "s", 0),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     df = QUERIES["t33_heaps_law_fit"].spark(spark, str(tmp_path))
     row = df.collect()[0]
     assert row["n_docs"] == 3
@@ -92,7 +80,7 @@ def test_t34_jsd_bounds(spark, tmp_path):
         (2, "a b c a b c", "same2", "s", 0),
         (3, "x y z x y z", "disj", "s", 0),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     df = QUERIES["t34_lang_jsd_matrix"].spark(spark, str(tmp_path))
     got = {(r["lang_a"], r["lang_b"]): r["jsd_nats"] for r in df.collect()}
     assert got[("same1", "same2")] == 0.0
@@ -176,7 +164,7 @@ def test_st15_cms_partials_merge_equals_batch(spark, tmp_path):
     )
 
     rows = [(i, f"tok{i % 7} tok{i % 3} shared", "en", "s", 0) for i in range(60)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     in_dir = str(tmp_path / "in")
     from aws_data_engineering_spark.streaming import stamp_feed_mtimes
@@ -234,7 +222,7 @@ def test_st16_bloom_or_merge_equals_batch(spark, tmp_path):
         (100, "alpha beta gamma delta epsilon tok1 zeta eta theta", "en", "web", 0),
         (101, "totally different words with no overlap at all here", "en", "web", 0),
     ]
-    _write_docs(tmp_path, bench_rows + cand_rows)
+    write_docs(tmp_path, bench_rows + cand_rows)
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
     bench = docs.filter(F.col("source") == "bench")
     cand_docs = docs.filter(F.col("source") == "web")
@@ -708,7 +696,7 @@ def test_text_queries_exotic_whitespace_parity(spark, tmp_path):
         (6, "normal control text for pairs ok", "en", "web", 32),
         (7, "", "en", "web", 0),
     ]
-    _write_docs(tmp_path, [(r[0], r[1], r[2], r[3], r[4]) for r in rows])
+    write_docs(tmp_path, [(r[0], r[1], r[2], r[3], r[4]) for r in rows])
     names = [
         "t01_text_stats", "t02_quality_scores", "t03_token_counts_by_source",
         "t05_token_length_stats", "t07_repetition_signals", "t10_top_tokens",

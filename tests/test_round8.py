@@ -21,21 +21,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from aws_data_engineering_spark.plans.registry import QUERIES, queries
+from tests.oracle_utils import write_docs
 
 queries()  # load registrations
-
-
-def _write_docs(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
 
 
 # Turkish dotted capital İ, Greek final-sigma contexts, capital sharp S,
@@ -75,7 +63,7 @@ _SWEEP_QUERIES = [
 def test_text_queries_unicode_case_parity(spark, tmp_path, name):
     from tests.oracle_utils import compare
 
-    _write_docs(tmp_path, _UNICODE_CASE_ROWS)
+    write_docs(tmp_path, _UNICODE_CASE_ROWS)
     q = QUERIES[name]
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
 
@@ -252,7 +240,7 @@ def test_s11_fusion_with_empty_sparse_arm(spark, tmp_path):
         (i, f"nothing relevant here doc{i} filler words", "en", "web")
         for i in range(1, 13)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     _write_embeddings(tmp_path)
     q = QUERIES["s11_rrf_hybrid_retrieval"]
     df = q.spark(spark, str(tmp_path))
@@ -276,7 +264,7 @@ def test_t35_degenerate_documents(spark, tmp_path):
         (4, "two tokens", "en", "b"),
         (5, "ordinary document with several tokens inside", "en", "c"),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["t35_hashed_ngram_quality"]
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
 
@@ -310,7 +298,7 @@ _EDGE_WS_QUERIES = _SWEEP_QUERIES + [
 def test_text_queries_edge_whitespace_parity(spark, tmp_path, name):
     from tests.oracle_utils import compare
 
-    _write_docs(tmp_path, _EDGE_WS_ROWS)
+    write_docs(tmp_path, _EDGE_WS_ROWS)
     q = QUERIES[name]
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
 
@@ -402,7 +390,7 @@ def test_t36_duplicate_doc_has_zero_novelty(spark, tmp_path):
         (4, "  ", "en", "empty2"),
         (5, "alpha beta gamma NEW tokens here", "en", "partial"),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["t36_crossdoc_ngram_novelty"]
     df = q.spark(spark, str(tmp_path))
     by_src = {r["source"]: r for r in df.collect()}
@@ -507,7 +495,7 @@ def test_d20_blocking_ties_and_unicode(spark, tmp_path):
         (6, "καλός words end here now", "el", "a"),
         (7, "καλό words end here now", "el", "a"),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["d20_sorted_neighborhood_pairs"]
     df = q.spark(spark, str(tmp_path))
     rows_out = {(r["k"], r["dist_bucket"]): r for r in df.collect()}
@@ -522,7 +510,7 @@ def test_d20_blocking_ties_and_unicode(spark, tmp_path):
 def test_d20_null_text_dropped(spark, tmp_path):
     from tests.oracle_utils import compare
 
-    _write_docs_nullable(
+    write_docs(
         tmp_path,
         [
             (1, "same text here", "en", "a"),
@@ -535,21 +523,6 @@ def test_d20_null_text_dropped(spark, tmp_path):
     out = df.collect()
     assert len(out) == 1 and out[0]["n_pairs"] == 1  # NULL row contributes nothing
     compare(df, q.oracle, str(tmp_path))
-
-
-def _write_docs_nullable(tmp_path, rows):
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array(
-                [len(r[1]) if r[1] is not None else None for r in rows], pa.int64()
-            ),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
 
 
 def test_q103_idle_cap_ties_and_last_event(spark, tmp_path):
@@ -598,7 +571,7 @@ def test_m21_resize_known_pixels_and_negative_ids(spark, tmp_path):
     both sides (Python vs DuckDB % sign semantics)."""
     from tests.oracle_utils import compare
 
-    _write_docs(
+    write_docs(
         tmp_path,
         [
             (0, "tiny", "en", "a"),
@@ -686,7 +659,7 @@ def test_d21_probe_never_joins_within_a_side(spark, tmp_path):
         (30, texts["twin_c"], "en", "new"),
         (4, texts["lone"], "en", "idx"),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["d21_incremental_minhash_probe"]
     df = q.spark(spark, str(tmp_path))
     got = {(r["id_new"], r["id_idx"]): r["est_jaccard"] for r in df.collect()}
@@ -701,7 +674,7 @@ def test_m22_silence_replay_and_negative_ids(spark, tmp_path):
     a negative doc_id is excluded on both sides."""
     from tests.oracle_utils import compare
 
-    _write_docs(
+    write_docs(
         tmp_path,
         [(0, "a", "en", "x"), (5, "b", "en", "x"), (-7, "neg", "en", "x")],
     )
@@ -819,7 +792,7 @@ def test_pp02_waterfall_all_five_verdicts(spark, tmp_path):
         (40, "99 88 77", "en", "new"),       # low quality
         (50, kept, "en", "new"),             # kept
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["pp02_incremental_curation"]
     df = q.spark(spark, str(tmp_path))
     got = {r["verdict"]: r for r in df.collect()}
@@ -924,7 +897,7 @@ def test_t37_tiny_languages_and_tie_rates(spark, tmp_path):
         (6, "alpha alpha alpha alpha alpha", "zz", "a"),
         (7, "unique9 unique8 unique7", "zz", "a"),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     q = QUERIES["t37_ccnet_surprisal_buckets"]
     df = q.spark(spark, str(tmp_path))
     got = df.collect()

@@ -59,3 +59,20 @@ def test_qdigest_quantile_overshoot_bounded(spark, sf_dir):
         assert r["rank_achieved"] >= r["rank"], tuple(r)
         assert r["rank_overshoot"] <= r["rank_err_bound"], tuple(r)
         assert r["exact"] <= r["est"], tuple(r)
+
+
+def test_qdigest_unclamped_census_raises_value_error(spark):
+    """Both single-task Arrow stages refuse a census wider than the
+    2^levels domain with a ValueError — an explicit raise, so the guard
+    still holds under ``python -O``, which strips ``assert``s."""
+    import pytest
+
+    leaves = spark.createDataFrame([(v, 1) for v in range(5)], "v long, cnt long")
+    for stage in (
+        SK.qdigest_nodes_from_leaves(leaves, levels=2),
+        SK.qdigest_report_from_leaves(leaves, (0.5,), levels=2),
+    ):
+        with pytest.raises(Exception) as err:
+            stage.collect()
+        assert "ValueError" in str(err.value)
+        assert "q-digest census has" in str(err.value)

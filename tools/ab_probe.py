@@ -2,13 +2,13 @@
 sequential A/B pairs lie — burst-credit drift orders them; only interleaved
 min-of-N with calibration is admissible evidence).
 
-Alternates qbench subprocess runs between two trees (arm A = a worktree at
-the baseline commit, arm B = the working tree), several reps each, and
-reports per-query min/median per arm plus the calibration series.
+Alternates `bench.py name ...` subprocess runs between two trees (arm A = a
+checkout of the baseline commit, arm B = the working tree), several reps
+each, and reports per-query min/median per arm plus the calibration series.
 
 Usage:
-    python tools/ab_probe.py --a /tmp/r12_before --b /root/repo \
-        --sf /root/testdata/sf0.1 --reps 4 --n 2 name ...
+    python tools/ab_probe.py --a ../baseline --b . \
+        --sf SF_DIR --reps 4 --n 2 name ...
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ import sys
 
 def run_arm(tree: str, sf: str, n: int, names: list[str]) -> dict:
     out = subprocess.run(
-        [sys.executable, os.path.join(tree, "tools", "qbench.py"),
+        [sys.executable, os.path.join(tree, "bench.py"),
          "--sf", sf, "--n", str(n), *names],
         capture_output=True, text=True, timeout=3600,
     )

@@ -97,6 +97,30 @@ def _fn_source(text: str, fn_name: str) -> str | None:
     return None
 
 
+def _path_changed(repo: str, base_commit: str, path: str) -> bool:
+    """Whether ``path`` differs from ``base_commit`` in HEAD or the work tree."""
+    diff = _git(repo, "diff", "--name-only", f"{base_commit}..HEAD", "--", path)
+    return bool(diff or _git(repo, "status", "--porcelain", "--", path))
+
+
+def _engine_modules(fn) -> list[str]:
+    """Repo-relative paths of the engine modules the callable's module
+    imports: the module objects in ``fn.__globals__`` plus the defining
+    module of every imported function or class."""
+    import inspect
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = set()
+    for v in getattr(fn, "__globals__", {}).values():
+        name = v.__name__ if inspect.ismodule(v) else getattr(v, "__module__", None)
+        if not (isinstance(name, str) and name.startswith("aws_data_engineering_spark")):
+            continue
+        path = getattr(sys.modules.get(name), "__file__", None)
+        if path:
+            paths.add(os.path.relpath(path, root))
+    return sorted(paths)
+
+
 def _perf_regressions(
     repo: str, sf_dir: str, out_path: str, results: dict, qs: dict
 ) -> dict:
@@ -107,8 +131,9 @@ def _perf_regressions(
     callable's source span can be extracted from both versions (VERDICT
     r11 #4: the module-level bit cried wolf on queries whose module merely
     contained an unrelated hunk), falling back to the module-level diff
-    otherwise. Function granularity can still false-negative when only a
-    shared helper changed, so the module bit is reported alongside."""
+    otherwise. A function-level "unchanged" can still hide an edit to a
+    shared helper, so the engine modules the callable's module imports are
+    diffed too and count toward code_changed."""
     base = _find_baseline(repo, sf_dir, out_path)
     if base is None:
         return {"baseline": None, "items": []}
@@ -132,10 +157,13 @@ def _perf_regressions(
         changed = None
         fn_changed = None
         granularity = None
+        imports_changed: list[str] = []
         if base_commit and mod_path:
-            diff = _git(repo, "diff", "--name-only", f"{base_commit}..HEAD", "--", mod_path)
-            dirty = _git(repo, "status", "--porcelain", "--", mod_path)
-            changed = bool(diff or dirty)
+            changed = _path_changed(repo, base_commit, mod_path)
+            imports_changed = [
+                p for p in _engine_modules(fn)
+                if p != mod_path and _path_changed(repo, base_commit, p)
+            ]
             if changed:
                 # function-level attribution: compare the registered
                 # callable's source span (working tree, so dirty state
@@ -164,9 +192,12 @@ def _perf_regressions(
                 "ratio": round(cur / prev, 2),
                 "module": mod_path,
                 # headline bit: function-granularity when extractable,
-                # else the old module-granularity answer
-                "code_changed": fn_changed if fn_changed is not None else changed,
+                # else the module-granularity answer; an edited imported
+                # engine module counts either way
+                "code_changed": (fn_changed if fn_changed is not None else changed)
+                or bool(imports_changed),
                 "module_changed": changed,
+                "imports_changed": imports_changed,
                 "attribution": granularity or "module",
             }
         )
@@ -202,12 +233,14 @@ def main() -> None:
     import duckdb
     from pyspark.sql import SparkSession
 
+    from aws_data_engineering_spark.session import driver_memory
+
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -21,7 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from aws_data_engineering_spark.session import build_session_builder
 
 # Queries whose plan FUNCTION executes jobs (streams, scoped-conf
 # materializations, multi-step writes) — calling them just to read the
@@ -36,17 +36,7 @@ RUNS_WORK = {
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/plan_audit.tsv"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("spark-graft-plan-audit")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session_builder(app_name="spark-graft-plan-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     from aws_data_engineering_spark.plans.registry import queries
