@@ -18,17 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_data_engineering_spark.storage import HadoopPath
+
 ROLLUP_BUCKET_COL = "bucket_start"
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence probe (local/hdfs/s3a) via the JVM
-    Hadoop FileSystem — a true exists() check, so read errors on paths that
-    DO exist are never mistaken for absence."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
 
 
 def _rollup_hwm(spark: SparkSession, rollup_path: str) -> str | None:
@@ -42,11 +34,9 @@ def _rollup_hwm(spark: SparkSession, rollup_path: str) -> str | None:
     are URL-decoded (Spark percent-encodes ':' etc. in partition dirs)."""
     from urllib.parse import unquote
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(rollup_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    root = HadoopPath(spark, rollup_path)
     best: str | None = None
-    for st in fs.listStatus(hpath):
+    for st in root.fs.listStatus(root.path):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(ROLLUP_BUCKET_COL + "="):
             v = unquote(name.split("=", 1)[1])
@@ -110,11 +100,11 @@ def incremental_rollup_refresh(
     # the former recomputes everything, the latter bypasses the granularity
     # guard below.
     hwm = None
-    if _path_exists(spark, rollup_path):
+    if HadoopPath(spark, rollup_path).exists():
         hwm = _rollup_hwm(spark, rollup_path)
     if hwm is not None:
         stored = None  # pre-marker rollup: accept and stamp below
-        if _path_exists(spark, marker):
+        if HadoopPath(spark, marker).exists():
             stored = _read_marker(spark, marker)
             if stored is None:
                 raise ValueError(
@@ -165,10 +155,8 @@ def _write_marker(spark: SparkSession, marker: str, bucket: str) -> None:
     per refresh for a ~20-byte file)."""
     import json
 
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path(f"{marker}/part-00000.json")
-    fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(fs_path, True)
+    part = HadoopPath(spark, f"{marker}/part-00000.json")
+    out = part.fs.create(part.path, True)
     try:
         out.write(bytearray(json.dumps({"bucket": bucket}).encode() + b"\n"))
     finally:
@@ -180,11 +168,10 @@ def _read_marker(spark: SparkSession, marker: str) -> str | None:
     (the caller raises — a corrupt marker must abort, not degrade)."""
     import json
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(marker)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    meta = HadoopPath(spark, marker)
+    fs = meta.fs
     try:
-        for st in fs.listStatus(hpath):
+        for st in fs.listStatus(meta.path):
             name = st.getPath().getName()
             if not st.isFile() or name.startswith(("_", ".")):
                 continue

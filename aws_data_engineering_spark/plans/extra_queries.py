@@ -16,7 +16,6 @@ both engines divide bit-identical doubles.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +31,7 @@ from aws_data_engineering_spark.sources.readers import (
     write_binary_objects,
 )
 from aws_data_engineering_spark.sources.tables import load_table
+from aws_data_engineering_spark.storage import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -519,9 +519,7 @@ def c05_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("data")
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "spark_c05", uuid.uuid4().hex[:8]
-    )
+    out_dir = scratch_dir("c05")
     write_binary_objects(docs, out_dir, "doc_id", "data")
     files = read_binary_files(spark, out_dir, glob="obj_*.bin")
     return files.select(
@@ -694,7 +692,7 @@ def st06_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (raw ns-encoded bigint ts, the encoding read_events_stream expects
     # from a bigint-typed footer). user -1 never reaches the output: its
     # session can't close (nothing advances the watermark past it).
-    sent_dir = os.path.join(tempfile.gettempdir(), "spark_st06", uuid.uuid4().hex[:8])
+    sent_dir = scratch_dir("st06")
     sentinel_ns = (max_us + 2 * 3600 * 1_000_000) * 1000
     spark.createDataFrame(
         [(int(1e9), sentinel_ns, -1, "sentinel", 0.0, None)],
@@ -800,7 +798,7 @@ def c06_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    out_dir = os.path.join(tempfile.gettempdir(), "spark_c06", uuid.uuid4().hex[:8])
+    out_dir = scratch_dir("c06")
     write_jsonl(docs, out_dir)
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -909,7 +907,7 @@ def st09_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     path = os.path.join(sf_dir, "events.parquet")
     events = _t(spark, sf_dir, "events")
     max_us = events.agg(F.max(F.unix_micros(F.col("ts")))).collect()[0][0]
-    sent_dir = os.path.join(tempfile.gettempdir(), "spark_st09", uuid.uuid4().hex[:8])
+    sent_dir = scratch_dir("st09")
     sentinel_ns = (max_us + 2 * 3600 * 1_000_000) * 1000
     # one sentinel per branch: each watermark is tracked AFTER the
     # event_type filter, so both the purchase and click branch need to see
@@ -1369,9 +1367,7 @@ def t18_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reconciles both footers and null-fills the old batch",
 )
 def c07_mergeschema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_c07", uuid.uuid4().hex[:8]
-    )
+    base = scratch_dir("c07")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -1507,7 +1503,7 @@ def c08_csv_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    base = os.path.join(tempfile.gettempdir(), "spark_c08", uuid.uuid4().hex[:8])
+    base = scratch_dir("c08")
     # build the dirty feed: every o_orderkey % 7 == 3 line is written with a
     # junk price ("N/A") that cannot parse as double; clean lines carry the
     # 2dp-rounded price in shortest-repr decimal form, which parses back to
@@ -2126,7 +2122,7 @@ def st10_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_file_sink,
     )
 
-    base = os.path.join(tempfile.gettempdir(), "spark_st10", uuid.uuid4().hex[:8])
+    base = scratch_dir("st10")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     path = os.path.join(sf_dir, "events.parquet")
@@ -2232,7 +2228,7 @@ def c10_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from aws_data_engineering_spark.sources.writers import compact_table
 
-    base = os.path.join(tempfile.gettempdir(), "spark_c10", uuid.uuid4().hex[:8])
+    base = scratch_dir("c10")
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "value",

@@ -12,6 +12,7 @@ from aws_data_engineering_spark.operators import sketch as SK
 from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
+from aws_data_engineering_spark.storage import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -102,11 +103,8 @@ _C12_LO, _C12_HI = "2024-01-05", "2024-01-07"
     "(plan-asserted); oracle recomputes from the raw table",
 )
 def c12_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     events = _t(spark, sf_dir, "events")
-    path = f"{tempfile.gettempdir()}/c12_{uuid.uuid4().hex}"
+    path = scratch_dir("c12")
     (
         events.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
         .write.mode("overwrite")
@@ -150,15 +148,12 @@ def c12_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source-derived values)",
 )
 def c13_csv_quoting_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     docs = _t(spark, sf_dir, "documents")
     tricky = F.concat(
         F.lit('v,"'), F.col("lang"), F.lit('"'), F.lit("\n"), F.col("source")
     )
     src = docs.select("doc_id", tricky.alias("tricky"))
-    path = f"{tempfile.gettempdir()}/c13_{uuid.uuid4().hex}"
+    path = scratch_dir("c13")
     src.write.mode("overwrite").option("header", "true").option(
         "escapeQuotes", "true"
     ).csv(path)
@@ -203,10 +198,6 @@ def c13_csv_quoting_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from the raw line, audit proves nothing dropped",
 )
 def c14_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-    import tempfile as _tempfile
-    import uuid as _uuid
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -215,9 +206,7 @@ def c14_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    base = _os.path.join(
-        _tempfile.gettempdir(), "spark_c14", _uuid.uuid4().hex[:8]
-    )
+    base = scratch_dir("c14")
     clean = F.to_json(
         F.struct(
             F.col("o_orderkey"),
@@ -301,13 +290,11 @@ def c14_json_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parquet source, so ORC data loss or retyping fails the hash",
 )
 def c15_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from aws_data_engineering_spark.sources.readers import read_table
     from aws_data_engineering_spark.sources.writers import write_append
 
     sup = _t(spark, sf_dir, "supplier")
-    path = f"/tmp/spark_graft_c15_{uuid.uuid4().hex[:8]}"
+    path = scratch_dir("c15")
     write_append(sup, path, partition_by=(), fmt="orc")
     back = read_table(spark, path, fmt="orc")
     return back.groupBy("s_nationkey").agg(
@@ -340,8 +327,6 @@ def c15_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
-    import uuid
 
     from aws_data_engineering_spark.streaming import (
         read_documents_stream,
@@ -351,9 +336,9 @@ def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    base = os.path.join(tempfile.gettempdir(), "spark_st12", uuid.uuid4().hex[:8])
+    base = scratch_dir("st12")
     in_dir = os.path.join(base, "in")
-    # feed the corpus as doc_id-RANGE files (bucket = floor(doc_id/step),
+    # feed the corpus as doc_id-RANGE files (bucket = doc_id DIV step,
     # identical composition to the sequential filter loop this replaces,
     # now built in ONE documents scan — write_bucketed_feed): the file
     # source processes oldest-modification-time first, so batch order ==
@@ -364,9 +349,8 @@ def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_id = docs.agg(F.max("doc_id")).first()[0]
     n_files = 4
     step = (int(max_id) + n_files) // n_files
-    write_bucketed_feed(
-        docs, F.floor(F.col("doc_id") / F.lit(step)), in_dir, n_files
-    )
+    # integer DIV: double division rounds once doc_id passes 2^53
+    write_bucketed_feed(docs, F.expr(f"doc_id DIV {step}"), in_dir, n_files)
     stream = read_documents_stream(spark, in_dir, max_files_per_trigger=1)
     from aws_data_engineering_spark.streaming import scaled_stream_shuffle
 
@@ -432,7 +416,6 @@ def st12_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st13_stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
     import uuid
 
     from aws_data_engineering_spark.streaming import (
@@ -442,7 +425,7 @@ def st13_stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = _t(spark, sf_dir, "events")
-    base = os.path.join(tempfile.gettempdir(), "spark_st13", uuid.uuid4().hex[:8])
+    base = scratch_dir("st13")
     in_dir = os.path.join(base, "in")
     # one file per event_id%3 class, written sequentially: the file source
     # processes oldest-modification-time first, so batch order == class
@@ -553,12 +536,8 @@ _C16_BUCKETS = 8
 )
 def c16_parquet_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
-    import uuid
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "spark_c16", uuid.uuid4().hex[:8]
-    )
+    out_dir = scratch_dir("c16")
     os.makedirs(out_dir, exist_ok=True)
     rg_rows, lo, hi = _C16_RG_ROWS, _C16_LO, _C16_HI
 
@@ -677,14 +656,8 @@ _C17_QUARTER = "1996Q2"
     "from the raw table so a dropped partition fails the hash",
 )
 def c17_dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
     li = _t(spark, sf_dir, "lineitem")
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_c17", uuid.uuid4().hex[:8]
-    )
+    path = scratch_dir("c17")
     (
         li.withColumn("ship_month", F.date_format("l_shipdate", "yyyy-MM"))
         .write.mode("overwrite")
@@ -767,11 +740,9 @@ _C18_FILES_PER_COMMIT = 4
 def c18_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
-    import tempfile
-    import uuid
 
     orders = _t(spark, sf_dir, "orders")
-    root = f"{tempfile.gettempdir()}/c18_{uuid.uuid4().hex}"
+    root = scratch_dir("c18")
     data_dir = f"{root}/data"
     manifest_dir = f"{root}/manifests"
     os.makedirs(manifest_dir, exist_ok=True)
@@ -856,9 +827,6 @@ def c18_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "byte-offset round trip against the source table",
 )
 def c19_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
     orders = _t(spark, sf_dir, "orders")
     # layout: orderkey 1-12, custkey 13-22, status 23, cents 24-35,
     # date 36-45, priority 46-60 (space right-padded)
@@ -870,7 +838,7 @@ def c19_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.rpad(F.col("o_orderpriority"), 15, " "),
     )
-    path = f"{tempfile.gettempdir()}/c19_{uuid.uuid4().hex}"
+    path = scratch_dir("c19")
     orders.select(line.alias("value")).write.mode("overwrite").text(path)
     back = spark.read.text(path).select(
         F.substring("value", 23, 1).alias("status"),
@@ -940,12 +908,10 @@ _C20_TO = "1996-08-20"
 def c20_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
-    import tempfile
-    import uuid
 
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
     m_col = (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("m")
-    root = f"{tempfile.gettempdir()}/c20_{uuid.uuid4().hex}"
+    root = scratch_dir("c20")
     data_dir = f"{root}/data"
 
     # The whole scratch lifecycle sits inside try/finally — a failure
@@ -984,8 +950,8 @@ def c20_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         # range), prune via the manifest, read surviving files by path.
         # The scratch layout is removed in `finally` — the tiny result is
         # eagerly localCheckpoint'ed first so the returned plan no longer
-        # references the deleted files (ADVICE r08: repeated runs leaked
-        # an orders-sized copy under /tmp per invocation).
+        # references the deleted files (ADVICE r08: an orders-sized copy
+        # per invocation must not wait for process exit).
         lo = int(_C20_FROM[:4]) * 100 + int(_C20_FROM[5:7])
         hi = int(_C20_TO[:4]) * 100 + int(_C20_TO[5:7])
         with open(f"{root}/manifest.json") as fh:
@@ -1281,11 +1247,9 @@ _C22_PRED_SQL = "o_orderpriority = '1-URGENT'"
 )
 def c22_positional_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import uuid
 
     pred = F.expr(_C22_PRED_SQL)
-    root = f"{tempfile.gettempdir()}/c22_{uuid.uuid4().hex}"
+    root = scratch_dir("c22")
     try:
         orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate").isNotNull())
         m_col = (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("m")
@@ -1558,10 +1522,8 @@ def _c23_read(spark: SparkSession, root: str, audit: dict) -> DataFrame:
 )
 def c23_delete_vector_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import uuid
 
-    root = f"{tempfile.gettempdir()}/c23_{uuid.uuid4().hex}"
+    root = scratch_dir("c23")
     try:
         _c23_write_layout(spark, sf_dir, root)
         audit = _c23_compact(spark, root)
@@ -1685,8 +1647,6 @@ def _c24_oracle() -> str:
 )
 def c24_warc_container_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import uuid
 
     from aws_data_engineering_spark.operators import web as W
 
@@ -1705,7 +1665,7 @@ def c24_warc_container_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("\n\n"),
         payload,
     )
-    root = f"{tempfile.gettempdir()}/c24_{uuid.uuid4().hex}"
+    root = scratch_dir("c24")
     try:
         # one container file per class: repartition(fid) routes each class
         # wholly into one task, partitionBy splits directories -> exactly
@@ -1795,10 +1755,7 @@ _C25_COMPACT_FILES = 3
     "oracle and the audit columns pin the file census",
 )
 def c25_snapshot_expire_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
-
-    root = f"{tempfile.gettempdir()}/c25_{uuid.uuid4().hex}"
+    root = scratch_dir("c25")
     _c25_build_table(spark, sf_dir, root)
     audit = _c25_vacuum(spark, root)
     return _c25_read(spark, root, audit)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from aws_data_engineering_spark.operators import sampling as P
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
+from aws_data_engineering_spark.storage import scratch_dir
 
 # Single source of truth shared by Spark plan and oracle SQL.
 SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -300,19 +301,12 @@ def q67_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def c02_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
-    import uuid
 
     from aws_data_engineering_spark.sources.readers import read_xml
     from aws_data_engineering_spark.sources.writers import write_xml
 
     nation = load_table(spark, sf_dir, "nation")
-    # uuid-unique path: a fixed shared location would race a concurrent
-    # session's overwrite (leaks a KB-sized dir per run — the returned
-    # DataFrame reads lazily, so cleanup here would break the caller)
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_xml_roundtrip", uuid.uuid4().hex[:8], "nation"
-    )
+    out = os.path.join(scratch_dir("xml_roundtrip"), "nation")
     write_xml(nation, out, row_tag="nation", root_tag="nations")
     back = read_xml(
         spark, out, row_tag="nation",
@@ -377,17 +371,13 @@ def c03_managed_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the hash (the hypertable-rollup pattern at lake scale)",
 )
 def c04_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
     from aws_data_engineering_spark.operators.rollup import (
         incremental_rollup_refresh,
         read_rollup,
     )
 
     events = load_table(spark, sf_dir, "events")
-    path = os.path.join(tempfile.gettempdir(), "spark_c04", uuid.uuid4().hex[:8])
+    path = scratch_dir("c04")
     incremental_rollup_refresh(spark, events, path)
     # second refresh: incremental no-op except the newest (possibly
     # partial) bucket — proves the hwm path leaves history untouched

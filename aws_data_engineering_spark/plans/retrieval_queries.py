@@ -12,6 +12,7 @@ from aws_data_engineering_spark.operators import sketch as SK
 from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
+from aws_data_engineering_spark.storage import scratch_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1605,14 +1606,12 @@ _S16_NPROBE = 4
 )
 def s16_incremental_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
-    import uuid
 
     emb = _t(spark, sf_dir, "embeddings")
     cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
     index_side = emb.filter(F.col("vec_id") % 10 != 7)
     batch = emb.filter(F.col("vec_id") % 10 == 7)
-    root = f"{tempfile.gettempdir()}/s16_{uuid.uuid4().hex}"
+    root = scratch_dir("s16")
     try:
         # day 0: build + persist the inverted lists (partitioned by
         # list_id — each coarse list is a directory, the invlists layout).

@@ -19,6 +19,7 @@ from aws_data_engineering_spark.operators import dedup as _D
 from aws_data_engineering_spark.operators import sketch as _SK
 from aws_data_engineering_spark.operators import text as _T
 from aws_data_engineering_spark.plans.registry import register
+from aws_data_engineering_spark.storage import scratch_dir
 from aws_data_engineering_spark.streaming import (
     read_events_stream,
     run_to_memory_sink,
@@ -247,18 +248,13 @@ def st07_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     "twin of the reference's W5 curated-upsert strategy)",
 )
 def st08_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from aws_data_engineering_spark.streaming import stream_upsert_sink
 
     path = os.path.join(sf_dir, "events.parquet")
     stream = read_events_stream(spark, path)
-    # uuid-unique run dir (leaks a small table+checkpoint per run — the
-    # returned DataFrame reads the target lazily, so deleting it here
-    # would break the caller's collect)
-    base = os.path.join(tempfile.gettempdir(), "spark_st08", uuid.uuid4().hex[:8])
+    base = scratch_dir("st08")
     with scaled_stream_shuffle(spark, path):
         q = stream_upsert_sink(
             stream,
@@ -297,8 +293,6 @@ def st08_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "match proves partial-merge == full recompute",
 )
 def st11_stream_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from aws_data_engineering_spark.streaming import (
         read_rollup_view,
         stream_partial_rollup_sink,
@@ -306,7 +300,7 @@ def st11_stream_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = os.path.join(sf_dir, "events.parquet")
     stream = read_events_stream(spark, path)
-    base = os.path.join(tempfile.gettempdir(), "spark_st11", uuid.uuid4().hex[:8])
+    base = scratch_dir("st11")
     with scaled_stream_shuffle(spark, path):
         q = stream_partial_rollup_sink(
             stream,
@@ -341,8 +335,6 @@ def st11_stream_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-for-bit, the strongest possible statement of mergeability",
 )
 def st14_stream_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_data_engineering_spark.sources.tables import load_table
@@ -354,7 +346,7 @@ def st14_stream_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    base = os.path.join(tempfile.gettempdir(), "spark_st14", uuid.uuid4().hex[:8])
+    base = scratch_dir("st14")
     in_dir = os.path.join(base, "in")
     # three orderkey-class files -> a genuinely multi-batch availableNow
     # run, built in ONE orders scan (write_bucketed_feed; mtimes stamped:
@@ -393,8 +385,6 @@ def st14_stream_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     "partial pattern on a third sketch family",
 )
 def st15_stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_data_engineering_spark.sources.tables import load_table
@@ -407,7 +397,7 @@ def st15_stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     depth, topk = 4, 20
     docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(tempfile.gettempdir(), "spark_st15", uuid.uuid4().hex[:8])
+    base = scratch_dir("st15")
     in_dir = os.path.join(base, "in")
     # three doc_id-class files -> a genuinely multi-batch availableNow
     # run, built in ONE documents scan (write_bucketed_feed)
@@ -452,8 +442,6 @@ _ST16_IN = "('" + "', '".join(_ST16_BENCH) + "')"
     "fourth sketch family (OR-merge)",
 )
 def st16_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_data_engineering_spark.sources.tables import load_table
@@ -466,7 +454,7 @@ def st16_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     bench_pred = F.col("source").isin(*_ST16_BENCH)
-    base = os.path.join(tempfile.gettempdir(), "spark_st16", uuid.uuid4().hex[:8])
+    base = scratch_dir("st16")
     in_dir = os.path.join(base, "in")
     # three doc_id-class files of BENCHMARK docs -> multi-batch filter
     # build, in ONE documents scan (write_bucketed_feed)
@@ -550,8 +538,6 @@ _ST17_FEED_FILES = 8  # files per time-range feed batch (parallel write)
     "gaps-and-islands oracle exactly; per-user state is four scalars",
 )
 def st17_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_data_engineering_spark.sources.tables import load_table
@@ -563,7 +549,7 @@ def st17_stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
 
     events = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     feed = events.withColumn("ts", F.unix_micros("ts") * F.lit(1000))
-    base = os.path.join(tempfile.gettempdir(), "spark_st17", uuid.uuid4().hex[:8])
+    base = scratch_dir("st17")
     in_dir = os.path.join(base, "in")
     lo = F.lit(_ST17_CUTS[0]).cast("timestamp")
     hi = F.lit(_ST17_CUTS[1]).cast("timestamp")
@@ -778,8 +764,6 @@ def _st19_oracle() -> str:
     "IVFPQ over the union corpus — streaming ingest == rebuild",
 )
 def st19_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_data_engineering_spark.operators import similarity as SIM
@@ -795,7 +779,7 @@ def st19_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = SIM._hyperplanes(dim=64, n_planes=16, seed=7)
     cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
 
-    base = os.path.join(tempfile.gettempdir(), "spark_st19", uuid.uuid4().hex[:8])
+    base = scratch_dir("st19")
     in_dir = os.path.join(base, "in")
     # three vec_id-class feed files -> a genuinely multi-batch availableNow
     # run, built in ONE embeddings scan (write_bucketed_feed; batch order

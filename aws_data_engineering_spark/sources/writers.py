@@ -27,14 +27,13 @@ of the table and rewriting all of it.
 
 from __future__ import annotations
 
-import shutil
 import uuid
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.session import HAS_DELTA
+from aws_data_engineering_spark.storage import HadoopPath
 
 VALID_STRATEGIES = ("append", "overwrite", "truncate", "upsert")
 
@@ -69,14 +68,6 @@ def write_overwrite(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
-
-
-def _table_exists(spark: SparkSession, path: str, fmt: str) -> bool:
-    try:
-        spark.read.format(fmt).load(path).schema
-        return True
-    except Exception:
-        return False
 
 
 def merge_condition(
@@ -126,8 +117,11 @@ def merge_upsert(
             "use fmt='parquet' (the pure-Spark merge has identical row semantics)"
         )
 
-    if not _table_exists(spark, path, fmt):
-        # first load creates the table (generic_load_script.py:152-154)
+    if not HadoopPath(spark, path).holds_visible_entry():
+        # first load creates the table (generic_load_script.py:152-154).
+        # Probed on the filesystem, never by trying a read: a table that
+        # exists but cannot be read must fail the merge, not be replaced
+        # by the batch.
         write_overwrite(
             df, path, (partition_col,) if partition_col else (), fmt
         )
@@ -182,10 +176,10 @@ def _merge_upsert_pure_spark(
     # Spark refuses to overwrite a path it is reading from; stage the merged
     # partitions, then dynamic-overwrite only those partitions back. (With
     # Delta installed this whole dance is a single transactional MERGE.)
-    staging = str(Path(path).parent / f"_merge_staging_{uuid.uuid4().hex[:8]}")
+    staging = HadoopPath(spark, path).sibling(f"_merge_staging_{uuid.uuid4().hex[:8]}")
     try:
-        merged.write.mode("overwrite").format(fmt).save(staging)
-        staged = spark.read.format(fmt).load(staging)
+        merged.write.mode("overwrite").format(fmt).save(str(staging))
+        staged = spark.read.format(fmt).load(str(staging))
         write_overwrite(
             staged,
             path,
@@ -194,7 +188,7 @@ def _merge_upsert_pure_spark(
             dynamic=bool(partition_col),
         )
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        staging.delete()
 
 
 def compact_table(
@@ -219,18 +213,18 @@ def compact_table(
     else:
         compacted = df.repartition(target_files_per_partition)
 
-    staging = str(Path(path).parent / f"_compact_staging_{uuid.uuid4().hex[:8]}")
+    staging = HadoopPath(spark, path).sibling(f"_compact_staging_{uuid.uuid4().hex[:8]}")
     try:
         w = compacted.write.mode("overwrite").format(fmt)
         if partition_col:
             w = w.partitionBy(partition_col)
-        w.save(staging)
-        staged = spark.read.format(fmt).load(staging)
+        w.save(str(staging))
+        staged = spark.read.format(fmt).load(str(staging))
         write_overwrite(
             staged, path, (partition_col,) if partition_col else (), fmt
         )
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        staging.delete()
 
 
 def write_bucketed_table(

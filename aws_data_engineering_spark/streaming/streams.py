@@ -23,10 +23,13 @@ from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from aws_data_engineering_spark.storage import HadoopPath
 
 # Streaming sources require an explicit schema. ts is declared bigint so the
 # INT64-physical parquet column reads as its raw integer value regardless of
@@ -40,25 +43,6 @@ EVENTS_DDL = "event_id bigint, ts bigint, user_id bigint, event_type string, val
 # millennia out — both far outside any window containing real event data.
 _TS_SANITY_MIN = "1990-01-01"
 _TS_SANITY_MAX = "2100-01-01"
-
-
-def _feed_bytes(*paths: str) -> int:
-    """Total on-disk bytes of the stream feed files under ``paths``
-    (file or directory, local FS — the bench/driver environment)."""
-    import os
-
-    total = 0
-    for p in paths:
-        if os.path.isfile(p):
-            total += os.path.getsize(p)
-        elif os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-    return total
 
 
 def stream_shuffle_partitions(spark: SparkSession, feed_bytes: int) -> int:
@@ -99,9 +83,13 @@ def scaled_stream_shuffle(spark: SparkSession, *feed_paths: str):
     starts a fresh uuid-keyed checkpoint, so no restart-compat issue."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(
-        key, str(stream_shuffle_partitions(spark, _feed_bytes(*feed_paths)))
-    )
+    try:
+        feed = sum(HadoopPath(spark, p).total_bytes() for p in feed_paths)
+        spark.conf.set(key, str(stream_shuffle_partitions(spark, feed)))
+    except Py4JJavaError:
+        # the filesystem cannot size a feed (unregistered scheme, missing
+        # path): keep the session count rather than guess small
+        pass
     try:
         yield
     finally:
@@ -124,10 +112,8 @@ def read_events_stream(
     epoch exceeds double's 2^53 mantissa); timestamp view → already micros.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
     probe_path = path
-    if os.path.isfile(path):
+    if HadoopPath(spark, path).is_file():
         # FileStreamSource requires a directory or glob; a trailing '*'
         # turns a single-file path into a glob matching exactly that file
         path = path + "*"
@@ -459,17 +445,17 @@ def stream_upsert_sink(
 
     Returns the started StreamingQuery (caller awaits/stops)."""
     from aws_data_engineering_spark.operators.dedup import latest_by_key
-    from aws_data_engineering_spark.sources.writers import _table_exists, merge_upsert
+    from aws_data_engineering_spark.sources.writers import merge_upsert
 
     merge_keys = list(primary_key) + ([partition_col] if partition_col else [])
 
     def do_merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         collapsed = latest_by_key(batch_df, merge_keys, order_col, tiebreak_col)
-        # target existence via the writers' probe — a bare try/except around
-        # the read would silently treat a transient read FAILURE as "first
-        # batch" and skip the ordering guard entirely
-        if _table_exists(spark, path, fmt):
+        # the first-load probe merge_upsert uses: only a target holding no
+        # visible entry skips the guard, and a target that exists but cannot
+        # be read fails the batch here rather than merging unguarded
+        if HadoopPath(spark, path).holds_visible_entry():
             target = spark.read.format(fmt).load(path)
             tgt = target.select(
                 *[F.col(k).alias(f"__t_{k}") for k in merge_keys],
@@ -913,9 +899,7 @@ def read_orders_stream(
 ) -> DataFrame:
     """``readStream`` over a directory of orders parquet (Spark-written
     INT96 or timestamp[us] both read into the declared TimestampType)."""
-    import os
-
-    if os.path.isfile(path):
+    if HadoopPath(spark, path).is_file():
         path = path + "*"
     reader = spark.readStream.schema(ORDERS_STREAM_DDL)
     if max_files_per_trigger is not None:

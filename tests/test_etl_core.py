@@ -140,14 +140,40 @@ def test_merge_semantics(spark, tmp_path):
     }
 
 
-def test_merge_leaves_untouched_partitions(spark, tmp_path):
+def _table_path(tmp_path, form: str) -> str:
+    """The table path as a plain local path or as its ``file://`` URI."""
+    p = tmp_path / "t"
+    return p.as_uri() if form == "uri" else str(p)
+
+
+@pytest.mark.parametrize("form", ["plain", "uri"])
+def test_merge_leaves_untouched_partitions(spark, tmp_path, form):
     """The pure-Spark merge must rewrite only partitions present in the
-    batch — rows in other dt partitions survive byte-for-byte."""
-    p = str(tmp_path / "t")
+    batch — rows in other dt partitions survive byte-for-byte — and remove
+    its staging copy whatever form the table path takes."""
+    p = _table_path(tmp_path, form)
     W.merge_upsert(spark, _mkdf(spark, [(1, "old", "d1"), (9, "keep", "d9")]), p, ["id"])
     W.merge_upsert(spark, _mkdf(spark, [(1, "new", "d1")]), p, ["id"])
     rows = {(r["id"], r["dt"]): r["val"] for r in spark.read.parquet(p).collect()}
     assert rows == {(1, "d1"): "new", (9, "d9"): "keep"}
+    assert os.listdir(tmp_path) == ["t"]
+
+
+def test_merge_upsert_refuses_unreadable_table(spark, tmp_path):
+    """A curated table that exists but cannot be read must fail the merge
+    and stay on disk, never be taken for a first load and replaced by the
+    batch."""
+    p = str(tmp_path / "t")
+    rows = [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")]
+    W.write_overwrite(_mkdf(spark, rows), p)
+    (tmp_path / "t" / "dt=d0").mkdir()
+    (tmp_path / "t" / "dt=d0" / "part-00000-x.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        W.merge_upsert(spark, _mkdf(spark, [(1, "z", "d1")]), p, ["id"])
+    kept = spark.read.option("basePath", p).parquet(
+        *(f"{p}/dt=d{i}" for i in (1, 2, 3))
+    )
+    assert sorted(map(tuple, kept.select("id", "val", "dt").collect())) == rows
 
 
 def test_merge_idempotent(spark, tmp_path):
@@ -294,23 +320,26 @@ def test_delta_format_unavailable_raises(spark, tmp_path):
         )
 
 
-def test_compact_table(spark, tmp_path):
+@pytest.mark.parametrize("form", ["plain", "uri"])
+def test_compact_table(spark, tmp_path, form):
     """Many small appended files per partition must collapse to one file
-    per partition with identical rows."""
+    per partition with identical rows, leaving no staging copy behind."""
     import glob
 
-    p = str(tmp_path / "t")
+    p = _table_path(tmp_path, form)
+    local = str(tmp_path / "t")
     for i in range(5):  # 5 small appends → ≥5 files per partition
         W.write_append(_mkdf(spark, [(i, f"v{i}", "d1"), (100 + i, f"w{i}", "d2")]), p)
     before = spark.read.parquet(p).collect()
-    n_files_before = len(glob.glob(f"{p}/dt=*/part-*.parquet"))
+    n_files_before = len(glob.glob(f"{local}/dt=*/part-*.parquet"))
     assert n_files_before >= 10
 
     W.compact_table(spark, p, "dt", target_files_per_partition=1)
     after = spark.read.parquet(p).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
-    n_files_after = len(glob.glob(f"{p}/dt=*/part-*.parquet"))
+    n_files_after = len(glob.glob(f"{local}/dt=*/part-*.parquet"))
     assert n_files_after <= 4  # hash-partitioned by dt: ~1-2 files per dt
+    assert os.listdir(tmp_path) == ["t"]
 
 
 def test_simhash_banding_complete(spark, sf_dir):
@@ -875,7 +904,7 @@ def test_delta_merge_branch_executes_against_stub(spark, tmp_path, monkeypatch):
     monkeypatch.setitem(sys.modules, "delta", fake_delta)
     monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
     monkeypatch.setattr(W, "HAS_DELTA", True)
-    monkeypatch.setattr(W, "_table_exists", lambda *a: True)
+    monkeypatch.setattr(W.HadoopPath, "holds_visible_entry", lambda self: True)
 
     df = spark.createDataFrame([(1, "a", "2024-01-01")], "id int, v string, dt string")
     W.merge_upsert(spark, df, str(tmp_path / "tbl"), ["id"], "dt", fmt="delta")

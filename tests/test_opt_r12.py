@@ -28,14 +28,34 @@ def test_stream_shuffle_partitions_derivation(spark):
 
 
 def test_scaled_stream_shuffle_restores_conf(spark, sf_dir):
+    """Feeds are sized through the Hadoop FileSystem: a ``file://`` URI gets
+    the plain path's partition count, and a path the filesystem cannot
+    size keeps the session count instead of dropping to 1."""
+    from pathlib import Path
+
     from aws_data_engineering_spark.streaming import scaled_stream_shuffle
 
     key = "spark.sql.shuffle.partitions"
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     before = spark.conf.get(key)
-    with scaled_stream_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        inside = int(spark.conf.get(key))
-        assert 1 <= inside <= int(before)
-    assert spark.conf.get(key) == before
+    prev_advisory = spark.conf.get(advisory)
+    events = os.path.join(sf_dir, "events.parquet")
+    counts = {}
+    spark.conf.set(advisory, "1k")  # small enough that events.parquet > 1
+    try:
+        for name, path in [
+            ("plain", events),
+            ("uri", Path(events).resolve().as_uri()),
+            ("unsized", "nosuchscheme://bucket/events.parquet"),
+        ]:
+            with scaled_stream_shuffle(spark, path):
+                counts[name] = int(spark.conf.get(key))
+            assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(advisory, prev_advisory)
+    assert 1 < counts["plain"] <= int(before)
+    assert counts["uri"] == counts["plain"]
+    assert counts["unsized"] == int(before)
     # restore even when the body raises
     try:
         with scaled_stream_shuffle(spark, os.path.join(sf_dir, "events.parquet")):

@@ -99,9 +99,10 @@ def test_s16_scratch_cleanup(spark, sf_dir):
     """The registered query removes its scratch index after eager
     materialization (the c20 contract — repeated drives must not leak)."""
     import glob
-    import tempfile
 
-    pat = os.path.join(tempfile.gettempdir(), "s16_*")
+    from aws_data_engineering_spark.storage import scratch_root
+
+    pat = os.path.join(scratch_root(), "s16_*")
     before = set(glob.glob(pat))
     QUERIES["s16_incremental_index_append"].spark(spark, sf_dir).collect()
     leaked = set(glob.glob(pat)) - before

@@ -1,0 +1,75 @@
+"""The storage module: Hadoop-FileSystem path probes and the
+process-scoped query scratch root."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+from aws_data_engineering_spark.storage import HadoopPath
+
+PKG = Path(__file__).resolve().parent.parent / "aws_data_engineering_spark"
+
+
+def test_hadoop_path_probes(spark, tmp_path):
+    """Every probe answers the same for a plain path and its file:// URI."""
+    table = tmp_path / "t"
+    (table / "_temporary").mkdir(parents=True)
+    (table / "_SUCCESS").write_bytes(b"")
+    for form in (str(table), table.as_uri()):
+        t = HadoopPath(spark, form)
+        assert t.exists() and not t.is_file()
+        assert not t.holds_visible_entry()  # only hidden entries
+        assert not HadoopPath(spark, f"{form}/missing").holds_visible_entry()
+    (table / "dt=d1").mkdir()
+    (table / "dt=d1" / "part-0.parquet").write_bytes(b"x" * 10)
+    for form in (str(table), table.as_uri()):
+        t = HadoopPath(spark, form)
+        assert t.holds_visible_entry()
+        assert t.total_bytes() == 10
+        staging = t.sibling("_staging")
+        assert str(staging).endswith(f"{tmp_path}/_staging")
+        assert str(staging).startswith("file:") == form.startswith("file:")
+    HadoopPath(spark, table.as_uri()).delete()
+    assert not table.exists()
+
+
+def test_scratch_root_removed_at_exit(tmp_path):
+    """A process that used scratch_dir leaves no scratch root behind."""
+    child = (
+        "import os, sys\n"
+        "from aws_data_engineering_spark.storage import scratch_dir\n"
+        "d = scratch_dir('probe')\n"
+        "assert not os.path.exists(d)\n"
+        "os.makedirs(d)\n"
+        "open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "print(os.path.dirname(d))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=PKG.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    root = out.stdout.strip()
+    assert root.startswith(str(tmp_path)), root
+    assert not os.path.exists(root)
+
+
+def test_storage_decisions_live_in_storage_module():
+    """Temp-dir lookups, hard-coded /tmp paths and Hadoop FileSystem
+    resolution appear only in storage.py."""
+    needles = ("gettempdir", '"/tmp', "'/tmp", "getFileSystem")
+    offenders = [
+        f"{path.relative_to(PKG)}: {needle}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "storage.py"
+        for needle in needles
+        if needle in path.read_text()
+    ]
+    assert not offenders, offenders
