@@ -31,16 +31,18 @@ def project(df: DataFrame, select_columns: list[str] | None) -> DataFrame:
     return df
 
 
-def global_sort(df: DataFrame, sort_columns: list[str] | None) -> DataFrame:
-    """P2 — config-driven full-table sort (``FInal/load_script.py:193-195``).
-
-    A global ``orderBy`` is a range-partition + sort — one full shuffle. At
-    100 TB that is only worth paying when the downstream format benefits
-    (parquet min/max pruning on the sort key); when only file-level
-    clustering is wanted, use ``cluster_within_partitions`` instead (no
-    range exchange)."""
+def range_sort(df: DataFrame, sort_columns: list[str] | None) -> DataFrame:
+    """P2 — config-driven sort (``FInal/load_script.py:193-195``) in the
+    layout a ``dt``-partitioned write keeps: range-partitioned on
+    ``sort_columns`` (the file layout ``orderBy`` aims for, one shuffle),
+    then sorted by ``dt`` and ``sort_columns`` inside each partition, which
+    already satisfies the writer's required ordering. A global ``orderBy``
+    under that writer's local ``dt`` sort is reduced by Catalyst to a bare
+    range repartition, leaving every file unsorted."""
     if sort_columns:
-        return df.orderBy(*sort_columns)
+        return df.repartitionByRange(*sort_columns).sortWithinPartitions(
+            "dt", *sort_columns
+        )
     return df
 
 

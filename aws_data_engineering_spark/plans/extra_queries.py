@@ -2204,8 +2204,8 @@ def q85_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # c10 — small-file compaction as a maintenance query: a dt-partitioned
 # table deliberately written as 8 shuffled files per partition is
-# rewritten to 1 file per partition by compact_table (staging hop +
-# dynamic partition overwrite), with the file-count collapse asserted
+# rewritten to 1 file per partition by compact_table (staging write +
+# swap by rename), with the file-count collapse asserted
 # in-query and the data proven byte-identical by the aggregation oracle.
 # The reference's append-only loader accumulates exactly this small-file
 # debt (SURVEY §4); at 100 TB the same op runs per recent partition on a
@@ -2219,8 +2219,8 @@ def q85_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(value), 2) AS total_value
     FROM events GROUP BY 1
     """,
-    "small-file compaction: 8 files/partition rewritten to 1 via staging "
-    "+ dynamic partition overwrite, file collapse asserted in-query, "
+    "small-file compaction: 8 files/partition rewritten to 1 via a staging "
+    "write swapped in by rename, file collapse asserted in-query, "
     "data equality proven by the oracle",
 )
 def c10_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,9 +20,11 @@ Delta Lake is used when installed; otherwise ``merge_upsert`` runs a
 pure-Spark merge with the identical row semantics. Because the merge key
 includes the partition column, a source row can only ever touch its own
 ``dt`` partition — so the fallback rewrites *only the partitions present in
-the incoming batch* (dynamic partition overwrite), never the whole table.
-At 100 TB with daily ingest that is the difference between rewriting ~1/1000
-of the table and rewriting all of it.
+the incoming batch*, never the whole table: it writes them to a staging
+directory once and renames each staged partition over its target (the
+commit Spark's own dynamic partition overwrite performs). At 100 TB with
+daily ingest that is the difference between rewriting ~1/1000 of the table
+and rewriting all of it.
 """
 
 from __future__ import annotations
@@ -58,13 +60,9 @@ def write_overwrite(
     path: str,
     partition_by: tuple[str, ...] = ("dt",),
     fmt: str = "parquet",
-    dynamic: bool = False,
 ) -> None:
-    """W4 — full replace ('truncate' in v1, 'overwrite' in v2). With
-    ``dynamic=True`` only partitions present in ``df`` are replaced."""
+    """W4 — full replace ('truncate' in v1, 'overwrite' in v2)."""
     w = df.write.mode("overwrite").format(fmt)
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)
@@ -171,22 +169,35 @@ def _merge_upsert_pure_spark(
     survivors = survivors.join(
         F.broadcast(df.select(*keys).distinct()), on=keys, how="left_anti"
     )
-    merged = survivors.unionByName(source)
+    _write_staged_then_swap(
+        spark, survivors.unionByName(source), path, partition_col, fmt,
+        "_merge_staging", per_partition=bool(partition_col),
+    )
 
-    # Spark refuses to overwrite a path it is reading from; stage the merged
-    # partitions, then dynamic-overwrite only those partitions back. (With
-    # Delta installed this whole dance is a single transactional MERGE.)
-    staging = HadoopPath(spark, path).sibling(f"_merge_staging_{uuid.uuid4().hex[:8]}")
+
+def _write_staged_then_swap(
+    spark: SparkSession,
+    df: DataFrame,
+    path: str,
+    partition_col: str | None,
+    fmt: str,
+    prefix: str,
+    per_partition: bool,
+) -> None:
+    """Write ``df`` (which reads ``path``) to a staging sibling, then
+    rename it over ``path``: each staged partition over its target when
+    ``per_partition``, else the whole table. Spark refuses to overwrite a
+    path it is reading from, hence the staging hop; with Delta installed a
+    MERGE or OPTIMIZE is one transaction instead. Staging is removed
+    whether or not the write and the swap succeed."""
+    table = HadoopPath(spark, path)
+    staging = table.sibling(f"{prefix}_{uuid.uuid4().hex[:8]}")
     try:
-        merged.write.mode("overwrite").format(fmt).save(str(staging))
-        staged = spark.read.format(fmt).load(str(staging))
-        write_overwrite(
-            staged,
-            path,
-            (partition_col,) if partition_col else (),
-            fmt,
-            dynamic=bool(partition_col),
-        )
+        w = df.write.mode("overwrite").format(fmt)
+        if partition_col:
+            w = w.partitionBy(partition_col)
+        w.save(str(staging))
+        table.replace_with(staging, partitioned=per_partition)
     finally:
         staging.delete()
 
@@ -201,30 +212,19 @@ def compact_table(
     """Small-file compaction — the gap the reference leaves open (SURVEY.md
     §4: per-day appends accumulate small files; no OPTIMIZE anywhere).
 
-    Rewrites each partition into ``target_files_per_partition`` files via a
-    partition-keyed repartition + dynamic overwrite. At 100 TB run this
+    Rewrites the table via a partition-keyed repartition into a staging
+    copy, then swaps the copy in for the whole table. At 100 TB run this
     per-partition (recent ``dt`` values only) on a schedule; with Delta
-    installed prefer ``OPTIMIZE`` (transactional, concurrent-reader-safe).
-    The staging hop exists because Spark cannot overwrite a path it is
-    reading — Delta's txn log is the real fix for that, too."""
+    installed prefer ``OPTIMIZE`` (transactional, concurrent-reader-safe)."""
     df = spark.read.format(fmt).load(path)
     if partition_col:
         compacted = df.repartition(target_files_per_partition, F.col(partition_col))
     else:
         compacted = df.repartition(target_files_per_partition)
-
-    staging = HadoopPath(spark, path).sibling(f"_compact_staging_{uuid.uuid4().hex[:8]}")
-    try:
-        w = compacted.write.mode("overwrite").format(fmt)
-        if partition_col:
-            w = w.partitionBy(partition_col)
-        w.save(str(staging))
-        staged = spark.read.format(fmt).load(str(staging))
-        write_overwrite(
-            staged, path, (partition_col,) if partition_col else (), fmt
-        )
-    finally:
-        staging.delete()
+    _write_staged_then_swap(
+        spark, compacted, path, partition_col, fmt, "_compact_staging",
+        per_partition=False,
+    )
 
 
 def write_bucketed_table(

@@ -3,9 +3,9 @@ keeps its scratch. Both decisions are made here and nowhere else.
 
 - A caller-supplied table or feed path (plain, ``file://``, ``hdfs://``,
   ``s3a://``) is reached through the Hadoop FileSystem Spark itself uses for
-  it (``HadoopPath``), so a probe, size or delete sees what the job sees. A
-  local probe misreads a URI, and a try/except around a read mistakes an
-  unreadable table for a missing one.
+  it (``HadoopPath``), so a probe, size, delete or commit-by-rename sees
+  what the job sees. A local probe misreads a URI, and a try/except around
+  a read mistakes an unreadable table for a missing one.
 - Query scratch lives under one directory per process, made on first use
   and removed when that process exits (``scratch_dir``): returned DataFrames
   read their scratch lazily. Plans that materialize eagerly still free
@@ -60,6 +60,29 @@ class HadoopPath:
     def delete(self) -> None:
         """Recursive delete; a missing path is not an error."""
         self.fs.delete(self.path, True)
+
+    def replace_with(self, staged: HadoopPath, partitioned: bool) -> None:
+        """Commit ``staged`` (a sibling on the same filesystem) over this
+        path by rename. With ``partitioned``, each visible child directory of
+        ``staged`` (one ``col=value`` partition) replaces the same-named child
+        here and every other child stays; otherwise the whole path is
+        replaced. Like Spark's dynamic-overwrite commit, a replaced target is
+        deleted just before its rename, and a rename that fails raises. On
+        an object store (s3a) a rename is a copy."""
+        jvm = self._spark._jvm
+        if partitioned:
+            moves = [
+                (st.getPath(), jvm.org.apache.hadoop.fs.Path(self.path, st.getPath().getName()))
+                for st in self.fs.listStatus(staged.path)
+                if st.isDirectory()
+                and not st.getPath().getName().startswith(("_", "."))
+            ]
+        else:
+            moves = [(staged.path, self.path)]
+        for src, dst in moves:
+            self.fs.delete(dst, True)
+            if not self.fs.rename(src, dst):
+                raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
 
     def sibling(self, name: str) -> HadoopPath:
         """``name`` in this path's parent directory, keeping its scheme and

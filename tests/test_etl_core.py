@@ -72,7 +72,9 @@ def test_project_and_sort(spark):
     df = spark.createDataFrame([Row(a=2, b="y"), Row(a=1, b="x")])
     assert T.project(df, ["a"]).columns == ["a"]
     assert T.project(df, None).columns == ["a", "b"]
-    assert [r["a"] for r in T.global_sort(df, ["a"]).collect()] == [1, 2]
+    assert T.range_sort(df, None) is df
+    out = T.range_sort(df.withColumn("dt", F.lit("d1")), ["a"])
+    assert [r["a"] for r in out.collect()] == [1, 2]
 
 
 def test_stamp_audit_columns(spark):
@@ -153,10 +155,14 @@ def test_merge_leaves_untouched_partitions(spark, tmp_path, form):
     its staging copy whatever form the table path takes."""
     p = _table_path(tmp_path, form)
     W.merge_upsert(spark, _mkdf(spark, [(1, "old", "d1"), (9, "keep", "d9")]), p, ["id"])
+    kept = sorted(os.listdir(tmp_path / "t" / "dt=d9"))
     W.merge_upsert(spark, _mkdf(spark, [(1, "new", "d1")]), p, ["id"])
     rows = {(r["id"], r["dt"]): r["val"] for r in spark.read.parquet(p).collect()}
     assert rows == {(1, "d1"): "new", (9, "d9"): "keep"}
+    # the untouched partition is not rewritten: the same files stay
+    assert sorted(os.listdir(tmp_path / "t" / "dt=d9")) == kept
     assert os.listdir(tmp_path) == ["t"]
+    assert not list(tmp_path.rglob("_merge_staging_*"))
 
 
 def test_merge_upsert_refuses_unreadable_table(spark, tmp_path):
@@ -273,6 +279,88 @@ def test_pipeline_end_to_end_upsert_idempotent(spark, tmp_path):
     assert "dt" in land.columns and land.count() == 2
 
 
+def _sorted_load_config(name, strategy, primary_key=("id",)):
+    return P.TableConfig(
+        table_name=name,
+        schema={"id": "IntegerType", "name": "StringType"},
+        primary_key=list(primary_key),
+        sort_columns=["id"],
+        landing_load_strategy="append",
+        curated_load_strategy=strategy,
+    )
+
+
+def _write_shuffled_days(inbound, name, days=("20240101", "20240102"), n=200):
+    import random
+
+    rng = random.Random(7)
+    for day in days:
+        ids = list(range(n))
+        rng.shuffle(ids)
+        _write_gz_csv(
+            inbound / f"{name}_{day}.gz",
+            "id,name\n" + "".join(f"{i},n{i}\n" for i in ids),
+        )
+
+
+def test_run_load_sorts_landing_and_curated_files(spark, tmp_path):
+    """With sort_columns set, every parquet file of both zones holds its ids
+    in ascending order (a global orderBy under the dt-partitioned writer's
+    own sort loses the order in landing)."""
+    import pyarrow.parquet as pq
+
+    inbound = tmp_path / "inbound" / "erp" / "srt"
+    _write_shuffled_days(inbound, "srt")
+    landing, curated = tmp_path / "landing", tmp_path / "curated"
+    audit = P.run_load(
+        spark, _sorted_load_config("srt", "upsert"), str(inbound), str(landing), str(curated)
+    )
+    assert audit == {"rows_written": 400, "null_pk_rows": 0}
+    for zone in (landing, curated):
+        files = sorted(zone.rglob("*.parquet"))
+        assert {f.parent.name for f in files} == {"dt=2024-01-01", "dt=2024-01-02"}
+        for f in files:
+            ids = pq.read_table(f, columns=["id"]).column("id").to_pylist()
+            assert ids == sorted(ids), f
+
+
+def _sql_executions(spark) -> list:
+    """The SQL executions the session's status store holds, once every
+    posted event has been processed."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def test_run_load_scans_csv_once_and_releases_its_batch(spark, tmp_path):
+    """An upsert into an existing table parses the inbound CSV in one SQL
+    execution, and no load leaves a persisted block behind — also when it
+    fails at the curated write."""
+    from aws_data_engineering_spark.operators.checkpoints import persistent_ids
+
+    inbound = tmp_path / "inbound" / "erp" / "one"
+    _write_shuffled_days(inbound, "one", n=50)
+    cfg = _sorted_load_config("one", "upsert")
+    landing, curated = str(tmp_path / "l"), str(tmp_path / "c")
+    before = persistent_ids(spark)
+    P.run_load(spark, cfg, str(inbound), landing, curated)  # first load
+    since = max(e.executionId() for e in _sql_executions(spark))
+    P.run_load(spark, cfg, str(inbound), landing, curated)  # MERGE
+    csv_scans = [
+        e
+        for e in _sql_executions(spark)
+        if e.executionId() > since and "Scan csv" in e.physicalPlanDescription()
+    ]
+    assert len(csv_scans) == 1
+    assert persistent_ids(spark) == before
+    assert spark.read.parquet(curated).count() == 100
+
+    no_pk = _sorted_load_config("one", "upsert", primary_key=())
+    with pytest.raises(ValueError, match="primary_key"):
+        P.run_load(spark, no_pk, str(inbound), landing, curated)
+    assert persistent_ids(spark) == before
+
+
 def test_pipeline_unknown_landing_strategy(spark, tmp_path):
     inbound = tmp_path / "inbound" / "erp" / "c2"
     _write_gz_csv(inbound / "c2_20240101.gz", "id,name\n1,x\n")
@@ -337,8 +425,11 @@ def test_compact_table(spark, tmp_path, form):
     W.compact_table(spark, p, "dt", target_files_per_partition=1)
     after = spark.read.parquet(p).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
-    n_files_after = len(glob.glob(f"{local}/dt=*/part-*.parquet"))
-    assert n_files_after <= 4  # hash-partitioned by dt: ~1-2 files per dt
+    per_part = {
+        d: len(glob.glob(f"{local}/{d}/part-*.parquet"))
+        for d in ("dt=d1", "dt=d2")
+    }
+    assert per_part == {"dt=d1": 1, "dt=d2": 1}
     assert os.listdir(tmp_path) == ["t"]
 
 

@@ -4,6 +4,7 @@ process-scoped query scratch root."""
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -62,14 +63,44 @@ def test_scratch_root_removed_at_exit(tmp_path):
 
 
 def test_storage_decisions_live_in_storage_module():
-    """Temp-dir lookups, hard-coded /tmp paths and Hadoop FileSystem
-    resolution appear only in storage.py."""
+    """Temp-dir lookups, hard-coded /tmp paths, Hadoop FileSystem
+    resolution and Hadoop renames appear only in storage.py (a Python
+    ``os.rename`` on a local scratch file is not a Hadoop rename)."""
     needles = ("gettempdir", '"/tmp', "'/tmp", "getFileSystem")
+    hadoop_rename = re.compile(r"(?<!os)\.rename\(")
     offenders = [
         f"{path.relative_to(PKG)}: {needle}"
         for path in sorted(PKG.rglob("*.py"))
         if path.name != "storage.py"
         for needle in needles
         if needle in path.read_text()
+    ] + [
+        f"{path.relative_to(PKG)}: rename("
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "storage.py" and hadoop_rename.search(path.read_text())
     ]
     assert not offenders, offenders
+    assert hadoop_rename.search((PKG / "storage.py").read_text())
+
+
+def test_replace_with_swaps_partitions_or_whole_table(spark, tmp_path):
+    """A partitioned swap replaces only the staged partitions; a whole-table
+    swap replaces everything; either way the staging directory is consumed."""
+    table = tmp_path / "t"
+    for part, name in (("dt=a", "old-a"), ("dt=b", "old-b")):
+        (table / part).mkdir(parents=True)
+        (table / part / name).write_bytes(b"x")
+    staged = tmp_path / "_staging"
+    (staged / "dt=a").mkdir(parents=True)
+    (staged / "dt=a" / "new-a").write_bytes(b"y")
+    (staged / "_SUCCESS").write_bytes(b"")
+    t = HadoopPath(spark, str(table))
+    t.replace_with(t.sibling("_staging"), partitioned=True)
+    assert sorted(p.name for p in table.rglob("*") if p.is_file()) == ["new-a", "old-b"]
+    assert not (staged / "dt=a").exists()
+    (staged / "dt=a").mkdir()
+    (staged / "dt=a" / "new-a").write_bytes(b"y")
+    t = HadoopPath(spark, table.as_uri())
+    t.replace_with(t.sibling("_staging"), partitioned=False)
+    assert sorted(p.name for p in table.rglob("*") if p.is_file()) == ["_SUCCESS", "new-a"]
+    assert not staged.exists()
