@@ -4,8 +4,11 @@ and prints ONE JSON line: {"metric": ..., "value": N, "unit": "sec",
 "queries": {name: sec}, "sf": ...}, then the same record in chunked lines.
 
 Given query names, it times just those instead, N samples each, and prints
-{"cal": sec, "sf_dir": ..., "timings": {name: [sec, ...]}}; --plans DIR
-also writes each query's formatted physical plan to DIR/<name>.txt:
+{"cal": sec, "sf_dir": ..., "timings": {name: [sec, ...]},
+"compiles": {name: [n, ...]}}, where n counts the generated classes Spark
+compiled during that sample (a repeat sample that still compiles is a query
+whose generated code changes per call); --plans DIR also writes each
+query's formatted physical plan to DIR/<name>.txt:
 
     python bench.py [--sf SF_DIR] [--n N] [--plans DIR] name ...
 
@@ -277,6 +280,10 @@ def main() -> None:
         # constant-work probe so cross-run comparisons can see host throttle
         cal = round(_probe_spark(), 3)
         out: dict[str, list[float]] = {}
+        compiles: dict[str, list[int]] = {}
+        # JVM-wide count of Janino compiles (codegen cache misses)
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
         for name in args.names:
@@ -288,8 +295,12 @@ def main() -> None:
                 with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
                     f.write(plan)
                 spark.catalog.clearCache()
-            out[name] = [round(run_once(name), 3) for _ in range(args.n)]
-        print(json.dumps({"cal": cal, "sf_dir": sf_dir, "timings": out}), flush=True)
+            for _ in range(args.n):
+                before = compiled()
+                out.setdefault(name, []).append(round(run_once(name), 3))
+                compiles.setdefault(name, []).append(compiled() - before)
+        print(json.dumps({"cal": cal, "sf_dir": sf_dir, "timings": out,
+                          "compiles": compiles}), flush=True)
         spark.stop()
         return
 

@@ -1158,6 +1158,26 @@ def test_session_builder_catalog_contract(monkeypatch):
     assert build_session_builder()._options["spark.driver.memory"] == f"{ram_mb // 2}m"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert build_session_builder()._options["spark.driver.memory"] == "3g"
+    # compiled generated classes are kept for the registry's working set
+    assert plain["spark.sql.codegen.cache.maxEntries"] == "4096"
+
+
+def test_generated_code_stays_compiled(spark):
+    """A query's generated classes survive 150 other distinct ones in the
+    same session: re-running it compiles nothing (Spark's default LRU of
+    100 entries would have evicted and recompiled it)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+
+    def first():
+        return spark.range(8).select((F.col("id") * 3 - 1).alias("y")).collect()
+
+    expected = first()
+    for i in range(150):  # the inlined literal makes each class distinct
+        spark.range(8).select((F.col("id") + 1000 + i).alias("x")).collect()
+    before = compiles()
+    assert first() == expected
+    assert compiles() - before == 0
 
 
 # ---------------------------------------------------------------------------

@@ -5,8 +5,9 @@ runs are admissible evidence).
 Two modes, both alternating subprocess runs between two trees (arm A = a
 checkout of the baseline commit, arm B = the working tree):
 
-- bench mode: `bench.py name ...`, several reps each; reports per-query
-  min/median per arm plus the calibration series.
+- bench mode: `bench.py name ...`, several reps each; prints each run's
+  timings and codegen compile counts, then per-query min/median per arm
+  plus the calibration series.
 - perfbench mode: `perfbench/run.py --workload W --seed N --trace 0` once per
   seed and arm, swapping which arm runs first from one seed to the next;
   prints every run, then per end-to-end metric each arm's median and
@@ -51,7 +52,9 @@ def bench_mode(a: str, b: str, sf: str | None, reps: int, n: int, names: list[st
             for name, samples in r["timings"].items():
                 acc[arm].setdefault(name, []).extend(samples)
             print(json.dumps({"rep": rep, "arm": arm, "cal": r["cal"],
-                              "timings": r["timings"]}), flush=True)
+                              "timings": r["timings"],
+                              # absent in trees older than the count
+                              "compiles": r.get("compiles")}), flush=True)
     summary = {}
     for name in names:
         sa, sb = sorted(acc["A"][name]), sorted(acc["B"][name])
