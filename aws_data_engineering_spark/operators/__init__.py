@@ -4,5 +4,6 @@
 - dedup: exact / fuzzy (MinHash-LSH, SimHash, n-gram Jaccard) deduplication
 - similarity: embedding cosine top-k (brute-force + LSH-bucketed)
 - text: language-ID, quality scoring, token counting, fingerprinting
-- multimodal: binary-column plumbing (decode/resize/frame-sample stubs)
+- multimodal: binary media columns — one pure-Python codec per format
+  (PNG, WAV, JPEG, MP4, GIF, WebVTT) behind one Arrow row runner
 """

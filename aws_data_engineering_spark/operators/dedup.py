@@ -21,12 +21,6 @@ from aws_data_engineering_spark.operators.text import normalize_text
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Keep one row per distinct value of ``cols`` (arbitrary survivor).
-    Spark plans this as a hash aggregate — map-side partial dedup first."""
-    return df.dropDuplicates(cols)
-
-
 def dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Canonical-id view of exact duplicate groups: min id survives.
     Deterministic (unlike dropDuplicates) → oracle-checkable."""

@@ -243,15 +243,6 @@ def stratified_topn(
     )
 
 
-def stratified_sql(stratum_expr: str, id_expr: str, n: int, salt: str = "strat-v1") -> str:
-    """DuckDB QUALIFY fragment replaying :func:`stratified_topn`'s order."""
-    key = f"md5(CAST({id_expr} AS VARCHAR) || '{salt}')"
-    return (
-        f"ROW_NUMBER() OVER (PARTITION BY {stratum_expr} "
-        f"ORDER BY {key}, {id_expr}) <= {n}"
-    )
-
-
 def temperature_mixture(
     df: DataFrame,
     id_col: str,

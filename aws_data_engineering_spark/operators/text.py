@@ -110,14 +110,6 @@ def punct_count(col: str | Column) -> Column:
     return F.regexp_count(col, F.lit(r"[^A-Za-z0-9\s]"))
 
 
-def avg_token_len(col: str | Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        F.transform(toks, F.length), F.lit(0), lambda acc, x: acc + x
-    )
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(col: str | Column) -> Column:
     """Deterministic [0,1] quality heuristic: rewards stopword presence and
     moderate token length, penalizes punctuation/digit noise. The exact

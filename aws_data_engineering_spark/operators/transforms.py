@@ -6,8 +6,7 @@ split chain in v2, ``FInal/load_script.py:207-208``) and stamps it as one
 literal per job. That works because each job handles exactly one file; our
 engine reads whole directories, so the columnar analog uses
 ``input_file_name()`` per row — each row gets the date of the file it came
-from, the multi-file generalization of the same semantic. The single-file
-literal stamp is kept as ``stamp_literal_dt`` for reference parity.
+from, the multi-file generalization of the same semantic.
 
 All five transforms are pure narrow operations (no shuffle); Catalyst folds
 the literals and fuses everything into the scan's whole-stage-codegen span,
@@ -46,12 +45,6 @@ def range_sort(df: DataFrame, sort_columns: list[str] | None) -> DataFrame:
     return df
 
 
-def cluster_within_partitions(df: DataFrame, sort_columns: list[str]) -> DataFrame:
-    """Cheaper P2 variant: per-partition sort, no range shuffle. Gives
-    parquet row-group locality on the keys without a global ordering."""
-    return df.sortWithinPartitions(*sort_columns)
-
-
 def dt_from_filename(col: Column | None = None) -> Column:
     """P3 — ingestion date from the source file path, columnar.
 
@@ -68,12 +61,6 @@ def dt_from_filename(col: Column | None = None) -> Column:
 def stamp_dt_from_filename(df: DataFrame) -> DataFrame:
     """P3+P4 for directory reads: per-row dt from ``input_file_name()``."""
     return df.withColumn("dt", dt_from_filename())
-
-
-def stamp_literal_dt(df: DataFrame, dt_value: str) -> DataFrame:
-    """P4 — single-file literal stamp, reference-exact
-    (``generic_load_script.py:124-126``; ``FInal/load_script.py:212``)."""
-    return df.withColumn("dt", F.lit(dt_value))
 
 
 def stamp_audit_columns(df: DataFrame, actor: str = DEFAULT_ACTOR) -> DataFrame:

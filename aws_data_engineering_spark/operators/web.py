@@ -187,9 +187,9 @@ URL_QUERIES = (  # % 5
 URL_FRAGS = ("#top", "", "#s2", "#a", "#b", "#c", "#d", "#e", "#f")  # % 9
 
 # simplified public-suffix list, vendored as a literal table (the real PSL
-# is a data file; two-label entries first = longest-match-wins)
+# is a data file): only the two-label suffixes need listing — any other
+# host's registrable domain is its last two labels
 PSL_2LABEL = ("co.uk", "ac.uk")
-PSL_1LABEL = ("com", "org", "net", "io")
 
 
 def _pick(doc_id: Column, options: tuple[str, ...]) -> Column:
@@ -362,17 +362,6 @@ ROBOTS_RULES = (
     ("example.co.uk", "disallow", "/x/"),
     # site.io: no rules -> default allow
 )
-
-
-def robots_rules_df(spark):
-    return spark.createDataFrame(
-        list(ROBOTS_RULES), "rule_host string, rule_type string, prefix string"
-    )
-
-
-def robots_rules_values_sql() -> str:
-    rows = ", ".join(f"('{h}', '{t}', '{p}')" for h, t, p in ROBOTS_RULES)
-    return f"(VALUES {rows}) AS rules(rule_host, rule_type, prefix)"
 
 
 def robots_verdict(reg_host: Column, path: Column) -> Column:

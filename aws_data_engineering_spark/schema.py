@@ -93,8 +93,3 @@ def build_schema_from_dict(schema_dict: dict[str, str]) -> StructType:
     return StructType(
         [StructField(name, parse_type(t), nullable=True) for name, t in schema_dict.items()]
     )
-
-
-def build_schema_from_ddl(ddl: str) -> StructType:
-    """DDL-string alternative: "a int, b string, c array<float>"."""
-    return StructType.fromDDL(ddl)

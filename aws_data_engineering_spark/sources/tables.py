@@ -31,11 +31,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Small dimension tables: always broadcast-join these (each is < a few MB even
-# at sf100; TPC-H region/nation are constant-size).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":

@@ -167,7 +167,7 @@ def test_jpeg_codec_roundtrip_multiblock():
     diffs of both signs across blocks) must decode to the exact per-block
     constants — exercising Huffman DC categories, EXTEND on negative
     diffs, byte stuffing, and the float IDCT's DC path."""
-    encode_jpeg, decode_jpeg, _, _ = M._jpeg_worker_fns()
+    encode_jpeg, decode_jpeg, *_ = M._jpeg_worker_fns()
     w, h = 19, 13  # 3x2 blocks, both edges partial
     vals = [255, 0, 128, 1, 254, 127]  # extreme swings -> max DC categories
     blob = encode_jpeg(w, h, vals)
@@ -183,7 +183,7 @@ def test_jpeg_codec_roundtrip_multiblock():
 def test_jpeg_malformed_rejected():
     import pytest
 
-    encode_jpeg, decode_jpeg, _, _ = M._jpeg_worker_fns()
+    encode_jpeg, decode_jpeg, *_ = M._jpeg_worker_fns()
     with pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"\x00\x01rubbish")
     blob = bytearray(encode_jpeg(8, 8, [100]))
@@ -199,7 +199,7 @@ def test_jpeg_malformed_rejected():
 
 
 def test_mp4_codec_roundtrip():
-    encode_mp4, parse_mp4 = M._mp4_worker_fns()
+    encode_mp4, parse_mp4, _, _ = M._mp4_worker_fns()
     blob = encode_mp4(600, 14400, [(1, 128, 96), (2, 64, 48)])
     brand, ts, dur, n_trk, w, h = parse_mp4(blob)
     assert (brand, ts, dur, n_trk) == ("isom", 600, 14400, 2)
@@ -210,7 +210,7 @@ def test_mp4_malformed_rejected():
     import pytest
     import struct
 
-    encode_mp4, parse_mp4 = M._mp4_worker_fns()
+    encode_mp4, parse_mp4, _, _ = M._mp4_worker_fns()
     good = encode_mp4(600, 600, [(1, 16, 16)])
     with pytest.raises(ValueError, match="ftyp"):
         parse_mp4(good[good.index(b"moov") - 4 :])  # moov only, no ftyp
@@ -308,7 +308,7 @@ def test_jpeg420_roundtrip_and_rejections():
     than misdecode them."""
     import pytest
 
-    _, _, enc_c, dec_c = M._jpeg_worker_fns()
+    _, _, enc_c, dec_c, _, _ = M._jpeg_worker_fns()
     W = H = 32
     yv = [(11 + 17 * m) % 256 for m in range(4)]
     cbv = [(23 + 29 * m) % 256 for m in range(4)]
@@ -349,8 +349,7 @@ def test_jpeg_progressive_equals_baseline_family():
     identical pixels (both are lossless on the DC-only family)."""
     import numpy as np
 
-    enc_base, dec_base, _, _ = M._jpeg_worker_fns()
-    enc_prog, dec_prog = M._jpeg_prog_worker_fns()
+    enc_base, dec_base, _, _, enc_prog, dec_prog = M._jpeg_worker_fns()
     for w, h in [(8, 8), (24, 16), (16, 8)]:
         nb = (w // 8) * (h // 8)
         vals = [(v * 53 + 11) % 256 for v in range(nb)]
@@ -368,7 +367,7 @@ def test_jpeg_progressive_ac_reconstruction():
     scan; odd |AC1| exercises correction bits; sign handling both ways."""
     import numpy as np
 
-    enc_prog, dec_prog = M._jpeg_prog_worker_fns()
+    *_, enc_prog, dec_prog = M._jpeg_worker_fns()
     vals = [10, 100, 200, 0, 255, 37, 128, 64]
     acs = [0, 1, -1, 5, -2, 7, 0, -1]
     w, h = 32, 16
@@ -397,8 +396,7 @@ def test_jpeg_progressive_ac_reconstruction():
 def test_jpeg_progressive_rejections():
     """The progressive decoder refuses baseline streams (and vice versa) —
     misrouting a stream must raise, never misdecode."""
-    enc_base, dec_base, _, _ = M._jpeg_worker_fns()
-    enc_prog, dec_prog = M._jpeg_prog_worker_fns()
+    enc_base, dec_base, _, _, enc_prog, dec_prog = M._jpeg_worker_fns()
     base_blob = enc_base(8, 8, [42])
     prog_blob = enc_prog(8, 8, [42])
     with pytest.raises(ValueError, match="progressive"):
@@ -413,7 +411,7 @@ def test_mjpeg_mux_demux_roundtrip():
     """Every sample sliced via stco+stsz must decode to the planted
     closed-form frame (m07's block family shifted by frame index), for
     several (n_frames, dims) lattice points including 8-clipped edges."""
-    enc, dec = M._mjpeg_worker_fns()
+    _, _, enc, dec = M._mp4_worker_fns()
     for vid in (0, 1, 7, 11, 123, 4567):
         n, w, h = 1 + vid % 4, 4 + vid % 16, 4 + vid % 12
         frames = dec(enc(vid, n, w, h))
@@ -432,7 +430,7 @@ def test_mjpeg_mux_demux_roundtrip():
 def test_mjpeg_malformed_rejected():
     """Wrong sample-entry fourcc, out-of-range sample, multi-chunk stco,
     and box garbage are refused — never misdecoded."""
-    enc, dec = M._mjpeg_worker_fns()
+    _, _, enc, dec = M._mp4_worker_fns()
     blob = enc(3, 2, 8, 8)
 
     bad = bytearray(blob)
@@ -510,3 +508,75 @@ def test_wav_resample_roundtrip_and_truncation(spark, ids_df):
         ((0 + 2 * j) * 31 % 256 - 128) + ((0 + 2 * j + 1) * 31 % 256 - 128) < 0
         for j in range(128)
     )
+
+
+def test_each_format_is_parsed_in_one_place():
+    """Each media format lives in one factory: the shared JPEG and ISO-BMFF
+    helpers are defined once, the fake-format magics appear only in their
+    constants, and every operator crosses the Arrow boundary through the
+    one row runner."""
+    import ast
+    import collections
+    from pathlib import Path
+
+    src = Path(M.__file__).read_text()
+    tree = ast.parse(src)
+    defs = collections.Counter(
+        n.name for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    )
+    for name in ("_BitReader", "_BitWriter", "_huff_decode_table", "_box", "_walk"):
+        assert defs[name] == 1, f"{name} defined {defs[name]} times"
+    magics = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and n.value in (b"FIMG", b"FAUD")
+    ]
+    constants = [
+        n.value
+        for n in tree.body
+        if isinstance(n, ast.Assign)
+        and getattr(n.targets[0], "id", None) in ("FIMG_MAGIC", "FAUD_MAGIC")
+    ]
+    assert len(magics) == 2 and all(any(m is c for c in constants) for m in magics)
+    assert src.count(".mapInPandas(") == 1
+
+
+def test_row_runner_is_batch_boundary_invariant(spark):
+    """The row runner's output does not depend on where Arrow batches cut
+    the input: decode_mjpeg_frame_features (1-4 rows per input) and
+    scene_changes (no row for a single-frame video, so a one-record batch
+    emits nothing) return the same rows at 1, 3 and the default records
+    per batch."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    docs = spark.range(0, 12).select(F.col("id").alias("doc_id"))
+    movies = M.synthesize_mjpeg_videos(docs, "doc_id")
+    encode_fimg, _, _ = M._fimg_worker_fns()
+    still = spark.createDataFrame(
+        [(100, bytearray(encode_fimg(4, 4, bytes(16))))], "id bigint, data binary"
+    )
+    videos = M.synthesize_fake_videos(docs, "doc_id").select("id", "data").unionByName(still)
+
+    def rows():
+        return (
+            sorted(map(tuple, M.decode_mjpeg_frame_features(movies, "id", "data").collect())),
+            sorted(map(tuple, M.scene_changes(videos, "id", "data").collect())),
+        )
+
+    prev = spark.conf.get(key, None)
+    runs = []
+    try:
+        for size in ("1", "3", prev):
+            if size is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, size)
+            runs.append(rows())
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert runs[0] == runs[1] == runs[2]
+    frames, cuts = runs[0]
+    assert len(frames) == sum(1 + i % 4 for i in range(12))
+    assert len(cuts) == sum(1 + i % 8 for i in range(12))
+    assert all(r[0] != 100 for r in cuts)

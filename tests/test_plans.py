@@ -604,3 +604,43 @@ def test_printed_test_counts_match_collection():
         f"SURVEY says {sm.group(1)} tests, collector finds {n_tests} — "
         "run tools/gen_query_map.py"
     )
+
+
+def test_package_has_no_unreferenced_top_level_names():
+    """Every top-level function, class and constant of the package is used
+    somewhere in the repo's Python; a name whose only occurrence is its
+    own definition is dead code. A use is a load of the name, an attribute
+    access or an import; a decorated definition is used by its decorator
+    (the query registry); dunders are exempt."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    used, defined = set(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if any(part.startswith(".") or part == "spark-warehouse" for part in rel.parts):
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+        if rel.parts[0] != "aws_data_engineering_spark":
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if not node.decorator_list:
+                    defined.append((rel, node.name))
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                defined += [(rel, t.id) for t in targets if isinstance(t, ast.Name)]
+    dead = sorted(
+        f"{rel}: {name}"
+        for rel, name in defined
+        if name not in used and not (name.startswith("__") and name.endswith("__"))
+    )
+    assert not dead, dead
