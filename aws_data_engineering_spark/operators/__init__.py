@@ -2,6 +2,7 @@
 
 - relational: joins, aggregations, windows, sort/limit, set ops
 - dedup: exact / fuzzy (MinHash-LSH, SimHash, n-gram Jaccard) deduplication
+- graph: connected components, triangles and PageRank over near-dup pairs
 - similarity: embedding cosine top-k (brute-force + LSH-bucketed)
 - text: language-ID, quality scoring, token counting, fingerprinting
 - multimodal: binary media columns — one pure-Python codec per format

@@ -1,7 +1,8 @@
 """Tracked eager localCheckpoints with scoped release.
 
-bpe_learn and the q-digest compressor create eager localCheckpoint chains
-and release the intermediates before returning. Releasing by diffing the
+``pipeline.run_load``, ``text.bpe_learn`` and
+``similarity.projection_tree_topk`` create eager localCheckpoints and
+release exactly their own blocks before returning. Releasing by diffing the
 session's GLOBAL persisted-RDD registry before/after the whole function
 captures checkpoints a CONCURRENT thread created on the shared
 SparkSession in the meantime — and unpersisting someone else's
@@ -18,7 +19,7 @@ these helpers.
 COST: the lock is held across the JVM-side eager materialization, so all
 tracked checkpoints in the process SERIALIZE — concurrent threads queue
 behind each other's materialization. Acceptable for the current callers
-(bpe_learn / q-digest run their chains single-threaded); if parallel
+(each runs its checkpoints single-threaded); if parallel
 materialization ever matters, diff ids under the lock but materialize
 outside via a per-session retry loop.
 """

@@ -163,10 +163,12 @@ def minhash_signature(col: str | Column, num_hashes: int = 32, shingle_n: int = 
     return F.aggregate(matrix, init, lambda acc, row: F.zip_with(acc, row, lambda x, y: F.least(x, y)))
 
 
-def minhash_bands(sig_col: Column, num_bands: int, rows_per_band: int) -> Column:
-    """LSH banding: array of (band_id, band_hash) structs. Docs sharing any
-    band bucket are near-dup candidates."""
-    return F.array(
+def minhash_band_rows(sigs: DataFrame, num_bands: int, rows_per_band: int) -> DataFrame:
+    """LSH banding: one row per signature row and band, carrying every
+    column of ``sigs`` plus ``band`` and ``band_hash`` (xxhash64 over the
+    band's slice of the array<bigint> ``sig`` column). Docs sharing any
+    (band, band_hash) bucket are near-dup candidates."""
+    bands = F.array(
         *[
             F.struct(
                 F.lit(band).alias("band"),
@@ -174,7 +176,7 @@ def minhash_bands(sig_col: Column, num_bands: int, rows_per_band: int) -> Column
                     F.concat_ws(
                         ",",
                         *[
-                            F.element_at(sig_col, band * rows_per_band + r + 1).cast(
+                            F.element_at(F.col("sig"), band * rows_per_band + r + 1).cast(
                                 "string"
                             )
                             for r in range(rows_per_band)
@@ -185,6 +187,99 @@ def minhash_bands(sig_col: Column, num_bands: int, rows_per_band: int) -> Column
             for band in range(num_bands)
         ]
     )
+    return sigs.select(*sigs.columns, F.explode(bands).alias("b")).select(
+        *sigs.columns, F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
+    )
+
+
+def _banded_signatures(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    num_bands: int,
+    materialize_once: bool,
+) -> DataFrame:
+    """(id, sig, band, band_hash) rows: the Arrow MinHash signature kernel
+    exploded into LSH bands.
+
+    Signature computation is CPU-bound per row. The JVM higher-order-
+    function form (minhash_signature) is interpreted — no codegen for
+    lambda expressions — and measured 6-8× slower than this Arrow path
+    with erratic tail latency under session memory pressure. So the hot
+    loop runs as a vectorized mapInPandas (numpy affine maps over the
+    shingle hash array), the canonical Spark escape hatch for per-row
+    numeric kernels. Fan out first (a small parquet file scans as one
+    task).
+
+    ``materialize_once`` pins the signature table to ONE RDD identity with
+    a LAZY localCheckpoint (VERDICT r11 #4), for callers whose banded rows
+    feed several consumers (the bucket census and the band join): AQE
+    defeats plan-level exchange reuse, so the Python signature pass
+    otherwise executed once per consumer. The first task computes each
+    block and concurrent consumers block-read it, WITHOUT the build-time
+    barrier that made round 11's EAGER variant serialize the critical path
+    (measured flat-to-worse then). Not persist(): nothing could unpersist
+    a lazily-returned operator's cache; checkpoint blocks are released by
+    the ContextCleaner when the plan's references drop (the r11 leak
+    audit's bounded-blocks result). At 100 TB the equivalent is writing
+    the signature table out before the join."""
+    params = _hash_params(num_hashes)
+    shingle_set, base_hash = _shingle_worker_fns(shingle_n=3)
+    mersenne_p = _MERSENNE_P
+
+    def compute_sigs(batches):
+        import numpy as np
+        import pandas as pd_w
+
+        a = np.array([p[0] for p in params], dtype=np.int64)
+        b = np.array([p[1] for p in params], dtype=np.int64)
+        for pdf in batches:
+            ids, sigs_out = [], []
+            for doc_id, text in zip(pdf["id"], pdf["text"]):
+                base = np.fromiter(
+                    (base_hash(s) for s in shingle_set(text)), dtype=np.int64
+                )
+                # base < 2^31 and a < 2^31 ⇒ products < 2^62: no int64 overflow
+                sig = ((base[:, None] * a[None, :] + b) % mersenne_p).min(axis=0)
+                ids.append(doc_id)
+                sigs_out.append(sig.tolist())
+            yield pd_w.DataFrame({"id": ids, "sig": sigs_out})
+
+    fanout = df.select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("text")
+    ).repartition(df.sparkSession.sparkContext.defaultParallelism)
+    sigs = fanout.mapInPandas(compute_sigs, "id bigint, sig array<bigint>")
+    if materialize_once:
+        sigs = sigs.localCheckpoint(eager=False)
+    return minhash_band_rows(sigs, num_bands, num_hashes // num_bands)
+
+
+def _bucket_census(banded: DataFrame, n_col: str) -> DataFrame:
+    """Occupancy of every (band, band_hash) bucket, as ``n_col`` — one
+    partial-agg groupBy on the key the band join already shuffles on."""
+    return banded.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias(n_col))
+
+
+def _drop_oversized_buckets(banded: DataFrame, max_bucket: int, n_col: str) -> DataFrame:
+    """``banded`` without the rows of buckets holding more than
+    ``max_bucket`` docs."""
+    census = _bucket_census(banded, n_col)
+    return banded.join(
+        census.filter(F.col(n_col) <= max_bucket), ["band", "band_hash"]
+    ).drop(n_col)
+
+
+def _est_jaccard() -> Column:
+    """Estimated Jaccard of a candidate pair: the fraction of agreeing
+    components of its ``sig_a`` / ``sig_b`` signatures, to 4 decimals."""
+    agree = F.size(
+        F.filter(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    )
+    return F.round(agree / F.size(F.col("sig_a")), 4).alias("est_jaccard")
 
 
 # Default refusal threshold for minhash_candidate_pairs' uncapped form: a
@@ -235,73 +330,15 @@ def minhash_candidate_pairs(
     full enumerate (the duplication-audit use-case, where the quadratic
     output is the point).
     """
-    rows_per_band = num_hashes // num_bands
-    spark = df.sparkSession
-    # Signature computation is CPU-bound per row. The JVM higher-order-
-    # function form (minhash_signature) is interpreted — no codegen for
-    # lambda expressions — and measured 6-8× slower than this Arrow path
-    # with erratic tail latency under session memory pressure. So the hot
-    # loop runs as a vectorized mapInPandas (numpy affine maps over the
-    # shingle hash array), the canonical Spark escape hatch for per-row
-    # numeric kernels. Fan out first (a small parquet file scans as one
-    # task); persist because the signature table feeds both sides of the
-    # banded self-join. At 100 TB the equivalent is writing the signature
-    # table out (checkpoint) before the join.
-    params = _hash_params(num_hashes)
-    shingle_set, base_hash = _shingle_worker_fns(shingle_n=3)
-    mersenne_p = _MERSENNE_P
-
-    def compute_sigs(batches):
-        import numpy as np
-        import pandas as pd_w
-
-        a = np.array([p[0] for p in params], dtype=np.int64)
-        b = np.array([p[1] for p in params], dtype=np.int64)
-        for pdf in batches:
-            ids, sigs_out = [], []
-            for doc_id, text in zip(pdf["id"], pdf["text"]):
-                base = np.fromiter(
-                    (base_hash(s) for s in shingle_set(text)), dtype=np.int64
-                )
-                # base < 2^31 and a < 2^31 ⇒ products < 2^62: no int64 overflow
-                sig = ((base[:, None] * a[None, :] + b) % mersenne_p).min(axis=0)
-                ids.append(doc_id)
-                sigs_out.append(sig.tolist())
-            yield pd_w.DataFrame({"id": ids, "sig": sigs_out})
-
-    fanout = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("text")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    sigs = fanout.mapInPandas(compute_sigs, "id bigint, sig array<bigint>")
-    # LAZY localCheckpoint (VERDICT r11 #4): the signature table feeds the
-    # bucket census AND both sides of the banded self-join, and AQE defeats
-    # plan-level exchange reuse, so the Python signature pass executed 3-4×
-    # per run. A lazy checkpoint pins all consumers to ONE RDD identity —
-    # the first task computes each block, concurrent consumers block-read
-    # it — WITHOUT the build-time barrier that made round 11's EAGER
-    # variant serialize the critical path (measured flat-to-worse then).
-    # Not persist(): nothing could unpersist a lazily-returned operator's
-    # cache; checkpoint blocks are released by the ContextCleaner when the
-    # plan's references drop (the r11 leak audit's bounded-blocks result).
-    sigs = sigs.localCheckpoint(eager=False)
-    banded = sigs.select(
-        "id", "sig", F.explode(minhash_bands(F.col("sig"), num_bands, rows_per_band)).alias("b")
-    ).select("id", "sig", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash"))
+    # the signature table feeds the bucket census AND both sides of the
+    # banded self-join: materialize it once
+    banded = _banded_signatures(
+        df, id_col, text_col, num_hashes, num_bands, materialize_once=True
+    )
     if max_bucket is not None:
-        census = banded.groupBy("band", "band_hash").agg(
-            F.count(F.lit(1)).alias("__bucket_n")
-        )
-        banded = (
-            banded.join(
-                census.filter(F.col("__bucket_n") <= max_bucket),
-                ["band", "band_hash"],
-            )
-            .drop("__bucket_n")
-        )
+        banded = _drop_oversized_buckets(banded, max_bucket, "__bucket_n")
     elif guard_bucket is not None:
-        census = banded.groupBy("band", "band_hash").agg(
-            F.count(F.lit(1)).alias("__bucket_n")
-        )
+        census = _bucket_census(banded, "__bucket_n")
         # assert_true evaluates inside a FILTER so Catalyst cannot prune it
         # (it returns NULL on pass → isNull() is the predicate). The join is
         # 1:1 on the census key, so when every bucket passes the output is
@@ -344,17 +381,7 @@ def minhash_candidate_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.round(agree / F.size(F.col("sig_a")), 4).alias("est_jaccard"),
-    )
+    return pairs.select("id_a", "id_b", _est_jaccard())
 
 
 def minhash_probe_pairs(
@@ -385,57 +412,15 @@ def minhash_probe_pairs(
     Returns (id_new, id_idx, est_jaccard). Signatures are bit-identical to
     d04's, so the DuckDB oracle (:func:`minhash_probe_oracle_sql`)
     reproduces the whole thing exactly."""
-    rows_per_band = num_hashes // num_bands
-    spark = index_df.sparkSession
-    params = _hash_params(num_hashes)
-    shingle_set, base_hash = _shingle_worker_fns(shingle_n=3)
-    mersenne_p = _MERSENNE_P
-
-    def compute_sigs(batches):
-        import numpy as np
-        import pandas as pd_w
-
-        a = np.array([p[0] for p in params], dtype=np.int64)
-        b = np.array([p[1] for p in params], dtype=np.int64)
-        for pdf in batches:
-            ids, sigs_out = [], []
-            for doc_id, text in zip(pdf["id"], pdf["text"]):
-                base = np.fromiter(
-                    (base_hash(s) for s in shingle_set(text)), dtype=np.int64
-                )
-                sig = ((base[:, None] * a[None, :] + b) % mersenne_p).min(axis=0)
-                ids.append(doc_id)
-                sigs_out.append(sig.tolist())
-            yield pd_w.DataFrame({"id": ids, "sig": sigs_out})
-
-    def banded_sigs(df: DataFrame, materialize_once: bool) -> DataFrame:
-        fanout = df.select(
-            F.col(id_col).alias("id"), F.col(text_col).alias("text")
-        ).repartition(spark.sparkContext.defaultParallelism)
-        sigs = fanout.mapInPandas(compute_sigs, "id bigint, sig array<bigint>")
-        if materialize_once:
-            # LAZY localCheckpoint (VERDICT r11 #4, the d04 pattern): the
-            # INDEX side feeds the bucket census AND the probe join, so its
-            # signature pass ran twice under AQE; one RDD identity dedups
-            # the work block-by-block with no build-time barrier. The batch
-            # side has a single consumer — no checkpoint there.
-            sigs = sigs.localCheckpoint(eager=False)
-        return sigs.select(
-            "id",
-            "sig",
-            F.explode(
-                minhash_bands(F.col("sig"), num_bands, rows_per_band)
-            ).alias("b"),
-        ).select(
-            "id", "sig", F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash")
-        )
-
-    idx = banded_sigs(index_df, materialize_once=True)
-    new = banded_sigs(batch_df, materialize_once=False)
-    census = idx.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("__n"))
-    idx = idx.join(census.filter(F.col("__n") <= max_bucket), ["band", "band_hash"]).drop(
-        "__n"
+    # the INDEX side feeds the bucket census AND the probe join; the batch
+    # side has a single consumer — no checkpoint there
+    idx = _banded_signatures(
+        index_df, id_col, text_col, num_hashes, num_bands, materialize_once=True
     )
+    new = _banded_signatures(
+        batch_df, id_col, text_col, num_hashes, num_bands, materialize_once=False
+    )
+    idx = _drop_oversized_buckets(idx, max_bucket, "__n")
     pairs = (
         new.alias("l")
         .join(
@@ -451,17 +436,7 @@ def minhash_probe_pairs(
         )
         .dropDuplicates(["id_new", "id_idx"])
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    )
-    return pairs.select(
-        "id_new",
-        "id_idx",
-        F.round(agree / F.size(F.col("sig_a")), 4).alias("est_jaccard"),
-    )
+    return pairs.select("id_new", "id_idx", _est_jaccard())
 
 
 def minhash_probe_oracle_sql(
@@ -472,20 +447,11 @@ def minhash_probe_oracle_sql(
 ) -> str:
     """DuckDB SQL reproducing :func:`minhash_probe_pairs` over ``documents``
     split by ``batch_pred`` (batch side = rows matching, index side = the
-    rest). Signatures via the shared d04 CTE; banding as signature-slice
-    equality (the d17 bandrows/census/keep pattern) with the census on the
-    INDEX side only, mirroring the probe's cap."""
-    rows = num_hashes // num_bands
-    prefix = _minhash_sig_cte_sql(num_hashes)
+    rest). Signatures and band rows via the shared MinHash CTEs; banding
+    as signature-slice equality with the census on the INDEX side only,
+    mirroring the probe's cap."""
     return f"""
-    WITH {prefix}
-    , bandrows AS (
-      SELECT doc_id, sig, b.band,
-             array_to_string(sig[b.band * {rows} + 1:b.band * {rows} + {rows}],
-                             ',') AS bkey
-      FROM sigs,
-           (SELECT UNNEST(generate_series(0, {num_bands - 1})) AS band) b
-    ), idx AS (
+    WITH {_minhash_bandrows_cte_sql(num_hashes, num_bands)}, idx AS (
       SELECT * FROM bandrows WHERE NOT ({batch_pred})
     ), newb AS (
       SELECT * FROM bandrows WHERE {batch_pred}
@@ -500,9 +466,7 @@ def minhash_probe_oracle_sql(
       FROM newb l JOIN kept r USING (band, bkey)
     )
     SELECT id_new, id_idx,
-           ROUND(CAST(list_sum([CASE WHEN sig_a[i] = sig_b[i] THEN 1 ELSE 0 END
-                                FOR i IN generate_series(1, {num_hashes})])
-                      AS DOUBLE) / {num_hashes}, 4) AS est_jaccard
+           {_est_jaccard_sql("sig_a", "sig_b", num_hashes)}
     FROM cand
     """
 
@@ -967,174 +931,6 @@ def bloom_probe(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Resolve near-dup pairs into clusters: each node gets the smallest
-    node id reachable from it (``node``, ``label``). The step that turns a
-    pair list (d04/d05/d07/e01) into an actual deduplicated corpus — keep
-    one canonical doc per label.
-
-    Algorithm: iterative min-label propagation — every round each node
-    adopts the minimum label among itself and its neighbors; fixpoint when
-    no label changes. Rounds = graph diameter, which for near-dup graphs is
-    small (dup clusters are dense cliques, not long chains). Each round is
-    one shuffle (groupBy node); ``localCheckpoint`` cuts lineage so round
-    ``k`` doesn't replan rounds ``1..k-1``. The label table it caches is two
-    integer columns per distinct node — negligible storage at any scale.
-    For adversarially chain-shaped graphs (diameter > ``max_iter``) this
-    propagation cannot finish — and an unconverged label table is silently
-    WRONG (labels stop mid-chain), so exhaustion raises RuntimeError naming
-    the fix: :func:`connected_components_star`, the alternating
-    large-star/small-star contraction (Kiveris et al.) that closes the same
-    graph in O(log n) rounds.
-    """
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    # LAZY checkpoint on the raw pair list first (VERDICT r11 #6): the
-    # symmetric union's two branches each carry the (possibly expensive)
-    # pair-generation lineage, and AQE defeats exchange reuse, so the
-    # eager union checkpoint below used to EXECUTE that lineage twice.
-    # One RDD identity makes the union's second branch block-read what the
-    # first computed — half the edge-derivation work, no extra barrier.
-    e = e.localCheckpoint(eager=False)
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # eager: edges are re-joined every round — materialize the lineage
-    # ONCE instead of re-running it per iteration (lazy checkpoint only
-    # cut lineage after first computation, so rounds 1..k each re-planned
-    # the upstream until something forced it)
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select("a").distinct().select(F.col("a").alias("node"), F.col("a").alias("label"))
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "the graph's diameter exceeds the iteration budget and the "
-            "partial labels would be silently wrong; use "
-            "connected_components_star (O(log n) star contraction) for "
-            "high-diameter graphs"
-        )
-    return labels
-
-
-def pagerank(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    damping: float = 0.85,
-    iterations: int = 3,
-) -> DataFrame:
-    """PageRank over an undirected pair list (``node``, ``rank``) — the
-    graph-centrality stage of corpus curation: in a near-dup graph, high-rank
-    nodes are template/boilerplate hubs worth inspecting before dedup keeps
-    a "canonical" copy of spam.
-
-    Shape: degree table once, then ``iterations`` rounds of
-    (join ranks→edges on source, groupBy destination, sum contributions) —
-    one shuffle join + one shuffle agg per round, the standard Pregel-on-
-    DataFrames layout that scales with edge count. A FIXED iteration count
-    (not convergence polling) keeps the plan static and the result
-    deterministic/oracle-reproducible; rank sums are order-insensitive up to
-    float ulps, absorbed by the caller rounding to >=4 decimals.
-
-    Reference scope note: the reference engine has no graph operators; this
-    extends the training-data-pipeline surface (SURVEY.md §2b) alongside
-    connected_components.
-    """
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    # lazy checkpoint: the symmetric union would otherwise execute the
-    # pair-generation lineage twice (the connected_components reasoning)
-    e = e.localCheckpoint(eager=False)
-    # distinct: duplicate pair rows must not become parallel edges (double
-    # degree + double contribution) — edge-set semantics keep the operator
-    # idempotent to repeated pair emission (e.g. a pair found via several
-    # LSH bands)
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    edges = edges.localCheckpoint(eager=True)  # reused every round
-    deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("a").alias("node"))
-    n_nodes = nodes.count()  # one scalar job; the node list stays distributed
-    if n_nodes == 0:
-        # empty graph (e.g. no pair cleared the similarity threshold):
-        # return an empty (node, rank) frame — the oracle's empty result
-        return nodes.withColumn("rank", F.lit(0.0))
-    base = (1.0 - damping) / n_nodes
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for _ in range(iterations):
-        contrib = (
-            edges.join(deg, "a")
-            .join(ranks, edges["a"] == ranks["node"])
-            .select(F.col("b").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-        )
-        ranks = (
-            nodes.join(contrib.groupBy("node").agg(F.sum("c").alias("s")), "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce("s", F.lit(0.0))).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
-
-
-def pagerank_oracle_sql(
-    pairs_cte: str, damping: float = 0.85, iterations: int = 3, round_to: int = 6
-) -> str:
-    """DuckDB SQL reproducing :func:`pagerank`: the fixed iteration count
-    un-rolls into chained CTEs (r0 -> r1 -> ...). ``pairs_cte`` must define
-    ``pairs(id_a, id_b)``. Rank sums are FP-order-insensitive to ~1e-15, so
-    both engines agree after rounding to ``round_to`` decimals."""
-    d = damping
-    parts = [
-        pairs_cte,
-        "edges AS (SELECT id_a AS a, id_b AS b FROM pairs"
-        " UNION SELECT id_b, id_a FROM pairs)",  # UNION = edge-SET semantics
-        "deg AS (SELECT a, COUNT(*) AS deg FROM edges GROUP BY a)",
-        "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM deg)",
-        "r0 AS (SELECT a AS node, 1.0 / n AS rank FROM deg CROSS JOIN nn)",
-    ]
-    prev = "r0"
-    for k in range(1, iterations + 1):
-        parts.append(
-            f"r{k} AS (SELECT d.a AS node, (1.0 - {d}) / nn.n + {d} * COALESCE(s.s, 0.0) AS rank "
-            f"FROM deg d CROSS JOIN nn LEFT JOIN ("
-            f"SELECT e.b AS node, SUM(r.rank / dd.deg) AS s "
-            f"FROM edges e JOIN deg dd ON e.a = dd.a JOIN {prev} r ON e.a = r.node "
-            f"GROUP BY e.b) s ON d.a = s.node)"
-        )
-        prev = f"r{k}"
-    return (
-        "WITH " + ",\n".join(parts)
-        + f"\nSELECT node, ROUND(rank, {round_to}) AS rank FROM {prev}"
-    )
-
-
 def minhash_oracle_sql(
     num_hashes: int = 32, num_bands: int = 8, source_sql: str = "documents"
 ) -> str:
@@ -1152,20 +948,6 @@ def minhash_oracle_sql(
     test data).
     """
     rows = num_hashes // num_bands
-
-    def hexval(i: int, h: str) -> str:
-        a = f"ascii(substr({h}, {i}, 1))"
-        return f"({a} - 48 - CASE WHEN {a} >= 97 THEN 39 ELSE 0 END)"
-
-    h64 = " + ".join(
-        f"CAST({hexval(i + 1, 'md5(x)')} AS HUGEINT) * CAST({16 ** (15 - i)} AS HUGEINT)"
-        for i in range(16)
-    )
-    base = f"CAST(({h64}) % CAST({_MERSENNE_P} AS HUGEINT) AS BIGINT)"
-    sig_terms = ", ".join(
-        f"list_min([((h * {a}) + {b}) % {_MERSENNE_P} FOR h IN bases])"
-        for a, b in _hash_params(num_hashes)
-    )
     bands = " OR ".join(
         f"(a.sig[{rows * b + 1}:{rows * b + rows}] = "
         f"bb.sig[{rows * b + 1}:{rows * b + rows}])"
@@ -1175,9 +957,7 @@ def minhash_oracle_sql(
     return f"""
     WITH {prefix}
     SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
-           ROUND(CAST(list_sum([CASE WHEN a.sig[i] = bb.sig[i] THEN 1 ELSE 0 END
-                                FOR i IN generate_series(1, {num_hashes})])
-                      AS DOUBLE) / {num_hashes}, 4) AS est_jaccard
+           {_est_jaccard_sql("a.sig", "bb.sig", num_hashes)}
     FROM sigs a JOIN sigs bb ON a.doc_id < bb.doc_id
     WHERE {bands}
     """
@@ -1219,6 +999,31 @@ def _minhash_sig_cte_sql(num_hashes: int, source_sql: str = "documents") -> str:
     )"""
 
 
+def _minhash_bandrows_cte_sql(
+    num_hashes: int, num_bands: int, source_sql: str = "documents"
+) -> str:
+    """The signature CTEs plus ``bandrows(doc_id, sig, band, bkey)``: one
+    row per doc and band, ``bkey`` the band's signature slice — the
+    collision-free stand-in for the Spark side's xxhash64 band hash
+    (:func:`minhash_band_rows`)."""
+    rows = num_hashes // num_bands
+    return f"""{_minhash_sig_cte_sql(num_hashes, source_sql)}
+    , bandrows AS (
+      SELECT doc_id, sig, b.band,
+             array_to_string(sig[b.band * {rows} + 1:b.band * {rows} + {rows}],
+                             ',') AS bkey
+      FROM sigs,
+           (SELECT UNNEST(generate_series(0, {num_bands - 1})) AS band) b
+    )"""
+
+
+def _est_jaccard_sql(sig_a: str, sig_b: str, num_hashes: int) -> str:
+    """SQL twin of :func:`_est_jaccard` over two signature expressions."""
+    return f"""ROUND(CAST(list_sum([CASE WHEN {sig_a}[i] = {sig_b}[i] THEN 1 ELSE 0 END
+                                FOR i IN generate_series(1, {num_hashes})])
+                      AS DOUBLE) / {num_hashes}, 4) AS est_jaccard"""
+
+
 def minhash_capped_oracle_sql(
     num_hashes: int = 32, num_bands: int = 8, max_bucket: int = 2
 ) -> str:
@@ -1228,17 +1033,8 @@ def minhash_capped_oracle_sql(
     join pairwise. Slice equality stands in for the Spark side's xxhash64
     band hash (collision-free on fixed test data — the same assumption the
     uncapped oracle already makes)."""
-    rows = num_hashes // num_bands
-    prefix = _minhash_sig_cte_sql(num_hashes)
     return f"""
-    WITH {prefix}
-    , bandrows AS (
-      SELECT doc_id, sig, b.band,
-             array_to_string(sig[b.band * {rows} + 1:b.band * {rows} + {rows}],
-                             ',') AS bkey
-      FROM sigs,
-           (SELECT UNNEST(generate_series(0, {num_bands - 1})) AS band) b
-    ), census AS (
+    WITH {_minhash_bandrows_cte_sql(num_hashes, num_bands)}, census AS (
       SELECT band, bkey, COUNT(*) AS n FROM bandrows GROUP BY 1, 2
     ), keep AS (
       SELECT br.* FROM bandrows br
@@ -1250,9 +1046,7 @@ def minhash_capped_oracle_sql(
       WHERE a.doc_id < bb.doc_id
     )
     SELECT id_a, id_b,
-           ROUND(CAST(list_sum([CASE WHEN sig_a[i] = sig_b[i] THEN 1 ELSE 0 END
-                                FOR i IN generate_series(1, {num_hashes})])
-                      AS DOUBLE) / {num_hashes}, 4) AS est_jaccard
+           {_est_jaccard_sql("sig_a", "sig_b", num_hashes)}
     FROM cand
     """
 
@@ -1549,140 +1343,14 @@ def minhash_first_seen_oracle_sql(
     ``kept(d)`` iff no smaller doc_id shares any of d's band buckets.
     Valid as a batch statement because the streaming rule is a pure
     function of "docs that arrived no later than mine" and the registered
-    stream feeds files in doc_id order — same signature/band CTEs as the
-    d04 oracle, band keys as signature slices (collision-free stand-in for
-    the Spark side's xxhash64, the d04/d17 assumption)."""
-    rows = num_hashes // num_bands
-    prefix = _minhash_sig_cte_sql(num_hashes, source_sql)
+    stream feeds files in doc_id order — same signature/band-row CTEs as
+    the d17/d21 oracles (band keys as signature slices, the collision-free
+    stand-in for the Spark side's xxhash64)."""
     return f"""
-    WITH {prefix}
-    , bandrows AS (
-      SELECT doc_id, b.band,
-             array_to_string(sig[b.band * {rows} + 1:b.band * {rows} + {rows}],
-                             ',') AS bkey
-      FROM sigs,
-           (SELECT UNNEST(generate_series(0, {num_bands - 1})) AS band) b
-    ), firsts AS (
+    WITH {_minhash_bandrows_cte_sql(num_hashes, num_bands, source_sql)}, firsts AS (
       SELECT band, bkey, MIN(doc_id) AS first_doc FROM bandrows GROUP BY 1, 2
     )
     SELECT br.doc_id, MIN(f.first_doc) = br.doc_id AS kept
     FROM bandrows br JOIN firsts f USING (band, bkey)
     GROUP BY br.doc_id
     """
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round algorithm :func:`connected_components`'s
-    docstring names as the 100 TB swap for chain-shaped graphs, as actual
-    code. Same contract: (``node``, ``label``) with label = component
-    minimum.
-
-    Why it exists: min-label propagation converges in diameter rounds —
-    fine for near-dup cliques, pathological for chains (a 100-node path
-    needs 100 shuffles). Star contraction halves component height every
-    alternation, so the same path closes in ~log2(n) rounds. Each round is
-    two groupBy shuffles over the current edge set:
-
-    - **large-star**: per node u with symmetric neighborhood N(u), let
-      m = min(N(u) ∪ {u}); rewire every LARGER neighbor v > u to m;
-    - **small-star**: orient edges (a > b); per a let m = min(N(a) ∪ {a});
-      rewire every smaller neighbor (and a itself) to m.
-
-    Convergence when the canonical (greater, smaller) edge set reaches a
-    fixpoint (checked by count + order-free hash-sum — two scalar aggs,
-    no driver-side edge sets); the fixpoint is a star forest rooted at
-    each component's minimum. Edges localCheckpoint per round: round k
-    never re-plans rounds 1..k-1.
-    """
-    e0 = pairs.select(
-        F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-        F.least(F.col(id_a), F.col(id_b)).alias("v"),
-    ).filter(F.col("u") != F.col("v")).distinct()
-    # LAZY checkpoint (VERDICT r11 #6): the two eager checkpoints below
-    # (nodes, edges) each executed the full pair-generation lineage — for
-    # g08 that is the whole LSH edge derivation, run twice back-to-back.
-    # Pinning e0 to one RDD identity first makes the second materialization
-    # a block read of the first, without adding a barrier of its own.
-    e0 = e0.localCheckpoint(eager=False)
-    nodes = (
-        e0.select(F.col("u").alias("node"))
-        .union(e0.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = e0.localCheckpoint(eager=True)
-
-    def _sig(e: DataFrame):
-        # order-free set signature: count + xor-fold of row hashes (bit_xor
-        # can't overflow under ANSI, unlike SUM(xxhash64); edges are
-        # distinct so xor cancellation needs a hash collision to lie, and
-        # the signature only gates EARLY stop — max_iter still bounds)
-        return e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-
-    prev = _sig(edges)
-    for _ in range(max_iter):
-        # large-star over the symmetric view: rewire larger neighbors to m
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m_large = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.join(m_large, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # small-star over (greater, smaller) orientation: rewire smaller
-        # neighbors AND the center to m
-        e = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m_small = e.groupBy("u").agg(F.min("v").alias("m"))
-        joined = e.join(m_small, "u")
-        small = (
-            joined.filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(m_small.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-        )
-        edges = (
-            small.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _sig(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # exhausted max_iter without a fixpoint: the edge set is not yet a
-        # star forest, so labels extracted from it would be silently WRONG
-        # (multi-level trees read as separate components) — refuse, exactly
-        # like connected_components' round-budget RuntimeError
-        raise RuntimeError(
-            f"connected_components_star did not reach its star-forest "
-            f"fixpoint within max_iter={max_iter} alternations; raise "
-            f"max_iter (rounds needed ~ log2(component size))"
-        )
-    # fixpoint star forest: every non-root points at its root (u > v = root)
-    labels = edges.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    roots = edges.select(F.col("v").alias("node"), F.col("v").alias("label")).distinct()
-    resolved = labels.union(roots).distinct()
-    return (
-        nodes.join(resolved, "node", "left")
-        .select("node", F.coalesce("label", "node").alias("label"))
-    )

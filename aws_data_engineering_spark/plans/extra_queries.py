@@ -21,6 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_data_engineering_spark.operators import graph as G
 from aws_data_engineering_spark.operators import multimodal as M
 from aws_data_engineering_spark.operators import similarity as SIM
 from aws_data_engineering_spark.operators import sampling as SAMP
@@ -1649,64 +1650,19 @@ def p08_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (no per-node adjacency collection); per-node participation then sums
 # each triangle into its three corners via one explode.
 # --------------------------------------------------------------------------
-_G02_EDGES_CTE = """edges AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst
-      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings) a
-      JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings) b
-        ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.e, b.e) >= 0.35)"""
-
-
 @register(
     "g02_triangle_count",
     f"""
-    WITH {_G02_EDGES_CTE},
-    tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e1.dst = e2.src
-      JOIN edges e3 ON e3.src = e1.src AND e3.dst = e2.dst
-    ), corners AS (
-      SELECT a AS node FROM tri
-      UNION ALL SELECT b FROM tri
-      UNION ALL SELECT c FROM tri
-    )
-    SELECT node, COUNT(*) AS n_triangles
-    FROM corners GROUP BY node
+    WITH {G.NEARDUP_EDGES_CTE},
+    {G.TRIANGLE_COUNTS_CTE}
+    SELECT node, n_triangles FROM tc
     """,
     "triangle counting over the near-dup graph: canonical a<b<c "
     "orientation, two equi-joins per triangle, per-node participation "
     "via corner explode — no adjacency lists, no driver-side graph",
 )
 def g02_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = SIM.exact_neardup_pairs(emb, threshold=0.35).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    # three self-join branches would replay the O(N^2 D) cosine scan three
-    # times; eager localCheckpoint materializes the (tiny) edge set once
-    # and truncates the lineage — the same pattern as pagerank/CC
-    edges = edges.localCheckpoint(eager=True)
-    e1 = edges.alias("e1")
-    e2 = edges.alias("e2")
-    e3 = edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .select(
-            F.col("e1.src").alias("a"),
-            F.col("e1.dst").alias("b"),
-            F.col("e2.dst").alias("c"),
-        )
-    )
-    corners = tri.select(
-        F.explode(F.array("a", "b", "c")).alias("node")
-    )
-    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
+    return G.triangle_counts(G.neardup_edges(_t(spark, sf_dir, "embeddings")))
 
 
 # --------------------------------------------------------------------------
@@ -2833,24 +2789,13 @@ def t20_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "g06_clustering_coefficient",
     f"""
-    WITH {_G02_EDGES_CTE},
+    WITH {G.NEARDUP_EDGES_CTE},
     und AS (
       SELECT src AS a, dst AS b FROM edges
       UNION ALL SELECT dst, src FROM edges
     ), deg AS (
       SELECT a AS node, COUNT(*) AS degree FROM und GROUP BY a
-    ), tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e1.dst = e2.src
-      JOIN edges e3 ON e3.src = e1.src AND e3.dst = e2.dst
-    ), corners AS (
-      SELECT a AS node FROM tri
-      UNION ALL SELECT b FROM tri
-      UNION ALL SELECT c FROM tri
-    ), tc AS (
-      SELECT node, COUNT(*) AS n_triangles FROM corners GROUP BY node
-    )
+    ), {G.TRIANGLE_COUNTS_CTE}
     SELECT d.node,
            CAST(d.degree AS BIGINT) AS degree,
            CAST(COALESCE(t.n_triangles, 0) AS BIGINT) AS n_triangles,
@@ -2864,35 +2809,12 @@ def t20_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "separates dense dup cliques (~1) from hub-and-spoke stars (~0)",
 )
 def g06_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = SIM.exact_neardup_pairs(emb, threshold=0.35).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
     # consumed by the degree agg and three triangle-join branches
-    edges = edges.localCheckpoint(eager=True)
-    und = edges.union(edges.select(F.col("dst"), F.col("src")))
-    deg = und.groupBy(F.col("src").alias("node")).agg(
+    edges = G.neardup_edges(_t(spark, sf_dir, "embeddings"))
+    deg = G.symmetric_edges(edges).groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .select(
-            F.col("e1.src").alias("a"),
-            F.col("e1.dst").alias("b"),
-            F.col("e2.dst").alias("c"),
-        )
-    )
-    tc = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
+    tc = G.triangle_counts(edges)
     return (
         deg.filter(F.col("degree") >= 2)
         .join(tc, "node", "left")

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import dedup as DD
+from aws_data_engineering_spark.operators import graph as G
 from aws_data_engineering_spark.operators import sampling as SAMP
 from aws_data_engineering_spark.operators import similarity as SIM
 from aws_data_engineering_spark.operators import sketch as SK
@@ -96,21 +97,13 @@ def d14_duplicate_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round every node adopts its most frequent neighbor label (ties -> smallest
 # label), which is one groupBy(node,label) count plus one row_number window —
 # both shuffle-parallel on node id. The edge set is eager-checkpointed once
-# (same pattern as g01/g02/CC) so the O(N^2 D) cosine scan never replays.
+# (G.neardup_edges) so the O(N^2 D) cosine scan never replays.
 # Deterministic: integer labels, total-order tie-break.
 # --------------------------------------------------------------------------
-_G03_EDGES_CTE = """edges AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst
-      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings) a
-      JOIN (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings) b
-        ON a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.e, b.e) >= 0.35)"""
-
-
 @register(
     "g03_label_propagation",
     f"""
-    WITH {_G03_EDGES_CTE},
+    WITH {G.NEARDUP_EDGES_CTE},
     und AS (
       SELECT src, dst FROM edges UNION ALL SELECT dst, src FROM edges
     ), l0 AS MATERIALIZED (
@@ -141,15 +134,7 @@ _G03_EDGES_CTE = """edges AS (
     "eager-checkpointed edge set",
 )
 def g03_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = (
-        SIM.exact_neardup_pairs(emb, threshold=0.35)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    und = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    und = G.symmetric_edges(G.neardup_edges(_t(spark, sf_dir, "embeddings")))
     labels = und.select(F.col("src").alias("node")).distinct().withColumn(
         "lbl", F.col("node")
     )
@@ -242,7 +227,7 @@ _G04_K, _G04_ROUNDS = 2, 3
 
 def _g04_oracle() -> str:
     sql = f"""
-    WITH {_G03_EDGES_CTE},
+    WITH {G.NEARDUP_EDGES_CTE},
     und0 AS (
       SELECT src, dst FROM edges UNION ALL SELECT dst, src FROM edges
     )"""
@@ -274,15 +259,7 @@ def _g04_oracle() -> str:
     "surfaces dense duplicate cliques",
 )
 def g04_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = (
-        SIM.exact_neardup_pairs(emb, threshold=0.35)
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .localCheckpoint(eager=True)
-    )
-    und = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    und = G.symmetric_edges(G.neardup_edges(_t(spark, sf_dir, "embeddings")))
     for _ in range(_G04_ROUNDS):
         keep = (
             und.groupBy(F.col("src").alias("node"))
@@ -462,18 +439,8 @@ def _g07_oracle() -> str:
     return f"""
     WITH lsh_pairs AS ({lsh}),
     edges AS (SELECT id_a AS src, id_b AS dst FROM lsh_pairs),
-    tri AS (
-      SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-      FROM edges e1
-      JOIN edges e2 ON e1.dst = e2.src
-      JOIN edges e3 ON e3.src = e1.src AND e3.dst = e2.dst
-    ), corners AS (
-      SELECT a AS node FROM tri
-      UNION ALL SELECT b FROM tri
-      UNION ALL SELECT c FROM tri
-    )
-    SELECT node, COUNT(*) AS n_triangles
-    FROM corners GROUP BY node
+    {G.TRIANGLE_COUNTS_CTE}
+    SELECT node, n_triangles FROM tc
     """
 
 
@@ -491,23 +458,7 @@ def g07_triangle_count_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # the LSH pair scan is cheap but feeds three join branches; one eager
     # materialization beats three bucket-join replays (g02 precedent)
-    edges = edges.localCheckpoint(eager=True)
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            e3,
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .select(
-            F.col("e1.src").alias("a"),
-            F.col("e1.dst").alias("b"),
-            F.col("e2.dst").alias("c"),
-        )
-    )
-    corners = tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
-    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_triangles"))
+    return G.triangle_counts(edges.localCheckpoint(eager=True))
 
 
 # --------------------------------------------------------------------------
@@ -587,14 +538,7 @@ def _d18_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE lsh_pairs AS ({lsh}),
-    edges AS (SELECT id_a AS a, id_b AS b FROM lsh_pairs
-              UNION SELECT id_b AS a, id_a AS b FROM lsh_pairs),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-    labeled AS (SELECT src AS doc_id, MIN(dst) AS cluster_id
-                FROM reach GROUP BY src),
+    {G.component_labels_cte_sql("lsh_pairs", "documents", "doc_id")},
     j AS (SELECT d.doc_id, d.n_chars, l.cluster_id
           FROM documents d JOIN labeled l USING (doc_id)),
     ranked AS (
@@ -622,14 +566,9 @@ def _d18_oracle() -> str:
     "— the scale-safe 'keep best copy' dedup finisher",
 )
 def d18_canonical_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _d18_edges(spark, sf_dir)
-    comp = DD.connected_components(pairs, "id_a", "id_b")
+    comp = G.connected_components(_d18_edges(spark, sf_dir), "id_a", "id_b")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    labeled = docs.join(
-        comp, docs["doc_id"] == comp["node"], "left"
-    ).select(
-        "doc_id", "n_chars", F.coalesce("label", "doc_id").alias("cluster_id")
-    )
+    labeled = G.label_components(docs, "doc_id", comp)
     wsize = Window.partitionBy("cluster_id")
     wcanon = (
         Window.partitionBy("cluster_id")
@@ -664,14 +603,7 @@ def _g08_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE lsh_pairs AS ({lsh}),
-    edges AS (SELECT id_a AS a, id_b AS b FROM lsh_pairs
-              UNION SELECT id_b AS a, id_a AS b FROM lsh_pairs),
-    reach(src, dst) AS (
-      SELECT vec_id, vec_id FROM embeddings
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-    labeled AS (SELECT src AS vec_id, MIN(dst) AS cluster_id
-                FROM reach GROUP BY src)
+    {G.component_labels_cte_sql("lsh_pairs", "embeddings", "vec_id")}
     SELECT vec_id, cluster_id,
            CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
              AS cluster_size
@@ -688,14 +620,9 @@ def _g08_oracle() -> str:
     "min-id labels",
 )
 def g08_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = _d18_edges(spark, sf_dir)
-    comp = DD.connected_components_star(pairs, "id_a", "id_b")
-    labeled = (
-        emb.select("vec_id")
-        .join(comp, F.col("vec_id") == comp["node"], "left")
-        .select("vec_id", F.coalesce("label", "vec_id").alias("cluster_id"))
-    )
+    comp = G.connected_components_star(_d18_edges(spark, sf_dir), "id_a", "id_b")
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id")
+    labeled = G.label_components(emb, "vec_id", comp)
     w = Window.partitionBy("cluster_id")
     return labeled.select(
         "vec_id",
@@ -722,14 +649,7 @@ def _g09_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE lsh_pairs AS ({lsh}),
-    edges AS (SELECT id_a AS a, id_b AS b FROM lsh_pairs
-              UNION SELECT id_b AS a, id_a AS b FROM lsh_pairs),
-    reach(src, dst) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-    labeled AS (SELECT src AS doc_id, MIN(dst) AS cluster_id
-                FROM reach GROUP BY src),
+    {G.component_labels_cte_sql("lsh_pairs", "documents", "doc_id")},
     sizes AS (SELECT cluster_id, COUNT(*) AS sz FROM labeled
               GROUP BY cluster_id)
     SELECT CAST(sz AS BIGINT) AS cluster_size,
@@ -749,12 +669,9 @@ def _g09_oracle() -> str:
     "included so n_docs sums to the corpus",
 )
 def g09_dup_cluster_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _d18_edges(spark, sf_dir)
-    comp = DD.connected_components(pairs, "id_a", "id_b")
+    comp = G.connected_components(_d18_edges(spark, sf_dir), "id_a", "id_b")
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    labeled = docs.join(
-        comp, docs["doc_id"] == comp["node"], "left"
-    ).select("doc_id", F.coalesce("label", "doc_id").alias("cluster_id"))
+    labeled = G.label_components(docs, "doc_id", comp)
     sizes = labeled.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
     return sizes.groupBy(F.col("sz").cast("bigint").alias("cluster_size")).agg(
         F.count(F.lit(1)).alias("n_clusters"),

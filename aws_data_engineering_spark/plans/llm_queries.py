@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import dedup as D
+from aws_data_engineering_spark.operators import graph as G
 from aws_data_engineering_spark.operators import similarity as S
 from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register
@@ -765,21 +766,14 @@ def t10_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d10_neardup_clusters",
-    """
+    f"""
     WITH RECURSIVE
       v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
       pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM v a JOIN v b ON a.vec_id < b.vec_id
         WHERE list_cosine_similarity(a.e, b.e) >= 0.45),
-      edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-                UNION SELECT id_b AS a, id_a AS b FROM pairs),
-      reach(src, dst) AS (
-        SELECT vec_id, vec_id FROM v
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-      labeled AS (SELECT src AS vec_id, MIN(dst) AS cluster_id
-                  FROM reach GROUP BY src)
+    {G.component_labels_cte_sql("pairs", "v", "vec_id")}
     SELECT vec_id, cluster_id,
            CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
              AS cluster_size,
@@ -795,12 +789,8 @@ def d10_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = S.exact_neardup_pairs(emb, threshold=0.45).select("id_a", "id_b")
-    comp = D.connected_components(pairs, "id_a", "id_b")
-    labeled = (
-        emb.select("vec_id")
-        .join(comp, F.col("vec_id") == comp["node"], "left")
-        .select("vec_id", F.coalesce("label", "vec_id").alias("cluster_id"))
-    )
+    comp = G.connected_components(pairs, "id_a", "id_b")
+    labeled = G.label_components(emb.select("vec_id"), "vec_id", comp)
     w = Window.partitionBy("cluster_id")
     return labeled.select(
         "vec_id",
@@ -1144,7 +1134,7 @@ _G01_PAIRS_CTE = """pairs AS (
 
 @register(
     "g01_pagerank_neardup_graph",
-    D.pagerank_oracle_sql(_G01_PAIRS_CTE, damping=0.85, iterations=3, round_to=6),
+    G.pagerank_oracle_sql(_G01_PAIRS_CTE, damping=0.85, iterations=3, round_to=6),
     "PageRank over the embedding near-dup graph (fixed 3 iterations, "
     "Pregel-on-DataFrames: one join + one agg shuffle per round) — "
     "graph-centrality curation signal: high-rank nodes are boilerplate "
@@ -1153,7 +1143,7 @@ _G01_PAIRS_CTE = """pairs AS (
 def g01_pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = S.exact_neardup_pairs(emb, threshold=0.45).select("id_a", "id_b")
-    ranks = D.pagerank(pairs, "id_a", "id_b", damping=0.85, iterations=3)
+    ranks = G.pagerank(pairs, "id_a", "id_b", damping=0.85, iterations=3)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 

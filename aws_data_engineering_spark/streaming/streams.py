@@ -785,10 +785,11 @@ def stream_minhash_dedup_sink(
 
     Per micro-batch (``foreachBatch``):
 
-    1. band rows for the batch — the same JVM ``minhash_signature`` +
-       ``minhash_bands`` columns d04's oracle pins bit-exactly (at 100 TB
-       swap in the Arrow signature kernel of ``minhash_candidate_pairs``;
-       identical output, measured 6-8× faster per row);
+    1. band rows for the batch — the JVM ``minhash_signature`` column
+       through d04's band explode (``minhash_band_rows``), both pinned
+       bit-exactly by d04's oracle (at 100 TB swap in the Arrow signature
+       kernel of ``minhash_candidate_pairs``; identical output, measured
+       6-8× faster per row);
     2. the earliest known holder of every touched bucket = min over the
        batch's own per-bucket minima and the state table (merge-on-read:
        state is append-only (band, band_hash, first_doc) rows, min-folded
@@ -821,17 +822,8 @@ def stream_minhash_dedup_sink(
             "doc_id", DD.minhash_signature("text", num_hashes).alias("sig")
         )
         bands = (
-            sig.select(
-                "doc_id",
-                F.explode(
-                    DD.minhash_bands(F.col("sig"), num_bands, rows_per_band)
-                ).alias("bb"),
-            )
-            .select(
-                "doc_id",
-                F.col("bb.band").alias("band"),
-                F.col("bb.band_hash").alias("band_hash"),
-            )
+            DD.minhash_band_rows(sig, num_bands, rows_per_band)
+            .drop("sig")
             # reused by the verdict join AND the state append; one eager
             # materialization beats recomputing the signature HOFs twice
             .localCheckpoint(eager=True)

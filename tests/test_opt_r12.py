@@ -78,32 +78,6 @@ def test_d04_signature_pass_single_materialization(spark, sf_dir):
     assert "MapInPandas" not in plan and "ArrowEval" not in plan, plan[:2000]
 
 
-def test_connected_components_star_equals_min_label(spark):
-    """The lazy-checkpoint rewrite must leave both algorithms' labels
-    identical on a planted graph (two components + chain + isolated pair)."""
-    from aws_data_engineering_spark.operators import dedup as D
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
-        "id_a bigint, id_b bigint",
-    )
-    cc = {
-        (r["node"], r["label"])
-        for r in D.connected_components(pairs).collect()
-    }
-    star = {
-        (r["node"], r["label"])
-        for r in D.connected_components_star(pairs).collect()
-    }
-    want = {
-        (1, 1), (2, 1), (3, 1), (4, 1),
-        (10, 10), (11, 10), (12, 10),
-        (20, 20), (21, 20),
-    }
-    assert cc == want
-    assert star == want
-
-
 def test_rollup_hwm_matches_data_max_and_one_file_per_bucket(spark, sf_dir, tmp_path):
     """_rollup_hwm (partition-directory listing) must equal the scanned
     max(bucket_start), and the repartitioned write must leave exactly one

@@ -295,12 +295,12 @@ def test_pagerank_matches_reference_impl(spark, edges):
     """DataFrame PageRank must match a plain-Python reference on arbitrary
     small graphs (self-loop-free) to float tolerance — same fixed
     iterations, damping, and undirected expansion."""
-    from aws_data_engineering_spark.operators import dedup as D
+    from aws_data_engineering_spark.operators import graph as G
 
     pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     got = {
         r["node"]: r["rank"]
-        for r in D.pagerank(pairs, "id_a", "id_b", damping=0.85, iterations=3).collect()
+        for r in G.pagerank(pairs, "id_a", "id_b", damping=0.85, iterations=3).collect()
     }
 
     # reference: dict-based, identical semantics
@@ -743,69 +743,6 @@ def test_d18_canonical_invariants(spark, sf_dir):
         for r in members:
             assert r["canonical_doc_id"] == canon
             assert r["cluster_size"] == len(members)
-
-
-def _py_components(edges):
-    """Reference union-find for component labels (min id per component)."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 30), st.integers(0, 30)),
-        min_size=1,
-        max_size=40,
-    ).map(lambda es: [e for e in es if e[0] != e[1]])
-)
-def test_star_components_match_union_find(spark, edges):
-    """Star contraction must label every edged node with its component
-    minimum, for arbitrary graphs — checked against a pure-Python
-    union-find reference."""
-    from hypothesis import assume
-
-    from aws_data_engineering_spark.operators import dedup as D
-
-    assume(edges)
-    df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    got = {
-        r["node"]: r["label"]
-        for r in D.connected_components_star(df).collect()
-    }
-    assert got == _py_components(edges)
-
-
-def test_star_components_close_chains_minlabel_refuses(spark):
-    """The division of labor between the two CC algorithms: a 60-hop chain
-    (diameter > d10's 25-round budget) converges under star contraction in
-    8 alternations, while min-label propagation must now REFUSE (a silent
-    partial labeling was the old, wrong behavior)."""
-    import pytest as _pytest
-
-    from aws_data_engineering_spark.operators import dedup as D
-
-    chain = [(i, i + 1) for i in range(60)]
-    df = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
-    got = {
-        r["node"]: r["label"]
-        for r in D.connected_components_star(df, max_iter=8).collect()
-    }
-    assert got == {i: 0 for i in range(61)}
-    with _pytest.raises(RuntimeError, match="connected_components_star"):
-        D.connected_components(df, max_iter=10)
 
 
 # ---------------------------------------------------------------------------

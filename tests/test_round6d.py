@@ -423,24 +423,6 @@ def test_t33_m19_null_and_negative_ids(spark, tmp_path):
     assert row["n_docs"] == 3  # NULL id excluded; negative id kept (md5 fine)
 
 
-def test_star_components_refuses_unconverged(spark):
-    """connected_components_star must raise (not return silently-wrong
-    labels) when max_iter alternations don't reach the star-forest
-    fixpoint — the same refusal contract as connected_components."""
-    import pytest
-
-    from aws_data_engineering_spark.operators import dedup as D
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(40)], "id_a bigint, id_b bigint"
-    )
-    with pytest.raises(RuntimeError, match="star-forest fixpoint"):
-        D.connected_components_star(chain, max_iter=1)
-    # and with enough rounds the same chain resolves to one component
-    labels = D.connected_components_star(chain, max_iter=20).collect()
-    assert {r["label"] for r in labels} == {0}
-
-
 def test_checkpoint_release_spares_foreign_blocks(spark, tmp_path):
     """bpe_learn's cleanup must release only ITS OWN checkpoint blocks: a
     localCheckpoint created before/alongside the call (simulating another

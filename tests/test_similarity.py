@@ -134,25 +134,6 @@ def test_jaccard_max_df_cap(spark, sf_dir):
     assert got == {(1, 2): 1.0}
 
 
-def test_connected_components_chain_and_islands(spark):
-    """Min-label propagation resolves a 4-node chain (worst-case diameter),
-    a 2-clique, and leaves disconnected pairs apart."""
-    pairs = spark.createDataFrame(
-        [(2, 9), (9, 4), (4, 7), (11, 12), (20, 21)],
-        "id_a bigint, id_b bigint",
-    )
-    out = {
-        r["node"]: r["label"]
-        for r in D.connected_components(pairs, "id_a", "id_b").collect()
-    }
-    # chain 2-9-4-7 all collapse to min id 2 despite no direct edges
-    assert out[2] == out[9] == out[4] == out[7] == 2
-    assert out[11] == out[12] == 11
-    assert out[20] == out[21] == 20
-    # only nodes that appear in pairs are labeled
-    assert set(out) == {2, 9, 4, 7, 11, 12, 20, 21}
-
-
 def test_pq_codebook_exact_dyadic_values():
     """Codebook values must be exact dyadic rationals (n/2048 - 0.25) so the
     SQL oracle's integer arithmetic reproduces them bit-for-bit."""
@@ -201,37 +182,6 @@ def test_pq_topk_recall_and_guard(spark, sf_dir):
     assert mean_ov >= 0.3, f"PQ top-5 overlap vs exact barely beats chance: {mean_ov}"
     with pytest.raises(S.ExactPathScaleError, match="lsh_topk"):
         S.pq_topk(queries, emb, cb, k=5, max_vectors=3)
-
-
-def test_triangle_count_known_graph(spark):
-    """Triangle counting on a hand-built graph: K4 minus one edge has
-    exactly 2 triangles; each of the shared-edge nodes sits in both."""
-    from aws_data_engineering_spark.plans.extra_queries import (  # noqa: F401
-        g02_triangle_count,
-    )
-    import pyspark.sql.functions as F2
-
-    edges = spark.createDataFrame(
-        # K4 on {1,2,3,4} minus edge (3,4): triangles (1,2,3) and (1,2,4)
-        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4)],
-        "src bigint, dst bigint",
-    )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F2.col("e1.dst") == F2.col("e2.src"))
-        .join(
-            e3,
-            (F2.col("e3.src") == F2.col("e1.src"))
-            & (F2.col("e3.dst") == F2.col("e2.dst")),
-        )
-        .select(
-            F2.col("e1.src").alias("a"),
-            F2.col("e1.dst").alias("b"),
-            F2.col("e2.dst").alias("c"),
-        )
-    )
-    got = {(r["a"], r["b"], r["c"]) for r in tri.collect()}
-    assert got == {(1, 2, 3), (1, 2, 4)}
 
 
 def test_ivfpq_subset_of_pq_scores(spark, sf_dir):

@@ -3,16 +3,16 @@ sequential A/B pairs lie — burst-credit drift orders them; only interleaved
 runs are admissible evidence).
 
 Two modes, both alternating subprocess runs between two trees (arm A = a
-checkout of the baseline commit, arm B = the working tree):
+checkout of the baseline commit, arm B = the working tree) and swapping
+which arm runs first from one rep or seed to the next:
 
-- bench mode: `bench.py name ...`, several reps each; prints each run's
-  timings and codegen compile counts, then per-query min/median per arm
-  plus the calibration series.
+- bench mode: `bench.py name ...` once per rep and arm; prints each run's
+  timings and codegen compile counts, then per query each arm's quartiles
+  and the B/A median ratio, plus the calibration series.
 - perfbench mode: `perfbench/run.py --workload W --seed N --trace 0` once per
-  seed and arm, swapping which arm runs first from one seed to the next;
-  prints every run, then per end-to-end metric each arm's median and
-  quartiles and the number of seeds B beat A on (direction from
-  BENCHMARK.json).
+  seed and arm; prints every run, then per end-to-end metric each arm's
+  quartiles, the B/A median ratio and the number of seeds B beat A on
+  (direction from BENCHMARK.json).
 
 Usage:
     python tools/ab_probe.py --a ../baseline --b . \
@@ -46,7 +46,7 @@ def bench_mode(a: str, b: str, sf: str | None, reps: int, n: int, names: list[st
     acc: dict[str, dict[str, list[float]]] = {"A": {}, "B": {}}
     cals: dict[str, list[float]] = {"A": [], "B": []}
     for rep in range(reps):
-        for arm, tree in (("A", a), ("B", b)):
+        for arm, tree in arm_order(rep, a, b):
             r = run_arm(tree, sf, n, names)
             cals[arm].append(r["cal"])
             for name, samples in r["timings"].items():
@@ -55,14 +55,7 @@ def bench_mode(a: str, b: str, sf: str | None, reps: int, n: int, names: list[st
                               "timings": r["timings"],
                               # absent in trees older than the count
                               "compiles": r.get("compiles")}), flush=True)
-    summary = {}
-    for name in names:
-        sa, sb = sorted(acc["A"][name]), sorted(acc["B"][name])
-        summary[name] = {
-            "A_min": sa[0], "B_min": sb[0],
-            "A_med": sa[len(sa) // 2], "B_med": sb[len(sb) // 2],
-            "min_speedup_A_over_B": round(sa[0] / sb[0], 3),
-        }
+    summary = {name: compare(acc["A"][name], acc["B"][name]) for name in names}
     print(json.dumps({"cals": cals, "summary": summary}, indent=1))
 
 
@@ -85,8 +78,7 @@ def perfbench_mode(a: str, b: str, workload: str, seeds: list[int], seconds: flo
     values: dict[str, dict[str, list[float]]] = {"A": {}, "B": {}}
     failed = {"A": 0, "B": 0}
     for k, seed in enumerate(seeds):
-        order = (("A", a), ("B", b)) if k % 2 == 0 else (("B", b), ("A", a))
-        for arm, tree in order:
+        for arm, tree in arm_order(k, a, b):
             r = run_perfbench(tree, workload, seed, seconds)
             failed[arm] += r["failed"]
             metrics = {name: m["value"] for name, m in r["metrics"].items()}
@@ -100,14 +92,24 @@ def perfbench_mode(a: str, b: str, workload: str, seeds: list[int], seconds: flo
         wins = sum(
             (y < x) if direction == "lower" else (y > x) for x, y in zip(va, vb)
         )
-        summary[name] = {
-            **{f"{arm}_{q}": round(v, 3) for arm, vs in (("A", va), ("B", vb))
-               for q, v in zip(("q1", "median", "q3"), quartiles(vs))},
-            "B_over_A_median": round(statistics.median(vb) / statistics.median(va), 3),
-            "B_wins": f"{wins}/{len(seeds)}",
-        }
+        summary[name] = {**compare(va, vb), "B_wins": f"{wins}/{len(seeds)}"}
     print(json.dumps({"workload": workload, "seeds": seeds, "failed": failed,
                       "summary": summary}, indent=1))
+
+
+def arm_order(k: int, a: str, b: str) -> tuple[tuple[str, str], ...]:
+    """Run order for rep or seed ``k``: A first on even k, B first on odd,
+    so neither arm always gets the warmer (or more throttled) slot."""
+    return (("A", a), ("B", b)) if k % 2 == 0 else (("B", b), ("A", a))
+
+
+def compare(va: list[float], vb: list[float]) -> dict:
+    """Each arm's q1/median/q3 and the B/A median ratio."""
+    return {
+        **{f"{arm}_{q}": round(v, 3) for arm, vs in (("A", va), ("B", vb))
+           for q, v in zip(("q1", "median", "q3"), quartiles(vs))},
+        "B_over_A_median": round(statistics.median(vb) / statistics.median(va), 3),
+    }
 
 
 def quartiles(values: list[float]) -> list[float]:
