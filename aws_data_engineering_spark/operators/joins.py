@@ -18,7 +18,7 @@ Both are algebraic rewrites — results are identical to the unsalted plan
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -1,15 +1,25 @@
-"""Embedding similarity search (approximate-nearest-neighbor).
+"""Embedding similarity search (exact and approximate nearest neighbours).
 
-- ``brute_force_topk``: exact cosine top-k — the correctness baseline.
-  Small query set shipped into a numpy ``mapInPandas`` kernel over the
-  candidate table; per-batch partial top-k keeps the shuffle at ~k·Q rows
-  per partition.
-- ``lsh_topk``: random-hyperplane LSH bucketing — the 100 TB path. Vectors
-  are bucketed by sign-pattern; only same-bucket (plus probing) pairs are
-  compared, turning the O(N·Q) cross join into a bucket-local join.
+Every top-k search here is a partition-local top-k merged by one global
+ranking window, and the numpy search kernels take one of two shared paths:
 
-Everything computes in double precision (cast from float32 storage) so
-results are reproducible and oracle-comparable.
+- the probe scan (:func:`_probe_scan_topk`) behind ``brute_force_topk``,
+  ``mips_topk``, ``pq_topk`` and ``hard_negative_topk``: a small, guarded
+  probe set is collected and shipped into one ``mapInPandas`` kernel over
+  the candidate table; each Arrow batch emits only its per-probe top-k, so
+  the one shuffle moves ~k·Q rows per partition. The score (sequential
+  cosine, sequential dot, negated integer PQ ADC) and the excluded pairs
+  (self matches, same-label negatives) are inputs;
+- the inverted lists (:func:`_ivf_fns`) behind ``ivf_topk``,
+  ``ivf_fixed_topk`` and the IVFPQ family: candidates join the list of
+  their max-cosine centroid, each query probes its ``n_probe`` nearest
+  lists, and a per-list kernel keeps each query's list-local top-k.
+
+Both paths share the one row-wise top-k (:func:`_local_topk_fns`) and the
+one window (:func:`_rank`). Hyperplane LSH (``lsh_topk``,
+``bucketed_neardup_pairs``) and the projection tree bucket instead of
+probing. Everything computes in double precision (cast from float32
+storage) so results are reproducible and oracle-comparable.
 """
 
 from __future__ import annotations
@@ -62,7 +72,7 @@ def _as_double(c: Column) -> Column:
     return c.cast("array<double>")
 
 
-def _seq_cosine_fns():
+def _seq_cosine_fns(normalize: bool = True):
     """The ONE definition of the kernel-side cosine contract, as a factory
     (the returned closure is cloudpickle'd BY VALUE into worker closures —
     a module-level helper would need this package importable on executors,
@@ -81,29 +91,185 @@ def _seq_cosine_fns():
     norm accumulator instead of computing it twice — bit-identical output
     (the per-element products are the same IEEE sequence), just without the
     duplicated O(N·D) norm pass the r2 kernel consolidation introduced.
+
+    ``normalize=False`` returns the raw dot-product matrix instead (the
+    same fold without the norms) — DuckDB ``list_inner_product``'s order.
     """
     import numpy as np
+
+    def seq_dot_matrix(a, b):
+        acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+        for j in range(a.shape[1]):
+            acc += a[:, j : j + 1] * b[None, :, j]
+        return acc
+
+    def seq_norms(a):
+        n2 = np.zeros(a.shape[0], dtype=np.float64)
+        for j in range(a.shape[1]):
+            n2 += a[:, j] * a[:, j]
+        return np.maximum(np.sqrt(n2), 1e-300)
 
     def seq_cosine_matrix(a, b=None):
         sym = b is None or b is a
         if sym:
             b = a
-        dim = a.shape[1]
-        acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-        an2 = np.zeros(a.shape[0], dtype=np.float64)
-        bn2 = an2 if sym else np.zeros(b.shape[0], dtype=np.float64)
-        for j in range(dim):
-            acc += a[:, j : j + 1] * b[None, :, j]
-            an2 += a[:, j] * a[:, j]
-            if not sym:
-                bn2 += b[:, j] * b[:, j]
-        an = np.maximum(np.sqrt(an2), 1e-300)
-        bn = an if sym else np.maximum(np.sqrt(bn2), 1e-300)
+        an = seq_norms(a)
+        bn = an if sym else seq_norms(b)
         # floor the PRODUCT too: 1e-300 * 1e-300 underflows to 0.0, so a
         # zero×zero pair would be 0/0 = NaN despite the per-norm floors
-        return acc / np.maximum(an[:, None] * bn[None, :], 1e-300)
+        return seq_dot_matrix(a, b) / np.maximum(an[:, None] * bn[None, :], 1e-300)
 
-    return seq_cosine_matrix
+    return seq_cosine_matrix if normalize else seq_dot_matrix
+
+
+def _local_topk_fns():
+    """The ONE partition-local top-k of both search paths, as a by-value
+    factory like :func:`_seq_cosine_fns`.
+
+    ``local_topk(score, excluded, ids, k)`` takes a (Q, N) score matrix
+    (higher ranks first), an optional (Q, N) mask of pairs that may never
+    match and the N candidate ids, and returns the (row, col) indices of
+    each row's best ``k`` admissible entries, ties by id ascending — the
+    global window's (score desc, id asc) order. One row-wise ``lexsort``
+    on (excluded, -score, id) serves every query at once; an IVF query
+    picks its probed lists with it too (score = centroid cosine, ids =
+    list ids, nothing excluded)."""
+    import numpy as np
+
+    def local_topk(score, excluded, ids, k):
+        take = min(int(k), score.shape[1])
+        keys = (np.broadcast_to(ids, score.shape), -score)
+        if excluded is not None:
+            keys += (excluded,)
+        cols = np.lexsort(keys, axis=1)[:, :take].ravel()
+        rows = np.repeat(np.arange(score.shape[0]), take)
+        if excluded is not None:
+            keep = ~excluded[rows, cols]
+            rows, cols = rows[keep], cols[keep]
+        return rows, cols
+
+    return local_topk
+
+
+def _scorer_fns(metric: str, codebook=None):
+    """The ranking score of both search paths, as a by-value factory:
+    ``score(qm, cands)`` → (Q, N), higher first, for a (Q, D) query matrix
+    against a pandas frame of N candidates.
+
+    - ``cosine`` / ``dot``: the sequential folds of :func:`_seq_cosine_fns`
+      over the frame's ``v`` vectors;
+    - ``adc``: PQ's negated integer asymmetric distance
+      (:func:`_pq_fns`), over the frame's ``codes`` when it carries them
+      (an encoded inverted list), else encoding its ``v`` on the fly.
+    """
+    import numpy as np
+
+    if metric == "adc":
+        encode, adc = _pq_fns(codebook)
+
+        def score(qm, cands):
+            if "codes" in cands:
+                codes = np.array(list(cands["codes"]), dtype=np.int64)
+            else:
+                codes = encode(np.array(list(cands["v"]), dtype=np.float64))
+            return -adc(qm, codes)
+
+        return score
+    fold = _seq_cosine_fns(normalize=metric == "cosine")
+
+    def score(qm, cands):
+        return fold(qm, np.array(list(cands["v"]), dtype=np.float64))
+
+    return score
+
+
+def _keyed_vectors(df: DataFrame, vec_col: str, **keys: str) -> DataFrame:
+    """The kernels' input projection: each ``name=source`` key column, then
+    the vector as ``v`` array<double>."""
+    return df.select(
+        *[F.col(src).alias(name) for name, src in keys.items()],
+        _as_double(F.col(vec_col)).alias("v"),
+    )
+
+
+def _rank(scored: DataFrame, k: int, part: str, tie: str, score: str = "score") -> DataFrame:
+    """The global top-k window every search ends in: ``rnk`` = row_number
+    per ``part`` by (``score`` desc, ``tie`` asc); keeps rnk <= k."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _probe_scan_topk(
+    probes: DataFrame,
+    candidates: DataFrame,
+    vec_col: str,
+    k: int,
+    score,
+    *,
+    probe_keys: dict[str, tuple[str, str]],
+    cand_keys: dict[str, tuple[str, str]],
+    max_vectors: int,
+    op: str,
+    alternative: str,
+    score_type: str = "double",
+    exclude: tuple[tuple[str, str], ...] = (),
+) -> DataFrame:
+    """The exact-path top-k runner. ``probe_keys`` / ``cand_keys`` map each
+    output key to its (source column, type); the first key of each side is
+    its id.
+
+    Plan shape: collect the small probe set (guarded by ``max_vectors``;
+    past it :class:`ExactPathScaleError` names ``alternative``), ship it
+    inside one numpy ``mapInPandas`` kernel over the candidate table, and
+    emit only each Arrow batch's per-probe top-k — so the one shuffle (the
+    global window keyed by probe id) moves ~k·Q rows per partition, never
+    the N×Q score matrix, and the corpus never leaves the scan stage.
+
+    ``score`` is a :func:`_scorer_fns` scorer. A pair never matches when
+    its ids are equal or when any ``exclude`` (probe key, candidate key)
+    pair is equal. Returns every key, ``score`` and ``rnk``.
+    """
+    p_names, c_names = list(probe_keys), list(cand_keys)
+    probes = _keyed_vectors(probes, vec_col, **{n: src for n, (src, _) in probe_keys.items()})
+    _guard_exact_path(probes.select(p_names[0]), max_vectors, op, alternative)
+    rows = probes.collect()
+    p_keys = {n: [r[n] for r in rows] for n in p_names}
+    p_vecs = [list(r["v"]) for r in rows]
+    same = ((p_names[0], c_names[0]),) + tuple(exclude)
+    local_topk = _local_topk_fns()
+    kk = int(k)
+
+    def kernel(batches):
+        import numpy as np_w
+        import pandas as pd_w
+
+        pm = np_w.asarray(p_vecs, dtype=np_w.float64)  # (Q, D)
+        pk = {n: np_w.asarray(v) for n, v in p_keys.items()}
+        for pdf in batches:
+            if not len(pdf) or not len(pm):
+                continue
+            ck = {n: pdf[n].to_numpy() for n in c_names}
+            s = score(pm, pdf)  # (Q, B)
+            excluded = np_w.zeros(s.shape, dtype=bool)
+            for p_key, c_key in same:
+                excluded |= pk[p_key][:, None] == ck[c_key][None, :]
+            r, c = local_topk(s, excluded, ck[c_names[0]], kk)
+            yield pd_w.DataFrame(
+                {
+                    **{n: v[r] for n, v in pk.items()},
+                    **{n: v[c] for n, v in ck.items()},
+                    "score": s[r, c],
+                }
+            )
+
+    schema = ", ".join(f"{n} {t}" for n, (_, t) in {**probe_keys, **cand_keys}.items())
+    spark = candidates.sparkSession
+    scored = (
+        _keyed_vectors(candidates, vec_col, **{n: src for n, (src, _) in cand_keys.items()})
+        .repartition(spark.sparkContext.defaultParallelism)
+        .mapInPandas(kernel, f"{schema}, score {score_type}")
+    )
+    return _rank(scored, kk, p_names[0], c_names[0])
 
 
 def brute_force_topk(
@@ -117,12 +283,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k of every query against all candidates.
 
-    Plan shape: collect the (small, guarded by ``max_vectors``) query set
-    to the driver,
-    ship it inside a numpy ``mapInPandas`` kernel over the candidate table,
-    emit only each Arrow batch's per-query top-k — so the one shuffle (the
-    final window keyed by query id) moves ~k·Q rows per partition, never
-    the N×Q cross product. For large Q, swap to ``lsh_topk``.
+    Plan shape: the probe scan (:func:`_probe_scan_topk`) — the (small,
+    guarded by ``max_vectors``) query set rides into one ``mapInPandas``
+    kernel over the candidate table and each Arrow batch emits only its
+    per-query top-k. For large Q, swap to ``lsh_topk``.
 
     Floating-point contract: the kernel accumulates dot products and norms
     dimension-by-dimension (a loop of vectorized adds), which is the exact
@@ -131,58 +295,19 @@ def brute_force_topk(
     implementation while running ~10× faster (interpreted higher-order
     lambdas are never codegen'd; see operators/dedup.py for the same trade).
     """
-    q_proj = queries.select(
-        F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+    ranked = _probe_scan_topk(
+        queries,
+        candidates,
+        vec_col,
+        k,
+        _scorer_fns("cosine"),
+        probe_keys={"query_id": (query_id, "bigint")},
+        cand_keys={"neighbor_id": (cand_id, "bigint")},
+        max_vectors=max_vectors,
+        op="brute_force_topk",
+        alternative="lsh_topk",
     )
-    _guard_exact_path(
-        queries.select(query_id), max_vectors, "brute_force_topk", "lsh_topk"
-    )
-    q_rows = q_proj.collect()
-    q_ids = [r["query_id"] for r in q_rows]
-    q_vecs = [list(r["q_vec"]) for r in q_rows]
-    kk = int(k)
-    seq_cos = _seq_cosine_fns()
-
-    def kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qm = np_w.asarray(q_vecs, dtype=np_w.float64)  # (Q, D)
-        qid = np_w.asarray(q_ids)
-        for pdf in batches:
-            if not len(pdf) or not len(qid):
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            cm = np_w.array(list(pdf["c_vec"]), dtype=np_w.float64)  # (B, D)
-            sims = seq_cos(cm, qm)  # (B, Q)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qid)):
-                col = sims[:, qi]
-                mask = ids != qid[qi]
-                cand_ids, cand_sims = ids[mask], col[mask]
-                take = min(kk, cand_ids.size)
-                if not take:
-                    continue
-                # batch-local top-k, ties broken by neighbor_id asc
-                order = np_w.lexsort((cand_ids, -cand_sims))[:take]
-                out_q.extend([qid[qi]] * take)
-                out_n.extend(cand_ids[order])
-                out_s.extend(cand_sims[order])
-            yield pd_w.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "sim": out_s}
-            )
-
-    spark = candidates.sparkSession
-    c = candidates.select(
-        F.col(cand_id).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    scored = c.mapInPandas(kernel, "query_id bigint, neighbor_id bigint, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rnk")
-    )
+    return ranked.select("query_id", "neighbor_id", F.round("score", 4).alias("sim"), "rnk")
 
 
 def mips_topk(
@@ -199,67 +324,23 @@ def mips_topk(
     a long vector IS a strong match (cosine's normalization would erase the
     popularity/magnitude signal the model trained into the norms).
 
-    Same plan shape and guard as :func:`brute_force_topk`: broadcast the
-    small query set into a numpy ``mapInPandas`` kernel over the candidate
-    table, emit per-batch top-k, one final window shuffle of ~k·Q rows.
-    The dot products accumulate dimension-by-dimension (the
+    Same probe scan and guard as :func:`brute_force_topk`. The dot products accumulate dimension-by-dimension (the
     ``_seq_cosine_fns`` IEEE contract minus the norms), matching DuckDB's
     ``list_inner_product`` fold exactly — so even this approximate-free
     kernel is bit-oracle-checkable."""
-    q_proj = queries.select(
-        F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+    ranked = _probe_scan_topk(
+        queries,
+        candidates,
+        vec_col,
+        k,
+        _scorer_fns("dot"),
+        probe_keys={"query_id": (query_id, "bigint")},
+        cand_keys={"neighbor_id": (cand_id, "bigint")},
+        max_vectors=max_vectors,
+        op="mips_topk",
+        alternative="lsh_topk",
     )
-    _guard_exact_path(
-        queries.select(query_id), max_vectors, "mips_topk", "lsh_topk"
-    )
-    q_rows = q_proj.collect()
-    q_ids = [r["query_id"] for r in q_rows]
-    q_vecs = [list(r["q_vec"]) for r in q_rows]
-    kk = int(k)
-
-    def kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qm = np_w.asarray(q_vecs, dtype=np_w.float64)  # (Q, D)
-        qid = np_w.asarray(q_ids)
-        for pdf in batches:
-            if not len(pdf) or not len(qid):
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            cm = np_w.array(list(pdf["c_vec"]), dtype=np_w.float64)  # (B, D)
-            # dim-by-dim accumulation: the left-to-right IEEE sequence of
-            # DuckDB's list_inner_product (same contract as seq_cosine)
-            acc = np_w.zeros((cm.shape[0], qm.shape[0]), dtype=np_w.float64)
-            for j in range(cm.shape[1]):
-                acc += cm[:, j : j + 1] * qm[None, :, j]
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qid)):
-                col = acc[:, qi]
-                mask = ids != qid[qi]
-                cand_ids, cand_dots = ids[mask], col[mask]
-                take = min(kk, cand_ids.size)
-                if not take:
-                    continue
-                order = np_w.lexsort((cand_ids, -cand_dots))[:take]
-                out_q.extend([qid[qi]] * take)
-                out_n.extend(cand_ids[order])
-                out_s.extend(cand_dots[order])
-            yield pd_w.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "dot": out_s}
-            )
-
-    spark = candidates.sparkSession
-    c = candidates.select(
-        F.col(cand_id).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    scored = c.mapInPandas(kernel, "query_id bigint, neighbor_id bigint, dot double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("dot", 4).alias("dot"), "rnk")
-    )
+    return ranked.select("query_id", "neighbor_id", F.round("score", 4).alias("dot"), "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -292,6 +373,16 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
         )
         bucket = bucket + bit
     return bucket
+
+
+def _lsh_bucket_sql(dim: int, n_planes: int) -> str:
+    """DuckDB twin of :func:`lsh_bucket` over a DOUBLE[] column ``e``: the
+    same literal LCG hyperplanes, bit i = sign(e · plane_i)."""
+    return " + ".join(
+        f"CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in plane)}]) > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i, plane in enumerate(_hyperplanes(dim, n_planes))
+    )
 
 
 def recommended_lsh_planes(n_vectors: int, target_bucket: int = 1024) -> int:
@@ -384,11 +475,8 @@ def lsh_topk(
     scored = pairs.select(
         "query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rnk")
+    return _rank(scored, k, "query_id", "neighbor_id", "sim").select(
+        "query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rnk"
     )
 
 
@@ -419,6 +507,129 @@ def _train_centroids_np(sample, n_centroids: int, iters: int = 5):
     return cents
 
 
+def _ivf_fns(centroids, n_probe: int = 1, k: int = 1, score=None, codebook=None):
+    """Worker kernels of the one inverted-list path, pickled BY VALUE
+    (everything they touch is built inside this factory):
+
+    - ``assign``: (id, v) → (id, list_id, v) — or (id, list_id, codes), the
+      PQ code per subspace, when a ``codebook`` is given. The list is the
+      max-cosine centroid; argmax's first maximum is the lowest list id on
+      ties, the oracles' ``ORDER BY sim DESC, cid``.
+    - ``probe``: (id, v) → one (id, v, list_id) row per probed list, the
+      ``n_probe`` highest-cosine centroids by (sim desc, list id asc).
+    - ``score_group``: one list's tagged query (``side = 'q'``) and
+      candidate (``'c'``) rows → each query's list-local top-k
+      (query_id, neighbor_id, score) under the :func:`_scorer_fns`
+      ``score``, self-matches excluded. A candidate sits in one list and a
+      query's probed lists are distinct, so every pair is scored once; a
+      global top-k neighbor precedes < k candidates in the total (score
+      desc, id asc) order, hence < k within its own list, so the union of
+      the list-local top-k always contains the global top-k.
+    """
+    import numpy as np
+
+    cents = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
+    list_ids = np.arange(len(cents))
+    seq_cos = _seq_cosine_fns()
+    local_topk = _local_topk_fns()
+    encode = None if codebook is None else _pq_fns(codebook)[0]
+
+    def vectors(col):
+        return np.array(list(col), dtype=np.float64)
+
+    def assign(batches):
+        import pandas as pd_w
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            m = vectors(pdf["v"])
+            out = {"id": pdf["id"], "list_id": seq_cos(m, cents).argmax(axis=1)}
+            if encode is None:
+                out["v"] = pdf["v"]
+            else:
+                out["codes"] = list(encode(m))
+            yield pd_w.DataFrame(out)
+
+    def probe(batches):
+        import pandas as pd_w
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            sims = seq_cos(vectors(pdf["v"]), cents)
+            rows, lists = local_topk(sims, None, list_ids, n_probe)
+            yield pd_w.DataFrame(
+                {
+                    "id": pdf["id"].to_numpy()[rows],
+                    "v": pdf["v"].to_numpy()[rows],
+                    "list_id": lists,
+                }
+            )
+
+    def score_group(pdf):
+        import pandas as pd_w
+
+        qs = pdf[pdf["side"] == "q"]
+        cs = pdf[pdf["side"] == "c"]
+        qids = qs["id"].to_numpy()
+        cids = cs["id"].to_numpy()
+        if not len(qids) or not len(cids):
+            return pd_w.DataFrame({"query_id": qids[:0], "neighbor_id": cids[:0], "score": []})
+        s = score(vectors(qs["v"]), cs)
+        rows, cols = local_topk(s, qids[:, None] == cids[None, :], cids, k)
+        return pd_w.DataFrame(
+            {"query_id": qids[rows], "neighbor_id": cids[cols], "score": s[rows, cols]}
+        )
+
+    return assign, probe, score_group
+
+
+def _ivf_assign(
+    candidates: DataFrame, centroids, cand_id: str, vec_col: str, codebook=None
+) -> DataFrame:
+    """The inverted lists: one Arrow pass assigning every candidate to its
+    list (see :func:`_ivf_fns`), carrying its vector or, with a
+    ``codebook``, only its PQ codes. The pass runs in the scan stage: the
+    assignment is cheap next to the scoring, which the ``list_id`` shuffle
+    spreads over the cluster anyway, so a fan-out repartition would only
+    add a stage (measured slower at sf0.1 on a 4-core local[4] host)."""
+    assign = _ivf_fns(centroids, codebook=codebook)[0]
+    payload = "v array<double>" if codebook is None else "codes array<int>"
+    return _keyed_vectors(candidates, vec_col, id=cand_id).mapInPandas(
+        assign, f"id bigint, list_id int, {payload}"
+    )
+
+
+def _ivf_search(
+    queries: DataFrame,
+    lists: DataFrame,
+    centroids,
+    k: int,
+    n_probe: int,
+    score,
+    score_type: str,
+    query_id: str,
+    vec_col: str,
+) -> DataFrame:
+    """Probe, score and rank over :func:`_ivf_assign` lists: each query
+    expands to its ``n_probe`` lists, ``groupBy(list_id).applyInPandas``
+    keeps each query's list-local top-k — an equi-join on list id, never a
+    cross product — and one global window ranks. Returns (query_id,
+    neighbor_id, score, rnk)."""
+    _, probe, score_group = _ivf_fns(centroids, n_probe, k, score)
+    q = _keyed_vectors(queries, vec_col, id=query_id).mapInPandas(
+        probe, "id bigint, v array<double>, list_id int"
+    )
+    tagged = q.withColumn("side", F.lit("q")).unionByName(
+        lists.withColumn("side", F.lit("c")), allowMissingColumns=True
+    )
+    scored = tagged.groupBy("list_id").applyInPandas(
+        score_group, f"query_id bigint, neighbor_id bigint, score {score_type}"
+    )
+    return _rank(scored, k, "query_id", "neighbor_id")
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -432,14 +643,14 @@ def ivf_topk(
 ) -> DataFrame:
     """Approximate cosine top-k via an inverted-file index.
 
-    Structure: (1) train centroids on a deterministic bounded sample;
-    (2) assign every candidate to its nearest centroid — one Arrow pass,
-    list partitioned by centroid id; (3) each query probes its ``n_probe``
-    nearest centroids; (4) per-(centroid) numpy kernel scores query×member
-    pairs; (5) global window top-k per query. The expensive compare is
-    bucket-local — the same equi-join-on-list-id shape faiss shards across
-    machines — so cost scales with corpus/n_centroids × n_probe, not the
-    full cross product.
+    Structure: (1) train centroids with k-means on a deterministic bounded
+    sample; (2) search them as :func:`ivf_fixed_topk` does — every
+    candidate joins the list of its max-COSINE centroid (the k-means
+    itself runs in L2), each query probes its ``n_probe`` highest-cosine
+    lists, a per-list numpy kernel keeps each query's list-local top-k,
+    and one global window ranks. The expensive compare is list-local — the
+    same equi-join-on-list-id shape faiss shards across machines — so cost
+    scales with corpus/n_centroids × n_probe, not the full cross product.
 
     Exactness contract: with ``n_probe == n_centroids`` the scored set is
     the whole corpus and the kernel cosine is the ``_seq_cosine_fns``
@@ -447,12 +658,12 @@ def ivf_topk(
     BIT-identical to ``brute_force_topk`` regardless of where k-means put
     the centroids, which is what lets the trained path carry the exact
     oracle (s04) while partial probing stays a recall-tested
-    approximation.
+    approximation. An empty candidate table yields an empty result.
     """
     # orderBy before limit → TakeOrdered: the training sample is the same
     # rows regardless of partitioning/scan order (a bare limit() samples
     # whatever partition responds first, making centroids run-dependent)
-    stride_sample = (
+    sample = (
         candidates.select(
             F.col(cand_id).alias("k"), _as_double(F.col(vec_col)).alias("v")
         )
@@ -460,100 +671,20 @@ def ivf_topk(
         .limit(train_cap)
         .collect()
     )
-    cents = _train_centroids_np([r["v"] for r in stride_sample], n_centroids)
-    cents_list = [[float(x) for x in row] for row in cents]
-    np_k, np_probe = k, n_probe
-
-    def assign_batches(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        c = np_w.asarray(cents_list)
-        for pdf in batches:
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            yield pd_w.DataFrame(
-                {"id": pdf["id"], "v": pdf["v"], "list_id": d.argmin(axis=1).astype(int)}
-            )
-
-    def probe_batches(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        c = np_w.asarray(cents_list)
-        for pdf in batches:
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            near = np_w.argsort(d, axis=1)[:, :np_probe]
-            ids, vs, lids = [], [], []
-            for i in range(len(pdf)):
-                for lid in near[i]:
-                    ids.append(pdf["id"].iloc[i])
-                    vs.append(pdf["v"].iloc[i])
-                    lids.append(int(lid))
-            yield pd_w.DataFrame({"id": ids, "v": vs, "list_id": lids})
-
-    seq_cos = _seq_cosine_fns()
-
-    def score_group(pdf):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        if qs.empty or cs.empty:
-            return pd_w.DataFrame(
-                {"query_id": [], "neighbor_id": [], "sim": []}
-            ).astype({"query_id": "int64", "neighbor_id": "int64", "sim": "float64"})
-        qm = np_w.array(list(qs["v"]), dtype=np_w.float64)
-        cm = np_w.array(list(cs["v"]), dtype=np_w.float64)
-        # seq_cos = the brute_force_topk / DuckDB list_cosine_similarity
-        # IEEE sequence, so with n_probe == n_centroids this path is
-        # BIT-identical to exact search (s04's oracle identity); lexsort
-        # breaks sim ties by neighbor_id asc, matching the global window
-        sims = seq_cos(cm, qm)  # (C, Q)
-        out_q, out_c, out_s = [], [], []
-        qids = qs["id"].to_numpy()
-        cids = cs["id"].to_numpy()
-        # per-query local top-k inside this list (global k resolved later);
-        # a global top-k neighbor precedes < k candidates in the total
-        # (sim desc, id asc) order, hence < k within its own list — so the
-        # union of per-list top-k always contains the global top-k
-        for i in range(len(qids)):
-            col = sims[:, i]
-            mask = cids != qids[i]
-            cand_ids, cand_sims = cids[mask], col[mask]
-            take = min(np_k, cand_ids.size)
-            if not take:
-                continue
-            order = np_w.lexsort((cand_ids, -cand_sims))[:take]
-            out_q.extend([qids[i]] * take)
-            out_c.extend(cand_ids[order])
-            out_s.extend(cand_sims[order])
-        return pd_w.DataFrame({"query_id": out_q, "neighbor_id": out_c, "sim": out_s})
-
-    q = queries.select(
-        F.col(query_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).mapInPandas(probe_batches, "id bigint, v array<double>, list_id int")
-    c = candidates.select(
-        F.col(cand_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).mapInPandas(assign_batches, "id bigint, v array<double>, list_id int")
-
-    tagged = q.withColumn("side", F.lit("q")).unionByName(
-        c.withColumn("side", F.lit("c"))
-    )
-    scored = tagged.groupBy("list_id").applyInPandas(
-        score_group, "query_id bigint, neighbor_id bigint, sim double"
-    )
-    # a (query, neighbor) pair can appear via several probed lists
-    dedup = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        dedup.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        # rank over RAW sims, round only the emitted value — the
-        # brute_force_topk output contract
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rnk")
+    if not sample:
+        return candidates.sparkSession.createDataFrame(
+            [], "query_id bigint, neighbor_id bigint, sim double, rnk int"
+        )
+    cents = _train_centroids_np([r["v"] for r in sample], n_centroids)
+    return ivf_fixed_topk(
+        queries,
+        candidates,
+        cents.tolist(),
+        k=k,
+        n_probe=n_probe,
+        query_id=query_id,
+        cand_id=cand_id,
+        vec_col=vec_col,
     )
 
 
@@ -580,113 +711,31 @@ def ivf_fixed_topk(
     - probing: each query expands to its ``n_probe`` highest-cosine
       centroids (one row per probed list);
     - scoring: cosine within probed lists only → equi-join on list id,
-      never a cross product; global top-k per query by window.
+      never a cross product; each list keeps its queries' local top-k and
+      one global window ranks.
 
-    All three stages run as Arrow numpy kernels whose dot/norm accumulation
-    is dimension-sequential (a j-loop of vectorized adds) — the exact IEEE
-    sequence of the DuckDB oracle's ``list_cosine_similarity`` (proven
-    bit-exact by s01/e01/e02), so assignment, probing, and ranking agree
-    with :func:`ivf_fixed_oracle_sql` bit-for-bit while running ~10× faster
+    All three stages are the inverted-list kernels of :func:`_ivf_fns`,
+    whose dot/norm accumulation is dimension-sequential (a j-loop of
+    vectorized adds) — the exact IEEE sequence of the DuckDB oracle's
+    ``list_cosine_similarity`` (proven bit-exact by s01/e01/e02), so
+    assignment, probing, and ranking agree with
+    :func:`ivf_fixed_oracle_sql` bit-for-bit while running ~10× faster
     than the interpreted JVM-HOF fold this replaced (higher-order lambdas
     are never codegen'd; K centroids × D dims per row adds up).
     """
-    cents_list = [[float(x) for x in c] for c in centroids]
-    np_probe = int(n_probe)
-    seq_cos = _seq_cosine_fns()  # the module's one bit-exact cosine kernel
-
-    def _cent_sims(m, np_w):
-        # (B×D) vs (K×D) centroid cosine via the shared kernel
-        return seq_cos(m, np_w.asarray(cents_list, dtype=np_w.float64))
-
-    def assign_kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            sims = _cent_sims(m, np_w)
-            # argmax returns the FIRST max → lowest centroid id on ties,
-            # matching the oracle's ORDER BY sim DESC, cid ASC ... rk = 1
-            yield pd_w.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "v": pdf["v"],
-                    "list_id": sims.argmax(axis=1).astype(int),
-                }
-            )
-
-    def probe_kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            sims = _cent_sims(m, np_w)
-            ids, vs, lids = [], [], []
-            for i in range(len(pdf)):
-                # stable (-sim, cid) order == ORDER BY sim DESC, cid ASC
-                order = np_w.lexsort(
-                    (np_w.arange(sims.shape[1]), -sims[i])
-                )[:np_probe]
-                for lid in order:
-                    ids.append(pdf["id"].iloc[i])
-                    vs.append(pdf["v"].iloc[i])
-                    lids.append(int(lid))
-            yield pd_w.DataFrame({"id": ids, "v": vs, "list_id": lids})
-
-    def score_group(pdf):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        empty = pd_w.DataFrame({"query_id": [], "neighbor_id": [], "sim": []}).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "sim": "float64"}
-        )
-        if qs.empty or cs.empty:
-            return empty
-        qm = np_w.array(list(qs["v"]), dtype=np_w.float64)
-        cm = np_w.array(list(cs["v"]), dtype=np_w.float64)
-        sims = seq_cos(qm, cm)
-        qids = qs["id"].to_numpy()
-        cids = cs["id"].to_numpy()
-        keep_q, keep_c = np_w.nonzero(qids[:, None] != cids[None, :])
-        return pd_w.DataFrame(
-            {
-                "query_id": qids[keep_q],
-                "neighbor_id": cids[keep_c],
-                "sim": sims[keep_q, keep_c],
-            }
-        )
-
-    spark = candidates.sparkSession
-    c = (
-        candidates.select(
-            F.col(cand_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(assign_kernel, "id bigint, v array<double>, list_id int")
+    lists = _ivf_assign(candidates, centroids, cand_id, vec_col)
+    ranked = _ivf_search(
+        queries, lists, centroids, k, n_probe, _scorer_fns("cosine"), "double",
+        query_id, vec_col,
     )
-    q = queries.select(
-        F.col(query_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).mapInPandas(probe_kernel, "id bigint, v array<double>, list_id int")
-    # each candidate lives in exactly one list and probed lists are distinct,
-    # so a (query, neighbor) pair appears at most once — no dedup needed
-    tagged = q.withColumn("side", F.lit("q")).unionByName(
-        c.withColumn("side", F.lit("c"))
-    )
-    scored = tagged.groupBy("list_id").applyInPandas(
-        score_group, "query_id bigint, neighbor_id bigint, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rnk")
+    return ranked.select("query_id", "neighbor_id", F.round("score", 4).alias("sim"), "rnk")
+
+
+def _centroids_sql(centroids: list[list[float]]) -> str:
+    """The literal ``VALUES`` rows (cid, DOUBLE[] c) of a coarse quantizer."""
+    return ", ".join(
+        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
+        for i, c in enumerate(centroids)
     )
 
 
@@ -699,13 +748,9 @@ def ivf_fixed_oracle_sql(
     """DuckDB SQL reproducing :func:`ivf_fixed_topk` exactly — centroids are
     literal rows, assignment/probing rank by the same bit-exact
     ``list_cosine_similarity`` with the same centroid-id tie-break."""
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(centroids)
-    )
     return f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    cents(cid, c) AS (VALUES {cent_rows}),
+    cents(cid, c) AS (VALUES {_centroids_sql(centroids)}),
     assign AS (
       SELECT vec_id, e, cid,
              ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -802,12 +847,7 @@ def bucketed_neardup_oracle_sql(
     bucket assignment is a sign-pattern over literal dot products, and the
     per-bucket kernel accumulates dimension-sequentially, i.e. in
     ``list_cosine_similarity``'s exact IEEE order."""
-    planes = _hyperplanes(dim, n_planes)
-    bucket = " + ".join(
-        f"CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in plane)}]) > 0 "
-        f"THEN {1 << i} ELSE 0 END"
-        for i, plane in enumerate(planes)
-    )
+    bucket = _lsh_bucket_sql(dim, n_planes)
     return f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     b AS (SELECT vec_id, e, ({bucket}) AS bucket FROM v)
@@ -828,12 +868,7 @@ def lsh_topk_oracle_sql(
     the same literal hyperplanes and the JVM cosine fold equals
     ``list_cosine_similarity``'s summation order, so even the approximate
     path is deterministic and oracle-checkable."""
-    planes = _hyperplanes(dim, n_planes)
-    bucket = " + ".join(
-        f"CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in plane)}]) > 0 "
-        f"THEN {1 << i} ELSE 0 END"
-        for i, plane in enumerate(planes)
-    )
+    bucket = _lsh_bucket_sql(dim, n_planes)
     return f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     b AS (SELECT vec_id, e, ({bucket}) AS bucket FROM v),
@@ -894,13 +929,13 @@ def pq_topk(
     per-query lookup tables — faiss ``IndexPQ.search`` re-expressed on
     Spark.
 
-    Plan shape: the (small, guarded) query set becomes per-query LUTs
-    ``lut[s][j] = dist(q_s, codebook[s][j])`` shipped into one
-    ``mapInPandas`` kernel over the candidate table; each Arrow batch
-    encodes candidates (argmin over codewords per subspace, ties -> lower
-    code id), gathers LUT entries, and emits only its per-query top-k —
-    the one shuffle (final window by query id) moves ~k.Q rows per
-    partition and the full-precision vectors never leave the scan. At
+    Plan shape: the probe scan (:func:`_probe_scan_topk`) — the (small,
+    guarded) query set rides into one ``mapInPandas`` kernel over the
+    candidate table, where each Arrow batch builds the per-query LUTs
+    ``lut[s][j] = dist(q_s, codebook[s][j])``, encodes its candidates
+    (argmin over codewords per subspace, ties -> lower code id), gathers
+    LUT entries, and emits only its per-query top-k by the negated ADC —
+    the full-precision vectors never leave the scan. At
     100 TB the candidate side streams: codes are M bytes per vector vs
     4D bytes raw (32x compression at D=64, M=8), which is the entire
     point of PQ. Compose with :func:`ivf_fixed_topk`'s coarse quantizer
@@ -915,75 +950,20 @@ def pq_topk(
     oracle (:func:`pq_oracle_sql`) reproduces encode, LUT, and ranking
     bit-for-bit; ties rank by neighbor_id ascending.
     """
-    cb = [[[float(x) for x in row] for row in sub] for sub in codebook]
-    m_sub = len(cb)
-    kk = int(k)
-    q_proj = queries.select(
-        F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+    ranked = _probe_scan_topk(
+        queries,
+        candidates,
+        vec_col,
+        k,
+        _scorer_fns("adc", codebook),
+        probe_keys={"query_id": (query_id, "bigint")},
+        cand_keys={"neighbor_id": (cand_id, "bigint")},
+        max_vectors=max_vectors,
+        op="pq_topk",
+        alternative="lsh_topk",
+        score_type="bigint",
     )
-    _guard_exact_path(queries.select(query_id), max_vectors, "pq_topk", "lsh_topk")
-    q_rows = q_proj.collect()
-    q_ids = [r["query_id"] for r in q_rows]
-    q_vecs = [list(r["q_vec"]) for r in q_rows]
-    subdists = _pq_dist_fns(cb)  # the ONE bit-exact subspace-distance kernel
-
-    def kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qid = np_w.asarray(q_ids)
-        qm = np_w.asarray(q_vecs, dtype=np_w.float64)  # (Q, D)
-
-        # per-query integer LUTs, built once per task: (Q, M, K) int64
-        ilut = np_w.stack(
-            [
-                np_w.floor(subdists(qm, s) * 1e9).astype(np_w.int64)
-                for s in range(m_sub)
-            ],
-            axis=1,
-        ) if len(qid) else None
-        for pdf in batches:
-            if not len(pdf) or ilut is None:
-                continue
-            ids = pdf["neighbor_id"].to_numpy()
-            cm = np_w.array(list(pdf["c_vec"]), dtype=np_w.float64)
-            # encode: argmin -> first minimum -> lowest code id on ties
-            codes = np_w.stack(
-                [subdists(cm, s).argmin(axis=1) for s in range(m_sub)], axis=1
-            )  # (B, M)
-            adc = np_w.zeros((len(qid), len(ids)), dtype=np_w.int64)
-            for s in range(m_sub):
-                adc += ilut[:, s, :][:, codes[:, s]]
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qid)):
-                mask = ids != qid[qi]
-                c_ids, sc = ids[mask], adc[qi][mask]
-                take = min(kk, c_ids.size)
-                if not take:
-                    continue
-                order = np_w.lexsort((c_ids, sc))[:take]
-                out_q.extend([qid[qi]] * take)
-                out_n.extend(c_ids[order])
-                out_s.extend(sc[order])
-            yield pd_w.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc_dist": out_s}
-            )
-
-    spark = candidates.sparkSession
-    c = candidates.select(
-        F.col(cand_id).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    scored = c.mapInPandas(
-        kernel, "query_id bigint, neighbor_id bigint, adc_dist bigint"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= kk)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    return ranked.select("query_id", "neighbor_id", (-F.col("score")).alias("adc_dist"), "rnk")
 
 
 def pq_oracle_sql(
@@ -998,30 +978,9 @@ def pq_oracle_sql(
     distances as a left-associative ``+`` chain (the kernel's j-loop IEEE
     sequence), ADC as an order-free BIGINT sum of floored nano-unit
     distances, ties by code id then neighbor_id."""
-    terms = " + ".join(
-        f"(v[s*{subdim}+{d + 1}]-cw[{d + 1}])*(v[s*{subdim}+{d + 1}]-cw[{d + 1}])"
-        for d in range(subdim)
-    )
     return f"""
-    WITH cbook AS (
-      SELECT CAST(s AS INT) AS s, CAST(j AS INT) AS j,
-             list_transform(range({subdim}),
-                            d -> (((s*{k_codes}+j)*{subdim}+d) * 2654435761)
-                                 % 1024 / 2048.0 - 0.25) AS cw
-      FROM range({m_sub}) t1(s), range({k_codes}) t2(j)),
-    vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    dists AS (
-      SELECT vec_id, s, j, {terms} AS dist
-      FROM vecs, cbook),
-    codes AS (
-      SELECT vec_id, s, j AS code FROM (
-        SELECT vec_id, s, j,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                  ORDER BY dist ASC, j ASC) AS rn
-        FROM dists) WHERE rn = 1),
-    qlut AS (
-      SELECT vec_id AS query_id, s, j, CAST(floor(dist * 1e9) AS BIGINT) AS idist
-      FROM dists WHERE {query_pred}),
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    {_pq_cte_sql(m_sub, k_codes, subdim, query_pred)},
     scores AS (
       SELECT ql.query_id, c.vec_id AS neighbor_id,
              CAST(SUM(ql.idist) AS BIGINT) AS adc_dist
@@ -1035,16 +994,51 @@ def pq_oracle_sql(
     """
 
 
-def _pq_dist_fns(codebook):
-    """Factory for the PQ subspace-distance kernel (pickled by value into
-    worker closures, like :func:`_seq_cosine_fns`). Returns
-    ``subdists(mat, s) -> (N, K)`` squared-L2 distances of subvector ``s``
-    against all codewords, accumulated dimension-sequentially — the exact
-    IEEE sequence of the oracle's left-associative ``+`` chain."""
+def _pq_cte_sql(m_sub: int, k_codes: int, subdim: int, query_pred: str) -> str:
+    """The PQ CTEs over ``v`` = (vec_id, DOUBLE[] v): ``cbook`` (the
+    :func:`pq_codebook` lattice from integer arithmetic), ``dists``
+    (subspace distances as a left-associative ``+`` chain — the kernel's
+    j-loop IEEE sequence), ``codes`` (argmin codeword, ties by code id) and
+    ``qlut`` (the probes' floored nano-unit lookup tables)."""
+    terms = " + ".join(
+        f"(v[s*{subdim}+{d + 1}]-cw[{d + 1}])*(v[s*{subdim}+{d + 1}]-cw[{d + 1}])"
+        for d in range(subdim)
+    )
+    return f"""cbook AS (
+      SELECT CAST(s AS INT) AS s, CAST(j AS INT) AS j,
+             list_transform(range({subdim}),
+                            d -> (((s*{k_codes}+j)*{subdim}+d) * 2654435761)
+                                 % 1024 / 2048.0 - 0.25) AS cw
+      FROM range({m_sub}) t1(s), range({k_codes}) t2(j)),
+    dists AS (SELECT vec_id, s, j, {terms} AS dist FROM v, cbook),
+    codes AS (
+      SELECT vec_id, s, j AS code FROM (
+        SELECT vec_id, s, j,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, s
+                                  ORDER BY dist ASC, j ASC) AS rn
+        FROM dists) WHERE rn = 1),
+    qlut AS (
+      SELECT vec_id AS query_id, s, j, CAST(floor(dist * 1e9) AS BIGINT) AS idist
+      FROM dists WHERE {query_pred})"""
+
+
+def _pq_fns(codebook):
+    """Factory for the PQ worker kernels (pickled by value into worker
+    closures, like :func:`_seq_cosine_fns`):
+
+    - ``encode(mat)`` → (N, M) codes: per subspace the argmin codeword, the
+      first minimum, so the lowest code id on ties;
+    - ``adc(qm, codes)`` → (Q, N) int64 asymmetric distances: per query a
+      lookup table of subspace distances floored to integer nano-units
+      (``floor(dist * 1e9)``), gathered by code and summed — an integer sum
+      whose order is free, so the score is exact across engines.
+
+    Subspace squared-L2 distances accumulate dimension-sequentially — the
+    exact IEEE sequence of the oracle's left-associative ``+`` chain."""
     import numpy as np
 
     cbm = np.asarray(codebook, dtype=np.float64)  # (M, K, SUB)
-    k_codes, subdim = cbm.shape[1], cbm.shape[2]
+    m_sub, k_codes, subdim = cbm.shape
 
     def subdists(mat, s):
         o = s * subdim
@@ -1054,104 +1048,17 @@ def _pq_dist_fns(codebook):
             acc = acc + diff * diff
         return acc
 
-    return subdists
+    def encode(mat):
+        return np.stack([subdists(mat, s).argmin(axis=1) for s in range(m_sub)], axis=1)
 
-
-def _ivfpq_kernels(
-    centroids: list[list[float]],
-    codebook: list[list[list[float]]],
-    n_probe: int,
-):
-    """Shared worker kernels for the IVFPQ family (pickled BY VALUE —
-    everything they touch is built inside this factory): assign+encode
-    (candidates -> (id, list_id, codes)), probe (queries -> n_probe
-    (id, vec, list) rows), score (per-list LUT gather over codes)."""
-    cents_list = [[float(x) for x in c] for c in centroids]
-    cb = [[[float(x) for x in row] for row in sub] for sub in codebook]
-    m_sub = len(cb)
-    np_probe = int(n_probe)
-    seq_cos = _seq_cosine_fns()
-    pq_dists = _pq_dist_fns(cb)
-
-    def assign_encode_kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        cents = np_w.asarray(cents_list, dtype=np_w.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            sims = seq_cos(m, cents)
-            codes = np_w.stack(
-                [pq_dists(m, s).argmin(axis=1) for s in range(m_sub)], axis=1
-            )
-            yield pd_w.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "list_id": sims.argmax(axis=1).astype(int),
-                    "codes": list(codes),
-                }
-            )
-
-    def probe_kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        cents = np_w.asarray(cents_list, dtype=np_w.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np_w.array(list(pdf["v"]), dtype=np_w.float64)
-            sims = seq_cos(m, cents)
-            ids, vs, lids = [], [], []
-            for i in range(len(pdf)):
-                order = np_w.lexsort((np_w.arange(sims.shape[1]), -sims[i]))[
-                    :np_probe
-                ]
-                for lid in order:
-                    ids.append(pdf["id"].iloc[i])
-                    vs.append(pdf["v"].iloc[i])
-                    lids.append(int(lid))
-            yield pd_w.DataFrame({"id": ids, "v": vs, "list_id": lids})
-
-    def score_group(pdf):
-        import numpy as np_w
-        import pandas as pd_w
-
-        qs = pdf[pdf["side"] == "q"]
-        cs = pdf[pdf["side"] == "c"]
-        empty = pd_w.DataFrame(
-            {"query_id": [], "neighbor_id": [], "adc_dist": []}
-        ).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "adc_dist": "int64"}
-        )
-        if qs.empty or cs.empty:
-            return empty
-        qm = np_w.array(list(qs["v"]), dtype=np_w.float64)
-        codes = np_w.array(list(cs["codes"]), dtype=np_w.int64)
-        qids = qs["id"].to_numpy()
-        cids = cs["id"].to_numpy()
-        ilut = np_w.stack(
-            [
-                np_w.floor(pq_dists(qm, s) * 1e9).astype(np_w.int64)
-                for s in range(m_sub)
-            ],
-            axis=1,
-        )
-        adc = np_w.zeros((len(qids), len(cids)), dtype=np_w.int64)
+    def adc(qm, codes):
+        out = np.zeros((len(qm), len(codes)), dtype=np.int64)
         for s in range(m_sub):
-            adc += ilut[:, s, :][:, codes[:, s]]
-        keep_q, keep_c = np_w.nonzero(qids[:, None] != cids[None, :])
-        return pd_w.DataFrame(
-            {
-                "query_id": qids[keep_q],
-                "neighbor_id": cids[keep_c],
-                "adc_dist": adc[keep_q, keep_c],
-            }
-        )
+            ilut = np.floor(subdists(qm, s) * 1e9).astype(np.int64)  # (Q, K)
+            out += ilut[:, codes[:, s]]
+        return out
 
-    return assign_encode_kernel, probe_kernel, score_group
+    return encode, adc
 
 
 def ivfpq_encode(
@@ -1166,17 +1073,7 @@ def ivfpq_encode(
     PQ code per subspace. The full-precision vector dies here; what the
     index persists is M bytes of code per vector. This is the table a
     vector store writes once and appends daily batches to (s16)."""
-    assign_encode_kernel, _, _ = _ivfpq_kernels(centroids, codebook, n_probe=1)
-    spark = candidates.sparkSession
-    return (
-        candidates.select(
-            F.col(cand_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            assign_encode_kernel, "id bigint, list_id int, codes array<int>"
-        )
-    )
+    return _ivf_assign(candidates, centroids, cand_id, vec_col, codebook)
 
 
 def ivfpq_search_encoded(
@@ -1196,29 +1093,18 @@ def ivfpq_search_encoded(
     id, never a cross product, with each group building its queries' LUTs
     locally (8x16 doubles per query — nothing broadcast, nothing
     driver-side)."""
-    _, probe_kernel, score_group = _ivfpq_kernels(centroids, codebook, n_probe)
-    kk = int(k)
-    q = queries.select(
-        F.col(query_id).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).mapInPandas(probe_kernel, "id bigint, v array<double>, list_id int")
-    tagged = q.withColumn("side", F.lit("q")).withColumn(
-        "codes", F.lit(None).cast("array<int>")
-    ).unionByName(
-        encoded.select("id", "list_id", "codes")
-        .withColumn("side", F.lit("c"))
-        .withColumn("v", F.lit(None).cast("array<double>"))
+    ranked = _ivf_search(
+        queries,
+        encoded.select("id", "list_id", "codes"),
+        centroids,
+        k,
+        n_probe,
+        _scorer_fns("adc", codebook),
+        "bigint",
+        query_id,
+        vec_col,
     )
-    scored = tagged.groupBy("list_id").applyInPandas(
-        score_group, "query_id bigint, neighbor_id bigint, adc_dist bigint"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= kk)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    return ranked.select("query_id", "neighbor_id", (-F.col("score")).alias("adc_dist"), "rnk")
 
 
 def ivfpq_topk(
@@ -1240,10 +1126,10 @@ def ivfpq_topk(
     nano-unit ADC — are each bit-exact against their oracles, so the
     composition is too.
 
-    Round 9 factored the stages into :func:`ivfpq_encode` and
-    :func:`ivfpq_search_encoded` (identical kernels — the composition
-    here is the same plan as before); s16 persists the encode output as
-    a partitioned inverted-list table and appends daily batches to it.
+    The stages are :func:`ivfpq_encode` and :func:`ivfpq_search_encoded`
+    — the inverted-list path with PQ codes as the list payload; s16
+    persists the encode output as a partitioned inverted-list table and
+    appends daily batches to it.
     At 100 TB this is the faiss billion-scale recipe verbatim: prune
     lists, scan codes.
     """
@@ -1274,16 +1160,8 @@ def ivfpq_scores_cte_sql(
     (query_id, neighbor_id, adc_dist), with ``v`` = (vec_id, DOUBLE[] v)
     also in scope — reusable by composite oracles (s12's exact-refine
     stage re-ranks the same candidate set)."""
-    cent_rows = ", ".join(
-        f"({i}, [{', '.join(repr(float(x)) for x in c)}]::DOUBLE[])"
-        for i, c in enumerate(centroids)
-    )
-    terms = " + ".join(
-        f"(v[s*{subdim}+{d + 1}]-cw[{d + 1}])*(v[s*{subdim}+{d + 1}]-cw[{d + 1}])"
-        for d in range(subdim)
-    )
     return f"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cents(cid, c) AS (VALUES {cent_rows}),
+    cents(cid, c) AS (VALUES {_centroids_sql(centroids)}),
     ass AS (
       SELECT vec_id, v, cid,
              ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1292,22 +1170,7 @@ def ivfpq_scores_cte_sql(
       FROM v CROSS JOIN cents),
     cand_list AS (SELECT vec_id, cid FROM ass WHERE rk = 1),
     probe AS (SELECT vec_id, cid FROM ass WHERE rk <= {n_probe} AND {query_pred}),
-    cbook AS (
-      SELECT CAST(s AS INT) AS s, CAST(j AS INT) AS j,
-             list_transform(range({subdim}),
-                            d -> (((s*{k_codes}+j)*{subdim}+d) * 2654435761)
-                                 % 1024 / 2048.0 - 0.25) AS cw
-      FROM range({m_sub}) t1(s), range({k_codes}) t2(j)),
-    dists AS (SELECT vec_id, s, j, {terms} AS dist FROM v, cbook),
-    codes AS (
-      SELECT vec_id, s, j AS code FROM (
-        SELECT vec_id, s, j,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                  ORDER BY dist ASC, j ASC) AS rn
-        FROM dists) WHERE rn = 1),
-    qlut AS (
-      SELECT vec_id AS query_id, s, j, CAST(floor(dist*1e9) AS BIGINT) AS idist
-      FROM dists WHERE {query_pred}),
+    {_pq_cte_sql(m_sub, k_codes, subdim, query_pred)},
     pairs AS (
       SELECT p.vec_id AS query_id, cl.vec_id AS neighbor_id
       FROM probe p JOIN cand_list cl ON p.cid = cl.cid AND p.vec_id <> cl.vec_id),
@@ -1447,12 +1310,11 @@ def hard_negative_topk(
     standard dense-retrieval recipe (mine the highest-scoring wrong answers,
     not random ones).
 
-    Plan shape mirrors :func:`brute_force_topk`: the anchor batch is small
-    by construction (a training batch, guarded by ``max_anchors``) and
-    ships inside a numpy ``mapInPandas`` kernel over the candidate table;
-    each Arrow batch emits only its per-anchor top-k, so the one shuffle
-    (the final per-anchor window) moves ~k·A rows per partition — never the
-    N×A score matrix, and the corpus never leaves the scan stage. At 100 TB
+    Plan shape: the probe scan of :func:`brute_force_topk`
+    (:func:`_probe_scan_topk`) with the anchors as probes — small by
+    construction (a training batch, guarded by ``max_anchors``) — and
+    same-label pairs excluded next to self-matches, so the one shuffle
+    (the final per-anchor window) moves ~k·A rows per partition. At 100 TB
     the corpus side streams map-side; mining for MORE anchors shards the
     anchor set across repeated passes (or swaps in the s02/s06 ANN
     candidates as the pool).
@@ -1461,79 +1323,26 @@ def hard_negative_topk(
     dimension-by-dimension accumulation — the exact IEEE sequence of DuckDB
     ``list_cosine_similarity`` — so scores bit-match the oracle.
     """
-    a_proj = anchors.select(
-        F.col(anchor_id).alias("a_id"),
-        F.col(label_col).alias("a_label"),
-        _as_double(F.col(vec_col)).alias("a_vec"),
+    ranked = _probe_scan_topk(
+        anchors,
+        candidates,
+        vec_col,
+        k,
+        _scorer_fns("cosine"),
+        probe_keys={"anchor_id": (anchor_id, "bigint"), "anchor_label": (label_col, "int")},
+        cand_keys={"negative_id": (cand_id, "bigint"), "negative_label": (label_col, "int")},
+        max_vectors=max_anchors,
+        op="hard_negative_topk",
+        alternative="per-batch anchor sharding (mine k negatives per training batch)",
+        exclude=(("anchor_label", "negative_label"),),
     )
-    _guard_exact_path(
-        anchors.select(anchor_id),
-        max_anchors,
-        "hard_negative_topk",
-        "per-batch anchor sharding (mine k negatives per training batch)",
-    )
-    a_rows = a_proj.collect()
-    a_ids = [r["a_id"] for r in a_rows]
-    a_labels = [r["a_label"] for r in a_rows]
-    a_vecs = [list(r["a_vec"]) for r in a_rows]
-    kk = int(k)
-    seq_cos = _seq_cosine_fns()
-
-    def kernel(batches):
-        import numpy as np_w
-        import pandas as pd_w
-
-        am = np_w.asarray(a_vecs, dtype=np_w.float64)  # (A, D)
-        aid = np_w.asarray(a_ids)
-        alab = np_w.asarray(a_labels)
-        for pdf in batches:
-            if not len(pdf) or not len(aid):
-                continue
-            ids = pdf["negative_id"].to_numpy()
-            labs = pdf["negative_label"].to_numpy()
-            cm = np_w.array(list(pdf["c_vec"]), dtype=np_w.float64)  # (B, D)
-            sims = seq_cos(cm, am)  # (B, A)
-            out = {"anchor_id": [], "anchor_label": [], "negative_id": [],
-                   "negative_label": [], "sim": []}
-            for ai in range(len(aid)):
-                col = sims[:, ai]
-                mask = (ids != aid[ai]) & (labs != alab[ai])
-                n_ids, n_labs, n_sims = ids[mask], labs[mask], col[mask]
-                take = min(kk, n_ids.size)
-                if not take:
-                    continue
-                # batch-local partial top-k, ties broken by negative_id asc
-                order = np_w.lexsort((n_ids, -n_sims))[:take]
-                out["anchor_id"].extend([aid[ai]] * take)
-                out["anchor_label"].extend([alab[ai]] * take)
-                out["negative_id"].extend(n_ids[order])
-                out["negative_label"].extend(n_labs[order])
-                out["sim"].extend(n_sims[order])
-            yield pd_w.DataFrame(out)
-
-    spark = candidates.sparkSession
-    c = candidates.select(
-        F.col(cand_id).alias("negative_id"),
-        F.col(label_col).alias("negative_label"),
-        _as_double(F.col(vec_col)).alias("c_vec"),
-    ).repartition(spark.sparkContext.defaultParallelism)
-    scored = c.mapInPandas(
-        kernel,
-        "anchor_id bigint, anchor_label int, negative_id bigint, "
-        "negative_label int, sim double",
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("sim"), F.asc("negative_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            F.round("sim", 4).alias("sim"),
-            "rnk",
-        )
+    return ranked.select(
+        "anchor_id",
+        "anchor_label",
+        "negative_id",
+        "negative_label",
+        F.round("score", 4).alias("sim"),
+        "rnk",
     )
 
 
@@ -1578,12 +1387,7 @@ def lsh_occupancy_oracle_sql(n_planes: int, dim: int = 64) -> str:
     """DuckDB SQL twin of :func:`lsh_bucket_occupancy` — same literal LCG
     hyperplanes and sign-pattern bucket id as
     :func:`bucketed_neardup_oracle_sql`."""
-    planes = _hyperplanes(dim, n_planes)
-    bucket = " + ".join(
-        f"CASE WHEN list_dot_product(e, [{', '.join(repr(v) for v in plane)}]) > 0 "
-        f"THEN {1 << i} ELSE 0 END"
-        for i, plane in enumerate(planes)
-    )
+    bucket = _lsh_bucket_sql(dim, n_planes)
     return f"""
     WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     b AS (SELECT ({bucket}) AS bucket FROM v),
@@ -1743,12 +1547,8 @@ def projection_tree_topk(
             "leaf",
             _pt_int_dot(F.col("qv"), F.col("iv")).alias("score_units"),
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score_units"), F.asc("neighbor_id")
-        )
         out = (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            _rank(scored, k, "query_id", "neighbor_id", "score_units")
             .join(F.broadcast(leaf_n), "leaf")
             .select("query_id", "neighbor_id", "score_units", "rnk", "leaf", "leaf_n")
         )

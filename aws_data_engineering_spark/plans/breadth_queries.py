@@ -20,9 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aws_data_engineering_spark.operators import dedup as DD
 from aws_data_engineering_spark.operators import sampling as SAMP
-from aws_data_engineering_spark.operators import similarity as SIM
 from aws_data_engineering_spark.operators import sketch as SK
 from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register

@@ -7,21 +7,15 @@ from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import dedup as DD
 from aws_data_engineering_spark.operators import graph as G
-from aws_data_engineering_spark.operators import sampling as SAMP
 from aws_data_engineering_spark.operators import similarity as SIM
-from aws_data_engineering_spark.operators import sketch as SK
 from aws_data_engineering_spark.operators import text as T
+from aws_data_engineering_spark.operators.text import cdc_sql_cte as _cdc_cte
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-from aws_data_engineering_spark.operators import multimodal as MM  # noqa: E402,F401
-from aws_data_engineering_spark.operators.similarity import pq_oracle_sql as _pq_sql  # noqa: E402,F401
-from aws_data_engineering_spark.operators.text import cdc_sql_cte as _cdc_cte  # noqa: E402,F401
-
-
 
 
 # --------------------------------------------------------------------------
@@ -164,7 +158,6 @@ def g03_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chunk fingerprint (equi-join, no all-pairs); the rolling hash is the same
 # uint64 polynomial as winnowing, reproduced in HUGEINT by the oracle.
 # --------------------------------------------------------------------------
-from aws_data_engineering_spark.operators.text import cdc_sql_cte as _cdc_cte
 
 
 @register(

@@ -5,11 +5,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aws_data_engineering_spark.operators import dedup as DD
-from aws_data_engineering_spark.operators import sampling as SAMP
 from aws_data_engineering_spark.operators import similarity as SIM
-from aws_data_engineering_spark.operators import sketch as SK
 from aws_data_engineering_spark.operators import text as T
+from aws_data_engineering_spark.operators.similarity import pq_oracle_sql as _pq_sql
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
 from aws_data_engineering_spark.storage import scratch_dir
@@ -17,11 +15,6 @@ from aws_data_engineering_spark.storage import scratch_dir
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-from aws_data_engineering_spark.operators import multimodal as MM  # noqa: E402,F401
-from aws_data_engineering_spark.operators.similarity import pq_oracle_sql as _pq_sql  # noqa: E402,F401
-from aws_data_engineering_spark.operators.text import cdc_sql_cte as _cdc_cte  # noqa: E402,F401
-
-
 
 
 # --------------------------------------------------------------------------
@@ -335,7 +328,6 @@ def e11_embedding_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matched cosine). At 100 TB the exact side is the guarded baseline on a
 # sampled query set — recall auditing is O(queries), not O(corpus).
 # --------------------------------------------------------------------------
-from aws_data_engineering_spark.operators.similarity import pq_oracle_sql as _pq_sql
 
 
 def _e12_oracle() -> str:

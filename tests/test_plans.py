@@ -644,3 +644,39 @@ def test_package_has_no_unreferenced_top_level_names():
         if name not in used and not (name.startswith("__") and name.endswith("__"))
     )
     assert not dead, dead
+
+
+def test_package_has_no_unused_module_imports():
+    """Every module-level import of a package module is loaded somewhere in
+    that module, and no name is imported twice at module level. An import
+    nothing reads only costs load time and hides the module's real
+    dependencies. ``__init__.py`` re-exports and ``__future__`` are exempt."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    bad = []
+    for path in sorted((root / "aws_data_engineering_spark").rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        loaded = {
+            node.id
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)
+        }
+        bound = set()
+        for node in tree.body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                where = f"{path.relative_to(root)}:{node.lineno}: {name}"
+                if name not in loaded:
+                    bad.append(f"{where} is never loaded")
+                elif name in bound:
+                    bad.append(f"{where} is imported again")
+                bound.add(name)
+    assert not bad, bad

@@ -212,42 +212,8 @@ def test_session_fold_matches_reference_property():
 
 
 # ---------------------------------------------------------------------------
-# Edge cases for the round-8 queries: s11's fusion when one arm is empty,
-# t35 on degenerate documents.
+# Edge cases for the round-8 queries: t35 on degenerate documents.
 # ---------------------------------------------------------------------------
-def _write_embeddings(tmp_path, n=12, dim=8):
-    vecs = []
-    for i in range(n):
-        # deterministic, non-degenerate vectors
-        vecs.append([((i * 7 + j * 3) % 13) / 13.0 + 0.1 for j in range(dim)])
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(list(range(n)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array([i % 3 for i in range(n)], pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-
-
-def test_s11_fusion_with_empty_sparse_arm(spark, tmp_path):
-    """No document matches the BM25 terms -> the sparse ranking is empty
-    and every fused row comes from the dense arm alone (s_rnk all NULL);
-    the full-outer fusion and the oracle must agree exactly."""
-    from tests.oracle_utils import compare
-
-    rows = [
-        (i, f"nothing relevant here doc{i} filler words", "en", "web")
-        for i in range(1, 13)
-    ]
-    write_docs(tmp_path, rows)
-    _write_embeddings(tmp_path)
-    q = QUERIES["s11_rrf_hybrid_retrieval"]
-    df = q.spark(spark, str(tmp_path))
-    got = df.collect()
-    assert len(got) > 0
-    assert all(r["s_rnk"] is None for r in got), "sparse arm should be empty"
-    compare(df, q.oracle, str(tmp_path))
 
 
 def test_t35_degenerate_documents(spark, tmp_path):
@@ -339,41 +305,6 @@ def _write_events(tmp_path, rows):
         }
     )
     pq.write_table(tbl, str(tmp_path / "events.parquet"))
-
-
-def test_s13_label_isolation_and_short_slices(spark, tmp_path):
-    """A label whose only member is the query itself yields NO rows for
-    that query (filtered search never leaks across the filter key), and a
-    label with fewer than K+1 members yields fewer than K rows — both
-    engines must agree on the short result."""
-    from tests.oracle_utils import compare
-
-    vecs = []
-    labels = []
-    # label 0: only vec 0 (a query) -> no candidates for it
-    # label 1: vecs 1 (query) + 10, 11 -> 2 neighbors (< K=5)
-    # label 2: vecs 2 (query) + 12..17 -> full K
-    for i in range(18):
-        vecs.append([((i * 5 + j * 2) % 11) / 11.0 + 0.2 for j in range(8)])
-        labels.append(0 if i == 0 else (1 if i in (1, 10, 11) else 2))
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(list(range(18)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array(labels, pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    q = QUERIES["s13_ann_label_filtered_topk"]
-    df = q.spark(spark, str(tmp_path))
-    got = df.collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert 0 not in by_q, "label-isolated query must return nothing"
-    assert len(by_q[1]) == 2, "short label slice must yield < K rows"
-    assert all(r["label"] == 1 for r in by_q[1])
-    compare(df, q.oracle, str(tmp_path))
 
 
 def test_t36_duplicate_doc_has_zero_novelty(spark, tmp_path):
@@ -700,35 +631,6 @@ def test_m22_silence_replay_and_negative_ids(spark, tmp_path):
     compare(df, q.oracle, str(tmp_path))
 
 
-def test_e22_separable_labels_reach_full_agreement(spark, tmp_path):
-    """Two well-separated label clusters -> every vector's top neighbors
-    share its label (agreement_ppm = 1_000_000 for both labels)."""
-    from tests.oracle_utils import compare
-
-    vecs, labels = [], []
-    for i in range(12):
-        lab = i % 2
-        # cluster 0 near e1, cluster 1 near e2; small per-point jitter
-        base = [1.0, 0.0] if lab == 0 else [0.0, 1.0]
-        vecs.append([base[0] + 0.01 * i, base[1] + 0.02 * (i % 3), 0.1, 0.1])
-        labels.append(lab)
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(list(range(12)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array(labels, pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    q = QUERIES["e22_knn_label_agreement"]
-    df = q.spark(spark, str(tmp_path))
-    got = {r["label"]: r for r in df.collect()}
-    assert got[0]["agreement_ppm"] == 1_000_000
-    assert got[1]["agreement_ppm"] == 1_000_000
-    assert got[0]["n_edges"] == 6 * 5  # 6 members x k=5
-    compare(df, q.oracle, str(tmp_path))
-
-
 def test_dq18_gap_dup_and_start_detection(spark, tmp_path):
     """Planted per-order line-number pathologies each count exactly once:
     a clean order, an interior gap (1,2,4), a duplicate (1,1,2), and a
@@ -804,80 +706,9 @@ def test_pp02_waterfall_all_five_verdicts(spark, tmp_path):
     compare(df, q.oracle, str(tmp_path))
 
 
-def test_s14_mips_magnitude_beats_angle(spark, tmp_path):
-    """MIPS semantics pinned: a long vector at a worse angle outranks a
-    short near-parallel one (dot 10+5*eps vs ~1), which is exactly the
-    ordering cosine would reverse."""
-    from tests.oracle_utils import compare
-
-    vecs = [
-        [1.0, 0.0, 0.0, 0.0],    # query (vec_id 0 < 10)
-        [10.0, 5.0, 0.0, 0.0],   # big magnitude, 63° worse angle: dot 10
-        [0.99, 0.01, 0.0, 0.0],  # near-parallel, tiny: dot 0.99
-        [0.5, 0.5, 0.5, 0.5],    # filler
-    ]
-    tbl = pa.table(
-        {
-            "vec_id": pa.array([0, 11, 12, 13], pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array([0, 0, 0, 0], pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    q = QUERIES["s14_mips_topk"]
-    df = q.spark(spark, str(tmp_path))
-    ranked = sorted(
-        [r for r in df.collect() if r["query_id"] == 0], key=lambda r: r["rnk"]
-    )
-    assert ranked[0]["neighbor_id"] == 11 and ranked[0]["dot"] == 10.0
-    assert ranked[1]["neighbor_id"] == 12
-    compare(df, q.oracle, str(tmp_path))
-
-
 # ---------------------------------------------------------------------------
-# Round-8 fourth batch: s15 / t37 / dq19 / p17 / m23 / c20 edge cases
+# Round-8 fourth batch: t37 / dq19 / p17 / m23 / c20 edge cases
 # ---------------------------------------------------------------------------
-
-
-def test_s15_duplicate_vectors_tie_left_and_leaves_balance(spark, tmp_path):
-    """Exact duplicate vectors share a projection, so they all land on the
-    same side of every median (ties go LEFT, <=) and end in the SAME leaf —
-    a projection tree can never split identical points apart. Leaves stay
-    near-balanced on skewed data, and both engines agree on the full
-    output including leaf paths."""
-    from tests.oracle_utils import compare
-
-    vecs = []
-    # 8 copies of one vector (a duplicate cluster) + 24 spread vectors
-    for i in range(32):
-        if i < 8:
-            vecs.append([0.5] * 64)
-        else:
-            vecs.append([((i * 7 + j * 3) % 13) / 13.0 - 0.4 for j in range(64)])
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(list(range(32)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
-            "label": pa.array([i % 3 for i in range(32)], pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    q = QUERIES["s15_projection_tree_topk"]
-    df = q.spark(spark, str(tmp_path))
-    rows = df.collect()
-    # queries 0..7 are the duplicate cluster: their top neighbors must be
-    # the other duplicates (max integer dot), all in one shared leaf
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    dup_leaves = {r["leaf"] for qid in range(8) for r in by_q[qid]}
-    assert len(dup_leaves) == 1, "duplicate cluster split across leaves"
-    top = sorted(by_q[0], key=lambda r: r["rnk"])[0]
-    assert top["neighbor_id"] in range(1, 8)
-    # balance: no leaf holds more than half the corpus (median splits)
-    leaf_sizes = {r["leaf"]: r["leaf_n"] for r in rows}
-    assert all(n <= 16 for n in leaf_sizes.values())
-    compare(df, q.oracle, str(tmp_path))
 
 
 def test_t37_tiny_languages_and_tie_rates(spark, tmp_path):

@@ -1,112 +1,15 @@
-"""Round-9 additions: s16 incremental ANN index maintenance and t38
-unigram-LM tokenizer EM (plus their mechanism invariants). The oracle
-hash checks live in test_queries_oracle.py like every registry query;
-these tests pin the MECHANISMS the hashes can't see."""
+"""Round-9 additions: t38 unigram-LM tokenizer EM (plus its mechanism
+invariants; the s16 index-maintenance tests live in test_similarity.py).
+The oracle hash checks live in test_queries_oracle.py like every registry
+query; these tests pin the MECHANISMS the hashes can't see."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.plans.registry import QUERIES, queries
 
 queries()
-
-
-def test_s16_append_is_rebuild(spark, sf_dir):
-    """The in-engine identity the oracle also checks cross-engine: probing
-    the appended index returns exactly the rows of a from-scratch
-    ivfpq_topk over the union corpus."""
-    from aws_data_engineering_spark.operators import similarity as SIM
-    from aws_data_engineering_spark.plans.retrieval_queries import (
-        _S16_CENTROIDS,
-        _S16_K,
-        _S16_NPROBE,
-    )
-    from aws_data_engineering_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
-    rebuilt = SIM.ivfpq_topk(
-        emb.filter(F.col("vec_id") < 10),
-        emb,
-        _S16_CENTROIDS,
-        cb,
-        k=_S16_K,
-        n_probe=_S16_NPROBE,
-    )
-    appended = QUERIES["s16_incremental_index_append"].spark(spark, sf_dir)
-    a = {
-        (r["query_id"], r["neighbor_id"], r["adc_dist"], r["rnk"])
-        for r in appended.collect()
-    }
-    b = {
-        (r["query_id"], r["neighbor_id"], r["adc_dist"], r["rnk"])
-        for r in rebuilt.collect()
-    }
-    assert a == b and len(a) > 0
-
-
-def test_s16_append_leaves_existing_files_untouched(spark, sf_dir, tmp_path):
-    """The append contract that makes daily ingestion O(|batch|): the
-    day-0 index files are not rewritten, renamed, or removed by the
-    batch append — only new files appear, inside existing list dirs."""
-    from aws_data_engineering_spark.operators import similarity as SIM
-    from aws_data_engineering_spark.plans.retrieval_queries import _S16_CENTROIDS
-    from aws_data_engineering_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
-    root = str(tmp_path / "s16_idx")
-    (
-        SIM.ivfpq_encode(emb.filter(F.col("vec_id") % 10 != 7), _S16_CENTROIDS, cb)
-        .withColumn("commit", F.lit(0))
-        .write.partitionBy("list_id")
-        .parquet(root)
-    )
-
-    from tests.oracle_utils import snapshot_parquet_files
-
-    def snapshot():
-        return snapshot_parquet_files(root)
-
-    before = snapshot()
-    assert before, "day-0 write produced no parquet files"
-    (
-        SIM.ivfpq_encode(emb.filter(F.col("vec_id") % 10 == 7), _S16_CENTROIDS, cb)
-        .withColumn("commit", F.lit(1))
-        .write.mode("append")
-        .partitionBy("list_id")
-        .parquet(root)
-    )
-    after = snapshot()
-    for p, sig in before.items():
-        assert after.get(p) == sig, f"append touched existing index file {p}"
-    assert len(after) > len(before), "append added no files"
-    # and the appended rows are exactly the batch
-    got = (
-        spark.read.parquet(root)
-        .filter(F.col("commit") == 1)
-        .select("id")
-        .collect()
-    )
-    want = emb.filter(F.col("vec_id") % 10 == 7).select("vec_id").collect()
-    assert {r["id"] for r in got} == {r["vec_id"] for r in want}
-
-
-def test_s16_scratch_cleanup(spark, sf_dir):
-    """The registered query removes its scratch index after eager
-    materialization (the c20 contract — repeated drives must not leak)."""
-    import glob
-
-    from aws_data_engineering_spark.storage import scratch_root
-
-    pat = os.path.join(scratch_root(), "s16_*")
-    before = set(glob.glob(pat))
-    QUERIES["s16_incremental_index_append"].spark(spark, sf_dir).collect()
-    leaked = set(glob.glob(pat)) - before
-    assert not leaked, f"s16 leaked scratch dirs: {leaked}"
 
 
 def test_t38_viterbi_matches_bruteforce():

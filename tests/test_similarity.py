@@ -1,14 +1,24 @@
-"""Similarity-operator tests beyond the oracle harness: the LSH-bucketed
-near-dup pairs must be a strict subset of the exact all-pairs result, with
-identical similarity values for every pair found."""
+"""Similarity-operator tests beyond the oracle harness: the approximate
+paths against the exact ones (LSH near-dup pairs a subset of all pairs,
+IVF and PQ recall), the shared kernels' contracts, every top-k operator on
+empty inputs, and the registered retrieval queries on planted corpora."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import dedup as D
 from aws_data_engineering_spark.operators import similarity as S
+from aws_data_engineering_spark.plans.registry import QUERIES, queries
 from aws_data_engineering_spark.sources.tables import load_table
+from tests.oracle_utils import write_docs
+
+queries()  # load registrations
 
 
 def test_seq_cosine_symmetric_fast_path_bit_exact():
@@ -25,6 +35,30 @@ def test_seq_cosine_symmetric_fast_path_bit_exact():
     assert np.array_equal(seq_cos(m, m), general)  # b is a
     assert np.array_equal(seq_cos(m), general)  # b is None
     assert not np.isnan(general).any()
+
+
+def test_local_topk_matches_per_query_loop():
+    """The row-wise lexsort top-k must pick exactly what a per-query loop
+    (mask the excluded pairs, lexsort (id, -score), take k) picks, in the
+    same order — on scores with many ties and on both score dtypes."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    local_topk = S._local_topk_fns()
+    for dtype in (np.float64, np.int64):
+        score = rng.integers(-4, 4, size=(9, 40)).astype(dtype)  # heavy ties
+        ids = rng.permutation(1000)[:40]
+        excluded = rng.random((9, 40)) < 0.3
+        for k in (1, 5, 40, 50):
+            rows, cols = local_topk(score, excluded, ids, k)
+            want = []
+            for q in range(score.shape[0]):
+                keep = np.flatnonzero(~excluded[q])
+                order = np.lexsort((ids[keep], -score[q, keep]))[:k]
+                want += [(q, int(c)) for c in keep[order]]
+            assert list(zip(rows.tolist(), cols.tolist())) == want, (dtype, k)
+        rows, cols = local_topk(score, None, ids, 3)
+        assert len(rows) == 9 * 3
 
 
 def test_bucketed_neardup_subset_of_exact(spark, sf_dir):
@@ -76,6 +110,32 @@ def test_ivf_topk_recall_vs_exact(spark, sf_dir):
         for r in S.ivf_topk(queries, emb, k=5, n_centroids=8, n_probe=4).collect()
     }
     assert len(ivf_part & set(exact)) >= len(exact) * 0.5
+
+
+_CB = S.pq_codebook()
+_CENTS = S._hyperplanes(dim=64, n_planes=16, seed=7)
+_TOPK_OPS = {
+    "brute_force": lambda q, c: S.brute_force_topk(q, c, k=3),
+    "mips": lambda q, c: S.mips_topk(q, c, k=3),
+    "pq": lambda q, c: S.pq_topk(q, c, _CB, k=3),
+    "hard_negative": lambda q, c: S.hard_negative_topk(q, c, k=3),
+    "ivf": lambda q, c: S.ivf_topk(q, c, k=3, n_centroids=8, n_probe=4),
+    "ivf_fixed": lambda q, c: S.ivf_fixed_topk(q, c, _CENTS, k=3, n_probe=4),
+    "ivfpq": lambda q, c: S.ivfpq_topk(q, c, _CENTS, _CB, k=3, n_probe=4),
+}
+
+
+@pytest.mark.parametrize("empty", ["queries", "candidates"])
+@pytest.mark.parametrize("op", list(_TOPK_OPS))
+def test_topk_operator_on_empty_input(spark, sf_dir, op, empty):
+    """An empty query set or an empty candidate table yields an empty
+    result with the operator's usual columns and types, never an error."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 10)
+    none = emb.filter(F.lit(False))
+    got = _TOPK_OPS[op](none, emb) if empty == "queries" else _TOPK_OPS[op](q, none)
+    assert got.dtypes == _TOPK_OPS[op](q, emb).dtypes
+    assert got.collect() == []
 
 
 def test_exact_path_scale_guard_fires(spark, sf_dir):
@@ -492,3 +552,274 @@ def test_e21_pq_training_recovers_planted_subspace_clusters(spark, tmp_path):
     from tests.oracle_utils import compare
 
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
+
+
+# ---------------------------------------------------------------------------
+# Registered retrieval queries on planted corpora: s11 fusion with an empty
+# sparse arm, s13 label isolation, s14 MIPS ordering, s15 duplicate
+# vectors, e22 label agreement, and the s16 incremental-index mechanisms
+# (append == rebuild, append-only files, scratch cleanup).
+# ---------------------------------------------------------------------------
+def _write_embeddings(tmp_path, n=12, dim=8):
+    vecs = []
+    for i in range(n):
+        # deterministic, non-degenerate vectors
+        vecs.append([((i * 7 + j * 3) % 13) / 13.0 + 0.1 for j in range(dim)])
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(list(range(n)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(n)], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+
+
+def test_s11_fusion_with_empty_sparse_arm(spark, tmp_path):
+    """No document matches the BM25 terms -> the sparse ranking is empty
+    and every fused row comes from the dense arm alone (s_rnk all NULL);
+    the full-outer fusion and the oracle must agree exactly."""
+    from tests.oracle_utils import compare
+
+    rows = [
+        (i, f"nothing relevant here doc{i} filler words", "en", "web")
+        for i in range(1, 13)
+    ]
+    write_docs(tmp_path, rows)
+    _write_embeddings(tmp_path)
+    q = QUERIES["s11_rrf_hybrid_retrieval"]
+    df = q.spark(spark, str(tmp_path))
+    got = df.collect()
+    assert len(got) > 0
+    assert all(r["s_rnk"] is None for r in got), "sparse arm should be empty"
+    compare(df, q.oracle, str(tmp_path))
+
+
+def test_s13_label_isolation_and_short_slices(spark, tmp_path):
+    """A label whose only member is the query itself yields NO rows for
+    that query (filtered search never leaks across the filter key), and a
+    label with fewer than K+1 members yields fewer than K rows — both
+    engines must agree on the short result."""
+    from tests.oracle_utils import compare
+
+    vecs = []
+    labels = []
+    # label 0: only vec 0 (a query) -> no candidates for it
+    # label 1: vecs 1 (query) + 10, 11 -> 2 neighbors (< K=5)
+    # label 2: vecs 2 (query) + 12..17 -> full K
+    for i in range(18):
+        vecs.append([((i * 5 + j * 2) % 11) / 11.0 + 0.2 for j in range(8)])
+        labels.append(0 if i == 0 else (1 if i in (1, 10, 11) else 2))
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(list(range(18)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array(labels, pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    q = QUERIES["s13_ann_label_filtered_topk"]
+    df = q.spark(spark, str(tmp_path))
+    got = df.collect()
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert 0 not in by_q, "label-isolated query must return nothing"
+    assert len(by_q[1]) == 2, "short label slice must yield < K rows"
+    assert all(r["label"] == 1 for r in by_q[1])
+    compare(df, q.oracle, str(tmp_path))
+
+
+def test_e22_separable_labels_reach_full_agreement(spark, tmp_path):
+    """Two well-separated label clusters -> every vector's top neighbors
+    share its label (agreement_ppm = 1_000_000 for both labels)."""
+    from tests.oracle_utils import compare
+
+    vecs, labels = [], []
+    for i in range(12):
+        lab = i % 2
+        # cluster 0 near e1, cluster 1 near e2; small per-point jitter
+        base = [1.0, 0.0] if lab == 0 else [0.0, 1.0]
+        vecs.append([base[0] + 0.01 * i, base[1] + 0.02 * (i % 3), 0.1, 0.1])
+        labels.append(lab)
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(list(range(12)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array(labels, pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    q = QUERIES["e22_knn_label_agreement"]
+    df = q.spark(spark, str(tmp_path))
+    got = {r["label"]: r for r in df.collect()}
+    assert got[0]["agreement_ppm"] == 1_000_000
+    assert got[1]["agreement_ppm"] == 1_000_000
+    assert got[0]["n_edges"] == 6 * 5  # 6 members x k=5
+    compare(df, q.oracle, str(tmp_path))
+
+
+def test_s14_mips_magnitude_beats_angle(spark, tmp_path):
+    """MIPS semantics pinned: a long vector at a worse angle outranks a
+    short near-parallel one (dot 10+5*eps vs ~1), which is exactly the
+    ordering cosine would reverse."""
+    from tests.oracle_utils import compare
+
+    vecs = [
+        [1.0, 0.0, 0.0, 0.0],    # query (vec_id 0 < 10)
+        [10.0, 5.0, 0.0, 0.0],   # big magnitude, 63° worse angle: dot 10
+        [0.99, 0.01, 0.0, 0.0],  # near-parallel, tiny: dot 0.99
+        [0.5, 0.5, 0.5, 0.5],    # filler
+    ]
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([0, 11, 12, 13], pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array([0, 0, 0, 0], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    q = QUERIES["s14_mips_topk"]
+    df = q.spark(spark, str(tmp_path))
+    ranked = sorted(
+        [r for r in df.collect() if r["query_id"] == 0], key=lambda r: r["rnk"]
+    )
+    assert ranked[0]["neighbor_id"] == 11 and ranked[0]["dot"] == 10.0
+    assert ranked[1]["neighbor_id"] == 12
+    compare(df, q.oracle, str(tmp_path))
+
+
+def test_s15_duplicate_vectors_tie_left_and_leaves_balance(spark, tmp_path):
+    """Exact duplicate vectors share a projection, so they all land on the
+    same side of every median (ties go LEFT, <=) and end in the SAME leaf —
+    a projection tree can never split identical points apart. Leaves stay
+    near-balanced on skewed data, and both engines agree on the full
+    output including leaf paths."""
+    from tests.oracle_utils import compare
+
+    vecs = []
+    # 8 copies of one vector (a duplicate cluster) + 24 spread vectors
+    for i in range(32):
+        if i < 8:
+            vecs.append([0.5] * 64)
+        else:
+            vecs.append([((i * 7 + j * 3) % 13) / 13.0 - 0.4 for j in range(64)])
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(list(range(32)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(32)], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    q = QUERIES["s15_projection_tree_topk"]
+    df = q.spark(spark, str(tmp_path))
+    rows = df.collect()
+    # queries 0..7 are the duplicate cluster: their top neighbors must be
+    # the other duplicates (max integer dot), all in one shared leaf
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["query_id"], []).append(r)
+    dup_leaves = {r["leaf"] for qid in range(8) for r in by_q[qid]}
+    assert len(dup_leaves) == 1, "duplicate cluster split across leaves"
+    top = sorted(by_q[0], key=lambda r: r["rnk"])[0]
+    assert top["neighbor_id"] in range(1, 8)
+    # balance: no leaf holds more than half the corpus (median splits)
+    leaf_sizes = {r["leaf"]: r["leaf_n"] for r in rows}
+    assert all(n <= 16 for n in leaf_sizes.values())
+    compare(df, q.oracle, str(tmp_path))
+
+
+def test_s16_append_is_rebuild(spark, sf_dir):
+    """The in-engine identity the oracle also checks cross-engine: probing
+    the appended index returns exactly the rows of a from-scratch
+    ivfpq_topk over the union corpus."""
+    from aws_data_engineering_spark.operators import similarity as SIM
+    from aws_data_engineering_spark.plans.retrieval_queries import (
+        _S16_CENTROIDS,
+        _S16_K,
+        _S16_NPROBE,
+    )
+    from aws_data_engineering_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
+    rebuilt = SIM.ivfpq_topk(
+        emb.filter(F.col("vec_id") < 10),
+        emb,
+        _S16_CENTROIDS,
+        cb,
+        k=_S16_K,
+        n_probe=_S16_NPROBE,
+    )
+    appended = QUERIES["s16_incremental_index_append"].spark(spark, sf_dir)
+    a = {
+        (r["query_id"], r["neighbor_id"], r["adc_dist"], r["rnk"])
+        for r in appended.collect()
+    }
+    b = {
+        (r["query_id"], r["neighbor_id"], r["adc_dist"], r["rnk"])
+        for r in rebuilt.collect()
+    }
+    assert a == b and len(a) > 0
+
+
+def test_s16_append_leaves_existing_files_untouched(spark, sf_dir, tmp_path):
+    """The append contract that makes daily ingestion O(|batch|): the
+    day-0 index files are not rewritten, renamed, or removed by the
+    batch append — only new files appear, inside existing list dirs."""
+    from aws_data_engineering_spark.operators import similarity as SIM
+    from aws_data_engineering_spark.plans.retrieval_queries import _S16_CENTROIDS
+    from aws_data_engineering_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
+    root = str(tmp_path / "s16_idx")
+    (
+        SIM.ivfpq_encode(emb.filter(F.col("vec_id") % 10 != 7), _S16_CENTROIDS, cb)
+        .withColumn("commit", F.lit(0))
+        .write.partitionBy("list_id")
+        .parquet(root)
+    )
+
+    from tests.oracle_utils import snapshot_parquet_files
+
+    def snapshot():
+        return snapshot_parquet_files(root)
+
+    before = snapshot()
+    assert before, "day-0 write produced no parquet files"
+    (
+        SIM.ivfpq_encode(emb.filter(F.col("vec_id") % 10 == 7), _S16_CENTROIDS, cb)
+        .withColumn("commit", F.lit(1))
+        .write.mode("append")
+        .partitionBy("list_id")
+        .parquet(root)
+    )
+    after = snapshot()
+    for p, sig in before.items():
+        assert after.get(p) == sig, f"append touched existing index file {p}"
+    assert len(after) > len(before), "append added no files"
+    # and the appended rows are exactly the batch
+    got = (
+        spark.read.parquet(root)
+        .filter(F.col("commit") == 1)
+        .select("id")
+        .collect()
+    )
+    want = emb.filter(F.col("vec_id") % 10 == 7).select("vec_id").collect()
+    assert {r["id"] for r in got} == {r["vec_id"] for r in want}
+
+
+def test_s16_scratch_cleanup(spark, sf_dir):
+    """The registered query removes its scratch index after eager
+    materialization (the c20 contract — repeated drives must not leak)."""
+    import glob
+
+    from aws_data_engineering_spark.storage import scratch_root
+
+    pat = os.path.join(scratch_root(), "s16_*")
+    before = set(glob.glob(pat))
+    QUERIES["s16_incremental_index_append"].spark(spark, sf_dir).collect()
+    leaked = set(glob.glob(pat)) - before
+    assert not leaked, f"s16 leaked scratch dirs: {leaked}"

@@ -8,7 +8,10 @@ which arm runs first from one rep or seed to the next:
 
 - bench mode: `bench.py name ...` once per rep and arm; prints each run's
   timings and codegen compile counts, then per query each arm's quartiles
-  and the B/A median ratio, plus the calibration series.
+  and the B/A median ratio, plus the calibration series. A run's first
+  sample of a query is cold (it pays the query's first Python-worker start
+  and codegen), so with `--n` >= 2 the quartiles pool the warm repeats only
+  and the first samples print as their own series (`first_A`, `first_B`).
 - perfbench mode: `perfbench/run.py --workload W --seed N --trace 0` once per
   seed and arm; prints every run, then per end-to-end metric each arm's
   quartiles, the B/A median ratio and the number of seeds B beat A on
@@ -43,20 +46,37 @@ def run_arm(tree: str, sf: str | None, n: int, names: list[str]) -> dict:
 
 
 def bench_mode(a: str, b: str, sf: str | None, reps: int, n: int, names: list[str]) -> None:
-    acc: dict[str, dict[str, list[float]]] = {"A": {}, "B": {}}
+    runs: dict[str, list[dict[str, list[float]]]] = {"A": [], "B": []}
     cals: dict[str, list[float]] = {"A": [], "B": []}
     for rep in range(reps):
         for arm, tree in arm_order(rep, a, b):
             r = run_arm(tree, sf, n, names)
             cals[arm].append(r["cal"])
-            for name, samples in r["timings"].items():
-                acc[arm].setdefault(name, []).extend(samples)
+            runs[arm].append(r["timings"])
             print(json.dumps({"rep": rep, "arm": arm, "cal": r["cal"],
                               "timings": r["timings"],
                               # absent in trees older than the count
                               "compiles": r.get("compiles")}), flush=True)
-    summary = {name: compare(acc["A"][name], acc["B"][name]) for name in names}
-    print(json.dumps({"cals": cals, "summary": summary}, indent=1))
+    print(json.dumps({"cals": cals, "summary": summarize(runs, names, n)}, indent=1))
+
+
+def summarize(runs: dict[str, list[dict[str, list[float]]]], names: list[str],
+              n: int) -> dict:
+    """Per query, each arm's quartiles and B/A median ratio over its runs'
+    samples (``runs[arm]`` = one ``{name: [sec, ...]}`` per run). With
+    ``n`` >= 2 samples a run, the cold first samples are left out of the
+    quartiles and reported as the ``first_A``/``first_B`` series."""
+    summary = {}
+    for name in names:
+        per_run = {arm: [t[name] for t in runs[arm]] for arm in ("A", "B")}
+        skip = 1 if n >= 2 else 0
+        pooled = {arm: [x for s in samples for x in s[skip:]]
+                  for arm, samples in per_run.items()}
+        summary[name] = compare(pooled["A"], pooled["B"])
+        if skip:
+            summary[name].update({f"first_{arm}": [s[0] for s in samples]
+                                  for arm, samples in per_run.items()})
+    return summary
 
 
 def run_perfbench(tree: str, workload: str, seed: int, seconds: float) -> dict:
