@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_data_engineering_spark.operators.text import normalize_text
+from aws_data_engineering_spark.operators import text as T
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -47,17 +47,13 @@ def latest_by_key(df: DataFrame, keys: list[str], order_col: str, tiebreak: str)
 
 
 def shingles(col: str | Column, n: int = 3) -> Column:
-    """Word n-gram shingles over normalized text. Pure JVM: split +
-    transform over index sequence; distinct to make it a set."""
-    toks = F.split(normalize_text(col), " ")
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.when(k <= 0, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.array_distinct(grams)
-    )
+    """Word n-gram shingles over lower-cased tokens: the distinct
+    :func:`~aws_data_engineering_spark.operators.text.word_ngrams`, a
+    document shorter than ``n`` tokens kept whole. Pure JVM."""
+    toks = T.tokens(T.ascii_lower(col))
+    return F.when(
+        F.size(toks) < n, F.array(F.concat_ws(" ", toks))
+    ).otherwise(F.array_distinct(T.word_ngrams(toks, n)))
 
 
 def _shingle_worker_fns(shingle_n: int):
@@ -70,28 +66,17 @@ def _shingle_worker_fns(shingle_n: int):
     harness imports this package via sys.path manipulation that does not
     propagate to workers).
 
-    Semantics must match the JVM/DuckDB shingle SQL exactly: trim spaces
-    only, ASCII lowercase, Java-regex \\s class (ASCII whitespace).
+    Semantics are the text contract's shingle twin
+    (:func:`~aws_data_engineering_spark.operators.text.text_worker_fns`).
     """
     import hashlib
-    import re
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    # ASCII-only case fold (built by value for cloudpickle): Python
-    # str.lower is Unicode-context-aware where DuckDB's is not (İ, final Σ)
-    fold = str.maketrans(
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-    )
+    shingle_text = T.text_worker_fns().shingles
     mersenne_p = (1 << 31) - 1
     n = shingle_n
 
     def shingle_set(text: str | None) -> list[str]:
-        toks = ws.sub(
-            " ", (text or "").strip(" \t\n\x0b\f\r").translate(fold)
-        ).split(" ")
-        if len(toks) - (n - 1) <= 0:
-            return [" ".join(toks)]
-        return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
+        return shingle_text(text, n)
 
     def base_hash(s: str) -> int:
         # deterministic shingle → [0, 2^31-1) hash: md5-derived, reproducible
@@ -488,7 +473,7 @@ def simhash(col: str | Column, bits: int = 48) -> Column:
     bits keep the per-bit majority property that SimHash needs; the two
     missing band bits just shorten the signature, not its semantics.
     """
-    toks = F.split(normalize_text(col), " ")
+    toks = T.tokens(T.ascii_lower(col))
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("bigint")
     )
@@ -947,25 +932,32 @@ def minhash_oracle_sql(
     band hashes (xxhash64 over 4×31-bit values — deterministic on fixed
     test data).
     """
+    return f"""
+    WITH {minhash_sig_cte_sql(num_hashes, source_sql)}
+    {minhash_pairs_sql(num_hashes, num_bands)}
+    """
+
+
+def minhash_pairs_sql(num_hashes: int, num_bands: int) -> str:
+    """The candidate-pair SELECT of :func:`minhash_oracle_sql` over the
+    ``sigs`` CTE of :func:`minhash_sig_cte_sql`: pairs sharing any band
+    slice, with their estimated Jaccard."""
     rows = num_hashes // num_bands
     bands = " OR ".join(
         f"(a.sig[{rows * b + 1}:{rows * b + rows}] = "
         f"bb.sig[{rows * b + 1}:{rows * b + rows}])"
         for b in range(num_bands)
     )
-    prefix = _minhash_sig_cte_sql(num_hashes, source_sql)
-    return f"""
-    WITH {prefix}
-    SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
+    return f"""SELECT a.doc_id AS id_a, bb.doc_id AS id_b,
            {_est_jaccard_sql("a.sig", "bb.sig", num_hashes)}
     FROM sigs a JOIN sigs bb ON a.doc_id < bb.doc_id
-    WHERE {bands}
-    """
+    WHERE {bands}"""
 
 
-def _minhash_sig_cte_sql(num_hashes: int, source_sql: str = "documents") -> str:
+def minhash_sig_cte_sql(num_hashes: int, source_sql: str = "documents") -> str:
     """Shared CTE body (toks -> grams -> hashed -> sigs) for the MinHash
-    oracles — byte-identical to the proven d04 prefix."""
+    oracles: ``toks(doc_id, t)`` lower-cased tokens, ``grams(doc_id, sh)``
+    distinct word 3-gram shingles, ``sigs(doc_id, sig)``."""
 
     def hexval(i: int, h: str) -> str:
         a = f"ascii(substr({h}, {i}, 1))"
@@ -980,19 +972,7 @@ def _minhash_sig_cte_sql(num_hashes: int, source_sql: str = "documents") -> str:
         f"list_min([((h * {a}) + {b}) % {_MERSENNE_P} FOR h IN bases])"
         for a, b in _hash_params(num_hashes)
     )
-    return f"""toks AS (
-      SELECT doc_id,
-             string_split(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')
-               AS t
-      FROM {source_sql}
-    ), grams AS (
-      SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                      FOR i IN generate_series(1, len(t) - 2)])
-             END AS sh
-      FROM toks
-    ), hashed AS (
+    return f"""{T.shingle_ctes_sql(3, source=source_sql)}, hashed AS (
       SELECT doc_id, [{base} FOR x IN sh] AS bases FROM grams
     ), sigs AS (
       SELECT doc_id, [{sig_terms}] AS sig FROM hashed
@@ -1007,7 +987,7 @@ def _minhash_bandrows_cte_sql(
     collision-free stand-in for the Spark side's xxhash64 band hash
     (:func:`minhash_band_rows`)."""
     rows = num_hashes // num_bands
-    return f"""{_minhash_sig_cte_sql(num_hashes, source_sql)}
+    return f"""{minhash_sig_cte_sql(num_hashes, source_sql)}
     , bandrows AS (
       SELECT doc_id, sig, b.band,
              array_to_string(sig[b.band * {rows} + 1:b.band * {rows} + {rows}],
@@ -1071,18 +1051,7 @@ def bloom_oracle_sql(bench_in: str, shingle_n: int = 5) -> str:
         pos = f"({pos} * 16 + {hexval(i)})"
 
     return f"""
-    WITH toks AS (
-      SELECT doc_id, source,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams AS (
-      SELECT doc_id, source,
-             CASE WHEN len(t) <= {win} THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+{win}], ' ')
-                                      FOR i IN generate_series(1, len(t) - {win})])
-             END AS sh
-      FROM toks
-    ), ex AS (
+    WITH {T.shingle_ctes_sql(shingle_n, "doc_id, source")}, ex AS (
       SELECT doc_id, source, UNNEST(sh) AS shingle FROM grams
     ), bench AS (
       SELECT DISTINCT shingle FROM ex WHERE source IN {bench_in}
@@ -1135,12 +1104,7 @@ def duplicate_spans(
     )
     grams = toks.select(
         id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__t") - gram),
-                lambda i: F.concat_ws(" ", F.slice("__t", i + 1, gram)),
-            )
-        ).alias("pos", "gram"),
+        F.posexplode(T.word_ngrams(F.col("__t"), gram)).alias("pos", "gram"),
     ).withColumn("pos", F.col("pos").cast("long"))
     dup = (
         grams.groupBy("gram")
@@ -1170,10 +1134,10 @@ def _simhash_worker_fns(bits: int):
     """Closure factory so cloudpickle ships everything by value (executors
     can't resolve module globals when the driver imported via sys.path —
     the _shingle_worker_fns pattern)."""
+    normalize = T.text_worker_fns().normalize
 
     def sig_batch(texts):
         import hashlib
-        import re as re_w
 
         import numpy as np_w
 
@@ -1181,20 +1145,8 @@ def _simhash_worker_fns(bits: int):
         weights = (np_w.uint64(1) << shifts).astype(np_w.int64)
         out = []
         cache: dict = {}
-        fold = str.maketrans(
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-        )
         for text in texts:
-            # exact mirror of simhash()'s normalize_text: ASCII-6 strip ->
-            # ASCII fold -> collapse ASCII \s+ (Java regex \s is ASCII-only;
-            # the fold is A-Z-only for DuckDB parity — İ / final Σ)
-            s = re_w.sub(
-                r"\s+",
-                " ",
-                str(text).strip(" \t\n\x0b\f\r").translate(fold),
-                flags=re_w.ASCII,
-            )
-            toks = s.split(" ")
+            toks = normalize(str(text)).split(" ")
             hs = np_w.empty(len(toks), dtype=np_w.uint64)
             for j, tok in enumerate(toks):
                 h = cache.get(tok)
@@ -1272,14 +1224,9 @@ def containment_pairs(
     )
     grams = toks.select(
         "id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("__t") - gram),
-                    lambda i: F.concat_ws(" ", F.slice("__t", i + 1, gram)),
-                )
-            )
-        ).alias("gram_s"),
+        F.explode(F.array_distinct(T.word_ngrams(F.col("__t"), gram))).alias(
+            "gram_s"
+        ),
     )
     # grams cross the shuffle as 48-bit md5-prefix BIGINTs, not 3-token
     # strings: the self-join/census key shrinks to 8 bytes (~5x less shuffle

@@ -92,11 +92,10 @@ def split_assignment(
 ) -> Column:
     """Column assigning each row a deterministic named split."""
     bucket = hash_bucket(id_col, salt)
-    expr: Column | None = None
-    for name, hi in split_thresholds(fractions):
-        cond = bucket < hi
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    assert expr is not None
+    (name, hi), *rest = split_thresholds(fractions)
+    expr = F.when(bucket < hi, F.lit(name))
+    for name, hi in rest:
+        expr = expr.when(bucket < hi, F.lit(name))
     return expr.alias("split")
 
 

@@ -40,17 +40,18 @@ class ExactPathScaleError(ValueError):
     operator that handles the same query shape at scale."""
 
 
-def _guard_exact_path(df: DataFrame, max_vectors: int, op: str, alternative: str) -> None:
-    """Cheap count-guard before a driver-side collect. Costs one count job
-    over a single-column projection (column-pruned scan) — negligible next
-    to the collect it protects, and it turns the documented ~100k-vector
-    contract into code instead of prose."""
-    n = df.count()
-    if n > max_vectors:
+def _collect_guarded(df: DataFrame, max_vectors: int, op: str, alternative: str) -> list:
+    """Collect ``df`` in one job, refusing past ``max_vectors`` rows: at
+    most ``max_vectors + 1`` rows are ever collected, and one row over the
+    bound raises. Turns the documented
+    ~100k-vector exact-path contract into code instead of prose."""
+    rows = df.limit(max_vectors + 1).collect()
+    if len(rows) > max_vectors:
         raise ExactPathScaleError(
-            f"{op}: {n} vectors exceed the exact-path driver-collect bound "
-            f"({max_vectors}); use {alternative} for corpora this size"
+            f"{op}: more than {max_vectors} vectors exceed the exact-path "
+            f"collect bound; use {alternative} for corpora this size"
         )
+    return rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -231,8 +232,7 @@ def _probe_scan_topk(
     """
     p_names, c_names = list(probe_keys), list(cand_keys)
     probes = _keyed_vectors(probes, vec_col, **{n: src for n, (src, _) in probe_keys.items()})
-    _guard_exact_path(probes.select(p_names[0]), max_vectors, op, alternative)
-    rows = probes.collect()
+    rows = _collect_guarded(probes, max_vectors, op, alternative)
     p_keys = {n: [r[n] for r in rows] for n in p_names}
     p_vecs = [list(r["v"]) for r in rows]
     same = ((p_names[0], c_names[0]),) + tuple(exclude)
@@ -797,12 +797,12 @@ def exact_neardup_pairs(
     dimension-by-dimension (vectorized adds in a j-loop) — the left-to-right
     IEEE sequence of the DuckDB oracle's ``list_cosine_similarity``.
     """
-    _guard_exact_path(
-        df.select(id_col), max_vectors, "exact_neardup_pairs", "bucketed_neardup_pairs"
+    rows = _collect_guarded(
+        df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")),
+        max_vectors,
+        "exact_neardup_pairs",
+        "bucketed_neardup_pairs",
     )
-    rows = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).collect()
     all_ids = [r["id"] for r in rows]
     all_vecs = [list(r["v"]) for r in rows]
     thr = float(threshold)
@@ -987,11 +987,19 @@ def pq_oracle_sql(
       FROM codes c JOIN qlut ql ON ql.s = c.s AND ql.j = c.code
       WHERE c.vec_id != ql.query_id
       GROUP BY 1, 2)
-    SELECT query_id, neighbor_id, adc_dist, CAST(rnk AS INT) AS rnk FROM (
+    {adc_topk_sql(k)}
+    """
+
+
+def adc_topk_sql(k: int) -> str:
+    """The ranking tail of the PQ/IVFPQ oracles: the ``k`` smallest
+    ``adc_dist`` per query from a ``scores(query_id, neighbor_id,
+    adc_dist)`` CTE, ties by ``neighbor_id``, as (query_id, neighbor_id,
+    adc_dist, rnk)."""
+    return f"""SELECT query_id, neighbor_id, adc_dist, CAST(rnk AS INT) AS rnk FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-      FROM scores) WHERE rnk <= {k}
-    """
+      FROM scores) WHERE rnk <= {k}"""
 
 
 def _pq_cte_sql(m_sub: int, k_codes: int, subdim: int, query_pred: str) -> str:
@@ -1204,10 +1212,7 @@ def ivfpq_oracle_sql(
     )
     return f"""
     WITH {cte}
-    SELECT query_id, neighbor_id, adc_dist, CAST(rnk AS INT) AS rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-      FROM scores) WHERE rnk <= {k}
+    {adc_topk_sql(k)}
     """
 
 

@@ -1,4 +1,5 @@
-"""Text-analysis operators for training-data pipelines.
+r"""Text-analysis operators for training-data pipelines, and the one owner
+of the cross-engine text contract.
 
 All hot-path expressions are built-in ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen'd) — no Python UDFs. Each helper returns a Column so it
@@ -8,6 +9,41 @@ SQL-expressible so the DuckDB oracle can replicate them exactly.
 Operators: tokenization, token counting (whitespace + BPE-ish regex),
 quality scoring (length/punct/stopword ratios), language-ID heuristic,
 document fingerprinting (normalized-text hash).
+
+The text contract
+-----------------
+Every compared text query trims exactly the ASCII-6 whitespace
+``ASCII_WS`` (space, \t, \n, \x0b, \f, \r), folds only A-Z, and splits on
+runs of the same six characters (``WS_RUN``). The engines' native
+``trim``/``lower``/``\s`` all disagree at the edges (NBSP, U+3000, İ, final
+Σ, vertical tab), so each step is written once per engine here and every
+query calls these helpers:
+
+==============  ======================  ====================  =====================
+step            Spark (Column)          DuckDB (SQL text)     Python worker
+==============  ======================  ====================  =====================
+trim            ``ascii_trim``          ``ascii_trim_sql``    ``str.strip(ASCII_WS)``
+A-Z fold        ``ascii_lower``         ``ascii_lower_sql``   ``text_worker_fns().lower``
+tokens          ``tokens``              ``tokens_sql``        ``text_worker_fns().tokens``
+normalize       ``normalize_text``      ``normalize_sql``     ``text_worker_fns().normalize``
+word n-grams    ``word_ngrams``         ``shingles_sql``      ``text_worker_fns().shingles``
+==============  ======================  ====================  =====================
+
+Lower-cased tokens are ``tokens(ascii_lower(x))`` on every engine (fold
+first, then trim and split). ``normalize`` is the folded, trimmed text with
+each whitespace run collapsed to one space, so splitting it on ' ' gives
+the same tokens. Regex constants (``WS_RUN``, ``WORD_RE``, ``PUNCT_RE``) are
+spelled with escapes that Java, RE2 and Python ``re`` all read alike.
+
+Empty text: ``tokens('')`` and ``tokens('   ')`` are ``['']`` on all three
+engines (one empty token), and their normalized form is ``''``.
+NULL: every Spark and DuckDB helper maps NULL to NULL, and so does every
+Python twin (``None`` in, ``None`` out); call sites that need a value for a
+NULL document pass ``text or ''`` themselves. The one exception is a NULL
+document's shingle set: ``['']`` on Spark and Python, NULL on DuckDB.
+Shingles keep a short document whole: fewer than ``n`` tokens give one
+shingle, the tokens joined by ' '. DuckDB's shingle list is a set whose
+order differs from Spark's and Python's position order.
 """
 
 from __future__ import annotations
@@ -18,28 +54,41 @@ from pyspark.sql import functions as F
 # Fixed stopword list shared with the oracle SQL (keep sorted, ASCII-only).
 STOPWORDS = ("a", "and", "in", "of", "the", "to")
 
-# BPE-ish token pattern: letter runs, single digits, single punctuation marks.
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
-
-# Engine-portable ASCII case fold (round 8, the case twin of the ASCII-6
-# whitespace class): Spark/Java LOWER is context-sensitive Unicode
-# (U+0130 İ -> 'i'+combining dot, final Σ -> ς) while DuckDB's lower maps
-# İ -> plain 'i' and never emits final sigma — a live divergence class
-# (the planted unicode-case corpus flipped t10/t35/d03/d06 before this
-# unification; tests/test_round8.py keeps it green). Every TOKEN-IDENTITY
-# case fold (tokenizers, fingerprints, n-grams, retrieval) therefore folds
-# ONLY A-Z via translate on all three engines; non-ASCII codepoints pass
-# through unchanged everywhere.
+# Engine-portable ASCII case fold: Spark/Java LOWER is context-sensitive
+# Unicode (U+0130 İ -> 'i'+combining dot, final Σ -> ς) while DuckDB's lower
+# maps İ -> plain 'i' and never emits final sigma. Every token-identity case
+# fold (tokenizers, fingerprints, n-grams, retrieval) therefore folds ONLY
+# A-Z via translate on all three engines; non-ASCII codepoints pass through
+# unchanged everywhere (tests/test_round8.py keeps the planted corpus green).
 ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 ASCII_LOWERED = "abcdefghijklmnopqrstuvwxyz"
 ASCII_FOLD_TABLE = str.maketrans(ASCII_UPPER, ASCII_LOWERED)
 
+# Engine-portable ASCII-6 trim: Spark F.trim strips 0x20 SPACES ONLY,
+# DuckDB's 1-arg trim strips Unicode space-class chars (NBSP, U+3000) but
+# NOT \t/\n/\x0b/\f/\r, and Python str.strip() strips full Unicode
+# whitespace. Every compared trim strips exactly this class.
+ASCII_WS = " \t\n\x0b\f\r"
+
+# The same six characters as regex classes. Never write \s in a pattern that
+# must agree across engines: Java's \s is these six, RE2's lacks \x0b and
+# Python's is full Unicode.
+_WS_ESC = r" \t\n\x0b\f\r"
+WS_RUN = f"[{_WS_ESC}]+"
+WORD_RE = f"[^{_WS_ESC}]+"
+PUNCT_RE = f"[^A-Za-z0-9{_WS_ESC}]"
+
+# BPE-ish token pattern: letter runs, single digits, single punctuation marks.
+BPE_TOKEN_PATTERN = f"[A-Za-z]+|[0-9]|{PUNCT_RE}"
+
+
+def _col(col: str | Column) -> Column:
+    return col if isinstance(col, Column) else F.col(col)
+
 
 def ascii_lower(col: str | Column) -> Column:
-    """A-Z -> a-z only (see ASCII_UPPER comment); the Spark member of the
-    three-engine fold contract."""
-    return F.translate(col if isinstance(col, Column) else F.col(col),
-                       ASCII_UPPER, ASCII_LOWERED)
+    """A-Z -> a-z only (the Spark member of the fold contract)."""
+    return F.translate(_col(col), ASCII_UPPER, ASCII_LOWERED)
 
 
 def ascii_lower_sql(expr: str) -> str:
@@ -47,22 +96,10 @@ def ascii_lower_sql(expr: str) -> str:
     return f"translate({expr}, '{ASCII_UPPER}', '{ASCII_LOWERED}')"
 
 
-# Engine-portable ASCII-6 TRIM (round 8, completing the whitespace
-# contract): the three engines' native trims all differ — Spark F.trim
-# strips 0x20 SPACES ONLY, DuckDB's 1-arg trim strips Unicode space-class
-# chars (NBSP, U+3000) but NOT \t/\n/\x0b/\f/\r, and Python str.strip()
-# strips full Unicode whitespace. A doc with a leading TAB already diverges
-# Spark-vs-DuckDB; leading NBSP diverges the other way (13 live queries on
-# the planted corpus). Every compared trim now strips exactly the
-# tokenizer's ASCII-6 class on all three engines.
-ASCII_WS = " \t\n\x0b\f\r"
-
-
 def ascii_trim(col: str | Column) -> Column:
-    """Strip exactly ASCII_WS from both ends (Spark member of the
-    three-engine trim contract)."""
-    return F.btrim(col if isinstance(col, Column) else F.col(col),
-                   F.lit(ASCII_WS))
+    """Strip exactly ASCII_WS from both ends (the Spark member of the trim
+    contract)."""
+    return F.btrim(_col(col), F.lit(ASCII_WS))
 
 
 def ascii_trim_sql(expr: str) -> str:
@@ -74,8 +111,99 @@ def ascii_trim_sql(expr: str) -> str:
 
 
 def tokens(col: str | Column) -> Column:
-    """Whitespace tokenization (after trim)."""
-    return F.split(ascii_trim(col), r"\s+")
+    """Whitespace tokenization: ASCII-6 trim, then split on ``WS_RUN``."""
+    return F.split(ascii_trim(col), WS_RUN)
+
+
+def tokens_sql(expr: str) -> str:
+    """DuckDB twin of :func:`tokens`."""
+    return f"string_split_regex({ascii_trim_sql(expr)}, '{WS_RUN}')"
+
+
+def normalize_text(col: str | Column) -> Column:
+    """Lowercase + trim + collapse whitespace — canonical form for
+    fingerprinting."""
+    return F.regexp_replace(ascii_trim(ascii_lower(col)), WS_RUN, " ")
+
+
+def normalize_sql(expr: str) -> str:
+    """DuckDB twin of :func:`normalize_text`."""
+    return (
+        f"regexp_replace({ascii_trim_sql(ascii_lower_sql(expr))},"
+        f" '{WS_RUN}', ' ', 'g')"
+    )
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Every ``n``-token window of the array ``toks`` joined by ' ', in
+    position order, repeats kept (index ``i`` is the window starting at
+    token ``i``). An array shorter than ``n`` gives its one short window."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+    )
+
+
+def shingles_sql(toks: str, n: int) -> str:
+    """DuckDB twin of ``dedup.shingles`` over the token list ``toks``: the
+    distinct ``n``-token windows, a short list kept whole."""
+    return (
+        f"CASE WHEN len({toks}) <= {n} THEN [array_to_string({toks}, ' ')]"
+        f" ELSE list_distinct([array_to_string({toks}[i:i+{n - 1}], ' ')"
+        f" FOR i IN generate_series(1, len({toks}) - {n - 1})]) END"
+    )
+
+
+def shingle_ctes_sql(n: int, cols: str = "doc_id", source: str = "documents") -> str:
+    """Two CTEs over ``source(<cols>, text)``: ``toks(<cols>, t)``, the
+    lower-cased tokens, and ``grams(<cols>, sh)``, their
+    :func:`shingles_sql` set."""
+    return f"""toks AS (
+      SELECT {cols}, {tokens_sql(ascii_lower_sql('text'))} AS t FROM {source}
+    ), grams AS (
+      SELECT {cols}, {shingles_sql('t', n)} AS sh FROM toks
+    )"""
+
+
+def text_worker_fns():
+    """The Python twins for Arrow/UDF workers, as by-value closures.
+
+    Returns a namespace with ``lower``, ``normalize``, ``tokens``
+    (str or None -> same type) and ``shingles(text, n)`` (a NULL text gives
+    ``['']``, as Spark's ``dedup.shingles`` does). The constants are
+    bound inside this factory so cloudpickle ships the closures by value:
+    executors' Python workers cannot import this package when it was
+    imported through ``sys.path``.
+    """
+    import re
+    from types import SimpleNamespace
+
+    ws = ASCII_WS
+    fold = str.maketrans(ASCII_UPPER, ASCII_LOWERED)
+    ws_run = re.compile(WS_RUN)
+
+    def lower(text):
+        return None if text is None else text.translate(fold)
+
+    def normalize(text):
+        if text is None:
+            return None
+        return ws_run.sub(" ", text.translate(fold).strip(ws))
+
+    def tokens(text):
+        return None if text is None else ws_run.split(text.strip(ws))
+
+    def shingles(text, n):
+        toks = normalize(text or "").split(" ")
+        if len(toks) < n:
+            return [" ".join(toks)]
+        return list(dict.fromkeys(
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        ))
+
+    return SimpleNamespace(
+        lower=lower, normalize=normalize, tokens=tokens, shingles=shingles
+    )
 
 
 def token_count(col: str | Column) -> Column:
@@ -107,7 +235,7 @@ def digit_ratio(col: str | Column) -> Column:
 
 
 def punct_count(col: str | Column) -> Column:
-    return F.regexp_count(col, F.lit(r"[^A-Za-z0-9\s]"))
+    return F.regexp_count(col, F.lit(PUNCT_RE))
 
 
 def quality_score(col: str | Column) -> Column:
@@ -134,11 +262,6 @@ def lang_id(col: str | Column) -> Column:
     )
 
 
-def normalize_text(col: str | Column) -> Column:
-    """Lowercase + collapse whitespace — canonical form for fingerprinting."""
-    return F.regexp_replace(ascii_lower(ascii_trim(col)), r"\s+", " ")
-
-
 def fingerprint(col: str | Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
     (md5 rather than xxhash so the DuckDB oracle computes the identical
@@ -159,25 +282,11 @@ _RK_OUT_MASK = (1 << 61) - 1  # final fold below int64 for ANSI-safe bigint
 
 def _winnow_worker_fns(k: int, window: int):
     """Factory so cloudpickle ships everything by value (executors may not
-    have the package importable — see operators/dedup._shingle_worker_fns)."""
-
-    # built here (not module-level) so cloudpickle ships it by value
-    fold = str.maketrans(
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-    )
+    have the package importable — see :func:`text_worker_fns`)."""
+    norm = text_worker_fns().normalize
 
     def normalize(text: str | None) -> str:
-        import re
-
-        if text is None:
-            return ""
-        # explicit ASCII-6 class: Python's unicode \s also matches NBSP /
-        # U+2028 etc., which Java \s and the oracle's RE2 class do not;
-        # ASCII-only case fold: Python str.lower is Unicode-context-aware
-        # (İ, final Σ) where DuckDB's is not — same contract as ascii_lower
-        return re.sub(
-            r"[ \t\n\x0b\f\r]+", " ", text.strip(" \t\n\x0b\f\r").translate(fold)
-        )
+        return norm(text) or ""
 
     def rolling_hashes(s: str):
         """uint64-wrap polynomial k-gram hashes, equal to the Rabin-Karp
@@ -357,7 +466,7 @@ def winnowing_sql_cte(k: int = 5, window: int = 4) -> str:
     w = window
     return f"""
     __wn AS (
-      SELECT doc_id, regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g') AS s
+      SELECT doc_id, {normalize_sql('text')} AS s
       FROM documents
     ), __wc AS (
       SELECT doc_id, s, length(s) AS n FROM __wn WHERE length(s) >= {k}
@@ -430,22 +539,20 @@ def gopher_metrics(
     kept for composability, but the mode count is O(distinct x n) per row
     interpreted — quadratic on long documents. This kernel is O(n) per
     row via a hash counter and measured ~4x faster at sf0.1; tokenization
-    mirrors ``F.split(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')`` with ASCII whitespace (the
-    Java regex default), so outputs are identical integers.
+    is the Python twin of :func:`tokens`, so outputs are identical integers.
 
     Returns ``id_cols + (n_words, char_sum, n_distinct, top_cnt)``.
     """
     from pyspark.sql import functions as F2
 
     ids = list(id_cols)
+    split_tokens = text_worker_fns().tokens
 
     def kernel(batches):
-        import re as re_w
         from collections import Counter
 
         import pandas as pd_w
 
-        ws = re_w.compile(r"\s+", re_w.ASCII)
         for pdf in batches:
             out = {c: [] for c in ids}
             nw, cs, nd, tc = [], [], [], []
@@ -459,10 +566,7 @@ def gopher_metrics(
                     nw.append(None); cs.append(None)
                     nd.append(None); tc.append(None)
                     continue
-                # the ASCII-6 trim contract (ascii_trim / ascii_trim_sql):
-                # a bare Python .strip() here would silently diverge from
-                # the oracle on Unicode leading/trailing whitespace
-                toks = ws.split(str(text).strip(" \t\n\x0b\f\r"))
+                toks = split_tokens(text)
                 counts = Counter(toks)
                 nw.append(len(toks))
                 cs.append(sum(len(t) for t in toks))
@@ -663,7 +767,7 @@ def cdc_sql_cte(k: int = 8, divisor: int = 64) -> str:
         for j in range(k)
     )
     return f"""__cn AS (
-      SELECT doc_id, regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g') AS s
+      SELECT doc_id, {normalize_sql('text')} AS s
       FROM documents
     ), __cc AS (
       SELECT doc_id, s, length(s) AS n FROM __cn WHERE length(s) >= 1
@@ -948,9 +1052,7 @@ def bm25_scores(
     ``double(Σdl)/N``), so scores are bit-identical to DuckDB modulo the
     final ROUND the registered query applies.
     """
-    from pyspark.sql import functions as F
-
-    toks = F.split(ascii_trim(ascii_lower(F.col(text_col))), r"\s+")
+    toks = tokens(ascii_lower(text_col))
 
     def _eq(term: str):
         # single-arg lambda: a 2-arg function would make pyspark pass the
@@ -1034,7 +1136,7 @@ def bm25_scored_cte_sql(
         score = f"({score} + {t})"
     return f"""base AS (
       SELECT {id_expr} AS id,
-             string_split_regex(trim(translate({text_expr}, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS t
+             {tokens_sql(ascii_lower_sql(text_expr))} AS t
       FROM {table}
     ), feat AS (
       SELECT id, len(t) AS dl,

@@ -1121,11 +1121,11 @@ def p14_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "p15_token_budget_waterfill",
-    r"""
+    rf"""
     WITH per_src AS (
       SELECT source,
              CAST(SUM(len(list_filter(
-                    string_split_regex(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \t\n\x0b\f\r]+'),
+                    {T.tokens_sql(T.ascii_lower_sql('text'))},
                     x -> x <> ''))) AS BIGINT) AS c_tokens
       FROM documents GROUP BY source
     ), tot AS MATERIALIZED (
@@ -1174,7 +1174,7 @@ def p15_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size(
             F.filter(
-                F.split(T.ascii_lower(T.ascii_trim(F.col("text"))), r"\s+"),
+                T.tokens(T.ascii_lower("text")),
                 lambda x: x != "",
             )
         ).alias("n_tok"),

@@ -818,9 +818,9 @@ def c06_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "t16_tfidf_top_terms",
-    """
+    f"""
     WITH tf AS (
-      SELECT doc_id, UNNEST(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS token
+      SELECT doc_id, UNNEST({T.tokens_sql('text')}) AS token
       FROM documents
     ), tfc AS (
       SELECT doc_id, token, COUNT(*) AS tf FROM tf GROUP BY 1, 2
@@ -849,7 +849,7 @@ def t16_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split(T.ascii_trim("text"), r"\s+")).alias("token")
+        "doc_id", F.explode(T.tokens("text")).alias("token")
     )
     tfc = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfc = tfc.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -971,10 +971,10 @@ def s07_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "t17_gopher_quality_rules",
-    """
+    f"""
     WITH feats AS (
       SELECT doc_id, source,
-             string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS toks
+             {T.tokens_sql('text')} AS toks
       FROM documents
     ), m AS (
       SELECT doc_id, source,
@@ -1180,19 +1180,8 @@ def m09_audio_spectral_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "d12_duplicate_shingle_fraction",
-    """
-    WITH toks AS (
-      SELECT doc_id,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                      FOR i IN generate_series(1, len(t) - 2)])
-             END AS sh
-      FROM toks
-    ), exploded AS (
+    f"""
+    WITH {T.shingle_ctes_sql(3)}, exploded AS (
       SELECT doc_id, UNNEST(sh) AS shingle FROM grams
     ), freq AS (
       SELECT shingle, COUNT(*) AS ndocs FROM exploded GROUP BY 1
@@ -1248,10 +1237,10 @@ def d12_duplicate_shingle_fraction(spark: SparkSession, sf_dir: str) -> DataFram
 # --------------------------------------------------------------------------
 @register(
     "t18_bigram_logprob",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, source,
-             list_filter(string_split_regex(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+'),
+             list_filter({T.tokens_sql(T.ascii_lower_sql('text'))},
                          x -> x <> '') AS t
       FROM documents
     ), uni AS (
@@ -1295,7 +1284,7 @@ def t18_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.filter(
-            F.split(T.ascii_lower(T.ascii_trim(F.col("text"))), r"\s+"), lambda x: x != ""
+            T.tokens(T.ascii_lower("text")), lambda x: x != ""
         ).alias("t"),
     )
     uni = toks.select(F.explode("t").alias("token"))
@@ -1715,23 +1704,11 @@ def m10_scene_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # parameters (b=8, r=4) sit at the right similarity threshold.
 # --------------------------------------------------------------------------
 def _d13_oracle() -> str:
-    from aws_data_engineering_spark.operators.dedup import minhash_oracle_sql
-
-    est_sql = minhash_oracle_sql(num_hashes=32, num_bands=8)
+    # exact Jaccard over the minhash prefix's own 3-gram shingle sets
     return f"""
-    WITH est AS ({est_sql}),
-    toks2 AS (
-      SELECT doc_id,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams2 AS (
-      SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                      FOR i IN generate_series(1, len(t) - 2)])
-             END AS sh
-      FROM toks2
-    ), sized AS (SELECT doc_id, sh, len(sh) AS sh_size FROM grams2),
+    WITH {D.minhash_sig_cte_sql(32)},
+    est AS ({D.minhash_pairs_sql(32, 8)}),
+    sized AS (SELECT doc_id, sh, len(sh) AS sh_size FROM grams),
     exploded AS (SELECT doc_id, sh_size, UNNEST(sh) AS shingle FROM sized),
     exact AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1791,9 +1768,9 @@ def d13_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 @register(
     "t19_lexical_diversity",
-    """
+    f"""
     WITH tok AS (
-      SELECT source, translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS token
+      SELECT source, unnest({T.tokens_sql(T.ascii_lower_sql('text'))}) AS token
       FROM documents
     ), t2 AS (SELECT * FROM tok WHERE token <> ''),
     counts AS (
@@ -1824,9 +1801,8 @@ def t19_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = (
         docs.select(
-            "source", F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw")
+            "source", F.explode(T.tokens(T.ascii_lower("text"))).alias("token")
         )
-        .select("source", T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
     )
     counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("cnt"))
@@ -2689,10 +2665,10 @@ def e07_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "t20_dsir_importance",
-    """
+    f"""
     WITH tok AS (
       SELECT doc_id, source,
-             translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS token
+             unnest({T.tokens_sql(T.ascii_lower_sql('text'))}) AS token
       FROM documents
     ), t2 AS (SELECT * FROM tok WHERE token <> ''),
     rc AS (SELECT token, COUNT(*) AS cr FROM t2 GROUP BY token),
@@ -2730,9 +2706,8 @@ def t20_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select(
             "doc_id", "source",
-            F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw"),
+            F.explode(T.tokens(T.ascii_lower("text"))).alias("token"),
         )
-        .select("doc_id", "source", T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
     )
     rc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cr"))

@@ -58,8 +58,8 @@ def d02_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d03_fingerprint_dedup",
-    """
-    SELECT md5(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS fp,
+    f"""
+    SELECT md5({T.normalize_sql('text')}) AS fp,
            MIN(doc_id) AS canonical_id,
            COUNT(*) AS group_size
     FROM documents GROUP BY 1
@@ -104,18 +104,7 @@ _D05_MAXDF = 20
 @register(
     "d05_ngram_jaccard_pairs",
     f"""
-    WITH toks AS (
-      SELECT doc_id,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                      FOR i IN generate_series(1, len(t) - 2)])
-             END AS sh
-      FROM toks
-    ), exploded AS (
+    WITH {T.shingle_ctes_sql(3)}, exploded AS (
       -- 48-bit md5-prefix shingle key, identical to the Spark side's
       -- conv(substr(md5(shingle),1,12),16,10): 8-byte census/join keys
       SELECT doc_id,
@@ -158,10 +147,10 @@ def d05_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d06_simhash",
-    """
+    f"""
     WITH n AS (
       SELECT doc_id,
-             string_split(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')
+             {T.tokens_sql(T.ascii_lower_sql('text'))}
                AS toks
       FROM documents
     ), h AS (
@@ -187,12 +176,12 @@ def d06_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "t01_text_stats",
-    """
+    f"""
     SELECT doc_id,
            LENGTH(text) AS n_chars_actual,
-           LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS n_tokens,
+           LEN({T.tokens_sql('text')}) AS n_tokens,
            LEN(regexp_extract_all(text, '[0-9]')) AS n_digits,
-           LEN(regexp_extract_all(text, '[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]')) AS n_punct
+           LEN(regexp_extract_all(text, '{T.PUNCT_RE}')) AS n_punct
     FROM documents
     """,
     "per-document text statistics (chars/tokens/digits/punctuation)",
@@ -213,8 +202,8 @@ def t01_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH feats AS (
       SELECT doc_id, source,
-             CAST(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS DOUBLE) AS n_tok,
-             CAST(LEN(list_filter(string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'),
+             CAST(LEN({T.tokens_sql('text')}) AS DOUBLE) AS n_tok,
+             CAST(LEN(list_filter({T.tokens_sql(T.ascii_lower_sql('text'))},
                                   x -> x IN {_SW_LIST_SQL})) AS DOUBLE) AS n_sw,
              CAST(LEN(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_dig,
              CAST(LENGTH(text) AS DOUBLE) AS n_chars
@@ -244,13 +233,13 @@ def t02_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t03_token_counts_by_source",
-    """
+    f"""
     SELECT source,
            COUNT(*) AS n_docs,
-           CAST(SUM(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'))) AS BIGINT) AS total_tokens,
-           CAST(SUM(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'))) AS DOUBLE) / COUNT(*)
+           CAST(SUM(LEN({T.tokens_sql('text')})) AS BIGINT) AS total_tokens,
+           CAST(SUM(LEN({T.tokens_sql('text')})) AS DOUBLE) / COUNT(*)
              AS avg_tokens,
-           CAST(SUM(LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]'))) AS BIGINT)
+           CAST(SUM(LEN(regexp_extract_all(text, '{T.BPE_TOKEN_PATTERN}'))) AS BIGINT)
              AS total_bpe_tokens
     FROM documents GROUP BY source
     """,
@@ -437,10 +426,10 @@ def s06_ann_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t05_token_length_stats",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS t
+             {T.tokens_sql('text')} AS t
       FROM documents
     )
     SELECT lang,
@@ -463,10 +452,10 @@ def t05_token_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d07_simhash_neardup_pairs",
-    """
+    f"""
     WITH n AS (
       SELECT doc_id,
-             string_split(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ')
+             {T.tokens_sql(T.ascii_lower_sql('text'))}
                AS toks
       FROM documents
     ), h AS (
@@ -546,9 +535,9 @@ def d08_winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t07_repetition_signals",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS t
+      SELECT doc_id, {T.tokens_sql('text')} AS t
       FROM documents
     ), stats AS (
       SELECT doc_id,
@@ -612,18 +601,7 @@ _BENCH_IN = "('" + "', '".join(_BENCH_SOURCES) + "')"
 @register(
     "d09_benchmark_contamination",
     f"""
-    WITH toks AS (
-      SELECT doc_id, source,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams AS (
-      SELECT doc_id, source,
-             CASE WHEN len(t) <= 4 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+4], ' ')
-                                      FOR i IN generate_series(1, len(t) - 4)])
-             END AS sh
-      FROM toks
-    ), ex AS (
+    WITH {T.shingle_ctes_sql(5, "doc_id, source")}, ex AS (
       SELECT doc_id, source, UNNEST(sh) AS shingle FROM grams
     ), bench AS (
       SELECT DISTINCT shingle FROM ex WHERE source IN {_BENCH_IN}
@@ -648,9 +626,9 @@ def d09_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t08_pandas_udf_tokens",
-    """
+    f"""
     SELECT source,
-           CAST(SUM(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'))) AS BIGINT)
+           CAST(SUM(LEN({T.tokens_sql('text')})) AS BIGINT)
              AS total_tokens,
            COUNT(*) AS n_docs
     FROM documents GROUP BY source
@@ -665,14 +643,15 @@ def t08_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resolves the strings against the function's module globals
     from pyspark.sql.functions import pandas_udf
 
+    # T.tokens, vectorized: the contract's trim set and split class, bound
+    # as locals so the UDF pickles them by value
+    ws, ws_run = T.ASCII_WS, T.WS_RUN
+
     @pandas_udf("int")
     def tok_count(s: pd.Series) -> pd.Series:
-        # mirror T.tokens exactly: ASCII-6 trim, split on ASCII whitespace
-        # runs — BOTH explicit, because pandas' unicode strip/\s also cover
-        # NBSP/U+2028 where the JVM/RE2 twins do not
         return (
-            s.str.strip(" \t\n\x0b\f\r")
-            .str.split(r"[ \t\n\x0b\f\r]+", regex=True)
+            s.str.strip(ws)
+            .str.split(ws_run, regex=True)
             .str.len()
             .astype("int32")
         )
@@ -686,13 +665,13 @@ def t08_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t09_udtf_tokenize",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS t
+      SELECT doc_id, {T.tokens_sql('text')} AS t
       FROM documents WHERE doc_id < 50
     )
     SELECT doc_id,
-           UNNEST([{'pos': i - 1, 'token': t[i]}
+           UNNEST([{{'pos': i - 1, 'token': t[i]}}
                    FOR i IN generate_series(1, len(t))], recursive := true)
     FROM toks
     """,
@@ -703,18 +682,12 @@ def t08_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t09_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
+    tokens = T.text_worker_fns().tokens
+
     @udtf(returnType="pos int, token string")
     class Tokenize:
         def eval(self, text: str):
-            # mirror the ASCII-6 tokenizer exactly (a bare .strip()/.split()
-            # is Unicode-whitespace in Python; re.split keeps the oracle's
-            # empty-token-on-empty-text behavior that .split() drops)
-            import re
-
-            toks = re.split(
-                r"[ \t\n\x0b\f\r]+", (text or "").strip(" \t\n\x0b\f\r")
-            )
-            for i, t in enumerate(toks):
+            for i, t in enumerate(tokens(text or "")):
                 yield i, t
 
     name = "t09_tok"
@@ -728,9 +701,9 @@ def t09_udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t10_top_tokens",
-    """
+    f"""
     WITH tok AS (
-      SELECT translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS token
+      SELECT unnest({T.tokens_sql(T.ascii_lower_sql('text'))}) AS token
       FROM documents
     ), counts AS (
       SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok
@@ -748,9 +721,8 @@ def t10_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(
-            F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw")
+            F.explode(T.tokens(T.ascii_lower("text"))).alias("token")
         )
-        .select(T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -879,8 +851,8 @@ def _pp01_oracle() -> str:
     return f"""
     WITH feats AS (
       SELECT doc_id, source, text,
-             CAST(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS DOUBLE) AS n_tok,
-             CAST(LEN(list_filter(string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'),
+             CAST(LEN({T.tokens_sql('text')}) AS DOUBLE) AS n_tok,
+             CAST(LEN(list_filter({T.tokens_sql(T.ascii_lower_sql('text'))},
                                   x -> x IN {_SW_LIST_SQL})) AS DOUBLE) AS n_sw,
              CAST(LEN(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_dig,
              CAST(LENGTH(text) AS DOUBLE) AS n_chars
@@ -894,7 +866,7 @@ def _pp01_oracle() -> str:
              CASE WHEN n_sw / GREATEST(n_tok, 1) >= 0.05 THEN 'en'
                   WHEN n_tok < 3 THEN 'short' ELSE 'unknown' END AS lang_pred,
              CAST(n_tok AS BIGINT) AS n_tokens,
-             md5(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS fp
+             md5({T.normalize_sql('text')}) AS fp
       FROM feats
     ), filtered AS (
       SELECT * FROM scored WHERE quality >= 0.5 AND lang_pred = 'en'
@@ -976,9 +948,9 @@ def s05_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t13_vocab_coverage",
-    """
+    f"""
     WITH tok AS (
-      SELECT source, translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS token
+      SELECT source, unnest({T.tokens_sql(T.ascii_lower_sql('text'))}) AS token
       FROM documents
     ), t2 AS (
       SELECT * FROM tok WHERE token <> ''
@@ -1002,9 +974,8 @@ def t13_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select(
-            "source", F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw")
+            "source", F.explode(T.tokens(T.ascii_lower("text"))).alias("token")
         )
-        .select("source", T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
     )
     vocab = (
@@ -1063,10 +1034,10 @@ def t14_pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t15_unigram_logprob",
-    """
+    f"""
     WITH tok AS (
       SELECT doc_id, source,
-             translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS token
+             unnest({T.tokens_sql(T.ascii_lower_sql('text'))}) AS token
       FROM documents
     ), t2 AS (SELECT * FROM tok WHERE token <> ''),
     vocab AS (
@@ -1096,9 +1067,8 @@ def t15_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select(
             "doc_id", "source",
-            F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw"),
+            F.explode(T.tokens(T.ascii_lower("text"))).alias("token"),
         )
-        .select("doc_id", "source", T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
     )
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1168,40 +1138,25 @@ _D19_BANDS, _D19_ROWS = 8, 4
 
 
 def _d19_oracle() -> str:
-    mh = D.minhash_oracle_sql(num_hashes=32, num_bands=_D19_BANDS)
-    # strip the leading WITH so it nests as one CTE body
-    mh_body = mh.strip()
-    assert mh_body.upper().startswith("WITH ")
+    # exact Jaccard over the minhash prefix's own 3-gram shingle sets
     return f"""
-    WITH exact AS (
-      WITH toks AS (
-        SELECT doc_id,
-               string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-        FROM documents
-      ), grams AS (
-        SELECT doc_id,
-               CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                    ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                        FOR i IN generate_series(1, len(t) - 2)])
-               END AS sh
-        FROM toks
-      ), exploded AS (
-        SELECT doc_id, UNNEST(sh) AS shingle FROM grams
-      ), sizes AS (
-        SELECT doc_id, COUNT(*) AS sh_size FROM exploded GROUP BY doc_id
-      ), inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-        FROM exploded a JOIN exploded b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      )
+    WITH {D.minhash_sig_cte_sql(32)}, exploded AS (
+      SELECT doc_id, UNNEST(sh) AS shingle FROM grams
+    ), sizes AS (
+      SELECT doc_id, COUNT(*) AS sh_size FROM exploded GROUP BY doc_id
+    ), inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+      FROM exploded a JOIN exploded b
+        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ), exact AS (
       SELECT id_a, id_b,
              n_inter / (za.sh_size + zb.sh_size - n_inter) AS jaccard
       FROM inter
       JOIN sizes za ON inter.id_a = za.doc_id
       JOIN sizes zb ON inter.id_b = zb.doc_id
     ), detected AS (
-      {mh_body}
+      {D.minhash_pairs_sql(32, _D19_BANDS)}
     ), joined AS (
       -- bin the ROUNDED jaccard: the Spark side consumes jaccard_pairs'
       -- round(jac, 4) output, so a raw-value bin here would shift pairs
@@ -1290,12 +1245,12 @@ def _pp02_oracle() -> str:
     return f"""
     WITH feats AS (
       SELECT doc_id,
-             CAST(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS DOUBLE) AS n_tok,
-             CAST(LEN(list_filter(string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'),
+             CAST(LEN({T.tokens_sql('text')}) AS DOUBLE) AS n_tok,
+             CAST(LEN(list_filter({T.tokens_sql(T.ascii_lower_sql('text'))},
                                   x -> x IN {_SW_LIST_SQL})) AS DOUBLE) AS n_sw,
              CAST(LEN(regexp_extract_all(text, '[0-9]')) AS DOUBLE) AS n_dig,
              CAST(LENGTH(text) AS DOUBLE) AS n_chars,
-             md5(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS fp
+             md5({T.normalize_sql('text')}) AS fp
       FROM documents WHERE doc_id % 10 = 0
     ), scored AS (
       SELECT doc_id, fp,
@@ -1306,7 +1261,7 @@ def _pp02_oracle() -> str:
              CAST(n_tok AS BIGINT) AS n_tokens
       FROM feats
     ), idx_fp AS (
-      SELECT DISTINCT md5(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')) AS fp
+      SELECT DISTINCT md5({T.normalize_sql('text')}) AS fp
       FROM documents WHERE doc_id % 10 <> 0
     ), fuzzy AS (
       SELECT DISTINCT id_new FROM ({probe}) p
@@ -1596,14 +1551,12 @@ _PP04_MIN_TOKENS = 15
 
 
 def _pp04_oracle() -> str:
-    ws = "' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)"
     return f"""
     WITH p AS (
       SELECT d.doc_id, d.lang,
              CAST(4 + d.doc_id % 16 AS INT) AS w,
              CAST(4 + d.doc_id % 12 AS INT) AS h,
-             LEN(string_split_regex(trim(d.text, {ws}),
-                                    '[ \\t\\n\\x0b\\f\\r]+')) AS n_tok,
+             LEN({T.tokens_sql('d.text')}) AS n_tok,
              list_cosine_similarity(CAST(et.embedding AS DOUBLE[]),
                                     CAST(ei.embedding AS DOUBLE[])) AS sim
       FROM documents d

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_data_engineering_spark.operators import sampling as P
+from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
 from aws_data_engineering_spark.storage import scratch_dir
@@ -122,10 +123,10 @@ def p04_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "p05_sequence_packing",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id, source,
-             CAST(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS BIGINT) AS n_tokens
+             CAST(LEN({T.tokens_sql('text')}) AS BIGINT) AS n_tokens
       FROM documents
     ), o AS (
       SELECT doc_id, source, n_tokens,
@@ -147,8 +148,6 @@ def p04_grouped_agg_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "parallel across corpora",
 )
 def p05_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aws_data_engineering_spark.operators import text as T
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", T.token_count("text").cast("bigint").alias("n_tokens")
     )
@@ -193,10 +192,10 @@ def c01_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "p06_token_budget_sample",
-    """
+    f"""
     WITH d AS (
       SELECT doc_id, source,
-             CAST(LEN(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')) AS BIGINT) AS n_tokens
+             CAST(LEN({T.tokens_sql('text')}) AS BIGINT) AS n_tokens
       FROM documents
     ), o AS (
       SELECT doc_id, source, n_tokens,
@@ -216,8 +215,6 @@ def c01_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p06_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from aws_data_engineering_spark.operators import text as T
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", T.token_count("text").cast("bigint").alias("n_tokens")

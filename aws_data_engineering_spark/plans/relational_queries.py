@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from aws_data_engineering_spark.operators import text as T
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.sources.tables import load_table
 from aws_data_engineering_spark.storage import scratch_dir
@@ -1681,9 +1682,9 @@ def q50_trailing_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q51_row_udf_dim",
-    """
+    f"""
     SELECT n_name,
-           CAST(LEN(regexp_extract_all(translate(n_name, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiou]')) AS INT)
+           CAST(LEN(regexp_extract_all({T.ascii_lower_sql('n_name')}, '[aeiou]')) AS INT)
              AS n_vowels,
            CAST(LENGTH(n_name) AS INT) AS name_len
     FROM nation
@@ -1693,13 +1694,10 @@ def q50_trailing_window_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pandas UDFs or JVM expressions), oracle-checked",
 )
 def q51_row_udf_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ASCII fold, not str.lower — matches the oracle's translate() (the
-    # unicode-case divergence class; nation names are ASCII anyway)
-    _fold = str.maketrans(
-        "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-    )
+    # the contract's A-Z fold, not str.lower (nation names are ASCII anyway)
+    lower = T.text_worker_fns().lower
     count_vowels = F.udf(
-        lambda s: sum(1 for ch in (s or "").translate(_fold) if ch in "aeiou"),
+        lambda s: sum(1 for ch in lower(s or "") if ch in "aeiou"),
         "int",
     )
     nation = _t(spark, sf_dir, "nation")

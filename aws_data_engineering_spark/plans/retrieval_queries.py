@@ -1570,13 +1570,11 @@ _S16_NPROBE = 4
 @register(
     "s16_incremental_index_append",
     f"""
-    WITH {{cte}},
-    topk AS (
-      SELECT query_id, neighbor_id, adc_dist, CAST(rnk AS INT) AS rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dist ASC, neighbor_id ASC)
-                    AS rnk
-        FROM scores) WHERE rnk <= {_S16_K}),
+    WITH {SIM.ivfpq_scores_cte_sql(
+        _S16_CENTROIDS, m_sub=8, k_codes=16, subdim=8,
+        n_probe=_S16_NPROBE, query_pred="vec_id < 10",
+    )},
+    topk AS ({SIM.adc_topk_sql(_S16_K)}),
     audit AS (
       SELECT CAST(COUNT(*) FILTER (vec_id % 10 <> 7) AS BIGINT) AS n_index,
              CAST(COUNT(*) FILTER (vec_id % 10 = 7) AS BIGINT) AS n_appended
@@ -1584,12 +1582,7 @@ _S16_NPROBE = 4
     SELECT t.query_id, t.neighbor_id, t.adc_dist, t.rnk,
            a.n_index, a.n_appended
     FROM topk t CROSS JOIN audit a
-    """.format(
-        cte=SIM.ivfpq_scores_cte_sql(
-            _S16_CENTROIDS, m_sub=8, k_codes=16, subdim=8,
-            n_probe=_S16_NPROBE, query_pred="vec_id < 10",
-        )
-    ),
+    """,
     "incremental ANN index maintenance: daily embedding batch encoded "
     "with the EXISTING codebook and appended into the persisted "
     "list_id-partitioned inverted-list parquet (no retrain, no rebuild); "

@@ -741,12 +741,7 @@ def _st19_oracle() -> str:
     )
     return f"""
     WITH {cte},
-    topk AS (
-      SELECT query_id, neighbor_id, adc_dist, CAST(rnk AS INT) AS rnk FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_dist ASC, neighbor_id ASC)
-                    AS rnk
-        FROM scores) WHERE rnk <= 5),
+    topk AS ({SIM.adc_topk_sql(5)}),
     audit AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_indexed FROM embeddings)
     SELECT t.query_id, t.neighbor_id, t.adc_dist, t.rnk, a.n_indexed

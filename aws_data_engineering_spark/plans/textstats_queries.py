@@ -343,20 +343,18 @@ def t25_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # t26 — Flesch-style readability per language. Pure column expressions:
 # words = non-space runs, sentences = [.!?]+ runs (clamped to >=1),
-# syllable proxy = vowel-group runs. Word runs use the EXPLICIT negated
-# ASCII-whitespace class: Java's \S excludes vertical tab, RE2's \S does
-# not (RE2 \s is only [\t\n\f\r ]), so a bare \S+ diverges on corpora
-# containing VT (round-7 exotic-whitespace sweep). All JVM-side,
+# syllable proxy = vowel-group runs. Word runs are T.WORD_RE, the negated
+# contract class (a bare \S+ diverges on vertical tab). All JVM-side,
 # whole-stage-codegen friendly, one shuffle for the lang groupBy.
 # --------------------------------------------------------------------------
 @register(
     "t26_readability_by_lang",
-    r"""
+    rf"""
     WITH d AS (
       SELECT lang,
-             len(regexp_extract_all(text, '[^ \t\n\x0b\f\r]+')) AS words,
+             len(regexp_extract_all(text, '{T.WORD_RE}')) AS words,
              GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS sentences,
-             len(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[aeiouy]+')) AS syllables
+             len(regexp_extract_all({T.ascii_lower_sql('text')}, '[aeiouy]+')) AS syllables
       FROM documents WHERE text IS NOT NULL
     )
     SELECT lang,
@@ -377,7 +375,7 @@ def t26_readability_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             F.size(
                 F.regexp_extract_all(
-                    F.col("text"), F.lit(r"[^ \t\n\x0b\f\r]+"), F.lit(0)
+                    F.col("text"), F.lit(T.WORD_RE), F.lit(0)
                 )
             ).alias("words"),
             F.greatest(
@@ -617,15 +615,15 @@ def t30_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "t31_kneser_ney_bigram",
-    r"""
+    rf"""
     WITH toks AS (
       SELECT doc_id, source,
-             list_filter(string_split_regex(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \t\n\x0b\f\r]+'),
+             list_filter({T.tokens_sql(T.ascii_lower_sql('text'))},
                          x -> x <> '') AS t
       FROM documents
     ), bg AS (
       SELECT doc_id, source,
-             unnest([{'p': t[i], 's': t[i+1]}
+             unnest([{{'p': t[i], 's': t[i+1]}}
                      FOR i IN generate_series(1, len(t) - 1)], recursive := true)
       FROM toks WHERE len(t) >= 2
     ), bgc AS (
@@ -667,7 +665,7 @@ def t31_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.filter(
-            F.split(T.ascii_lower(T.ascii_trim(F.col("text"))), r"\s+"), lambda x: x != ""
+            T.tokens(T.ascii_lower("text")), lambda x: x != ""
         ).alias("t"),
     )
     bg = toks.filter(F.size("t") >= 2).select(
@@ -730,7 +728,7 @@ def _t32_oracle() -> str:
     return f"""
     WITH norm AS (
       SELECT doc_id, lang,
-             regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \t\n\x0b\f\r]+', ' ', 'g') AS s
+             {T.normalize_sql('text')} AS s
       FROM documents WHERE text IS NOT NULL
     ), grams AS (
       SELECT doc_id, lang, substr(s, g, 3) AS gram
@@ -793,7 +791,7 @@ def t32_langid_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = docs.select(
         "doc_id",
         "lang",
-        F.regexp_replace(T.ascii_lower(T.ascii_trim("text")), r"\s+", " ").alias("s"),
+        T.normalize_text("text").alias("s"),
     )
     grams = (
         norm.filter(F.length("s") >= 3)
@@ -1195,7 +1193,7 @@ def _t35_weight_sql(gram_expr: str) -> str:
     f"""
     WITH base AS (
       SELECT source,
-             string_split_regex(trim(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+') AS t
+             {T.tokens_sql(T.ascii_lower_sql('text'))} AS t
       FROM documents WHERE text IS NOT NULL
     ), grams AS (
       SELECT source,
@@ -1221,7 +1219,7 @@ def _t35_weight_sql(gram_expr: str) -> str:
 )
 def t35_hashed_ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = F.split(T.ascii_trim(T.ascii_lower(F.col("text"))), r"\s+")
+    toks = T.tokens(T.ascii_lower("text"))
     n1 = F.greatest(F.size(toks) - F.lit(1), F.lit(0))
     bigrams = F.zip_with(
         F.slice(toks, 1, n1),
@@ -1263,19 +1261,8 @@ def t35_hashed_ngram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "t36_crossdoc_ngram_novelty",
-    """
-    WITH toks AS (
-      SELECT doc_id,
-             string_split_regex(regexp_replace(translate(trim(text, ' ' || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g'), ' ') AS t
-      FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                  ELSE list_distinct([array_to_string(t[i:i+2], ' ')
-                                      FOR i IN generate_series(1, len(t) - 2)])
-             END AS sh
-      FROM toks
-    ), ex AS (
+    f"""
+    WITH {T.shingle_ctes_sql(3)}, ex AS (
       SELECT doc_id, UNNEST(sh) AS shingle FROM grams
     ), firsts AS (
       SELECT shingle, MIN(doc_id) AS first_id FROM ex GROUP BY shingle
@@ -1357,11 +1344,7 @@ def _t37_bitlen_sql(expr: str) -> str:
 
 
 def _t37_oracle() -> str:
-    tok_expr = (
-        "translate(unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10)"
-        " || chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+')),"
-        " 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')"
-    )
+    tok_expr = f"unnest({T.tokens_sql(T.ascii_lower_sql('text'))})"
     return f"""
     WITH tok AS MATERIALIZED (
       SELECT doc_id, lang, {tok_expr} AS token
@@ -1419,9 +1402,8 @@ def t37_ccnet_surprisal_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw"),
+            F.explode(T.tokens(T.ascii_lower("text"))).alias("token"),
         )
-        .select("doc_id", "lang", T.ascii_lower(F.col("raw")).alias("token"))
         .filter(F.col("token") != "")
     )
     # global frequency rank rides a 1-task window over the AGGREGATED vocab
@@ -1525,14 +1507,7 @@ _T38_TOP_MULTI = 40
 
 def _t38_oracle() -> str:
     maxw, maxp, topm = _T38_MAX_WORD, _T38_MAX_PIECE, _T38_TOP_MULTI
-    tok = (
-        "unnest(string_split_regex(trim(text, ' ' || chr(9) || chr(10) || "
-        "chr(11) || chr(12) || chr(13)), '[ \\t\\n\\x0b\\f\\r]+'))"
-    )
-    lower = (
-        f"translate({tok}, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',"
-        " 'abcdefghijklmnopqrstuvwxyz')"
-    )
+    lower = f"unnest({T.tokens_sql(T.ascii_lower_sql('text'))})"
     parts = [
         f"""words AS MATERIALIZED (
       SELECT w, CAST(COUNT(*) AS BIGINT) AS wfreq FROM (
@@ -1683,9 +1658,8 @@ def t38_unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     words = (
         docs.select(
-            F.explode(F.split(T.ascii_trim(F.col("text")), r"\s+")).alias("raw")
+            F.explode(T.tokens(T.ascii_lower("text"))).alias("w")
         )
-        .select(T.ascii_lower(F.col("raw")).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= _T38_MAX_WORD))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wfreq"))
@@ -1730,7 +1704,10 @@ def t38_unigram_lm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()
         )
-        assert len(rows) <= 1000, f"t38 vocab unexpectedly large: {len(rows)}"
+        if len(rows) > 1000:
+            raise ValueError(
+                f"t38 vocab has {len(rows)} grams, above its 1000-gram bound"
+            )
         return {r["gram"]: r["cost"] for r in rows}
 
     cost0 = cost_rows(vocab.select("gram", F.col("seed_n").alias("c")))

@@ -680,3 +680,45 @@ def test_package_has_no_unused_module_imports():
                     bad.append(f"{where} is imported again")
                 bound.add(name)
     assert not bad, bad
+
+
+def test_package_has_no_assert_statements():
+    """``python -O`` strips ``assert`` statements, so a package guard
+    written as one silently stops guarding; every check raises a real
+    exception instead."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    bad = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted((root / "aws_data_engineering_spark").rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not bad, bad
+
+
+def test_text_contract_literals_only_in_text_module():
+    """The cross-engine text contract (the ASCII-6 trim set, the A-Z fold
+    pair and the whitespace-run class) is spelled once, in
+    ``operators/text.py``; every other module calls its helpers."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    owner = root / "aws_data_engineering_spark" / "operators" / "text.py"
+    needles = (
+        "chr(9) || chr(10)",
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+        r"\t\n\x0b\f\r",
+        r"\\t\\n\\x0b\\f\\r",
+    )
+    bad = [
+        f"{path.relative_to(root)}:{i}: {needle}"
+        for path in sorted((root / "aws_data_engineering_spark").rglob("*.py"))
+        if path != owner
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        for needle in needles
+        if needle in line
+    ]
+    assert not bad, bad

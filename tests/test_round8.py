@@ -68,29 +68,6 @@ def test_text_queries_unicode_case_parity(spark, tmp_path, name):
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
 
 
-def test_ascii_fold_contract():
-    """The three-engine fold definitions agree and touch ONLY A-Z."""
-    import duckdb
-
-    from aws_data_engineering_spark.operators.text import (
-        ASCII_FOLD_TABLE,
-        ASCII_LOWERED,
-        ASCII_UPPER,
-        ascii_lower_sql,
-    )
-
-    assert ASCII_UPPER == "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-    assert ASCII_LOWERED == "abcdefghijklmnopqrstuvwxyz"
-    probe = "İSTANBUL Mix ΣΑΣ STRAẞE Ａz09"
-    py = probe.translate(ASCII_FOLD_TABLE)
-    duck = duckdb.sql(
-        f"SELECT {ascii_lower_sql('?')}", params=[probe]
-    ).fetchone()[0]
-    assert py == duck == "İstanbul mix ΣΑΣ straẞe Ａz09"
-    # the fold must NOT equal unicode lower on the seam chars
-    assert py != probe.lower()
-
-
 # ---------------------------------------------------------------------------
 # Property test for the round-8 vectorized session fold (streams._session_
 # fold_fn): the numpy gaps-and-islands rewrite must agree with the obvious
@@ -267,27 +244,6 @@ def test_text_queries_edge_whitespace_parity(spark, tmp_path, name):
     write_docs(tmp_path, _EDGE_WS_ROWS)
     q = QUERIES[name]
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
-
-
-def test_ascii_trim_contract():
-    """The three-engine ASCII-6 trim definitions agree, strip exactly the
-    tokenizer class, and differ from every native trim on the seam."""
-    import duckdb
-
-    from aws_data_engineering_spark.operators.text import (
-        ASCII_WS,
-        ascii_trim_sql,
-    )
-
-    assert ASCII_WS == " \t\n\x0b\f\r"
-    probe = "\xa0\t keep me　\n\x0b"
-    py = probe.strip(ASCII_WS)
-    duck = duckdb.sql(
-        f"SELECT {ascii_trim_sql('?')}", params=[probe]
-    ).fetchone()[0]
-    assert py == duck == "\xa0\t keep me　".strip(" \t")  # NBSP/IDEO kept
-    assert py == "\xa0\t keep me　"
-    assert py != probe.strip()  # unicode strip would eat NBSP/IDEO too
 
 
 # ---------------------------------------------------------------------------

@@ -140,9 +140,9 @@ def test_topk_operator_on_empty_input(spark, sf_dir, op, empty):
 
 def test_exact_path_scale_guard_fires(spark, sf_dir):
     """The exact similarity paths collect vectors to the driver; past
-    ``max_vectors`` that collect is the scale failure, so the guard must
-    raise (naming the LSH alternative) BEFORE collecting — and stay silent
-    under the bound."""
+    ``max_vectors`` that collect is the scale failure, so the guarded
+    collect (which stops at ``max_vectors + 1`` rows) must raise, naming
+    the LSH alternative — and stay silent under the bound."""
     import pytest
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -434,7 +434,8 @@ def test_hard_negative_topk_equals_numpy_model(spark, sf_dir):
 
 
 def test_hard_negative_topk_guard(spark, sf_dir):
-    """The anchor-count guard must trip before collecting an unbounded set."""
+    """The anchor-count guard must trip instead of collecting an unbounded
+    set."""
     import pytest
 
     from aws_data_engineering_spark.operators.similarity import (
