@@ -49,8 +49,9 @@ def latest_by_key(df: DataFrame, keys: list[str], order_col: str, tiebreak: str)
 def shingles(col: str | Column, n: int = 3) -> Column:
     """Word n-gram shingles over lower-cased tokens: the distinct
     :func:`~aws_data_engineering_spark.operators.text.word_ngrams`, a
-    document shorter than ``n`` tokens kept whole. Pure JVM."""
-    toks = T.tokens(T.ascii_lower(col))
+    document shorter than ``n`` tokens kept whole, NULL text read as ''.
+    Pure JVM."""
+    toks = T.doc_tokens(col)
     return F.when(
         F.size(toks) < n, F.array(F.concat_ws(" ", toks))
     ).otherwise(F.array_distinct(T.word_ngrams(toks, n)))
@@ -473,7 +474,7 @@ def simhash(col: str | Column, bits: int = 48) -> Column:
     bits keep the per-bit majority property that SimHash needs; the two
     missing band bits just shorten the signature, not its semantics.
     """
-    toks = T.tokens(T.ascii_lower(col))
+    toks = T.doc_tokens(col)
     hashes = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("bigint")
     )
@@ -1134,7 +1135,7 @@ def _simhash_worker_fns(bits: int):
     """Closure factory so cloudpickle ships everything by value (executors
     can't resolve module globals when the driver imported via sys.path —
     the _shingle_worker_fns pattern)."""
-    normalize = T.text_worker_fns().normalize
+    doc_tokens = T.text_worker_fns().doc_tokens
 
     def sig_batch(texts):
         import hashlib
@@ -1146,7 +1147,7 @@ def _simhash_worker_fns(bits: int):
         out = []
         cache: dict = {}
         for text in texts:
-            toks = normalize(str(text)).split(" ")
+            toks = doc_tokens(text)
             hs = np_w.empty(len(toks), dtype=np_w.uint64)
             for j, tok in enumerate(toks):
                 h = cache.get(tok)

@@ -38,9 +38,12 @@ spelled with escapes that Java, RE2 and Python ``re`` all read alike.
 Empty text: ``tokens('')`` and ``tokens('   ')`` are ``['']`` on all three
 engines (one empty token), and their normalized form is ``''``.
 NULL: every Spark and DuckDB helper maps NULL to NULL, and so does every
-Python twin (``None`` in, ``None`` out); call sites that need a value for a
-NULL document pass ``text or ''`` themselves. The one exception is a NULL
-document's shingle set: ``['']`` on Spark and Python, NULL on DuckDB.
+Python twin (``None`` in, ``None`` out). The near-dup family (shingles,
+MinHash, SimHash, Bloom and n-gram overlap) reads a document through
+``doc_tokens`` / ``doc_tokens_sql`` / ``text_worker_fns().doc_tokens``
+instead, where NULL text is empty text on all three engines: its tokens
+and shingle set are ``['']``, so NULL and empty documents are near-dups of
+each other everywhere.
 Shingles keep a short document whole: fewer than ``n`` tokens give one
 shingle, the tokens joined by ' '. DuckDB's shingle list is a set whose
 order differs from Spark's and Python's position order.
@@ -120,6 +123,17 @@ def tokens_sql(expr: str) -> str:
     return f"string_split_regex({ascii_trim_sql(expr)}, '{WS_RUN}')"
 
 
+def doc_tokens(col: str | Column) -> Column:
+    """A document's lower-cased tokens for the near-dup family, NULL text
+    read as ''."""
+    return tokens(ascii_lower(F.coalesce(_col(col), F.lit(""))))
+
+
+def doc_tokens_sql(expr: str) -> str:
+    """DuckDB twin of :func:`doc_tokens`."""
+    return tokens_sql(ascii_lower_sql(f"coalesce({expr}, '')"))
+
+
 def normalize_text(col: str | Column) -> Column:
     """Lowercase + trim + collapse whitespace — canonical form for
     fingerprinting."""
@@ -159,7 +173,7 @@ def shingle_ctes_sql(n: int, cols: str = "doc_id", source: str = "documents") ->
     lower-cased tokens, and ``grams(<cols>, sh)``, their
     :func:`shingles_sql` set."""
     return f"""toks AS (
-      SELECT {cols}, {tokens_sql(ascii_lower_sql('text'))} AS t FROM {source}
+      SELECT {cols}, {doc_tokens_sql('text')} AS t FROM {source}
     ), grams AS (
       SELECT {cols}, {shingles_sql('t', n)} AS sh FROM toks
     )"""
@@ -169,8 +183,8 @@ def text_worker_fns():
     """The Python twins for Arrow/UDF workers, as by-value closures.
 
     Returns a namespace with ``lower``, ``normalize``, ``tokens``
-    (str or None -> same type) and ``shingles(text, n)`` (a NULL text gives
-    ``['']``, as Spark's ``dedup.shingles`` does). The constants are
+    (str or None -> same type), ``doc_tokens(text)`` and ``shingles(text,
+    n)`` (NULL text read as '', as in :func:`doc_tokens`). The constants are
     bound inside this factory so cloudpickle ships the closures by value:
     executors' Python workers cannot import this package when it was
     imported through ``sys.path``.
@@ -193,8 +207,11 @@ def text_worker_fns():
     def tokens(text):
         return None if text is None else ws_run.split(text.strip(ws))
 
+    def doc_tokens(text):
+        return normalize(text or "").split(" ")
+
     def shingles(text, n):
-        toks = normalize(text or "").split(" ")
+        toks = doc_tokens(text)
         if len(toks) < n:
             return [" ".join(toks)]
         return list(dict.fromkeys(
@@ -202,7 +219,8 @@ def text_worker_fns():
         ))
 
     return SimpleNamespace(
-        lower=lower, normalize=normalize, tokens=tokens, shingles=shingles
+        lower=lower, normalize=normalize, tokens=tokens, doc_tokens=doc_tokens,
+        shingles=shingles,
     )
 
 

@@ -305,14 +305,14 @@ def c15_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # real multi-batch foreachBatch run (band-bucket state accumulated
 # merge-on-read across batches) must converge to the batch-SQL fixpoint:
 # kept(d) iff no smaller doc_id shares a band bucket. A dropped state row,
-# a verdict computed after the state append, or a batch-boundary leak all
+# a verdict computed after the state write, or a batch-boundary leak all
 # flip verdicts and fail the hash.
 # --------------------------------------------------------------------------
 @register(
     "st12_stream_minhash_dedup",
-    DD.minhash_first_seen_oracle_sql(num_hashes=32, num_bands=8),
+    DD.minhash_first_seen_oracle_sql(),
     "streaming fuzzy dedup: per-micro-batch MinHash band buckets joined "
-    "against merge-on-read first-seen state (append-only, min-folded) — "
+    "against merge-on-read first-seen state (per-batch partitions, min-folded) — "
     "first-seen-wins verdicts over a genuinely multi-batch availableNow "
     "run, oracle-checked against the batch first-seen rule",
 )

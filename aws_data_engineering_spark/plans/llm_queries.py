@@ -150,7 +150,7 @@ def d05_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH n AS (
       SELECT doc_id,
-             {T.tokens_sql(T.ascii_lower_sql('text'))}
+             {T.doc_tokens_sql('text')}
                AS toks
       FROM documents
     ), h AS (
@@ -455,7 +455,7 @@ def t05_token_length_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH n AS (
       SELECT doc_id,
-             {T.tokens_sql(T.ascii_lower_sql('text'))}
+             {T.doc_tokens_sql('text')}
                AS toks
       FROM documents
     ), h AS (

@@ -336,8 +336,9 @@ def c03_managed_table_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uuid-unique table name: a fixed name collides with a previous
     # process's orphaned managed-table directory (LOCATION_ALREADY_EXISTS —
     # the fresh in-memory catalog doesn't know about it) and would race a
-    # concurrent session; leaks a KB-sized warehouse dir per run, since the
-    # returned DataFrame reads the table lazily
+    # concurrent session. The table is never dropped (the returned
+    # DataFrame reads it lazily); a session from build_session_builder
+    # keeps its warehouse under the scratch root, removed at exit
     name = f"spark_graft_c03_region_{uuid.uuid4().hex[:8]}"
     region.write.mode("overwrite").saveAsTable(name)
     # catalog-visibility check: O(1) lookup, survives `python -O` (a bare

@@ -21,6 +21,7 @@ from aws_data_engineering_spark.operators import text as _T
 from aws_data_engineering_spark.plans.registry import register
 from aws_data_engineering_spark.storage import scratch_dir
 from aws_data_engineering_spark.streaming import (
+    BLOOM_SHINGLE_N,
     read_events_stream,
     run_to_memory_sink,
     scaled_stream_shuffle,
@@ -285,9 +286,9 @@ def st08_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE ts IS NOT NULL
     GROUP BY 1, 2
     """,
-    "streaming continuous aggregate via APPEND-ONLY partials + merge-on-"
-    "read: each micro-batch appends decomposable (bucket, type) partial "
-    "count/sum rows via foreachBatch, readers re-aggregate — the third "
+    "streaming continuous aggregate via per-batch partials + merge-on-"
+    "read: each micro-batch writes decomposable (bucket, type) partial "
+    "count/sum rows to its own batch partition, readers re-aggregate — the third "
     "maintenance strategy beside c04's recompute-overwrite and st08's "
     "MERGE; the oracle is the single-pass batch aggregate, so the hash "
     "match proves partial-merge == full recompute",
@@ -306,7 +307,6 @@ def st11_stream_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream,
             os.path.join(base, "partials"),
             checkpoint_dir=os.path.join(base, "ckpt"),
-            bucket="hour",
         )
         q.awaitTermination()
     view = read_rollup_view(spark, os.path.join(base, "partials"))
@@ -329,7 +329,7 @@ def st11_stream_partial_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_sketch.py)
     _SK.qdigest_oracle_sql(),
     "STREAMING mergeable q-digest: orders fed as 3 files, each micro-"
-    "batch appends its leaf histogram via foreachBatch (no state store, "
+    "batch writes its leaf histogram to its own batch partition (no state store, "
     "no history re-scan), merge-on-read sums the partials and compresses "
     "once — the streaming sketch hash-matches the BATCH q-digest oracle "
     "bit-for-bit, the strongest possible statement of mergeability",
@@ -378,10 +378,10 @@ def st14_stream_qdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     # stream — the streaming report must hash-match the batch report
     _T.cms_report_oracle_sql(),
     "STREAMING mergeable count-min sketch: documents fed as 3 files, each "
-    "micro-batch appends its (r, bucket, cell) CMS partial + its token "
-    "census via foreachBatch (no state store, no history re-scan); "
+    "micro-batch writes its (r, bucket, cell) CMS partial + its token "
+    "census to its own batch partition (no state store, no history re-scan); "
     "merge-on-read sums both and the top-20 frequency report hash-matches "
-    "the BATCH count-min sketch bit-for-bit — the st11/st14 append-only "
+    "the BATCH count-min sketch bit-for-bit — the st11/st14 per-batch "
     "partial pattern on a third sketch family",
 )
 def st15_stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,13 +389,13 @@ def st15_stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from aws_data_engineering_spark.sources.tables import load_table
     from aws_data_engineering_spark.streaming import (
+        CMS_DEPTH,
         read_cms_views,
         read_documents_stream,
         stream_cms_partial_sink,
         write_bucketed_feed,
     )
 
-    depth, topk = 4, 20
     docs = load_table(spark, sf_dir, "documents")
     base = scratch_dir("st15")
     in_dir = os.path.join(base, "in")
@@ -413,13 +413,12 @@ def st15_stream_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             partials_dir=os.path.join(base, "partials"),
             checkpoint_dir=os.path.join(base, "ckpt"),
-            depth=depth,
         )
         q.awaitTermination()
     cells, tc = read_cms_views(spark, os.path.join(base, "partials"))
     # the one shared report definition (operators/text.py) — t28's batch
     # form and this streaming form cannot drift apart
-    return _T.cms_report(tc, cells, depth, topk)
+    return _T.cms_report(tc, cells, CMS_DEPTH, topk=20)
 
 
 _ST16_BENCH = ("src0", "src1")
@@ -432,13 +431,13 @@ _ST16_IN = "('" + "', '".join(_ST16_BENCH) + "')"
     # batch-built filter (bits(A ∪ B) = bits(A) ∪ bits(B)), so the whole
     # contamination report — false positives included — hash-matches the
     # batch Bloom oracle
-    _D.bloom_oracle_sql(_ST16_IN, shingle_n=5),
+    _D.bloom_oracle_sql(_ST16_IN, shingle_n=BLOOM_SHINGLE_N),
     "STREAMING mergeable Bloom filter: benchmark docs fed as 3 files, each "
-    "micro-batch appends its distinct Bloom bit positions + gram set via "
-    "foreachBatch (filters merge by OR = DISTINCT union, bounded by "
+    "micro-batch writes its distinct Bloom bit positions + gram set to its "
+    "own batch partition (filters merge by OR = DISTINCT union, bounded by "
     "m=2^16); the merged filter probes the candidate corpus and the full "
     "contamination report — false positives included — hash-matches the "
-    "batch d11 oracle bit-for-bit; the append-only-partial pattern on a "
+    "batch d11 oracle bit-for-bit; the per-batch-partial pattern on a "
     "fourth sketch family (OR-merge)",
 )
 def st16_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,13 +469,14 @@ def st16_stream_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
             partials_dir=os.path.join(base, "partials"),
             checkpoint_dir=os.path.join(base, "ckpt"),
-            shingle_n=5,
         )
         q.awaitTermination()
     grams, bits = read_bloom_views(spark, os.path.join(base, "partials"))
     # lazy: bloom_probe is single-pass, so the corpus gram fan-out has one
     # consumer and never needs materializing (the 100×-measured st16 cost)
-    cand = _D._gram_fanout(docs.filter(~bench_pred), "doc_id", "text", 5)
+    cand = _D._gram_fanout(
+        docs.filter(~bench_pred), "doc_id", "text", BLOOM_SHINGLE_N
+    )
     out = _D.bloom_probe(cand, grams, bits)
     return out.withColumnRenamed("id", "doc_id")
 
@@ -718,15 +718,15 @@ def st18_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
 # pattern — embeddings arrive as a 3-file stream (maxFilesPerTrigger=1 →
 # three genuine micro-batches), each batch is encoded with the EXISTING
 # coarse quantizer + PQ codebook (no retrain — the faiss add() contract)
-# and appended into the list_id-partitioned inverted-list parquet; the
-# probe over the merged cold read-back must hash-match a from-scratch
+# and written to its own batch_id=<n>/list_id=<k> inverted-list partition;
+# the probe over the merged cold read-back must hash-match a from-scratch
 # IVFPQ over the full corpus (ivfpq_scores_cte_sql), i.e. STREAMING
 # ingest == rebuild IS the oracle, closing the loop batch-ingest (s16)
-# left open. Appends are batch_id-tagged and the reader dedups per id
-# (replay-safe at-least-once, the st11 pattern). Scale: each micro-batch
-# pays O(|batch|) encode + append; index files stay one-per-list-per-
-# commit; probe work is bounded by the probed lists — identical posture
-# to s16, now with streaming arrival.
+# left open. A replayed batch overwrites its own batch partition
+# (streams.write_batch_partition), so the reader needs no dedup. Scale:
+# each micro-batch pays O(|batch|) encode + write; index files stay
+# one-per-list-per-batch; probe work is bounded by the probed lists —
+# identical posture to s16, now with streaming arrival.
 # --------------------------------------------------------------------------
 def _st19_oracle() -> str:
     from aws_data_engineering_spark.operators import similarity as SIM
@@ -754,7 +754,7 @@ def _st19_oracle() -> str:
     _st19_oracle(),
     "streaming incremental ANN index ingest: embeddings stream in three "
     "micro-batches, foreachBatch encodes each with the EXISTING codebook "
-    "and appends inverted-list partials (batch_id-tagged, replay-safe); "
+    "and writes its inverted-list partials to its own batch partition; "
     "the probe over the merged read-back hash-matches a from-scratch "
     "IVFPQ over the union corpus — streaming ingest == rebuild",
 )
@@ -778,8 +778,8 @@ def st19_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.join(base, "in")
     # three vec_id-class feed files -> a genuinely multi-batch availableNow
     # run, built in ONE embeddings scan (write_bucketed_feed; batch order
-    # is irrelevant to the final index — appends are commutative and the
-    # audit never reads commit ids)
+    # is irrelevant to the final index — batch partitions are commutative
+    # and the audit never reads batch ids)
     write_bucketed_feed(emb, F.pmod(F.col("vec_id"), F.lit(3)), in_dir)
 
     stream = read_embeddings_stream(spark, in_dir, max_files_per_trigger=1)

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from aws_data_engineering_spark.storage import scratch_root
+
 # Delta Lake is optional: the reference used it for MERGE upserts
 # (generic_load_script.py:131-148); we fall back to a pure-Spark merge.
 try:
@@ -88,6 +90,9 @@ def build_session_builder(
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
+        # managed tables go under the scratch root (removed at exit), not
+        # into ./spark-warehouse
+        .config("spark.sql.warehouse.dir", os.path.join(scratch_root(), "warehouse"))
     )
     if master:
         builder = builder.master(master)

@@ -19,6 +19,7 @@ Scale posture:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
@@ -407,6 +408,42 @@ def dedup_stream(
 
 
 # ---------------------------------------------------------------------------
+# foreachBatch sinks. foreachBatch is at-least-once: a crash between a
+# batch's write and its commit-log entry makes the restarted query rerun
+# that batch with the same batch_id. Every sink below starts through
+# start_batch_sink, and every sink but the MERGE upsert (idempotent by key)
+# writes through write_batch_partition, whose overwrite of batch_id=<n>
+# makes the rerun replace what the first attempt wrote. Readers are then
+# plain merges over all partitions.
+# ---------------------------------------------------------------------------
+
+
+def start_batch_sink(stream_df: DataFrame, fn, checkpoint_dir: str):
+    """Start ``fn(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df`` with the ``availableNow`` trigger, its offsets and
+    commits kept under ``checkpoint_dir``. Returns the started
+    StreamingQuery (caller awaits)."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def write_batch_partition(
+    df: DataFrame, out_dir: str, batch_id: int, *partition_cols: str
+) -> None:
+    """Write one micro-batch's partial table to ``<out_dir>/batch_id=<n>``
+    in overwrite mode, so a replayed batch replaces its own partition
+    instead of appending beside it. ``partition_cols`` nest below the
+    batch partition. Reading ``out_dir`` recovers ``batch_id`` as a
+    partition column."""
+    path = os.path.join(out_dir, f"batch_id={batch_id}")
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+
+
+# ---------------------------------------------------------------------------
 # Streaming upsert sink (CDC pattern: stream → collapse → MERGE per batch)
 # ---------------------------------------------------------------------------
 
@@ -417,19 +454,18 @@ def stream_upsert_sink(
     primary_key: list[str],
     order_col: str,
     tiebreak_col: str,
+    checkpoint_dir: str,
     partition_col: str | None = None,
-    fmt: str = "parquet",
-    checkpoint_dir: str | None = None,
 ):
-    """Continuously upsert a stream into a lake table — the streaming twin
-    of the reference's curated-upsert strategy (W5), via ``foreachBatch``:
-    each micro-batch is collapsed to its newest row per key
-    (``latest_by_key``) and MERGEd into the target, so re-delivered or
-    out-of-order rows within a batch can't fan out duplicate keys.
+    """Continuously upsert a stream into a parquet lake table — the
+    streaming twin of the reference's curated-upsert strategy (W5): each
+    micro-batch is collapsed to its newest row per key (``latest_by_key``)
+    and MERGEd into the target, so re-delivered or out-of-order rows within
+    a batch can't fan out duplicate keys.
 
-    Exactly-once posture: foreachBatch is at-least-once, but MERGE is
-    idempotent per (key, values) — replaying a batch converges to the same
-    table. checkpoint_dir enables restart-from-offset.
+    Replay: the one sink that does not write through
+    :func:`write_batch_partition`. MERGE is idempotent per (key, values),
+    so a replayed batch converges to the same table.
 
     Cross-batch ordering: MERGE's update-all would let a LATER batch
     carrying an OLDER event overwrite a newer target row (micro-batches are
@@ -456,7 +492,7 @@ def stream_upsert_sink(
         # visible entry skips the guard, and a target that exists but cannot
         # be read fails the batch here rather than merging unguarded
         if HadoopPath(spark, path).holds_visible_entry():
-            target = spark.read.format(fmt).load(path)
+            target = spark.read.parquet(path)
             tgt = target.select(
                 *[F.col(k).alias(f"__t_{k}") for k in merge_keys],
                 F.col(order_col).alias("__t_ord"),
@@ -483,14 +519,11 @@ def stream_upsert_sink(
         try:
             if not collapsed.take(1):
                 return
-            merge_upsert(spark, collapsed, path, primary_key, partition_col, fmt)
+            merge_upsert(spark, collapsed, path, primary_key, partition_col)
         finally:
             collapsed.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(do_merge).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_batch_sink(stream_df, do_merge, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -701,27 +734,27 @@ def stream_partial_rollup_sink(
     stream_df: DataFrame,
     path: str,
     checkpoint_dir: str,
-    bucket: str = "hour",
 ):
-    """Streaming continuous aggregate via APPEND-ONLY partials + merge-on-
+    """Streaming continuous aggregate via per-batch partials + merge-on-
     read — the third maintenance strategy beside the batch rollup (c04,
     recompute-and-overwrite) and the streaming MERGE (st08, upsert-in-
-    place): each micro-batch appends its own partial (bucket, event_type)
-    count/sum rows, and readers re-aggregate at query time. SUM/COUNT
-    decompose losslessly over batch partials, so the merged view equals a
-    single-pass aggregate over the whole stream. Append never rewrites
-    history, so the sink needs no table locks and scales to any partition
-    count; compaction (c10) bounds the partial-row count when batches are
-    many.
+    place): each micro-batch writes its own partial (hour bucket,
+    event_type) count/sum rows into its ``batch_id=<n>`` partition
+    (:func:`write_batch_partition`), and readers re-aggregate at query
+    time. SUM/COUNT decompose losslessly over batch partials, so the merged
+    view equals a single-pass aggregate over the whole stream, and a
+    replayed batch replaces its partition rather than counting twice. No
+    batch rewrites another batch's rows, so the sink needs no table locks;
+    compaction (c10) bounds the partial-row count when batches are many.
 
     Returns the started StreamingQuery (caller awaits)."""
 
-    def append_partials(batch_df: DataFrame, batch_id: int) -> None:
+    def write_partials(batch_df: DataFrame, batch_id: int) -> None:
         partials = (
             batch_df.filter(F.col("ts").isNotNull())
             .groupBy(
                 F.date_format(
-                    F.date_trunc(bucket, "ts"), "yyyy-MM-dd HH:mm:ss"
+                    F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss"
                 ).alias("bucket_start"),
                 "event_type",
             )
@@ -729,21 +762,15 @@ def stream_partial_rollup_sink(
                 F.count(F.lit(1)).alias("n_part"),
                 F.sum("value").alias("sum_part"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        partials.write.mode("append").parquet(path)
+        write_batch_partition(partials, path, batch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(append_partials)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(stream_df, write_partials, checkpoint_dir)
 
 
 def read_rollup_view(spark, path: str) -> DataFrame:
-    """Merge-on-read over the partial rows ``stream_partial_rollup_sink``
-    appends: re-aggregate the decomposable partials into the final view."""
+    """Merge-on-read over the partials ``stream_partial_rollup_sink``
+    writes: re-aggregate the decomposable partials into the final view."""
     partials = spark.read.parquet(path)
     return partials.groupBy("bucket_start", "event_type").agg(
         F.sum("n_part").alias("n_events"),
@@ -769,13 +796,17 @@ def read_documents_stream(
     return reader.parquet(path)
 
 
+# MinHash shape of the streaming dedup: the defaults of its st12 oracle,
+# ``dedup.minhash_first_seen_oracle_sql``.
+MINHASH_NUM_HASHES = 32
+MINHASH_NUM_BANDS = 8
+
+
 def stream_minhash_dedup_sink(
     docs_stream: DataFrame,
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    num_hashes: int = 32,
-    num_bands: int = 8,
 ):
     """Streaming fuzzy dedup: each arriving document is kept iff no
     earlier-seen document shares any of its MinHash band buckets — the
@@ -783,7 +814,7 @@ def stream_minhash_dedup_sink(
     anything already in the corpus?"), which batch dedup can't answer
     without re-scanning the whole lake per increment.
 
-    Per micro-batch (``foreachBatch``):
+    Per micro-batch:
 
     1. band rows for the batch — the JVM ``minhash_signature`` column
        through d04's band explode (``minhash_band_rows``), both pinned
@@ -792,39 +823,45 @@ def stream_minhash_dedup_sink(
        6-8× faster per row);
     2. the earliest known holder of every touched bucket = min over the
        batch's own per-bucket minima and the state table (merge-on-read:
-       state is append-only (band, band_hash, first_doc) rows, min-folded
-       at read — the st11 partial-rollup pattern, no rewrite-in-place);
+       state is per-batch (band, band_hash, first_doc) partitions,
+       min-folded at read, never rewritten in place);
     3. verdict: ``kept = (earliest sharer across the doc's buckets ==
-       doc_id)``, appended to ``out_dir``;
-    4. the batch's per-bucket minima appended to ``state_dir`` (AFTER the
-       verdict join reads the pre-batch state).
+       doc_id)``, written to the batch's partition of ``out_dir``;
+    4. the batch's per-bucket minima written to its partition of
+       ``state_dir``, AFTER the verdict has read the state.
+
+    Both writes go through :func:`write_batch_partition`. A replayed batch
+    may find its own state partition from the first attempt; that
+    partition holds exactly the batch's own minima, which step 2 folds in
+    anyway, so the replay recomputes the same verdicts and overwrites both
+    partitions with the same rows.
 
     Verdicts are a pure function of "which docs arrived no later than
     mine", so any batch decomposition that respects arrival order (the
     file source's modification-time order) yields the same result — the
     registered query exploits exactly that to oracle-check a genuinely
-    multi-batch streaming run against one batch SQL statement. State and
-    output are keyed/appended parquet: at scale both shard by bucket key
-    with no global state, and the per-batch work is one broadcast-or-
-    shuffle equi-join on (band, band_hash).
+    multi-batch streaming run against one batch SQL statement. At scale
+    state and output shard by bucket key with no global state, and the
+    per-batch work is one broadcast-or-shuffle equi-join on
+    (band, band_hash).
     """
     from pyspark.errors import AnalysisException
 
     from aws_data_engineering_spark.operators import dedup as DD
 
-    rows_per_band = num_hashes // num_bands
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_NUM_BANDS
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         sess = batch_df.sparkSession
         sig = batch_df.select(
-            "doc_id", DD.minhash_signature("text", num_hashes).alias("sig")
+            "doc_id", DD.minhash_signature("text", MINHASH_NUM_HASHES).alias("sig")
         )
         bands = (
-            DD.minhash_band_rows(sig, num_bands, rows_per_band)
+            DD.minhash_band_rows(sig, MINHASH_NUM_BANDS, rows_per_band)
             .drop("sig")
-            # reused by the verdict join AND the state append; one eager
+            # reused by the verdict join AND the state write; one eager
             # materialization beats recomputing the signature HOFs twice
             .localCheckpoint(eager=True)
         )
@@ -832,10 +869,8 @@ def stream_minhash_dedup_sink(
             F.min("doc_id").alias("first_doc")
         )
         try:
-            state = (
-                sess.read.parquet(state_dir)
-                .groupBy("band", "band_hash")
-                .agg(F.min("first_doc").alias("first_doc"))
+            state = sess.read.parquet(state_dir).select(
+                "band", "band_hash", "first_doc"
             )
             known = bmin.unionByName(state)
         except AnalysisException:
@@ -852,27 +887,17 @@ def stream_minhash_dedup_sink(
                 (F.col("earliest_sharer") == F.col("doc_id")).alias("kept"),
             )
         )
-        # batch_id tag: foreachBatch is at-least-once, and unlike the
-        # min-folded state append the verdict append is not idempotent —
-        # read_minhash_verdicts drops a replayed batch's duplicate rows
-        verdict.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(out_dir)
-        bmin.write.mode("append").parquet(state_dir)
+        write_batch_partition(verdict, out_dir, batch_id)
+        write_batch_partition(bmin, state_dir, batch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(docs_stream, process, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
 # Streaming mergeable q-digest maintenance (round-6c): the sketch twin of
-# stream_partial_rollup_sink. Each micro-batch appends its LEAF HISTOGRAM
-# (the q-digest's exactly-mergeable partial — operators/sketch.py) to an
-# append-only store; readers sum leaves and compress ONCE, so the
+# stream_partial_rollup_sink. Each micro-batch writes its LEAF HISTOGRAM
+# (the q-digest's exactly-mergeable partial — operators/sketch.py) to its
+# own batch partition; readers sum leaves and compress ONCE, so the
 # streaming sketch is BIT-IDENTICAL to the batch sketch over the same
 # rows (merge == rebuild, the canonical-compression property). At 100 TB
 # of continuous ingest this is the maintenance shape for quantile
@@ -905,43 +930,31 @@ def stream_qdigest_partial_sink(
     partials_dir: str,
     checkpoint_dir: str,
 ):
-    """foreachBatch: append each micro-batch's leaf histogram (v, cnt).
+    """Write each micro-batch's leaf histogram (v, cnt) to its
+    ``batch_id=<n>`` partition (:func:`write_batch_partition`).
 
     Leaves are the mergeable partial: any batch decomposition sums to the
     same global histogram, so the read-side compression yields the same
-    digest as a batch build — no ordering sensitivity. Replay-safe:
-    foreachBatch is at-least-once, so rows are tagged with the
-    deterministic ``batch_id`` and :func:`read_qdigest_view` collapses
-    duplicate appends of the same batch (identical recomputed rows) before
-    sum-merging — a blind append would double-count a replayed batch.
-    """
+    digest as a batch build — no ordering sensitivity."""
     from aws_data_engineering_spark.operators import sketch as SK
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         leaves = SK.qdigest_leaves(batch_df, F.floor(F.col(value_col)))
-        leaves.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(partials_dir)
+        write_batch_partition(leaves, partials_dir, batch_id)
 
-    return (
-        orders.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(orders, write_batch, checkpoint_dir)
 
 
 def read_qdigest_view(spark: SparkSession, partials_dir: str) -> DataFrame:
-    """Merge-on-read: collapse duplicate appends of the same batch_id
-    (replayed batches recompute identical leaf rows — MAX is exact dedup),
-    then sum the per-batch leaf partials into the global histogram."""
-    return (
-        spark.read.parquet(partials_dir)
-        .groupBy("batch_id", "v")
-        .agg(F.max("cnt").alias("cnt"))
-        .groupBy("v")
-        .agg(F.sum("cnt").alias("cnt"))
+    """Merge-on-read: sum the per-batch leaf partials into the global
+    histogram."""
+    return spark.read.parquet(partials_dir).groupBy("v").agg(
+        F.sum("cnt").alias("cnt")
     )
+
+
+# Rows of the streamed count-min sketch (st15 reports at the same depth).
+CMS_DEPTH = 4
 
 
 def stream_cms_partial_sink(
@@ -949,9 +962,9 @@ def stream_cms_partial_sink(
     text_col: str,
     partials_dir: str,
     checkpoint_dir: str,
-    depth: int = 4,
 ):
-    """foreachBatch: append each micro-batch's count-min-sketch partials.
+    """Write each micro-batch's count-min-sketch partials, each to its
+    ``batch_id=<n>`` partition (:func:`write_batch_partition`).
 
     Two mergeable partial tables per batch, both order-free sums:
 
@@ -962,16 +975,9 @@ def stream_cms_partial_sink(
       partial) so the read side can rank exact top-k without re-scanning
       history.
 
-    No state store, no history re-scan — the st11/st14 append-only partial
-    pattern applied to a third sketch family. Replay-safe: foreachBatch is
-    at-least-once, so every appended row is tagged with the deterministic
-    ``batch_id`` and :func:`read_cms_views` collapses duplicate appends of
-    the same batch (MAX per batch key — a replay recomputes identical
-    partials) BEFORE sum-merging across batches. Blind appends without the
-    tag would double-count a replayed batch.
+    No state store, no history re-scan — the st11/st14 per-batch partial
+    pattern applied to a third sketch family.
     """
-    import os as _os
-
     from aws_data_engineering_spark.operators.text import cms_cells
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -980,50 +986,40 @@ def stream_cms_partial_sink(
             .select(F.explode(F.split(text_col, " ")).alias("token"))
             .filter(F.col("token") != "")
         )
-        # consumed twice (cells + census append): cache so the tokenize +
+        # consumed twice (cells + census write): cache so the tokenize +
         # count shuffle runs once per micro-batch
         tc = (
             toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt")).cache()
         )
         try:
-            cms_cells(tc, depth).withColumn(
-                "batch_id", F.lit(int(batch_id))
-            ).write.mode("append").parquet(_os.path.join(partials_dir, "cells"))
-            tc.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-                "append"
-            ).parquet(_os.path.join(partials_dir, "tokcnt"))
+            cells = cms_cells(tc, CMS_DEPTH)
+            write_batch_partition(cells, os.path.join(partials_dir, "cells"), batch_id)
+            write_batch_partition(tc, os.path.join(partials_dir, "tokcnt"), batch_id)
         finally:
             tc.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(docs_stream, write_batch, checkpoint_dir)
 
 
 def read_cms_views(spark: SparkSession, partials_dir: str):
-    """Merge-on-read for the CMS partials: collapse duplicate appends of
-    the same batch_id first (a replayed batch recomputes identical rows —
-    MAX per batch key is exact dedup), then sum-merge across batches."""
-    import os as _os
-
+    """Merge-on-read for the CMS partials: sum cells and token counts
+    across batches."""
     cells = (
-        spark.read.parquet(_os.path.join(partials_dir, "cells"))
-        .groupBy("batch_id", "r", "bucket")
-        .agg(F.max("cell").alias("cell"))
+        spark.read.parquet(os.path.join(partials_dir, "cells"))
         .groupBy("r", "bucket")
         .agg(F.sum("cell").alias("cell"))
     )
     tokcnt = (
-        spark.read.parquet(_os.path.join(partials_dir, "tokcnt"))
-        .groupBy("batch_id", "token")
-        .agg(F.max("cnt").alias("cnt"))
+        spark.read.parquet(os.path.join(partials_dir, "tokcnt"))
         .groupBy("token")
         .agg(F.sum("cnt").alias("cnt"))
     )
     return cells, tokcnt
+
+
+# Word n-gram size of the streamed Bloom filter (st16's probe and oracle
+# use the same n).
+BLOOM_SHINGLE_N = 5
 
 
 def stream_bloom_partial_sink(
@@ -1031,14 +1027,14 @@ def stream_bloom_partial_sink(
     text_col: str,
     partials_dir: str,
     checkpoint_dir: str,
-    shingle_n: int = 5,
 ):
-    """foreachBatch: maintain a Bloom decontamination filter incrementally
-    as reference/benchmark documents arrive.
+    """Maintain a Bloom decontamination filter incrementally as
+    reference/benchmark documents arrive.
 
     Two set-union-mergeable partial families per batch, stored as ONE
-    unified append table (``unified/``, columns ``shingle``/``pos`` with
-    exactly one non-null per row):
+    table (``unified/``, columns ``shingle``/``pos`` with exactly one
+    non-null per row), written to the batch's ``batch_id=<n>`` partition
+    (:func:`write_batch_partition`):
 
     - bit rows — the batch's distinct Bloom positions (Bloom filters merge
       by OR, so the DISTINCT union of per-batch bit sets IS the filter of
@@ -1052,12 +1048,9 @@ def stream_bloom_partial_sink(
     the union branches share the cached gram set so the Python shingle
     pass still runs once per micro-batch.
 
-    The st11/st14/st15 append-only-partial pattern on a fourth sketch
-    family (OR-merge instead of counter-sum). Retry-safe via foreachBatch's
-    deterministic batch ids.
+    The st11/st14/st15 per-batch partial pattern on a fourth sketch
+    family (OR-merge instead of counter-sum).
     """
-    import os as _os
-
     from aws_data_engineering_spark.operators import dedup as DD
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1065,7 +1058,7 @@ def stream_bloom_partial_sink(
         # Python shingle pass runs once per micro-batch (the
         # bloom_contamination single-materialization discipline)
         grams = (
-            DD._gram_fanout(batch_df, "doc_id", text_col, shingle_n)
+            DD._gram_fanout(batch_df, "doc_id", text_col, BLOOM_SHINGLE_N)
             .select("shingle")
             .distinct()
             .cache()
@@ -1078,28 +1071,21 @@ def stream_bloom_partial_sink(
                     F.lit(None).cast("string").alias("shingle"), "pos"
                 )
             )
-            unified.write.mode("append").parquet(
-                _os.path.join(partials_dir, "unified")
+            write_batch_partition(
+                unified, os.path.join(partials_dir, "unified"), batch_id
             )
         finally:
             grams.unpersist()
 
-    return (
-        bench_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(bench_stream, write_batch, checkpoint_dir)
 
 
 def read_bloom_views(spark: SparkSession, partials_dir: str):
     """Merge-on-read for the Bloom partials: OR-merge = DISTINCT union of
     the per-batch bit sets; the gram set unions the same way. Reads the
-    unified table ``stream_bloom_partial_sink`` appends (one scan lineage,
+    unified table ``stream_bloom_partial_sink`` writes (one scan lineage,
     split by which column is non-null)."""
-    import os as _os
-
-    u = spark.read.parquet(_os.path.join(partials_dir, "unified"))
+    u = spark.read.parquet(os.path.join(partials_dir, "unified"))
     bits = u.filter(F.col("pos").isNotNull()).select("pos").distinct()
     grams = (
         u.filter(F.col("shingle").isNotNull()).select("shingle").distinct()
@@ -1108,15 +1094,8 @@ def read_bloom_views(spark: SparkSession, partials_dir: str):
 
 
 def read_minhash_verdicts(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the st12 verdict store replay-safely: a replayed micro-batch
-    appends identical rows under the same batch_id — drop them before use
-    (each doc arrives in exactly one feed batch, so (batch_id, doc_id) is
-    the row identity)."""
-    return (
-        spark.read.parquet(out_dir)
-        .dropDuplicates(["batch_id", "doc_id"])
-        .select("doc_id", "kept")
-    )
+    """The st12 verdicts: one (doc_id, kept) row per streamed document."""
+    return spark.read.parquet(out_dir).select("doc_id", "kept")
 
 
 def stamp_feed_mtimes(in_dir: str, seen: set, batch_idx: int) -> set:
@@ -1127,12 +1106,11 @@ def stamp_feed_mtimes(in_dir: str, seen: set, batch_idx: int) -> set:
     append's new files with a strictly increasing synthetic mtime.
     Returns the updated seen-file set."""
     import glob as _glob
-    import os as _os
 
-    now = set(_glob.glob(_os.path.join(in_dir, "*")))
+    now = set(_glob.glob(os.path.join(in_dir, "*")))
     t = 1_700_000_000.0 + batch_idx * 60.0
     for f in sorted(now - seen):
-        _os.utime(f, (t, t))
+        os.utime(f, (t, t))
     return now
 
 
@@ -1171,7 +1149,6 @@ def write_bucketed_feed(
     silently change the batch decomposition some oracles pin), and
     ``ValueError`` if ``files_per_bucket > 1`` comes without ``sub_expr``."""
     import glob as _glob
-    import os as _os
     import shutil as _shutil
 
     if files_per_bucket > 1 and sub_expr is None:
@@ -1192,19 +1169,19 @@ def write_bucketed_feed(
     (
         staged.write.mode("overwrite").partitionBy("__feed_b").parquet(scratch)
     )
-    _os.makedirs(in_dir, exist_ok=True)
+    os.makedirs(in_dir, exist_ok=True)
     seen: set = set()
     short = any(
-        len(_glob.glob(_os.path.join(scratch, f"__feed_b={b}", "*.parquet")))
+        len(_glob.glob(os.path.join(scratch, f"__feed_b={b}", "*.parquet")))
         < files_per_bucket
         for b in range(n_batches)
     )
     pad = None
     if short:
         # one extra job only in the (corpus-dependent) short-bucket case
-        empty_dir = _os.path.join(scratch, "__empty")
+        empty_dir = os.path.join(scratch, "__empty")
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(empty_dir)
-        pads = sorted(_glob.glob(_os.path.join(empty_dir, "*.parquet")))
+        pads = sorted(_glob.glob(os.path.join(empty_dir, "*.parquet")))
         if not pads:
             raise RuntimeError(
                 f"bucketed feed pad write to {empty_dir} emitted no parquet "
@@ -1213,7 +1190,7 @@ def write_bucketed_feed(
         pad = pads[0]
     for b in range(n_batches):
         files = sorted(
-            _glob.glob(_os.path.join(scratch, f"__feed_b={b}", "*.parquet"))
+            _glob.glob(os.path.join(scratch, f"__feed_b={b}", "*.parquet"))
         )
         if len(files) > files_per_bucket:
             raise RuntimeError(
@@ -1223,9 +1200,9 @@ def write_bucketed_feed(
             )
         for j in range(files_per_bucket):
             suffix = f"-{j}" if files_per_bucket > 1 else ""
-            dst = _os.path.join(in_dir, f"feed-{b}{suffix}.parquet")
+            dst = os.path.join(in_dir, f"feed-{b}{suffix}.parquet")
             if j < len(files):
-                _os.rename(files[j], dst)
+                os.rename(files[j], dst)
             else:
                 _shutil.copy(pad, dst)
         seen = stamp_feed_mtimes(in_dir, seen, b)
@@ -1258,49 +1235,30 @@ def stream_ivfpq_ingest_sink(
     batch append (s16, plans/retrieval_queries.py): each micro-batch of
     embeddings is encoded with the EXISTING coarse quantizer + PQ codebook
     (never retrained — the faiss add() contract) and its (id, list_id,
-    codes) rows are appended into the list_id-partitioned inverted-list
-    parquet. ``repartition(list_id)`` before the partitioned write keeps
-    the layout at ONE file per list per commit (the s16 lesson: file count
-    stays O(lists x commits), not O(lists x input partitions x commits)).
-
-    Appends are batch_id-tagged; foreachBatch is at-least-once, so readers
-    collapse replays with a per-id dedup (:func:`read_ivfpq_index` — the
-    st11 replay-safety pattern).
+    codes) rows are written to ``<index_dir>/batch_id=<n>/list_id=<k>``
+    (:func:`write_batch_partition`), so a replayed batch replaces its own
+    inverted-list files. ``repartition(list_id)`` before the partitioned
+    write keeps the layout at ONE file per list per batch (the s16 lesson:
+    file count stays O(lists x batches), not O(lists x input partitions x
+    batches)).
 
     Returns the started StreamingQuery (caller awaits)."""
     from aws_data_engineering_spark.operators import similarity as SIM
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        enc = SIM.ivfpq_encode(batch_df, centroids, codebook).withColumn(
-            "commit", F.lit(batch_id)
-        )
-        (
-            enc.repartition(F.col("list_id"))
-            .write.mode("append")
-            .partitionBy("list_id")
-            .parquet(index_dir)
+        enc = SIM.ivfpq_encode(batch_df, centroids, codebook)
+        write_batch_partition(
+            enc.repartition(F.col("list_id")), index_dir, batch_id, "list_id"
         )
 
-    return (
-        emb_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(emb_stream, ingest, checkpoint_dir)
 
 
 def read_ivfpq_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Cold read-back of the streamed inverted lists (partition column
-    recovered from directory names, cast explicitly). ``dropDuplicates``
-    on the vector id makes a replayed at-least-once batch idempotent: a
-    re-appended (id, commit) row is byte-identical, so any copy serves."""
-    return (
-        spark.read.parquet(index_dir)
-        .select(
-            F.col("id").cast("bigint").alias("id"),
-            F.col("list_id").cast("int").alias("list_id"),
-            "codes",
-            F.col("commit").cast("int").alias("commit"),
-        )
-        .dropDuplicates(["id"])
+    """Cold read-back of the streamed inverted lists (``list_id``
+    recovered from the partition directory names, cast explicitly)."""
+    return spark.read.parquet(index_dir).select(
+        F.col("id").cast("bigint").alias("id"),
+        F.col("list_id").cast("int").alias("list_id"),
+        "codes",
     )

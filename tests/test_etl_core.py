@@ -1162,6 +1162,27 @@ def test_session_builder_catalog_contract(monkeypatch):
     assert plain["spark.sql.codegen.cache.maxEntries"] == "4096"
 
 
+def test_managed_tables_land_under_scratch_root(spark):
+    """``saveAsTable`` writes under this process's scratch root (removed at
+    exit), not into ``./spark-warehouse`` under the working directory; an
+    ``extra_conf`` warehouse still wins."""
+    import uuid
+
+    from aws_data_engineering_spark.session import build_session_builder
+    from aws_data_engineering_spark.storage import scratch_root
+
+    name = f"wh_probe_{uuid.uuid4().hex[:8]}"
+    try:
+        spark.range(3).write.saveAsTable(name)
+        assert os.path.isdir(os.path.join(scratch_root(), "warehouse", name))
+        assert not os.path.exists(os.path.join(os.getcwd(), "spark-warehouse", name))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    own = {"spark.sql.warehouse.dir": "/elsewhere"}
+    opts = build_session_builder(extra_conf=own)._options
+    assert opts["spark.sql.warehouse.dir"] == "/elsewhere"
+
+
 def test_generated_code_stays_compiled(spark):
     """A query's generated classes survive 150 other distinct ones in the
     same session: re-running it compiles nothing (Spark's default LRU of

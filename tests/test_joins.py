@@ -89,9 +89,10 @@ def test_bucketed_join_no_exchange(spark, sf_dir, tmp_path):
     Exchange operators — the write-once/join-free-forever contract."""
     from aws_data_engineering_spark.sources.writers import write_bucketed_table
 
-    # warehouse.dir is a static conf — tables land in ./spark-warehouse.
-    # Hermeticity (VERDICT r08 #2): a FIXED table name is not safe against a
-    # dirty warehouse — an interrupted prior run can leave an orphaned
+    # Tables land in the session warehouse, which build_session_builder
+    # puts under the scratch root. Hermeticity (VERDICT r08 #2): a FIXED
+    # table name is not safe against a dirty warehouse (a plain session's
+    # ./spark-warehouse) — an interrupted prior run can leave an orphaned
     # LOCATION that `DROP TABLE IF EXISTS` (fresh metastore, no such table)
     # cannot remove, failing saveAsTable with LOCATION_ALREADY_EXISTS. Use a
     # per-run unique suffix (the c03/c09 pattern) and drop in finally.

@@ -722,3 +722,29 @@ def test_text_contract_literals_only_in_text_module():
         if needle in line
     ]
     assert not bad, bad
+
+
+def test_foreach_batch_only_in_shared_sink_start():
+    """Every foreachBatch sink starts through
+    ``streaming.streams.start_batch_sink``: a call to ``foreachBatch(``
+    anywhere else in the package would be a sink with its own replay
+    handling instead of ``write_batch_partition``'s."""
+    import inspect
+    from pathlib import Path
+
+    from aws_data_engineering_spark.streaming import streams
+
+    root = Path(__file__).resolve().parent.parent
+    lines, first = inspect.getsourcelines(streams.start_batch_sink)
+    owner = {
+        f"aws_data_engineering_spark/streaming/streams.py:{first + j}"
+        for j, line in enumerate(lines)
+        if "foreachBatch(" in line
+    }
+    hits = {
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted((root / "aws_data_engineering_spark").rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "foreachBatch(" in line
+    }
+    assert owner and hits == owner, sorted(hits - owner)

@@ -1,5 +1,5 @@
 """Round-10 pins: HTML boilerplate extraction (t39), URL canonicalization
-(t40/d22), delete-vector compaction (c23), streaming ANN ingest (st19)."""
+(t40/d22), delete-vector compaction (c23)."""
 
 from __future__ import annotations
 
@@ -211,45 +211,6 @@ def test_c23_compaction_file_mechanics(spark, sf_dir, tmp_path):
         for r in direct.collect()
     }
     assert got == want
-
-
-# --------------------------------------------------------------------------
-# st19 — streaming ANN ingest replay safety
-# --------------------------------------------------------------------------
-
-
-def test_st19_reader_collapses_replayed_batch(spark, sf_dir, tmp_path):
-    """foreachBatch is at-least-once: a replayed batch re-appends the same
-    batch_id-tagged rows. The index reader must collapse them — count and
-    probe results identical to the single-append index."""
-    from aws_data_engineering_spark.operators import similarity as SIM
-    from aws_data_engineering_spark.sources.tables import load_table
-    from aws_data_engineering_spark.streaming import read_ivfpq_index
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
-    centroids = SIM._hyperplanes(dim=64, n_planes=16, seed=7)
-    cb = SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8)
-    enc = SIM.ivfpq_encode(emb, centroids, cb).withColumn("commit", F.lit(0))
-    path = str(tmp_path / "idx")
-    for _ in range(2):  # original append + replay
-        (
-            enc.repartition(F.col("list_id"))
-            .write.mode("append")
-            .partitionBy("list_id")
-            .parquet(path)
-        )
-    idx = read_ivfpq_index(spark, path)
-    assert idx.count() == 50
-    probe = SIM.ivfpq_search_encoded(
-        emb.filter(F.col("vec_id") < 3), idx, centroids, cb, k=5, n_probe=4
-    )
-    rows = probe.collect()
-    # k neighbors per query, no duplicated neighbor within a query
-    per_q: dict = {}
-    for r in rows:
-        per_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    for q, ns in per_q.items():
-        assert len(ns) == len(set(ns)) == 5
 
 
 # --------------------------------------------------------------------------

@@ -147,126 +147,6 @@ def test_palette_png_rejects_bad_index_and_missing_plte():
         decode_png(blob)
 
 
-def test_st15_cms_partials_merge_equals_batch(spark, tmp_path):
-    """The streaming CMS's merged cell table must equal the batch-computed
-    cell table exactly, AND the partials dir must genuinely contain
-    multiple per-batch appends (more raw rows than merged rows) — proving
-    the multi-batch path, not a single-batch degenerate run."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from aws_data_engineering_spark.operators.text import cms_cells
-    from aws_data_engineering_spark.streaming import (
-        read_cms_views,
-        read_documents_stream,
-        stream_cms_partial_sink,
-    )
-
-    rows = [(i, f"tok{i % 7} tok{i % 3} shared", "en", "s", 0) for i in range(60)]
-    write_docs(tmp_path, rows)
-    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    in_dir = str(tmp_path / "in")
-    from aws_data_engineering_spark.streaming import stamp_feed_mtimes
-
-    seen = set()
-    for b in range(3):
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        seen = stamp_feed_mtimes(in_dir, seen, b)
-    stream = read_documents_stream(spark, in_dir, max_files_per_trigger=1)
-    q = stream_cms_partial_sink(
-        stream,
-        "text",
-        partials_dir=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-    cells, tc = read_cms_views(spark, str(tmp_path / "partials"))
-    # batch twin over the same corpus
-    toks = docs.select(F.explode(F.split("text", " ")).alias("token")).filter(
-        F.col("token") != ""
-    )
-    btc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    bcells = cms_cells(btc, depth=4)
-    got = {(r["r"], r["bucket"]): r["cell"] for r in cells.collect()}
-    want = {(r["r"], r["bucket"]): r["cell"] for r in bcells.collect()}
-    assert got == want
-    raw_rows = spark.read.parquet(os.path.join(str(tmp_path / "partials"), "cells")).count()
-    assert raw_rows > len(got), "expected multiple per-batch partial appends"
-    # token census partial merge is exact too
-    assert {
-        (r["token"], r["cnt"]) for r in tc.collect()
-    } == {(r["token"], r["cnt"]) for r in btc.collect()}
-
-
-def test_st16_bloom_or_merge_equals_batch(spark, tmp_path):
-    """Per-batch Bloom bit partials OR-merged (DISTINCT union) must equal
-    the batch-built filter's bit set, and the contamination report from
-    the merged filter must equal bloom_contamination run in one shot."""
-    from pyspark.sql import functions as F
-
-    from aws_data_engineering_spark.operators import dedup as D
-    from aws_data_engineering_spark.streaming import (
-        read_bloom_views,
-        read_documents_stream,
-        stream_bloom_partial_sink,
-    )
-
-    bench_rows = [
-        (i, f"alpha beta gamma delta epsilon tok{i} zeta eta theta", "en", "bench", 0)
-        for i in range(9)
-    ]
-    cand_rows = [
-        (100, "alpha beta gamma delta epsilon tok1 zeta eta theta", "en", "web", 0),
-        (101, "totally different words with no overlap at all here", "en", "web", 0),
-    ]
-    write_docs(tmp_path, bench_rows + cand_rows)
-    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    bench = docs.filter(F.col("source") == "bench")
-    cand_docs = docs.filter(F.col("source") == "web")
-    in_dir = str(tmp_path / "in")
-    from aws_data_engineering_spark.streaming import stamp_feed_mtimes
-
-    seen = set()
-    for b in range(3):
-        bench.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        seen = stamp_feed_mtimes(in_dir, seen, b)
-    stream = read_documents_stream(spark, in_dir, max_files_per_trigger=1)
-    q = stream_bloom_partial_sink(
-        stream,
-        "text",
-        partials_dir=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        shingle_n=5,
-    )
-    q.awaitTermination()
-    grams, bits = read_bloom_views(spark, str(tmp_path / "partials"))
-    # OR-merge == batch bits
-    batch_grams = (
-        D._gram_fanout(bench, "doc_id", "text", 5).select("shingle").distinct()
-    )
-    assert {r["pos"] for r in bits.collect()} == {
-        r["pos"] for r in D.bloom_bits(batch_grams).collect()
-    }
-    assert {r["shingle"] for r in grams.collect()} == {
-        r["shingle"] for r in batch_grams.collect()
-    }
-    # merged-filter report == one-shot batch report
-    cand = D._gram_fanout(cand_docs, "doc_id", "text", 5)
-    got = {tuple(r) for r in D.bloom_probe(cand, grams, bits).collect()}
-    want = {
-        tuple(r)
-        for r in D.bloom_contamination(cand_docs, bench, "doc_id", "text", 5).collect()
-    }
-    assert got == want
-    # doc 100 is contaminated (shares 5-gram spans with bench doc 1)
-    assert any(r[0] == 100 for r in got)
-
-
 def test_g09_census_sums_to_corpus(spark, sf_dir):
     """n_docs across the histogram must sum to the document count
     (singletons included) and sum(cluster_size * n_clusters) == n_docs."""
@@ -306,48 +186,6 @@ def test_dq17_totals_and_split(spark, sf_dir):
     for r in rows:
         assert r["rows_a"] + r["rows_b"] == n
         assert r["rows_a"] > 0 and r["rows_b"] > 0
-
-
-def test_partial_views_collapse_replayed_batches(spark, tmp_path):
-    """foreachBatch is at-least-once: appending the SAME batch's partial
-    rows twice (a simulated replay) must not change the merged CMS or
-    q-digest views — the batch_id collapse is the dedup."""
-    import os
-
-    from aws_data_engineering_spark.streaming import read_cms_views
-    from aws_data_engineering_spark.streaming.streams import read_qdigest_view
-
-    cells_dir = os.path.join(str(tmp_path), "partials", "cells")
-    tok_dir = os.path.join(str(tmp_path), "partials", "tokcnt")
-    cells = spark.createDataFrame(
-        [(0, 1, 10, 0), (1, 2, 5, 0), (0, 1, 7, 1)],
-        "r int, bucket int, cell bigint, batch_id bigint",
-    )
-    toks = spark.createDataFrame(
-        [("a", 10, 0), ("b", 5, 0), ("a", 7, 1)],
-        "token string, cnt bigint, batch_id bigint",
-    )
-    for _ in range(2):  # second write simulates the replayed batch 0
-        cells.filter("batch_id = 0").write.mode("append").parquet(cells_dir)
-        toks.filter("batch_id = 0").write.mode("append").parquet(tok_dir)
-    cells.filter("batch_id = 1").write.mode("append").parquet(cells_dir)
-    toks.filter("batch_id = 1").write.mode("append").parquet(tok_dir)
-    mc, mt = read_cms_views(spark, os.path.join(str(tmp_path), "partials"))
-    assert {(r["r"], r["bucket"], r["cell"]) for r in mc.collect()} == {
-        (0, 1, 17), (1, 2, 5)
-    }
-    assert {(r["token"], r["cnt"]) for r in mt.collect()} == {("a", 17), ("b", 5)}
-
-    qd_dir = os.path.join(str(tmp_path), "qd")
-    leaves = spark.createDataFrame(
-        [(100, 3, 0), (200, 1, 0), (100, 2, 1)],
-        "v bigint, cnt bigint, batch_id bigint",
-    )
-    for _ in range(2):
-        leaves.filter("batch_id = 0").write.mode("append").parquet(qd_dir)
-    leaves.filter("batch_id = 1").write.mode("append").parquet(qd_dir)
-    got = {(r["v"], r["cnt"]) for r in read_qdigest_view(spark, qd_dir).collect()}
-    assert got == {(100, 5), (200, 1)}
 
 
 def test_q101_ignores_null_totals(spark, tmp_path):
@@ -442,26 +280,6 @@ def test_checkpoint_release_spares_foreign_blocks(spark, tmp_path):
     # the foreign checkpoint must still be computable (an unpersisted
     # localCheckpoint raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND here)
     assert foreign.agg(F.sum("x")).first()[0] == 45
-
-
-def test_read_minhash_verdicts_drops_replayed_batch(spark, tmp_path):
-    """A replayed st12 micro-batch appends identical verdict rows under
-    the same batch_id — the reader must drop them."""
-    import os
-
-    from aws_data_engineering_spark.streaming import read_minhash_verdicts
-
-    out_dir = os.path.join(str(tmp_path), "out")
-    v = spark.createDataFrame(
-        [(1, True, 0), (2, False, 1)],
-        "doc_id bigint, kept boolean, batch_id bigint",
-    )
-    v.filter("batch_id = 0").write.mode("append").parquet(out_dir)
-    v.filter("batch_id = 0").write.mode("append").parquet(out_dir)  # replay
-    v.filter("batch_id = 1").write.mode("append").parquet(out_dir)
-    got = {(r["doc_id"], r["kept"]) for r in read_minhash_verdicts(spark, out_dir).collect()}
-    assert got == {(1, True), (2, False)}
-    assert read_minhash_verdicts(spark, out_dir).count() == 2
 
 
 @pytest.mark.slow

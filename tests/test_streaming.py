@@ -465,7 +465,7 @@ def test_stream_partial_rollup_multibatch_equals_batch(spark, sf_dir, split_even
     stream = ST.read_events_stream(spark, split_events_dir, max_files_per_trigger=1)
     partials_path = str(tmp_path / "partials")
     q = ST.stream_partial_rollup_sink(
-        stream, partials_path, checkpoint_dir=str(tmp_path / "ckpt"), bucket="hour"
+        stream, partials_path, checkpoint_dir=str(tmp_path / "ckpt")
     )
     q.awaitTermination()
     # more partial rows than final rows proves multi-batch partials existed
@@ -549,3 +549,207 @@ def test_stream_minhash_dedup_cross_batch_state(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
     assert got == {0: True, 1: True, 10: False, 11: True, 20: True, 21: False}
+
+
+def test_st15_cms_partials_merge_equals_batch(spark, tmp_path):
+    """The streaming CMS's merged cell table must equal the batch-computed
+    cell table exactly, AND the partials dir must genuinely contain
+    multiple per-batch partitions (more raw rows than merged rows) —
+    proving the multi-batch path, not a single-batch degenerate run."""
+    import os
+
+    from aws_data_engineering_spark.operators.text import cms_cells
+    from tests.oracle_utils import write_docs
+
+    rows = [(i, f"tok{i % 7} tok{i % 3} shared", "en", "s", 0) for i in range(60)]
+    write_docs(tmp_path, rows)
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    in_dir = str(tmp_path / "in")
+    seen = set()
+    for b in range(3):
+        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        seen = ST.stamp_feed_mtimes(in_dir, seen, b)
+    stream = ST.read_documents_stream(spark, in_dir, max_files_per_trigger=1)
+    q = ST.stream_cms_partial_sink(
+        stream,
+        "text",
+        partials_dir=str(tmp_path / "partials"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination()
+    cells, tc = ST.read_cms_views(spark, str(tmp_path / "partials"))
+    # batch twin over the same corpus
+    toks = docs.select(F.explode(F.split("text", " ")).alias("token")).filter(
+        F.col("token") != ""
+    )
+    btc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+    bcells = cms_cells(btc, depth=ST.CMS_DEPTH)
+    got = {(r["r"], r["bucket"]): r["cell"] for r in cells.collect()}
+    want = {(r["r"], r["bucket"]): r["cell"] for r in bcells.collect()}
+    assert got == want
+    raw_rows = spark.read.parquet(os.path.join(str(tmp_path / "partials"), "cells")).count()
+    assert raw_rows > len(got), "expected multiple per-batch partials"
+    # token census partial merge is exact too
+    assert {
+        (r["token"], r["cnt"]) for r in tc.collect()
+    } == {(r["token"], r["cnt"]) for r in btc.collect()}
+
+
+def test_st16_bloom_or_merge_equals_batch(spark, tmp_path):
+    """Per-batch Bloom bit partials OR-merged (DISTINCT union) must equal
+    the batch-built filter's bit set, and the contamination report from
+    the merged filter must equal bloom_contamination run in one shot."""
+    from aws_data_engineering_spark.operators import dedup as D
+    from tests.oracle_utils import write_docs
+
+    bench_rows = [
+        (i, f"alpha beta gamma delta epsilon tok{i} zeta eta theta", "en", "bench", 0)
+        for i in range(9)
+    ]
+    cand_rows = [
+        (100, "alpha beta gamma delta epsilon tok1 zeta eta theta", "en", "web", 0),
+        (101, "totally different words with no overlap at all here", "en", "web", 0),
+    ]
+    write_docs(tmp_path, bench_rows + cand_rows)
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    bench = docs.filter(F.col("source") == "bench")
+    cand_docs = docs.filter(F.col("source") == "web")
+    in_dir = str(tmp_path / "in")
+    seen = set()
+    for b in range(3):
+        bench.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        seen = ST.stamp_feed_mtimes(in_dir, seen, b)
+    stream = ST.read_documents_stream(spark, in_dir, max_files_per_trigger=1)
+    q = ST.stream_bloom_partial_sink(
+        stream,
+        "text",
+        partials_dir=str(tmp_path / "partials"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination()
+    grams, bits = ST.read_bloom_views(spark, str(tmp_path / "partials"))
+    n = ST.BLOOM_SHINGLE_N
+    # OR-merge == batch bits
+    batch_grams = (
+        D._gram_fanout(bench, "doc_id", "text", n).select("shingle").distinct()
+    )
+    assert {r["pos"] for r in bits.collect()} == {
+        r["pos"] for r in D.bloom_bits(batch_grams).collect()
+    }
+    assert {r["shingle"] for r in grams.collect()} == {
+        r["shingle"] for r in batch_grams.collect()
+    }
+    # merged-filter report == one-shot batch report
+    cand = D._gram_fanout(cand_docs, "doc_id", "text", n)
+    got = {tuple(r) for r in D.bloom_probe(cand, grams, bits).collect()}
+    want = {
+        tuple(r)
+        for r in D.bloom_contamination(cand_docs, bench, "doc_id", "text", n).collect()
+    }
+    assert got == want
+    # doc 100 is contaminated (shares 5-gram spans with bench doc 1)
+    assert any(r[0] == 100 for r in got)
+
+
+# --------------------------------------------------------------------------
+# Replay: foreachBatch is at-least-once. A crash after a batch's write but
+# before its commit-log entry makes the restarted query rerun that batch
+# with the same batch_id. Each case below feeds a sink two files (two
+# micro-batches), deletes the last commit entry and reruns on the same
+# checkpoint; the view must equal the single-run view.
+# --------------------------------------------------------------------------
+
+
+def _ivfpq_model():
+    from aws_data_engineering_spark.operators import similarity as SIM
+
+    return (
+        SIM._hyperplanes(dim=64, n_planes=16, seed=7),
+        SIM.pq_codebook(m_sub=8, k_codes=16, subdim=8),
+    )
+
+
+# sink name -> (fixture table, feed key, stream reader, run sink, read view)
+_REPLAY_SINKS = {
+    "st08_upsert": (
+        "events", "event_id", ST.read_events_stream,
+        lambda s, out, ck: ST.stream_upsert_sink(
+            s, out, ["user_id"], "ts", "event_id", ck
+        ),
+        lambda spark, out: spark.read.parquet(out),
+    ),
+    "st11_rollup": (
+        "events", "event_id", ST.read_events_stream,
+        ST.stream_partial_rollup_sink,
+        ST.read_rollup_view,
+    ),
+    "st12_minhash": (
+        "documents", "doc_id", ST.read_documents_stream,
+        lambda s, out, ck: ST.stream_minhash_dedup_sink(
+            s, out + "/state", out + "/out", ck
+        ),
+        lambda spark, out: ST.read_minhash_verdicts(spark, out + "/out"),
+    ),
+    "st14_qdigest": (
+        "orders", "o_orderkey", ST.read_orders_stream,
+        lambda s, out, ck: ST.stream_qdigest_partial_sink(s, "o_totalprice", out, ck),
+        ST.read_qdigest_view,
+    ),
+    "st15_cms": (
+        "documents", "doc_id", ST.read_documents_stream,
+        lambda s, out, ck: ST.stream_cms_partial_sink(s, "text", out, ck),
+        ST.read_cms_views,
+    ),
+    "st16_bloom": (
+        "documents", "doc_id", ST.read_documents_stream,
+        lambda s, out, ck: ST.stream_bloom_partial_sink(s, "text", out, ck),
+        ST.read_bloom_views,
+    ),
+    "st19_ivfpq": (
+        "embeddings", "vec_id", ST.read_embeddings_stream,
+        lambda s, out, ck: ST.stream_ivfpq_ingest_sink(s, out, *_ivfpq_model(), ck),
+        ST.read_ivfpq_index,
+    ),
+}
+
+
+def _view_rows(view) -> list:
+    frames = view if isinstance(view, tuple) else (view,)
+    return [sorted(map(tuple, df.collect()), key=repr) for df in frames]
+
+
+@pytest.mark.parametrize("sink", sorted(_REPLAY_SINKS))
+def test_sink_replay_equals_single_run(spark, sf_dir, tmp_path, sink):
+    """A replayed micro-batch leaves every sink's view unchanged."""
+    import glob
+    import os
+
+    table, key, read_stream, run_sink, read_view = _REPLAY_SINKS[sink]
+    df = load_table(spark, sf_dir, table)
+    if table == "events":
+        # read_events_stream expects ts as the fixture's nanos bigint
+        df = df.withColumn("ts", F.unix_micros("ts") * 1000)
+    feed, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    ST.write_bucketed_feed(df, F.pmod(F.col(key), F.lit(2)), feed, n_batches=2)
+
+    def run() -> list:
+        q = run_sink(read_stream(spark, feed, max_files_per_trigger=1), out, ckpt)
+        q.awaitTermination()
+        return [p.batchId for p in q.recentProgress]
+
+    assert run() == [0, 1]
+    once = _view_rows(read_view(spark, out))
+    os.remove(os.path.join(ckpt, "commits", "1"))
+    os.remove(os.path.join(ckpt, "commits", ".1.crc"))
+    assert run() == [1]  # the last batch ran again under its own batch_id
+    assert _view_rows(read_view(spark, out)) == once
+    if sink == "st19_ivfpq":
+        # the replay replaced its partition: one file per (batch, list)
+        leaves = glob.glob(os.path.join(out, "batch_id=*", "list_id=*"))
+        assert leaves and all(
+            len(glob.glob(os.path.join(d, "*.parquet"))) == 1 for d in leaves
+        )

@@ -6,7 +6,8 @@ engine (Spark Column, DuckDB SQL fragment, Python worker closure). These
 tests pin that the three twins agree value-for-value, including on empty,
 all-whitespace and NULL text, and replay the oracles that embed the
 contract on the two planted corpora of ``tests/test_round8.py``
-(Unicode case seams and edge whitespace).
+(Unicode case seams and edge whitespace) and the near-dup family on a
+planted NULL-text corpus.
 """
 
 from __future__ import annotations
@@ -66,7 +67,9 @@ def test_ascii_trim_contract():
     assert py != probe.strip()  # unicode strip would eat NBSP/IDEO too
 
 
-_HELPERS = ("trim", "lower", "tokens", "lower_tokens", "normalize", "shingles")
+_HELPERS = (
+    "trim", "lower", "tokens", "lower_tokens", "doc_tokens", "normalize", "shingles"
+)
 
 
 def _spark_twins(c):
@@ -75,6 +78,7 @@ def _spark_twins(c):
         "lower": T.ascii_lower(c),
         "tokens": T.tokens(c),
         "lower_tokens": T.tokens(T.ascii_lower(c)),
+        "doc_tokens": T.doc_tokens(c),
         "normalize": T.normalize_text(c),
         "shingles": D.shingles(c, 3),
     }
@@ -86,8 +90,9 @@ def _sql_twins(e):
         "lower": T.ascii_lower_sql(e),
         "tokens": T.tokens_sql(e),
         "lower_tokens": T.tokens_sql(T.ascii_lower_sql(e)),
+        "doc_tokens": T.doc_tokens_sql(e),
         "normalize": T.normalize_sql(e),
-        "shingles": T.shingles_sql(T.tokens_sql(T.ascii_lower_sql(e)), 3),
+        "shingles": T.shingles_sql(T.doc_tokens_sql(e), 3),
     }
 
 
@@ -98,6 +103,7 @@ def _python_twins(text):
         "lower": tw.lower(text),
         "tokens": tw.tokens(text),
         "lower_tokens": tw.tokens(tw.lower(text)),
+        "doc_tokens": tw.doc_tokens(text),
         "normalize": tw.normalize(text),
         "shingles": tw.shingles(text, 3),
     }
@@ -106,9 +112,8 @@ def _python_twins(text):
 def test_text_helpers_agree_on_all_three_engines(spark):
     """Each helper gives the same value on Spark, DuckDB and Python for
     every row of both planted corpora plus '', all-whitespace and NULL.
-    The one engine split is a NULL document's shingles: Spark and Python
-    give ``['']`` (the JVM n-gram index sequence never goes empty), DuckDB
-    gives NULL."""
+    NULL stays NULL, except in ``doc_tokens`` and ``shingles``, where it
+    reads as ''."""
     texts = [r[1] for rows in _CORPORA.values() for r in rows]
     texts += ["", "   ", " \t\n\x0b\f\r ", None, "one", "two words", "a b c"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
@@ -130,9 +135,6 @@ def test_text_helpers_agree_on_all_three_engines(spark):
         for h in _HELPERS:
             s, d, p = got_spark[i][h], got_duck[h], got_py[h]
             if h == "shingles":
-                if text is None:
-                    assert (s, d, p) == ([""], None, [""])
-                    continue
                 # a set: DuckDB's list_distinct does not keep list order
                 s, d, p = sorted(s), sorted(d), sorted(p)
             assert s == d == p, (h, text, s, d, p)
@@ -140,6 +142,7 @@ def test_text_helpers_agree_on_all_three_engines(spark):
     tw = T.text_worker_fns()
     assert tw.tokens("") == tw.tokens("   ") == [""]
     assert tw.normalize("   ") == ""
+    assert tw.doc_tokens(None) == tw.shingles(None, 3) == [""]
 
 
 def test_word_ngrams_positions(spark):
@@ -180,5 +183,39 @@ _CONTRACT_QUERIES = [
 @pytest.mark.parametrize("name", _CONTRACT_QUERIES)
 def test_contract_oracles_on_planted_corpora(spark, tmp_path, name, corpus):
     write_docs(tmp_path, _CORPORA[corpus])
+    q = QUERIES[name]
+    compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
+
+
+# NULL text is empty text in the near-dup family: the two NULL documents
+# and the empty one are near-dups of each other on both engines, beside a
+# planted near-dup pair (4, 5) and an unrelated document. Benchmark-style
+# sources (src0/src1) put NULL text on both sides of the contamination
+# queries.
+_BASE = " ".join(f"tok{i}" for i in range(30))
+_NULL_TEXT_ROWS = [
+    (1, None, "en", "src0", 0),
+    (2, None, "en", "web", 0),
+    (3, "", "en", "web", 0),
+    (4, _BASE, "en", "src0", 0),
+    (5, _BASE + " extra", "en", "web", 0),
+    (6, " ".join(f"alt{i}" for i in range(30)), "de", "src1", 0),
+    (7, None, "de", "src1", 0),
+]
+
+_NEAR_DUP_QUERIES = [
+    "d04_minhash_candidate_pairs", "d05_ngram_jaccard_pairs", "d06_simhash",
+    "d07_simhash_neardup_pairs", "d09_benchmark_contamination",
+    "d11_bloom_contamination", "d12_duplicate_shingle_fraction",
+    "d13_minhash_estimate_accuracy", "d17_capped_minhash_pairs",
+    "d19_lsh_scurve_audit", "d21_incremental_minhash_probe",
+    "st12_stream_minhash_dedup", "st16_stream_bloom_filter",
+    "t36_crossdoc_ngram_novelty",
+]
+
+
+@pytest.mark.parametrize("name", _NEAR_DUP_QUERIES)
+def test_near_dup_null_text_is_empty_text(spark, tmp_path, name):
+    write_docs(tmp_path, _NULL_TEXT_ROWS)
     q = QUERIES[name]
     compare(q.spark(spark, str(tmp_path)), q.oracle, str(tmp_path))
