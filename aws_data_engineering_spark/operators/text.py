@@ -43,7 +43,9 @@ MinHash, SimHash, Bloom and n-gram overlap) reads a document through
 ``doc_tokens`` / ``doc_tokens_sql`` / ``text_worker_fns().doc_tokens``
 instead, where NULL text is empty text on all three engines: its tokens
 and shingle set are ``['']``, so NULL and empty documents are near-dups of
-each other everywhere.
+each other everywhere. Any other query that counts or lists a document's
+tokens reads it the same way, through ``doc_text`` / ``doc_text_sql`` /
+``text or ''`` (t08, t09).
 Shingles keep a short document whole: fewer than ``n`` tokens give one
 shingle, the tokens joined by ' '. DuckDB's shingle list is a set whose
 order differs from Spark's and Python's position order.
@@ -123,15 +125,26 @@ def tokens_sql(expr: str) -> str:
     return f"string_split_regex({ascii_trim_sql(expr)}, '{WS_RUN}')"
 
 
+def doc_text(col: str | Column) -> Column:
+    """A document's text, NULL read as '' (the Python twin is
+    ``text or ''``)."""
+    return F.coalesce(_col(col), F.lit(""))
+
+
+def doc_text_sql(expr: str) -> str:
+    """DuckDB twin of :func:`doc_text`."""
+    return f"coalesce({expr}, '')"
+
+
 def doc_tokens(col: str | Column) -> Column:
     """A document's lower-cased tokens for the near-dup family, NULL text
     read as ''."""
-    return tokens(ascii_lower(F.coalesce(_col(col), F.lit(""))))
+    return tokens(ascii_lower(doc_text(col)))
 
 
 def doc_tokens_sql(expr: str) -> str:
     """DuckDB twin of :func:`doc_tokens`."""
-    return tokens_sql(ascii_lower_sql(f"coalesce({expr}, '')"))
+    return tokens_sql(ascii_lower_sql(doc_text_sql(expr)))
 
 
 def normalize_text(col: str | Column) -> Column:

@@ -15,6 +15,8 @@ so at 100 TB they add zero extra passes.
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,18 +32,29 @@ def project(df: DataFrame, select_columns: list[str] | None) -> DataFrame:
     return df
 
 
-def range_sort(df: DataFrame, sort_columns: list[str] | None) -> DataFrame:
+def range_sort(
+    df: DataFrame, sort_columns: list[str] | None, num_partitions: int | None = None
+) -> DataFrame:
     """P2 — config-driven sort (``FInal/load_script.py:193-195``) in the
     layout a ``dt``-partitioned write keeps: range-partitioned on
     ``sort_columns`` (the file layout ``orderBy`` aims for, one shuffle),
     then sorted by ``dt`` and ``sort_columns`` inside each partition, which
     already satisfies the writer's required ordering. A global ``orderBy``
     under that writer's local ``dt`` sort is reduced by Catalyst to a bare
-    range repartition, leaving every file unsorted."""
+    range repartition, leaving every file unsorted.
+
+    ``num_partitions`` sizes the range exchange; None leaves it to the
+    session count, which AQE coalesces. The range partitioner samples its
+    input in a job of its own (one more scan of it) to find the bounds of
+    more than one partition; at 1 partition there are no bounds and no
+    sample. ``pipeline.run_load`` passes one partition per AQE advisory
+    partition size of the inbound bytes (``storage.partitions_for_paths``),
+    so a batch under that size is parsed once. AQE leaves an explicit count
+    as it is. Compressed files are sized by their stored bytes, so a gzip
+    batch gets fewer partitions than its parsed size would."""
     if sort_columns:
-        return df.repartitionByRange(*sort_columns).sortWithinPartitions(
-            "dt", *sort_columns
-        )
+        cols = [num_partitions, *sort_columns] if num_partitions else sort_columns
+        return df.repartitionByRange(*cols).sortWithinPartitions("dt", *sort_columns)
     return df
 
 
@@ -65,13 +78,25 @@ def stamp_dt_from_filename(df: DataFrame) -> DataFrame:
 
 def stamp_audit_columns(df: DataFrame, actor: str = DEFAULT_ACTOR) -> DataFrame:
     """P5 — audit metadata (``FInal/load_script.py:213-216``): actor
-    literals + create/update timestamps."""
-    ts = F.current_timestamp()
+    literals + create/update timestamps, one instant per call (microsecond
+    precision, shown in the session time zone).
+
+    The instant is taken on the driver and enters the plan as a string
+    literal, which generated code receives by reference, so a repeat load
+    reuses the classes of the last one. Catalyst folds any foldable
+    expression, ``current_timestamp()`` and every cast or wrapper of a
+    literal included, into a timestamp literal, and codegen inlines that
+    as a ``long`` constant: every load would compile new classes. Appending
+    an empty substring of ``spark_partition_id()``, which is
+    non-deterministic, keeps the string unfolded without reading any
+    column of ``df``; the cast then parses it once a row."""
+    at = datetime.now(timezone.utc).isoformat()
+    keep_unfolded = F.substring(F.spark_partition_id().cast("string"), 1, 0)
     return (
         df.withColumn("updt_nm", F.lit(actor))
         .withColumn("cret_nm", F.lit(actor))
-        .withColumn("cret_ts", ts)
-        .withColumn("updt_ts", ts)
+        .withColumn("cret_ts", F.concat(F.lit(at), keep_unfolded).cast("timestamp"))
+        .withColumn("updt_ts", F.col("cret_ts"))
     )
 
 

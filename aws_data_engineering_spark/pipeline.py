@@ -22,8 +22,11 @@ Scale posture: every step is a narrow transform fused into the scan until
 the optional range sort. The batch is then materialized once (an eager,
 tracked local checkpoint), so the landing write, the curated write and an
 upsert's partition probe and key set all read it instead of re-parsing the
-CSV; its blocks are released when the load ends. A MERGE commits by
-renaming its staged partitions over the ones it replaces. Gzip files are
+CSV; its blocks are released when the load ends. The range sort gets one
+partition per AQE advisory partition size of the inbound bytes: a batch
+under that size is parsed once, and a larger one is parsed a second time
+by the range partitioner's sampling job. A MERGE commits by renaming its
+staged partitions over the ones it replaces. Gzip files are
 non-splittable — one task per file — so 100 TB ingest parallelism comes
 from file count, which the daily-file layout provides.
 """
@@ -47,6 +50,7 @@ from aws_data_engineering_spark.operators.checkpoints import (
 from aws_data_engineering_spark.schema import build_schema_from_dict
 from aws_data_engineering_spark.sources.readers import read_csv
 from aws_data_engineering_spark.sources.writers import write_curated
+from aws_data_engineering_spark.storage import partitions_for_paths
 
 VALID_LANDING_STRATEGIES = ("append", "overwrite")
 
@@ -155,8 +159,9 @@ def run_load(
 ) -> dict:
     """Execute one config-driven load: inbound CSV → landing → curated.
 
-    The batch is parsed, stamped and sorted once; both zone writes read
-    that one materialization. Returns the load's audit metrics
+    The batch is parsed, stamped and sorted once (a batch over one advisory
+    partition also pays the sort's sample); both zone writes read that one
+    materialization. Returns the load's audit metrics
     (``rows_written``, plus ``null_pk_rows`` when the config declares a
     primary key).
     """
@@ -179,7 +184,11 @@ def run_load(
     df = T.project(df, config.select_columns)
     # dt BEFORE the sort: input_file_name() is only defined inside the scan
     # stage — after the sort's range-exchange it evaluates to "" (→ 'unknown')
-    df = T.range_sort(T.stamp_dt_from_filename(df), config.sort_columns)
+    df = T.range_sort(
+        T.stamp_dt_from_filename(df),
+        config.sort_columns,
+        partitions_for_paths(spark, inbound_path) if config.sort_columns else None,
+    )
 
     own_ids: set[int] = set()
     try:

@@ -628,7 +628,7 @@ def d09_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t08_pandas_udf_tokens",
     f"""
     SELECT source,
-           CAST(SUM(LEN({T.tokens_sql('text')})) AS BIGINT)
+           CAST(SUM(LEN({T.tokens_sql(T.doc_text_sql('text'))})) AS BIGINT)
              AS total_tokens,
            COUNT(*) AS n_docs
     FROM documents GROUP BY source
@@ -643,14 +643,15 @@ def t08_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # resolves the strings against the function's module globals
     from pyspark.sql.functions import pandas_udf
 
-    # T.tokens, vectorized: the contract's trim set and split class, bound
-    # as locals so the UDF pickles them by value
+    # T.tokens(T.doc_text(...)), vectorized: the contract's trim set and
+    # split class, bound as locals so the UDF pickles them by value
     ws, ws_run = T.ASCII_WS, T.WS_RUN
 
     @pandas_udf("int")
     def tok_count(s: pd.Series) -> pd.Series:
         return (
-            s.str.strip(ws)
+            s.fillna("")
+            .str.strip(ws)
             .str.split(ws_run, regex=True)
             .str.len()
             .astype("int32")
@@ -667,7 +668,7 @@ def t08_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     "t09_udtf_tokenize",
     f"""
     WITH toks AS (
-      SELECT doc_id, {T.tokens_sql('text')} AS t
+      SELECT doc_id, {T.tokens_sql(T.doc_text_sql('text'))} AS t
       FROM documents WHERE doc_id < 50
     )
     SELECT doc_id,

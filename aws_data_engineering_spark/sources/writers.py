@@ -166,8 +166,11 @@ def _merge_upsert_pure_spark(
         # static partition pruning: only scan partitions the batch touches
         batch_parts = [r[0] for r in df.select(partition_col).distinct().collect()]
         survivors = survivors.filter(F.col(partition_col).isin(batch_parts))
+    # no distinct(): a left-anti join drops the same rows whether a key
+    # occurs once or many times on the build side, and distinct would cost
+    # the key set a shuffle of its own
     survivors = survivors.join(
-        F.broadcast(df.select(*keys).distinct()), on=keys, how="left_anti"
+        F.broadcast(df.select(*keys)), on=keys, how="left_anti"
     )
     _write_staged_then_swap(
         spark, survivors.unionByName(source), path, partition_col, fmt,

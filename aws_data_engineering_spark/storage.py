@@ -1,11 +1,15 @@
-"""Storage: how the engine reaches a path it is given, and where a query
-keeps its scratch. Both decisions are made here and nowhere else.
+"""Storage: how the engine reaches a path it is given, how many partitions
+a shuffle over a path's bytes gets, and where a query keeps its scratch.
+Each decision is made here and nowhere else.
 
 - A caller-supplied table or feed path (plain, ``file://``, ``hdfs://``,
   ``s3a://``) is reached through the Hadoop FileSystem Spark itself uses for
   it (``HadoopPath``), so a probe, size, delete or commit-by-rename sees
   what the job sees. A local probe misreads a URI, and a try/except around
   a read mistakes an unreadable table for a missing one.
+- A shuffle whose count must be fixed before it runs gets one partition
+  per AQE advisory partition size of its input's bytes
+  (``partitions_for_paths``), so a small input pays for one partition.
 - Query scratch lives under one directory per process, made on first use
   and removed when that process exits (``scratch_dir``): returned DataFrames
   read their scratch lazily. Plans that materialize eagerly still free
@@ -21,6 +25,7 @@ import tempfile
 import threading
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -90,6 +95,40 @@ class HadoopPath:
         jvm = self._spark._jvm
         path = jvm.org.apache.hadoop.fs.Path(self.path.getParent(), name)
         return HadoopPath(self._spark, path.toString())
+
+
+def partitions_for_bytes(spark: SparkSession, nbytes: int) -> int:
+    """Shuffle partitions for ``nbytes`` of input: ceil(bytes / AQE advisory
+    partition size), clamped to [1, session ``spark.sql.shuffle.partitions``].
+
+    The advisory size is the partition size AQE coalesces towards, for
+    shuffles whose count is fixed before they run (micro-batches, a range
+    sort that should skip its sample). Input big enough to fill the
+    session's partitions keeps all of them; a small input gets only what
+    it fills.
+    """
+    jvm = spark.sparkContext._jvm
+    advisory = int(
+        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
+            )
+        )
+    )
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(session_parts, -(-nbytes // max(1, advisory))))
+
+
+def partitions_for_paths(spark: SparkSession, *paths: str) -> int | None:
+    """:func:`partitions_for_bytes` of the bytes under ``paths``, or None
+    when the filesystem cannot size one of them (a glob, a missing path, an
+    unregistered scheme): the caller then keeps the session count rather
+    than guess small."""
+    try:
+        nbytes = sum(HadoopPath(spark, p).total_bytes() for p in paths)
+    except Py4JJavaError:
+        return None
+    return partitions_for_bytes(spark, nbytes)
 
 
 _scratch_root: str | None = None

@@ -24,13 +24,12 @@ from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
 import pandas as pd
-from py4j.protocol import Py4JJavaError
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from aws_data_engineering_spark.storage import HadoopPath
+from aws_data_engineering_spark.storage import HadoopPath, partitions_for_paths
 
 # Streaming sources require an explicit schema. ts is declared bigint so the
 # INT64-physical parquet column reads as its raw integer value regardless of
@@ -46,51 +45,28 @@ _TS_SANITY_MIN = "1990-01-01"
 _TS_SANITY_MAX = "2100-01-01"
 
 
-def stream_shuffle_partitions(spark: SparkSession, feed_bytes: int) -> int:
-    """Scale-ADAPTIVE shuffle/state partition count for a streaming query:
-    ceil(feed bytes / AQE advisory partition size), clamped to
-    [1, session spark.sql.shuffle.partitions].
-
-    Micro-batch shuffles cannot be AQE-coalesced, so a streaming query
-    always runs (and, for stateful operators, maintains state stores for)
-    the FULL session partition count per batch regardless of batch size —
-    pure fixed overhead when batches are small (guide §2.2/§5). This
-    derives the count from the data exactly as AQE's coalescing would:
-    the advisory size is the same conf AQE targets, so a feed big enough
-    to fill the session's partitions keeps ALL of them (at 100 TB this is
-    a no-op), and a small feed pays for only the partitions it can fill.
-    Measured (interleaved A/B, quiet host, calibration 0.12 s): st01 at
-    sf0.1 2.2 s median @32 partitions -> 0.94 s @4 / 0.99 s @1.
-    """
-    jvm = spark.sparkContext._jvm
-    advisory = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-            )
-        )
-    )
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(session_parts, -(-feed_bytes // max(1, advisory))))
-
-
 @contextmanager
 def scaled_stream_shuffle(spark: SparkSession, *feed_paths: str):
-    """Scope ``spark.sql.shuffle.partitions`` to the data-derived streaming
-    partition count for the duration of a stream's build+drain, restoring
-    the session value after. The conf is read at stream START (it locks
-    the state-store partition count into the checkpoint), so the scope
-    must cover ``writeStream.start()``; every registered streaming query
-    starts a fresh uuid-keyed checkpoint, so no restart-compat issue."""
+    """Scope ``spark.sql.shuffle.partitions`` to the feeds' data-derived
+    count (``storage.partitions_for_paths``; the session count when a feed
+    cannot be sized) for the duration of a stream's build+drain, restoring
+    the session value after.
+
+    Micro-batch shuffles cannot be AQE-coalesced, so a streaming query
+    otherwise runs (and, for stateful operators, keeps state stores for)
+    the full session partition count per batch however small the batch.
+    Measured (interleaved A/B, quiet host, calibration 0.12 s): st01 at
+    sf0.1 2.2 s median @32 partitions -> 0.94 s @4 / 0.99 s @1.
+
+    The conf is read at stream START (it locks the state-store partition
+    count into the checkpoint), so the scope must cover
+    ``writeStream.start()``; every registered streaming query starts a
+    fresh uuid-keyed checkpoint, so no restart-compat issue."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    try:
-        feed = sum(HadoopPath(spark, p).total_bytes() for p in feed_paths)
-        spark.conf.set(key, str(stream_shuffle_partitions(spark, feed)))
-    except Py4JJavaError:
-        # the filesystem cannot size a feed (unregistered scheme, missing
-        # path): keep the session count rather than guess small
-        pass
+    parts = partitions_for_paths(spark, *feed_paths)
+    if parts is not None:
+        spark.conf.set(key, str(parts))
     try:
         yield
     finally:
@@ -845,8 +821,6 @@ def stream_minhash_dedup_sink(
     per-batch work is one broadcast-or-shuffle equi-join on
     (band, band_hash).
     """
-    from pyspark.errors import AnalysisException
-
     from aws_data_engineering_spark.operators import dedup as DD
 
     rows_per_band = MINHASH_NUM_HASHES // MINHASH_NUM_BANDS
@@ -868,13 +842,15 @@ def stream_minhash_dedup_sink(
         bmin = bands.groupBy("band", "band_hash").agg(
             F.min("doc_id").alias("first_doc")
         )
-        try:
+        known = bmin
+        # probed on the filesystem, as merge_upsert probes its target: only
+        # a directory holding no visible entry means "no state yet", and
+        # state that exists but cannot be read fails the batch
+        if HadoopPath(sess, state_dir).holds_visible_entry():
             state = sess.read.parquet(state_dir).select(
                 "band", "band_hash", "first_doc"
             )
             known = bmin.unionByName(state)
-        except AnalysisException:
-            known = bmin  # first batch: no state yet
         known = known.groupBy("band", "band_hash").agg(
             F.min("first_doc").alias("first_doc")
         )

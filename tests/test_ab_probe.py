@@ -1,5 +1,7 @@
-"""tools/ab_probe.py bench-mode summary (no Spark): a run's first sample of
-a query is cold, so it must not widen the warm quartiles."""
+"""tools/ab_probe.py summaries (no Spark): in bench mode a run's first
+sample of a query is cold, so it must not widen the warm quartiles; in
+perfbench mode a gain is shown only by 9/10 wins and a median gap wider
+than the baseline's quartile spread."""
 
 from __future__ import annotations
 
@@ -38,3 +40,21 @@ def test_summary_takes_a_third_sample_as_warm():
     got = ab_probe.summarize(runs, ["q"], n=2)["q"]
     assert got["A_median"] == 1.5 and got["B_median"] == 1.0
     assert got["first_A"] == [5.0] and got["first_B"] == [5.0]
+
+
+def test_metric_summary_shows_a_gain_only_by_wins_and_spread():
+    a = [10.0, 10.2, 9.8, 10.1, 9.9, 10.0, 10.3, 9.7, 10.0, 10.1]
+    # A: q1 9.925, median 10.0, q3 10.1 -> spread 0.175
+    faster = [x - 0.5 for x in a]
+    got = ab_probe.metric_summary(a, faster, "lower")
+    assert got["B_wins"] == "10/10" and got["gain_shown"] is True
+    # one tie and one loss: 8/10 wins is not enough
+    mixed = faster[:8] + [a[8], a[9] + 0.1]
+    got = ab_probe.metric_summary(a, mixed, "lower")
+    assert got["B_wins"] == "8/10" and got["gain_shown"] is False
+    # every pair won, but by less than A's q3 - q1
+    close = [x - 0.1 for x in a]
+    assert ab_probe.metric_summary(a, close, "lower")["gain_shown"] is False
+    # the direction comes from the metric
+    assert ab_probe.metric_summary(a, faster, "higher")["gain_shown"] is False
+    assert ab_probe.metric_summary(faster, a, "higher")["gain_shown"] is True

@@ -81,9 +81,10 @@ def test_stamp_audit_columns(spark):
     df = spark.createDataFrame([Row(a=1)])
     out = T.stamp_audit_columns(df)
     assert set(out.columns) == {"a", "updt_nm", "cret_nm", "cret_ts", "updt_ts"}
+    assert dict(out.dtypes)["cret_ts"] == "timestamp"
     row = out.collect()[0]
     assert row["updt_nm"] == row["cret_nm"] == T.DEFAULT_ACTOR
-    assert row["cret_ts"] is not None
+    assert row["cret_ts"] is not None and row["cret_ts"] == row["updt_ts"]
 
 
 def test_rename_and_cast(spark):
@@ -303,18 +304,32 @@ def _write_shuffled_days(inbound, name, days=("20240101", "20240102"), n=200):
         )
 
 
-def test_run_load_sorts_landing_and_curated_files(spark, tmp_path):
+@pytest.mark.parametrize("advisory", [None, "1k"], ids=["one_partition", "sampled"])
+def test_run_load_sorts_landing_and_curated_files(spark, tmp_path, advisory):
     """With sort_columns set, every parquet file of both zones holds its ids
     in ascending order (a global orderBy under the dt-partitioned writer's
-    own sort loses the order in landing)."""
+    own sort loses the order in landing). A batch under one advisory
+    partition is range-sorted into one partition without a sample; a 1k
+    advisory size makes the same batch take the sampled path."""
     import pyarrow.parquet as pq
+
+    from aws_data_engineering_spark.storage import partitions_for_paths
 
     inbound = tmp_path / "inbound" / "erp" / "srt"
     _write_shuffled_days(inbound, "srt")
     landing, curated = tmp_path / "landing", tmp_path / "curated"
-    audit = P.run_load(
-        spark, _sorted_load_config("srt", "upsert"), str(inbound), str(landing), str(curated)
-    )
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    if advisory:
+        spark.conf.set(key, advisory)
+    try:
+        parts = partitions_for_paths(spark, str(inbound))
+        audit = P.run_load(
+            spark, _sorted_load_config("srt", "upsert"), str(inbound), str(landing), str(curated)
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert (parts == 1) == (advisory is None), parts
     assert audit == {"rows_written": 400, "null_pk_rows": 0}
     for zone in (landing, curated):
         files = sorted(zone.rglob("*.parquet"))
@@ -359,6 +374,70 @@ def test_run_load_scans_csv_once_and_releases_its_batch(spark, tmp_path):
     with pytest.raises(ValueError, match="primary_key"):
         P.run_load(spark, no_pk, str(inbound), landing, curated)
     assert persistent_ids(spark) == before
+
+
+def _load_jobs(spark, group: str, load) -> int:
+    """Spark jobs ``load()`` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_load_job_counts(spark, tmp_path):
+    """A warm load runs only the jobs its output needs: an append runs 4
+    (the batch checkpoint's shuffle and result, the landing and the curated
+    write) and an upsert into an existing table 8. A batch under one
+    advisory partition is range-sorted without a sampling job, and the
+    MERGE's broadcast key set has no shuffle of its own."""
+    inbound = tmp_path / "inbound" / "erp" / "jobs"
+    _write_shuffled_days(inbound, "jobs", n=50)
+    counts = {}
+    for strategy in ("append", "upsert"):
+        cfg = _sorted_load_config("jobs", strategy)
+        landing, curated = str(tmp_path / strategy / "l"), str(tmp_path / strategy / "c")
+        for i in range(2):  # the second load is warm and finds its table
+            counts[strategy] = _load_jobs(
+                spark,
+                f"warm_load_{strategy}_{i}",
+                lambda: P.run_load(spark, cfg, str(inbound), landing, curated),
+            )
+    assert counts == {"append": 4, "upsert": 8}
+
+
+def test_repeat_load_compiles_nothing_and_stamps_one_instant(spark, tmp_path):
+    """A repeated run_load reuses its generated classes (the audit instant
+    is no inlined literal), and every row of one load carries one
+    cret_ts == updt_ts taken during that load; two loads differ."""
+    import time
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME().getCount
+    inbound = tmp_path / "inbound" / "erp" / "ts"
+    _write_shuffled_days(inbound, "ts", n=50)
+    cfg = _sorted_load_config("ts", "overwrite")
+    curated = tmp_path / "c"
+    stamps = []
+    for i in range(3):
+        before_us, c0 = time.time_ns() // 1000, compiles()
+        P.run_load(spark, cfg, str(inbound), str(tmp_path / "l"), str(curated))
+        after_us, compiled = time.time_ns() // 1000, compiles() - c0
+        assert i == 0 or compiled == 0, f"repeat load {i} compiled {compiled} classes"
+        rows = (
+            spark.read.parquet(str(curated))
+            .select(F.unix_micros("cret_ts").alias("c"), F.unix_micros("updt_ts").alias("u"))
+            .distinct()
+            .collect()
+        )
+        assert len(rows) == 1 and rows[0]["c"] == rows[0]["u"], rows
+        assert before_us <= rows[0]["c"] <= after_us
+        stamps.append(rows[0]["c"])
+    assert len(set(stamps)) == 3
 
 
 def test_pipeline_unknown_landing_strategy(spark, tmp_path):

@@ -12,21 +12,6 @@ from pyspark.sql import functions as F
 from tests.oracle_utils import executed_plan
 
 
-def test_stream_shuffle_partitions_derivation(spark):
-    """Scale-adaptive streaming partitions: ceil(bytes/advisory) clamped to
-    [1, session shuffle partitions] — tiny feeds get 1, huge feeds keep the
-    session value (the at-scale no-op that makes this not a local[] tune)."""
-    from aws_data_engineering_spark.streaming.streams import (
-        stream_shuffle_partitions,
-    )
-
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert stream_shuffle_partitions(spark, 0) == 1
-    assert stream_shuffle_partitions(spark, 1) == 1
-    # far beyond advisory x session partitions -> clamped to session value
-    assert stream_shuffle_partitions(spark, 10**15) == session_parts
-
-
 def test_scaled_stream_shuffle_restores_conf(spark, sf_dir):
     """Feeds are sized through the Hadoop FileSystem: a ``file://`` URI gets
     the plain path's partition count, and a path the filesystem cannot

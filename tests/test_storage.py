@@ -9,7 +9,11 @@ import subprocess
 import sys
 from pathlib import Path
 
-from aws_data_engineering_spark.storage import HadoopPath
+from aws_data_engineering_spark.storage import (
+    HadoopPath,
+    partitions_for_bytes,
+    partitions_for_paths,
+)
 
 PKG = Path(__file__).resolve().parent.parent / "aws_data_engineering_spark"
 
@@ -35,6 +39,19 @@ def test_hadoop_path_probes(spark, tmp_path):
         assert str(staging).startswith("file:") == form.startswith("file:")
     HadoopPath(spark, table.as_uri()).delete()
     assert not table.exists()
+
+
+def test_partitions_for_bytes_derivation(spark):
+    """Data-sized shuffle partitions: ceil(bytes/advisory) clamped to
+    [1, session shuffle partitions] — tiny inputs get 1, huge inputs keep
+    the session value (the at-scale no-op that makes this not a local[]
+    tune), and a path the filesystem cannot size gets no count."""
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert partitions_for_bytes(spark, 0) == 1
+    assert partitions_for_bytes(spark, 1) == 1
+    # far beyond advisory x session partitions -> clamped to session value
+    assert partitions_for_bytes(spark, 10**15) == session_parts
+    assert partitions_for_paths(spark, "nosuchscheme://bucket/x.csv") is None
 
 
 def test_scratch_root_removed_at_exit(tmp_path):

@@ -551,6 +551,39 @@ def test_stream_minhash_dedup_cross_batch_state(spark, tmp_path):
     assert got == {0: True, 1: True, 10: False, 11: True, 20: True, 21: False}
 
 
+def test_stream_minhash_dedup_fails_on_unreadable_state(spark, tmp_path):
+    """A state directory that holds a partition the sink cannot read (no
+    ``first_doc`` column) fails the stream: judging the batch against itself
+    alone would keep duplicates of every earlier batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import StreamingQueryException
+
+    in_dir, bad = tmp_path / "in", tmp_path / "state" / "batch_id=0"
+    in_dir.mkdir()
+    bad.mkdir(parents=True)
+    text = " ".join(f"tok{i}" for i in range(30))
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([0], pa.int64()), "text": [text], "lang": ["en"],
+            "source": ["s"], "n_chars": pa.array([len(text)], pa.int64()),
+        }),
+        str(in_dir / "b0.parquet"),
+    )
+    pq.write_table(
+        pa.table({"band": pa.array([0], pa.int32()), "band_hash": pa.array([1], pa.int64())}),
+        str(bad / "part-0.parquet"),
+    )
+    q = ST.stream_minhash_dedup_sink(
+        ST.read_documents_stream(spark, str(in_dir)),
+        state_dir=str(tmp_path / "state"),
+        out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException, match="first_doc"):
+        q.awaitTermination()
+
+
 def test_st15_cms_partials_merge_equals_batch(spark, tmp_path):
     """The streaming CMS's merged cell table must equal the batch-computed
     cell table exactly, AND the partials dir must genuinely contain

@@ -14,8 +14,10 @@ which arm runs first from one rep or seed to the next:
   and the first samples print as their own series (`first_A`, `first_B`).
 - perfbench mode: `perfbench/run.py --workload W --seed N --trace 0` once per
   seed and arm; prints every run, then per end-to-end metric each arm's
-  quartiles, the B/A median ratio and the number of seeds B beat A on
-  (direction from BENCHMARK.json).
+  quartiles, the B/A median ratio, the number of seeds B beat A on
+  (direction from BENCHMARK.json) and whether that shows a gain: B wins
+  at least 9/10 of the seeds and the medians differ by more than A's
+  q3 - q1.
 
 Usage:
     python tools/ab_probe.py --a ../baseline --b . \
@@ -106,15 +108,28 @@ def perfbench_mode(a: str, b: str, workload: str, seeds: list[int], seconds: flo
                 values[arm].setdefault(name, []).append(v)
             print(json.dumps({"seed": seed, "arm": arm, "failed": r["failed"],
                               "attempted": r["attempted"], "metrics": metrics}), flush=True)
-    summary = {}
-    for name, direction in better.items():
-        va, vb = values["A"][name], values["B"][name]
-        wins = sum(
-            (y < x) if direction == "lower" else (y > x) for x, y in zip(va, vb)
-        )
-        summary[name] = {**compare(va, vb), "B_wins": f"{wins}/{len(seeds)}"}
+    summary = {
+        name: metric_summary(values["A"][name], values["B"][name], direction)
+        for name, direction in better.items()
+    }
     print(json.dumps({"workload": workload, "seeds": seeds, "failed": failed,
                       "summary": summary}, indent=1))
+
+
+def metric_summary(va: list[float], vb: list[float], direction: str) -> dict:
+    """One end-to-end metric over paired runs (``va[k]``, ``vb[k]`` share a
+    seed): :func:`compare`, the pairs B beat A on (ties count for neither)
+    and ``gain_shown``: B won at least 9 of every 10 pairs and the medians
+    differ, in the metric's better direction, by more than A's q3 - q1."""
+    sign = 1 if direction == "lower" else -1
+    wins = sum(sign * (x - y) > 0 for x, y in zip(va, vb))
+    q1, _, q3 = quartiles(va)
+    gap = sign * (statistics.median(va) - statistics.median(vb))
+    return {
+        **compare(va, vb),
+        "B_wins": f"{wins}/{len(va)}",
+        "gain_shown": 10 * wins >= 9 * len(va) and gap > q3 - q1,
+    }
 
 
 def arm_order(k: int, a: str, b: str) -> tuple[tuple[str, str], ...]:
